@@ -38,22 +38,19 @@ COUNTRIES = ["RU", "DE", "US", "GB", "FR", "NL"]
 _B62 = string.digits + string.ascii_letters
 
 
-@dataclass(frozen=True)
-class Shape:
-    """Input sizes.  ``first_year`` .. ``first_year + years - 1`` hold
-    ``backfill_plays`` plays; daily files follow from the next Jan 1."""
-
-    backfill_plays: int = 10_000
-    years: int = 3
-    first_year: int = 2021
-    backfill_new_share: float = 0.12
-    daily_plays: int = 150
-    daily_new_share: float = 0.10
-    late_rows: int = 3
-    podcast_share: float = 0.05
-    episode_new_share: float = 0.3
-    zipf_s: float = 0.8
-    pool_max: int = 50_000
+# Input sizes: FIRST_YEAR .. FIRST_YEAR + YEARS - 1 hold BACKFILL_PLAYS
+# plays; daily files follow from the next Jan 1.
+BACKFILL_PLAYS = 10_000
+YEARS = 3
+FIRST_YEAR = 2021
+BACKFILL_NEW_SHARE = 0.12
+DAILY_PLAYS = 150
+DAILY_NEW_SHARE = 0.10
+LATE_ROWS = 3
+PODCAST_SHARE = 0.05
+EPISODE_NEW_SHARE = 0.3
+ZIPF_S = 0.8
+POOL_MAX = 50_000
 
 
 def _ts(t: dt.datetime) -> str:
@@ -63,20 +60,19 @@ def _ts(t: dt.datetime) -> str:
 class Generator:
     """Makes the export and the daily files, in order, from one seed."""
 
-    def __init__(self, seed: int, shape: Shape = Shape()):
-        self.shape = shape
+    def __init__(self, seed: int):
         self.rng = random.Random(seed)
         self.tracks: list[str] = []
         self.episodes: list[str] = []
         self.loaded_track_rows: list[dict] = []
         acc, total = [], 0.0
-        for r in range(shape.pool_max):
-            w = 1.0 / (r + 1) ** shape.zipf_s
+        for r in range(POOL_MAX):
+            w = 1.0 / (r + 1) ** ZIPF_S
             total += w
             acc.append(total)
         self._cum = acc
-        self.start = dt.datetime(shape.first_year, 1, 1)
-        self.end = dt.datetime(shape.first_year + shape.years, 1, 1)
+        self.start = dt.datetime(FIRST_YEAR, 1, 1)
+        self.end = dt.datetime(FIRST_YEAR + YEARS, 1, 1)
 
     def _uri(self, kind: str) -> str:
         n = self.rng.getrandbits(128)
@@ -121,8 +117,8 @@ class Generator:
         if rng.random() < 0.05:
             row["offline"] = True
             row["offline_timestamp"] = int(ts.timestamp()) - rng.randrange(86_400)
-        if rng.random() < self.shape.podcast_share:
-            uri = self._pick(self.episodes, self.shape.episode_new_share, "episode")
+        if rng.random() < PODCAST_SHARE:
+            uri = self._pick(self.episodes, EPISODE_NEW_SHARE, "episode")
             ep = fakeapi.episode_payload(uri)
             row.update(
                 spotify_episode_uri=uri,
@@ -149,36 +145,29 @@ class Generator:
 
     def backfill(self) -> list[tuple[str, bytes]]:
         """The export: one ``(file name, JSON bytes)`` per year."""
-        s = self.shape
-        rows = [self._row(t, s.backfill_new_share)
-                for t in self._times(self.start, self.end, s.backfill_plays)]
+        rows = [self._row(t, BACKFILL_NEW_SHARE)
+                for t in self._times(self.start, self.end, BACKFILL_PLAYS)]
         self._remember(rows)
         files = []
-        for y in range(s.first_year, s.first_year + s.years):
+        for y in range(FIRST_YEAR, FIRST_YEAR + YEARS):
             year_rows = [r for r in rows if r["ts"].startswith(str(y))]
             files.append((f"Streaming_History_Audio_{y}.json", json.dumps(year_rows).encode()))
         return files
 
     def daily(self, day: int) -> tuple[str, bytes]:
         """Day ``day`` (0-based) after the export: new plays plus
-        ``late_rows`` copies of plays loaded earlier."""
-        s = self.shape
+        ``LATE_ROWS`` copies of plays loaded earlier."""
         lo = self.end + dt.timedelta(days=day)
-        rows = [self._row(t, s.daily_new_share)
-                for t in self._times(lo, lo + dt.timedelta(days=1), s.daily_plays)]
-        late = [dict(r) for r in self.rng.sample(self.loaded_track_rows, s.late_rows)]
+        rows = [self._row(t, DAILY_NEW_SHARE)
+                for t in self._times(lo, lo + dt.timedelta(days=1), DAILY_PLAYS)]
+        late = [dict(r) for r in self.rng.sample(self.loaded_track_rows, LATE_ROWS)]
         self._remember(rows)
         body = rows + late
         self.rng.shuffle(body)
         return f"Streaming_History_Audio_{lo:%Y-%m-%d}.json", json.dumps(body).encode()
 
     def _remember(self, rows: list[dict]) -> None:
-        # Late copies come from resolvable tracks only: a null track key
-        # never matches in the streaming path's anti-join.
-        self.loaded_track_rows.extend(
-            r for r in rows
-            if r["spotify_track_uri"] and fakeapi.failure(r["spotify_track_uri"]) is None
-        )
+        self.loaded_track_rows.extend(r for r in rows if r["spotify_track_uri"])
 
 
 @dataclass
@@ -259,19 +248,19 @@ class Truth:
         )
 
 
-def digest(seed: int, shape: Shape, days: int) -> str:
-    """SHA-256 over every file the generator makes for ``seed``."""
-    g = Generator(seed, shape)
+def digest(seed: int) -> str:
+    """SHA-256 over the export and three daily files made for ``seed``."""
+    g = Generator(seed)
     h = hashlib.sha256()
-    for name, body in g.backfill() + [g.daily(d) for d in range(days)]:
+    for name, body in g.backfill() + [g.daily(d) for d in range(3)]:
         h.update(name.encode())
         h.update(body)
     return h.hexdigest()
 
 
-def self_check(shape: Shape = Shape(), days: int = 3) -> None:
+def self_check() -> None:
     """Same seed → byte-identical inputs; another seed → other inputs."""
-    a, b, c = digest(7, shape, days), digest(7, shape, days), digest(8, shape, days)
+    a, b, c = digest(7), digest(7), digest(8)
     if a != b:
         raise SystemExit(f"generator is not deterministic: {a} != {b}")
     if a == c:

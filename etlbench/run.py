@@ -40,6 +40,8 @@ def _args(argv):
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", choices=WORKLOADS)
     p.add_argument("--seed", type=int, default=1)
+    # Accepted for the benchmark command line; each workload measures a
+    # fixed amount of work (see DESIGN.md), so it does not set the sample.
     p.add_argument("--seconds", type=float, default=10)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--selftest", action="store_true",
@@ -176,7 +178,7 @@ def run(args) -> dict:
 
         env = {"nproc": os.cpu_count(), "N": n, "pyspark": pyspark.__version__,
                "java": spark.sparkContext._jvm.System.getProperty("java.version")}
-        ctx = workloads.Ctx(spark, args.seed, args.seconds, run_dir, session_s, tracer)
+        ctx = workloads.Ctx(spark, args.seed, run_dir, session_s, tracer)
         out = workloads.Outcome()
         workloads.WORKLOADS[args.workload](ctx, out)
         _summary(args.workload, out, env)
@@ -187,11 +189,10 @@ def run(args) -> dict:
             _stop_session(spark)
             spark = None
             layer, dump = tracer.report(os.path.join(run_dir, "eventlog"), out.known_uris,
-                                        out.measured_ops, out.stream_triggers)
-            layer["session.start_s"] = session_s
-            layer["traced.op_p50_s"] = _end_to_end(args.workload, out)["op_p50_s"]
+                                        out.measured_ops, out.stream_triggers, session_s,
+                                        _end_to_end(args.workload, out)["op_p50_s"])
             metrics = layer
-            units = _per_layer_units()
+            units = per_layer_units()
             trace_dir = os.path.join(os.getcwd(), ".etlbench", "traces")
             os.makedirs(trace_dir, exist_ok=True)
             with open(os.path.join(trace_dir, f"{args.workload}-seed{args.seed}.json"), "w") as f:
@@ -211,7 +212,7 @@ def run(args) -> dict:
         shutil.rmtree(run_dir, ignore_errors=True)
 
 
-def _per_layer_units() -> dict[str, str]:
+def per_layer_units() -> dict[str, str]:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         return {m["name"]: m["unit"] for m in json.load(f)["per_layer"]}
 
@@ -228,7 +229,7 @@ def main(argv=None) -> int:
     if args.selftest:
         from etlbench import selftest
 
-        return selftest.main(run)
+        return selftest.main(run, per_layer_units)
     print(json.dumps(run(args)))
     return 0
 

@@ -9,11 +9,14 @@
 from __future__ import annotations
 
 import argparse
+import os
+import tempfile
 
 import pandas as pd
 
 from etlbench import gen, workloads
 from etlbench.oracle import Either, as_rows
+from etlbench.spans import Tracer
 
 
 def _dashboard_compare() -> None:
@@ -30,8 +33,8 @@ def _dashboard_compare() -> None:
 
 def _wrong_expected_fails(run) -> None:
     """Run etl_daily with the backfill's expected track rows off by one."""
-    load = gen.Truth.load
-    calls = []
+    load, check = gen.Truth.load, workloads.Outcome.check
+    calls, failed_ops = [], []
 
     def off_by_one(self, files):
         exp = load(self, files)
@@ -40,18 +43,38 @@ def _wrong_expected_fails(run) -> None:
         calls.append(1)
         return exp
 
-    workloads.Truth.load = off_by_one
+    def recording_check(self, op, problems):
+        if problems:
+            failed_ops.append(op)
+        check(self, op, problems)
+
+    workloads.Truth.load, workloads.Outcome.check = off_by_one, recording_check
     try:
-        res = run(argparse.Namespace(workload="etl_daily", seed=1, seconds=1, trace=0))
+        res = run(argparse.Namespace(workload="etl_daily", seed=1, trace=0))
     finally:
-        workloads.Truth.load = load
-    if res["correct"] or res["failed"] != 1:
-        raise SystemExit(f"a wrong expected value did not fail exactly one op: {res}")
-    print(f"wrong-expected self-check ok: {res['failed']}/{res['attempted']} ops failed")
+        workloads.Truth.load, workloads.Outcome.check = load, check
+    if res["correct"] or "backfill" not in failed_ops or res["failed"] != len(failed_ops):
+        raise SystemExit(f"a wrong expected value did not fail the backfill op: {res}")
+    print(f"wrong-expected self-check ok: {res['failed']}/{res['attempted']} ops failed "
+          f"({', '.join(failed_ops)})")
 
 
-def main(run) -> int:
+def _layer_names(per_layer_units) -> None:
+    """The tracer's metric names are BENCHMARK.json's per-layer names."""
+    base = os.path.join(os.getcwd(), ".etlbench")
+    os.makedirs(base, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=base) as d:
+        names = set(Tracer(d).report(d, {}, set(), [], 0.0, 0.0)[0])
+    listed = set(per_layer_units())
+    if names != listed:
+        raise SystemExit(f"per-layer names differ: tracer only {sorted(names - listed)}, "
+                         f"BENCHMARK.json only {sorted(listed - names)}")
+    print(f"per-layer names self-check ok: {len(names)} metrics")
+
+
+def main(run, per_layer_units) -> int:
     gen.self_check()
     _dashboard_compare()
+    _layer_names(per_layer_units)
     _wrong_expected_fails(run)
     return 0

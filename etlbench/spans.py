@@ -206,14 +206,17 @@ class Tracer:
         return recs
 
     def report(self, event_log_dir: str, known_uris: dict[str, set],
-               measured_ops: set[str], stream_triggers: list[float]) -> tuple[dict, dict]:
+               measured_ops: set[str], stream_triggers: list[float],
+               session_s: float, op_p50_s: float) -> tuple[dict, dict]:
         """Per-layer metrics and the full span dump.
 
         ``known_uris`` maps an op name to the URIs already in the dims
         before that op; ``measured_ops`` names the ops that count
         toward the totals (warm-up and the traced-only no-op rerun do
         not); ``stream_triggers`` are the trigger durations the
-        streaming query reported for batches with input."""
+        streaming query reported for batches with input; ``session_s``
+        and ``op_p50_s`` are the traced run's session start and its
+        end-to-end ``op_p50_s``."""
         ev = EventLog(event_log_dir)
         by_id = {s["id"]: s for s in self.spans}
         children = defaultdict(list)
@@ -230,7 +233,7 @@ class Tracer:
             return s["spark"]["jobs"] + sum(inclusive_jobs(c) for c in children[s["id"]])
 
         measured = [s for s in self.spans if s["op"] in measured_ops]
-        m: dict[str, float] = {}
+        m: dict[str, float] = {"session.start_s": session_s, "traced.op_p50_s": op_p50_s}
         for layer in LAYERS:
             spans = [s for s in measured if s["layer"] == layer]
             m[f"{layer}.self_s"] = sum(s["self_s"] for s in spans)

@@ -6,8 +6,7 @@ Runs ``run.py`` once per seed (one after another, never in parallel),
 then prints, per metric, the median, the spread (distance between the
 first and third quartile from ``statistics.quantiles(values, n=4)``,
 as a share of the median) and the metric's bound from BENCHMARK.json.
-``--results FILE`` appends every run's final JSON line to FILE;
-``--from FILE`` only summarises lines saved that way.
+Each run gets BENCHMARK.json's ``run_seconds``, as in an acceptance round.
 """
 
 from __future__ import annotations
@@ -47,17 +46,11 @@ def summarise(results: list[dict]) -> bool:
 
 def main() -> int:
     p = argparse.ArgumentParser()
-    p.add_argument("--workload")
-    p.add_argument("--seeds", type=int, nargs="*", default=[])
-    p.add_argument("--seconds", type=int)
-    p.add_argument("--results")
-    p.add_argument("--from", dest="from_file")
+    p.add_argument("--workload", required=True)
+    p.add_argument("--seeds", type=int, nargs="+", required=True)
     a = p.parse_args()
-    if a.from_file:
-        with open(a.from_file) as f:
-            return 0 if summarise([json.loads(line) for line in f if line.strip()]) else 1
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        seconds = a.seconds or json.load(f)["run_seconds"]
+        seconds = json.load(f)["run_seconds"]
     results = []
     for seed in a.seeds:
         t0 = time.time()
@@ -67,12 +60,10 @@ def main() -> int:
             cwd=ROOT, capture_output=True, text=True, check=True)
         res = json.loads(proc.stdout.strip().splitlines()[-1])
         print(f"seed {seed}: {time.time() - t0:.1f} s wall, "
+              f"{res['failed']}/{res['attempted']} ops failed, "
               + ", ".join(f"{k}={v['value']:.4f}" for k, v in res["metrics"].items()),
               flush=True)
         results.append(res)
-        if a.results:
-            with open(a.results, "a") as f:
-                f.write(json.dumps(res) + "\n")
     return 0 if summarise(results) else 1
 
 
