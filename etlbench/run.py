@@ -77,7 +77,11 @@ def _environment(run_dir: str, n: int, trace: bool) -> None:
 def _start_session(run_dir: str, n: int, trace: bool):
     from spotify_streaming_etl_pipeline_spark.session import get_spark
 
-    java_opts = f"-XX:ReservedCodeCacheSize=1g -Djava.io.tmpdir={os.path.join(run_dir, 'tmp')}"
+    # C1 only: each run is one short-lived JVM that spends most of its
+    # time cold.  Without C2 the cold loads ran ~10% faster and spread
+    # less from run to run (DESIGN.md, Steadiness settings).
+    java_opts = (f"-XX:ReservedCodeCacheSize=1g -XX:TieredStopAtLevel=1 "
+                 f"-Djava.io.tmpdir={os.path.join(run_dir, 'tmp')}")
     conf = {
         "spark.ui.showConsoleProgress": "false",
         "spark.driver.extraJavaOptions": java_opts,
@@ -189,7 +193,7 @@ def run(args) -> dict:
             _stop_session(spark)
             spark = None
             layer, dump = tracer.report(os.path.join(run_dir, "eventlog"), out.known_uris,
-                                        out.measured_ops, out.stream_triggers, session_s,
+                                        out.measured_ops, session_s,
                                         _end_to_end(args.workload, out)["op_p50_s"])
             metrics = layer
             units = per_layer_units()

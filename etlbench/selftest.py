@@ -64,7 +64,7 @@ def _layer_names(per_layer_units) -> None:
     base = os.path.join(os.getcwd(), ".etlbench")
     os.makedirs(base, exist_ok=True)
     with tempfile.TemporaryDirectory(dir=base) as d:
-        names = set(Tracer(d).report(d, {}, set(), [], 0.0, 0.0)[0])
+        names = set(Tracer(d).report(d, {}, set(), 0.0, 0.0)[0])
     listed = set(per_layer_units())
     if names != listed:
         raise SystemExit(f"per-layer names differ: tracer only {sorted(names - listed)}, "

@@ -1,8 +1,8 @@
 """Spans around the engine's layer functions, joined with Spark's event log.
 
 ``Tracer.install`` replaces module attributes of the engine (the layer
-functions ``pipeline.run``, ``plans.marts`` and ``streaming.ingest``
-call) with wrappers at run time; the engine's source is not edited.
+functions ``pipeline.run`` and ``plans.marts`` call) with wrappers at
+run time; the engine's source is not edited.
 Each wrapper opens a span (name, layer, start, end, parent) kept in
 memory and sets a Spark job group named after the span, so every job
 Spark runs while the span is the innermost open one is attributed to
@@ -22,12 +22,11 @@ import glob
 import json
 import os
 import statistics
-import threading
 import time
 from collections import defaultdict
 from contextlib import contextmanager
 
-LAYERS = ["pipeline", "history", "enrichment", "dims", "facts", "streaming", "writer", "marts"]
+LAYERS = ["pipeline", "history", "enrichment", "dims", "facts", "marts"]
 SPARK_FIELDS = ["jobs", "tasks", "executor_run_s", "input_bytes", "shuffle_write_bytes", "spill_bytes"]
 MART_FNS = ["top_tracks", "top_albums", "top_artists", "yearly_agg", "monthly_agg",
             "all_time_agg", "album_stats"]
@@ -49,11 +48,6 @@ TARGETS = [
         "podcast_uris_from_episode_envelopes", "clean_tracks", "clean_artists",
         "clean_episodes", "clean_podcasts", "load_dim", "sentinel_episode",
         "sentinel_podcast", "build_dim_reason")],
-    ("streaming", "spotify_streaming_etl_pipeline_spark.streaming.ingest",
-     "start_fact_tracks_ingest"),
-    ("streaming", "spotify_streaming_etl_pipeline_spark.streaming.ingest", "read_history_stream"),
-    ("facts", "spotify_streaming_etl_pipeline_spark.streaming.ingest", "build_fact_tracks"),
-    ("writer", "spotify_streaming_etl_pipeline_spark.operators.writer", "idempotent_append"),
     ("marts", "spotify_streaming_etl_pipeline_spark.plans.marts", "get_chart_data"),
     ("marts", "spotify_streaming_etl_pipeline_spark.plans.marts", "get_aggregated_data"),
     *[("marts", "spotify_streaming_etl_pipeline_spark.plans.marts", f) for f in MART_FNS],
@@ -91,17 +85,10 @@ class Tracer:
         self.sc = None
         self.spans: list[dict] = []
         self.fetch_log_dir = fetch_log_dir
-        self._local = threading.local()
-        self._lock = threading.Lock()
-        self._root: dict | None = None
+        self._stack: list[dict] = []
         self._patches: list[tuple[object, str, object]] = []
 
     # -- spans ---------------------------------------------------------------
-
-    def _stack(self) -> list[dict]:
-        if not hasattr(self._local, "stack"):
-            self._local.stack = []
-        return self._local.stack
 
     def _set_group(self, span: dict | None) -> None:
         if self.sc is None:
@@ -114,18 +101,14 @@ class Tracer:
 
     @contextmanager
     def span(self, name: str, layer: str, op: str | None = None, **attrs):
-        """Open a span.  A thread with no open span (the streaming
-        query's ``foreachBatch`` callback) parents to the open op."""
-        stack = self._stack()
-        parent = stack[-1] if stack else self._root
-        with self._lock:
-            rec = {"id": len(self.spans), "name": name, "layer": layer,
-                   "parent": parent["id"] if parent else None,
-                   "op": op or (parent["op"] if parent else None),
-                   "t0": time.time(), "t1": None, **attrs}
-            self.spans.append(rec)
-        if op is not None and not stack:
-            self._root = rec
+        """Open a span, child of the innermost open one."""
+        stack = self._stack
+        parent = stack[-1] if stack else None
+        rec = {"id": len(self.spans), "name": name, "layer": layer,
+               "parent": parent["id"] if parent else None,
+               "op": op or (parent["op"] if parent else None),
+               "t0": time.time(), "t1": None, **attrs}
+        self.spans.append(rec)
         stack.append(rec)
         self._set_group(rec)
         try:
@@ -134,8 +117,6 @@ class Tracer:
             rec["t1"] = time.time()
             stack.pop()
             self._set_group(stack[-1] if stack else None)
-            if self._root is rec:
-                self._root = None
 
     # -- patching ------------------------------------------------------------
 
@@ -206,15 +187,13 @@ class Tracer:
         return recs
 
     def report(self, event_log_dir: str, known_uris: dict[str, set],
-               measured_ops: set[str], stream_triggers: list[float],
-               session_s: float, op_p50_s: float) -> tuple[dict, dict]:
+               measured_ops: set[str], session_s: float, op_p50_s: float) -> tuple[dict, dict]:
         """Per-layer metrics and the full span dump.
 
         ``known_uris`` maps an op name to the URIs already in the dims
         before that op; ``measured_ops`` names the ops that count
         toward the totals (warm-up and the traced-only no-op rerun do
-        not); ``stream_triggers`` are the trigger durations the
-        streaming query reported for batches with input; ``session_s``
+        not); ``session_s``
         and ``op_p50_s`` are the traced run's session start and its
         end-to-end ``op_p50_s``."""
         ev = EventLog(event_log_dir)
@@ -286,11 +265,6 @@ class Tracer:
         m["facts.write_s"] = sum(s["dur_s"] for s in writes)
         m["facts.rows_written"] = sum(s["rows"] for s in writes)
         m["facts.files_added"] = sum(s["files_added"] for s in writes)
-
-        m["streaming.batch_s"] = _median(stream_triggers)
-        m["streaming.query_start_s"] = _median(
-            [s["dur_s"] for s in named("ingest.start_fact_tracks_ingest")])
-        m["writer.append_s"] = _median([s["dur_s"] for s in named("writer.idempotent_append")])
 
         # A dashboard op span ("query:...") holds one mart builder call.
         queries = [s for s in measured if s["layer"] == "op" and s["name"].startswith("query")]

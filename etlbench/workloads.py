@@ -1,9 +1,7 @@
 """The benchmark's workloads: what one user does, in a closed loop.
 
 ``etl_daily``  first load (backfill) of a multi-year export into an
-               empty warehouse, then daily increments, then the same
-               kind of daily file through the Structured Streaming
-               front end (plus one re-dropped file).
+               empty warehouse, then a daily increment.
 ``dashboard``  the export loaded in set-up, then a seeded mix of
                dashboard calls, each checked against DuckDB.
 
@@ -12,7 +10,6 @@ Every op's output is checked; a failed check counts as a failed op.
 
 from __future__ import annotations
 
-import json
 import os
 import random
 import statistics
@@ -32,7 +29,6 @@ from etlbench.oracle import Oracle, as_rows
 # daily set (~150 URIs) stay on the driver loop.
 ETL_COLLECT_MAX = 1000
 INCREMENTS = 1
-STREAM_FILES = 2
 WARMUP_ROUNDS = (2, 4)  # min, max dashboard warm-up rounds
 MEASURED_ROUNDS = 8
 QUERY_VARIANTS = 4  # filtered calls per dashboard panel
@@ -60,7 +56,6 @@ class Outcome:
     # traced runs only
     known_uris: dict[str, set] = field(default_factory=dict)
     measured_ops: set[str] = field(default_factory=set)
-    stream_triggers: list[float] = field(default_factory=list)
 
     def check(self, op: str, problems: list[str]) -> None:
         """Count one attempted op; any problem fails it."""
@@ -159,68 +154,21 @@ def etl_daily(ctx: Ctx, out: Outcome) -> None:
     export = gen.backfill()
     out.setup_s = ctx.session_s
     out.measured_ops.add("backfill")
-    res, secs = _load(ctx, out, "backfill", export, truth, raw, wh,
-                      enrich_collect_max=ETL_COLLECT_MAX)
+    _, secs = _load(ctx, out, "backfill", export, truth, raw, wh,
+                    enrich_collect_max=ETL_COLLECT_MAX)
     out.sample("backfill_s", secs)
     for day in range(INCREMENTS):
         op = f"increment{day}"
         out.measured_ops.add(op)
-        res, secs = _load(ctx, out, op, [gen.daily(day)], truth, raw, wh,
-                          enrich_collect_max=ETL_COLLECT_MAX)
+        _, secs = _load(ctx, out, op, [gen.daily(day)], truth, raw, wh,
+                        enrich_collect_max=ETL_COLLECT_MAX)
         out.sample("increment_s", secs)
     # One no-op rerun, traced runs only: its ~15 s does not fit the untraced
     # runs' budget, and one sample of it is too unsteady to gate on.
     if ctx.tracer:
-        res, _ = _load(ctx, out, "noop", [], truth, raw, wh, enrich_collect_max=ETL_COLLECT_MAX)
+        _load(ctx, out, "noop", [], truth, raw, wh, enrich_collect_max=ETL_COLLECT_MAX)
     out.values["warehouse_bytes_per_play"] = _bytes_under(wh) / truth.plays
     out.check("years", check_years(wh, truth))
-    _stream(ctx, out, gen, res.dims, INCREMENTS)
-
-
-def _stream(ctx: Ctx, out: Outcome, gen: Generator, dims, first_day: int):
-    """Land daily files for the streaming ingest, one availableNow query
-    per file, into its own fact table; the last op re-drops the first
-    file under a new name."""
-    from spotify_streaming_etl_pipeline_spark.streaming import ingest
-
-    land = os.path.join(ctx.run_dir, "stream_raw")
-    fact = os.path.join(ctx.run_dir, "stream", "fact_tracks")
-    ckpt = os.path.join(ctx.run_dir, "stream", "_checkpoint")
-    os.makedirs(land)
-    files = [gen.daily(first_day + i) for i in range(STREAM_FILES)]
-    name, body = files[0]
-    files.append((name.replace(".json", "-redelivered.json"), body))
-    keys: set = set()
-    for i, (name, body) in enumerate(files):
-        # Each play lands once: a play already in the table (a late row,
-        # or any play of the re-delivered file) must add nothing.
-        new = {(r["ts"], r["spotify_track_uri"])
-               for r in json.loads(body) if r["spotify_track_uri"]} - keys
-        keys |= new
-        want = len(new)
-        before = _count(fact)
-
-        def ingest_one():
-            _write(os.path.join(land, name), body)
-            q = ingest.start_fact_tracks_ingest(
-                ctx.spark, land, fact, dims["track"], dims["artist"], dims["reason"], ckpt)
-            q.awaitTermination(120)
-            return q
-
-        op = f"stream{i}"
-        out.measured_ops.add(op)
-        q, secs = _timed(ctx, op, ingest_one)
-        out.sample("stream_batch_s", secs)
-        problems = []
-        if q.isActive or q.exception() is not None:
-            problems.append(f"query did not finish cleanly: {q.exception()}")
-            q.stop()
-        got = _count(fact) - before
-        if got != want:
-            problems.append(f"rows appended {got} != {want}")
-        out.check(op, problems)
-        out.stream_triggers.extend(
-            p.durationMs["triggerExecution"] / 1000 for p in q.recentProgress if p.numInputRows)
 
 
 # -- dashboard ------------------------------------------------------------------
