@@ -18,6 +18,9 @@ broadcasts it for the anti join — no target shuffle at all.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,6 +42,12 @@ def dedup_new(
     """Rows from ``incoming`` whose key is new: within-batch dedup then
     anti-join against the existing target (J10).
 
+    Keys compare null-safe on both steps (``dropDuplicates`` already
+    treats NULLs as equal; the anti-join uses ``eqNullSafe``), so a
+    row with a NULL key part — e.g. a play whose track is missing from
+    ``dim_track`` gets ``track_fk IS NULL`` — is recognised as already
+    present instead of landing again on every replay.
+
     ``broadcast_target`` forces/forbids broadcasting the target's key
     set; default (None) uses Catalyst's size estimate of the target —
     a fact-sized target must NOT be broadcast (driver OOM at 100 TB),
@@ -46,12 +55,20 @@ def dedup_new(
     """
     out = incoming.dropDuplicates(keys)
     if target is not None:
-        target_keys = target.select(*keys).distinct()
+        # Renamed target keys keep the condition unambiguous even when
+        # incoming and target share lineage.
+        target_keys = target.select(
+            *(F.col(k).alias(f"_target_{i}") for i, k in enumerate(keys))
+        ).distinct()
         if broadcast_target is None:
             broadcast_target = _estimated_bytes(target) <= BROADCAST_TARGET_BYTES
         if broadcast_target:
             target_keys = F.broadcast(target_keys)
-        out = out.join(target_keys, keys, "left_anti")
+        cond = functools.reduce(
+            operator.and_,
+            (out[k].eqNullSafe(target_keys[f"_target_{i}"]) for i, k in enumerate(keys)),
+        )
+        out = out.join(target_keys, cond, "left_anti")
     return out
 
 

@@ -23,6 +23,29 @@ on the driver (the DataSource plans row-range partitions from parquet
 footers alone).  A plain callable above the threshold falls back to
 the ``mapInPandas`` wrapper (same distributed loop, opaque stage);
 below the threshold both forms use the reference-shaped driver loop.
+
+Every intermediate that more than one step reads is computed once per
+run (lazy frames otherwise recompute a shared plan for each consumer):
+
+- the delta-filtered history is persisted, and its row count is the
+  action that fills the cache — URI discovery, ``dim_reason`` and both
+  star joins read the cache, so the multi-line JSON export is scanned
+  once per run;
+- each final dim (after the sentinel rows and ``dim_reason``) is
+  persisted, so the fact broadcasts and the snapshot swap share one
+  computed snapshot;
+- the executor-path enrichment envelopes are persisted, so the
+  dead-letter collect and the dims share one fetch;
+- fact row counts come from the write's own ``Observation``, not from
+  a second run of each star join.
+
+``run`` owns every one of these caches.  Under ``write=True`` it
+releases them in a ``finally`` once the returned frames are re-read
+from the warehouse (and on any failure); under ``write=False`` the
+returned dims/facts are lazy plans over them, so they stay cached —
+a recompute would re-scan the export and re-hit the REST source — and
+they live until the caller clears them
+(``spark.catalog.clearCache()``) or the session stops.
 """
 
 from __future__ import annotations
@@ -109,24 +132,59 @@ def run(
     this run's appends land, each fact table's year partitions are
     compacted to ~target-size files (operators/maintenance.py). Safe
     here by construction — the runner is the table's only writer and
-    its appends have finished before compaction starts."""
+    its appends have finished before compaction starts.
+
+    Caches: see the module docstring — released before returning when
+    ``write`` (or when the run fails), kept for the returned lazy
+    frames otherwise."""
+    cached: list[DataFrame] = []
+    keep_cached = False
+    try:
+        out = _run(
+            spark, raw_dir, warehouse_dir, fetchers or {}, write,
+            enrich_collect_max, compact_facts, cached,
+        )
+        keep_cached = not write
+        return out
+    finally:
+        if not keep_cached:
+            for df in cached:
+                df.unpersist()
+
+
+def _run(
+    spark: SparkSession,
+    raw_dir: str,
+    warehouse_dir: str,
+    fetchers: dict[str, Callable[[list[str]], dict] | str],
+    write: bool,
+    enrich_collect_max: int,
+    compact_facts: bool,
+    cached: list[DataFrame],
+) -> RunResult:
+    """The body of ``run``; every frame it persists goes on ``cached``."""
     import json
 
     out = RunResult()
-    fetchers = fetchers or {}
+
+    def persist(df: DataFrame) -> DataFrame:
+        df = df.persist()
+        cached.append(df)
+        return df
 
     # -- 1. ingest history with the delta cutoff (S1/S2/A6) ----------------
     fact_tracks_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_tracks")
     fact_podcasts_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_podcasts")
     cutoff = max_loaded_ts(fact_tracks_existing, fact_podcasts_existing, None)
-    history = delta_filter(read_history(spark, raw_dir), cutoff)
+    # The count fills the cache: URI discovery, dim_reason and both
+    # star joins below read it instead of re-parsing the export.
+    history = persist(delta_filter(read_history(spark, raw_dir), cutoff))
     out.n_history_rows = history.count()
 
     # -- 2. entity discovery + enrichment (A4/A5/J7, S3/S4/S7) --------------
     # ORDER MATTERS: artist URIs come from track envelopes, podcast URIs
     # from episode envelopes (reference extractor.py:317).
     envelopes: dict[str, DataFrame] = {}
-    persisted_envelopes: list[DataFrame] = []
 
     def enrich_datasource(entity: str, uris: DataFrame, fetch_path: str) -> DataFrame:
         """The planned-source scale path: stage the URI set as parquet
@@ -170,30 +228,25 @@ def run(
         # Past ``enrich_collect_max`` the fetch moves onto executors:
         # the planned DataSource scan when the fetcher is importable
         # ("module:attr"), else the mapInPandas wrapper — either way
-        # only the (rare) dead letters ever reach the driver.
-        # uris is persisted so the anti-join plan behind it evaluates
-        # once, not once for count() and again for the consumer below.
-        uris = uris.persist()
-        try:
-            if uris.count() > enrich_collect_max:
-                if isinstance(fetch, str):
-                    enriched = enrich_datasource(entity, uris, fetch).persist()
-                else:
-                    enriched = enrich_partitions(uris, fetch, entity).persist()
-                persisted_envelopes.append(enriched)
-                # The dead-letter collect materializes (and caches)
-                # every partition of enriched — after it, the ok-split
-                # below reads the cache, never re-fetching.
-                out.dead_letters.extend(
-                    (r["uri"], entity, r["status"])
-                    for r in enriched.filter(F.col("status") != "ok").collect()
-                )
-                return enriched.filter(F.col("status") == "ok").select(
-                    "uri", "raw_data"
-                )
-            uri_list = sorted(r["uri"] for r in uris.collect())
-        finally:
-            uris.unpersist()
+        # only the (rare) dead letters ever reach the driver.  One
+        # bounded collect decides the switch and, below it, is the
+        # driver list itself; uris reads the cached history (or the
+        # envelopes), so the executor path re-evaluating it is cheap.
+        head = uris.limit(enrich_collect_max + 1).collect()
+        if len(head) > enrich_collect_max:
+            if isinstance(fetch, str):
+                enriched = persist(enrich_datasource(entity, uris, fetch))
+            else:
+                enriched = persist(enrich_partitions(uris, fetch, entity))
+            # The dead-letter collect materializes (and caches) every
+            # partition of enriched — after it, the ok-split below
+            # reads the cache, never re-fetching.
+            out.dead_letters.extend(
+                (r["uri"], entity, r["status"])
+                for r in enriched.filter(F.col("status") != "ok").collect()
+            )
+            return enriched.filter(F.col("status") == "ok").select("uri", "raw_data")
+        uri_list = sorted(r["uri"] for r in head)
         if isinstance(fetch, str):
             from .sources.restsource import _resolve_fetch
 
@@ -253,6 +306,11 @@ def run(
     existing_reason = _read_if_exists(spark, f"{warehouse_dir}/dim_reason")
     out.dims["reason"] = dims_mod.build_dim_reason(history, existing_reason)
 
+    # Each final dim is computed once: the first fact broadcast that
+    # reads it fills the cache, and its snapshot swap reads the cache.
+    for entity in out.dims:
+        out.dims[entity] = persist(out.dims[entity])
+
     # -- 4. facts: the two star joins (J1/J2) -------------------------------
     if {"track", "artist"} <= out.dims.keys():
         out.facts["tracks"] = build_fact_tracks(
@@ -264,13 +322,21 @@ def run(
         )
 
     # -- 5. persist ---------------------------------------------------------
+    # Computed once and cached: the history (filled by its count), the
+    # executor-path envelopes (filled by the dead-letter collect) and
+    # each dim (filled by the first fact broadcast, or by its swap).
+    # ``run`` releases them all after the re-read below; under
+    # write=False nothing here runs and they stay cached for the
+    # returned lazy frames.
     if write:
-        # Facts first: their plans broadcast-read the CURRENT dim
-        # parquet, which the dim swap below deletes. Fact writes are
-        # appends, so ordering them first is both safe and required.
+        # Facts first: the dim caches may be evicted, and an evicted
+        # dim recomputes from the CURRENT dim parquet, which the swap
+        # below deletes. Fact writes are appends, so ordering them
+        # first is both safe and required. Each star join runs once:
+        # its row count is observed by the write itself.
         for name, df in out.facts.items():
-            out.n_fact_rows[name] = df.count()
-            write_fact(df, f"{warehouse_dir}/fact_{name}")
+            obs = write_fact(df, f"{warehouse_dir}/fact_{name}")
+            out.n_fact_rows[name] = obs["n_rows"]
         if compact_facts:
             from .operators.maintenance import compact_partitioned
 
@@ -281,21 +347,14 @@ def run(
         for entity, df in out.dims.items():
             _overwrite_parquet_safe(df, f"{warehouse_dir}/dim_{entity}")
         # Re-read everything written: the pre-swap lazy plans pin file
-        # listings that no longer exist; callers get fresh frames.
+        # listings that no longer exist; callers get fresh frames, and
+        # ``run`` releases this run's caches once this returns.
         for entity in out.dims:
             out.dims[entity] = spark.read.parquet(f"{warehouse_dir}/dim_{entity}")
         for name in out.facts:
             out.facts[name] = spark.read.parquet(f"{warehouse_dir}/fact_{name}")
-        # The re-read repointed every returned frame at parquet, so the
-        # cached enrichment envelopes are no longer reachable — release
-        # their executor storage instead of leaking it across entities.
-        # (write=False intentionally keeps them cached: the returned
-        # dims/facts are still lazy plans over the envelopes, and a
-        # recompute would re-hit the REST source.)
-        for df in persisted_envelopes:
-            df.unpersist()
-        # The URI staging parquet is likewise unreachable now — drop it
-        # so repeated runs don't accumulate stale snapshots beside the
+        # The URI staging parquet is unreachable now too — drop it so
+        # repeated runs don't accumulate stale snapshots beside the
         # real tables. (write=False keeps it: returned frames' lineage
         # may still read it on cache eviction.)
         import shutil

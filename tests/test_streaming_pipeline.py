@@ -116,6 +116,81 @@ def test_pipeline_end_to_end_then_incremental_noop(spark, raw_dir, tmp_path):
     assert res2.dims["track"].count() == 2  # dims stable across reruns
 
 
+def _n_persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
+    """Default-tier pass over the runner: first load, one daily
+    increment, no-op rerun.  Each run's ``n_fact_rows`` (observed by the
+    fact write itself, not by a second count) must equal the rows that
+    landed in the fact parquet, the no-op run's empty writes must still
+    report 0 for both facts, and every ``write=True`` run must release
+    the caches it made (the persistent RDD count is back where it
+    started)."""
+    wh = str(tmp_path / "warehouse")
+    n0 = _n_persisted(spark)
+
+    def landed():
+        return {
+            name: spark.read.parquet(f"{wh}/fact_{name}").count()
+            for name in ("tracks", "podcasts")
+        }
+
+    def load():
+        res = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
+        assert _n_persisted(spark) == n0
+        return res
+
+    res = load()
+    first = landed()
+    assert res.n_fact_rows == first == {"tracks": 3, "podcasts": 1}
+
+    _write_export(
+        raw_dir / "export_3.json",
+        [
+            history_row(ts="2022-01-01T08:00:00Z", spotify_track_uri="spotify:track:789"),
+            history_row(ts="2022-01-01T08:05:00Z"),
+            history_row(
+                ts="2022-01-01T09:00:00Z",
+                spotify_track_uri=None,
+                master_metadata_track_name=None,
+                episode_name="Ep 1",
+                episode_show_name="Test Show",
+                spotify_episode_uri="spotify:episode:7",
+            ),
+        ],
+    )
+    res = load()
+    second = landed()
+    assert res.n_history_rows == 3
+    assert res.n_fact_rows == {k: second[k] - first[k] for k in first}
+    assert res.n_fact_rows == {"tracks": 2, "podcasts": 1}
+    assert res.dims["track"].count() == 3  # the new track enriched once
+
+    res = load()
+    assert res.n_history_rows == 0
+    assert res.n_fact_rows == {"tracks": 0, "podcasts": 0}
+    assert landed() == second
+
+
+def test_pipeline_run_releases_its_caches_on_failure(
+    spark, raw_dir, tmp_path, monkeypatch
+):
+    """A run whose fact write fails after the history and dim caches
+    are filled still releases them (the ``finally`` in ``run``)."""
+
+    def failing_write_fact(fact, path, *args, **kwargs):
+        fact.count()  # fills the history and dim caches first
+        raise RuntimeError("fact write failed")
+
+    n0 = _n_persisted(spark)
+    monkeypatch.setattr(pipeline, "write_fact", failing_write_fact)
+    with pytest.raises(RuntimeError, match="fact write failed"):
+        pipeline.run(spark, str(raw_dir), str(tmp_path / "wh"), fetchers=_fake_fetchers())
+    assert _n_persisted(spark) == n0
+
+
 def test_pipeline_size_switch_distributed_enrichment(spark, raw_dir, tmp_path):
     """enrich_collect_max=0 forces every URI set down the distributed
     mapInPandas path; the warehouse must come out identical to the
@@ -516,3 +591,43 @@ def test_fact_ingest_batch_replay_is_idempotent(spark, raw_dir, tmp_path):
     # crash-replay simulation: fresh checkpoint -> every batch re-runs
     drain("_ckpt_b")
     assert spark.read.parquet(str(wh / "fact_tracks")).count() == n_once
+
+
+def test_fact_ingest_redrop_with_unknown_track_adds_no_rows(spark, raw_dir, tmp_path):
+    """Exactly-once for plays whose track is missing from ``dim_track``:
+    they land with ``track_fk IS NULL``, and when the same content is
+    dropped again under a new file name the conflict-ignore append must
+    still recognise them (the NULL key part compares null-safe), so the
+    re-drop adds 0 rows."""
+    dims = pipeline.run(
+        spark, str(raw_dir), str(tmp_path / "seed_wh"), fetchers=_fake_fetchers()
+    ).dims
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = tmp_path / "stream_wh"
+    rows = [
+        history_row(ts="2022-02-01T00:00:00Z"),
+        history_row(ts="2022-02-01T00:05:00Z", spotify_track_uri="spotify:track:999"),
+    ]
+
+    def drain():
+        q = start_fact_tracks_ingest(
+            spark,
+            str(inbox),
+            str(wh / "fact_tracks"),
+            dims["track"],
+            dims["artist"],
+            dims["reason"],
+            checkpoint_dir=str(wh / "_checkpoint"),
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        return spark.read.parquet(str(wh / "fact_tracks"))
+
+    _write_export(inbox / "day_1.json", rows)
+    fact = drain()
+    assert fact.count() == 2
+    assert fact.filter(F.col("track_fk").isNull()).count() == 1
+
+    _write_export(inbox / "day_1_redropped.json", rows)
+    assert drain().count() == 2
