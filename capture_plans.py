@@ -1,6 +1,12 @@
 """Capture .explain('formatted') for every registered query into
 plans/$SPARK_GRAFT_PLAN_DIR/<query>_<tag>.txt (default r13).
-Planning only — nothing is executed.
+
+Mostly planning only: building a registered query's DataFrame runs no
+job, with two exceptions.  ``dedup_funnel_summary`` and
+``copurchase_triangles`` run their Spark jobs (sequential driver
+collects) while the DataFrame is built and return a literal row, so
+capturing them executes the full computation, and their captured plan
+is that literal projection, not the work behind it.
 
 Usage: python capture_plans.py <tag> [name1,name2,...]
 """

@@ -148,7 +148,9 @@ class _BitReader:
         self.pos += 2
 
 
-def _decode_huff(r: _BitReader, table: dict) -> int:
+def _decode_huff(r: _BitReader, table: dict | None) -> int:
+    if table is None:
+        raise ValueError("scan uses an undefined Huffman table")
     code = 0
     for ln in range(1, 17):
         code = (code << 1) | r.bit()
@@ -156,6 +158,15 @@ def _decode_huff(r: _BitReader, table: dict) -> int:
         if sym is not None:
             return sym
     raise ValueError("invalid Huffman code in entropy stream")
+
+
+def _dc_coef(v: int) -> int:
+    """A DC value about to be stored in an int32 coefficient block.
+    Corrupt scans can decode difference categories far past the 16
+    bits real ones use, and the running predictor then overflows."""
+    if not -(1 << 31) <= v < (1 << 31):
+        raise ValueError("DC predictor overflows the coefficient block")
+    return v
 
 
 def _extend(v: int, t: int) -> int:
@@ -374,7 +385,7 @@ def _decode_baseline_entropy(blob, pos, sof, scan, dri, coefs):
                                               mx * sc["hs"] + u]
                         t = _decode_huff(reader, sc["dc"])
                         preds[si] += _extend(reader.bits(t), t)
-                        blk[0] = preds[si]
+                        blk[0] = _dc_coef(preds[si])
                         k = 1
                         while k < 64:
                             rs = _decode_huff(reader, sc["ac"])
@@ -519,7 +530,7 @@ def _prog_dc_scan(reader, sof, members, ah, al, dri, coefs):
                 if ah == 0:
                     t = _decode_huff(reader, m["dc"])
                     pred += _extend(reader.bits(t), t)
-                    blk[0] = pred << al
+                    blk[0] = _dc_coef(pred << al)
                 elif reader.bit():
                     blk[0] = int(blk[0]) | (1 << al)
                 blkno += 1
@@ -544,7 +555,7 @@ def _prog_dc_scan(reader, sof, members, ah, al, dri, coefs):
                         if ah == 0:  # first pass: diff-coded, << al
                             t = _decode_huff(reader, m["dc"])
                             preds[si] += _extend(reader.bits(t), t)
-                            blk[0] = preds[si] << al
+                            blk[0] = _dc_coef(preds[si] << al)
                         else:  # refinement: one raw bit per block
                             if reader.bit():
                                 blk[0] = int(blk[0]) | (1 << al)

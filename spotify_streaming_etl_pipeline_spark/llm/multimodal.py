@@ -31,11 +31,21 @@ nothing fabricates pseudo-frames;
 set (length, first byte, md5) so the Spark-side plumbing — schema,
 batch shape, partitioning — is oracle-testable end to end regardless
 of codec availability.
+
+Plumbing: every one-row-per-blob feature stage is a per-blob row
+function handed to ``_blob_stage`` — one Arrow-batched
+``mapInPandas`` over ``(doc_id, blob)`` that emits
+``(doc_id, *row_of(blob))`` under the stage's schema — and every
+``synth_*_corpus`` substrate is a per-doc blob function handed to
+``_synth_stage``.  The poison policy is stated once, in
+``_blob_stage``: a row function that raises any ``Exception`` yields
+``doc_id`` plus NULLs (dead-letter), never a killed task;
+``BaseException`` (interrupts, exits) still propagates.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -75,6 +85,61 @@ MEDIA_SCHEMA = StructType(
         ),
     ]
 )
+
+
+def _blob_stage(
+    media: DataFrame,
+    row_of: Callable[[bytes], tuple],
+    schema: StructType | str,
+) -> DataFrame:
+    """The media stage every one-row-per-blob feature extractor runs
+    through: Arrow-batched ``mapInPandas`` over ``(doc_id, blob)``
+    emitting ``(doc_id, *row_of(bytes(blob)))`` — one output row per
+    input row, columns named by ``schema``.
+
+    The one poison policy: if ``row_of`` raises any ``Exception`` the
+    row is ``doc_id`` plus NULLs.  At corpus scale one hostile blob
+    must dead-letter, never kill the task and the job with it, and
+    crawled bytes reach far more than a codec's own data errors
+    (``TypeError``/``RecursionError`` in PDF object walks,
+    ``OverflowError``/``AttributeError`` in corrupt JPEG scans), so a
+    per-codec list drifts and leaks.  ``BaseException``
+    (``KeyboardInterrupt``, ``SystemExit``) is not caught."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    poison = (None,) * (len(names) - 1)
+
+    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
+                try:
+                    rows.append((doc_id, *row_of(bytes(blob))))
+                except Exception:
+                    rows.append((doc_id, *poison))
+            yield pd.DataFrame(rows, columns=names)
+
+    return media.select("doc_id", "blob").mapInPandas(_batch, schema=schema)
+
+
+def _synth_stage(docs: DataFrame, blob_of: Callable[[int], bytes]) -> DataFrame:
+    """The synthetic-corpus stage every ``synth_*_corpus`` runs
+    through: ``(doc_id, blob_of(int(doc_id)))`` per doc, Arrow-batched,
+    under the shared ``doc_id long, blob binary`` media shape."""
+
+    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "blob": [blob_of(int(i)) for i in pdf["doc_id"]],
+                }
+            )
+
+    return docs.select("doc_id").mapInPandas(
+        _batch, schema="doc_id long, blob binary"
+    )
 
 
 def attach_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -136,31 +201,10 @@ def resize_blobs(media: DataFrame, width: int = 16, height: int = 16) -> DataFra
     Poison blobs (unrecognized signature, corrupt stream, unsupported
     subformat) null out instead of killing the task — the same
     dead-letter contract as ``png_features``/``jpeg_features``."""
-
-    def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        def _safe(b: bytes) -> bytes | None:
-            try:
-                return resize_image(b, width, height)
-            except (ValueError, NotImplementedError, IndexError,
-                    KeyError, struct.error, zlib.error):
-                return None
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": pdf["blob"].map(_safe),
-                }
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _resize_batch,
-        schema=StructType(
-            [StructField("doc_id", LongType()), StructField("blob", BinaryType())]
-        ),
+    return _blob_stage(
+        media,
+        lambda b: (resize_image(b, width, height),),
+        "doc_id long, blob binary",
     )
 
 
@@ -687,33 +731,16 @@ def png_features(media: DataFrame) -> DataFrame:
     ``decode_png`` into (width, height, channels, mean pixel value);
     non-PNG blobs yield null features instead of failing the batch —
     at corpus scale a poison blob must dead-letter, not kill a task."""
-
-    def _png_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    img = decode_png(blob)
-                    mean = sum(img["pixels"]) // max(1, len(img["pixels"]))
-                    rows.append(
-                        (doc_id, img["width"], img["height"], img["channels"], mean)
-                    )
-                except (ValueError, NotImplementedError, struct.error,
-                        zlib.error):
-                    # dead-letter contract: corrupt IDAT (zlib.error) and
-                    # lying chunk lengths (struct.error) null out too —
-                    # a poison blob must never kill the task.
-                    rows.append((doc_id, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "mean_pixel"]
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _png_batch, schema=PNG_FEATURE_SCHEMA
+    return _blob_stage(
+        media, lambda b: _image_row(decode_png(b)), PNG_FEATURE_SCHEMA
     )
+
+
+def _image_row(img: dict) -> tuple:
+    """(width, height, channels, integer mean pixel) of a decoded
+    raster — the PNG/BMP/GIF feature row."""
+    mean = sum(img["pixels"]) // max(1, len(img["pixels"]))
+    return img["width"], img["height"], img["channels"], mean
 
 
 JPEG_FEATURE_SCHEMA = StructType(
@@ -737,35 +764,14 @@ def jpeg_features(media: DataFrame) -> DataFrame:
     (dead-letter contract). Mean is a DOUBLE (rounded to 4) because
     decoded pixel means are generally fractional, unlike the
     constant-pixel PNG/BMP/GIF corpora."""
+    from .jpeg import decode_jpeg
 
-    def _jpeg_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def _row(b: bytes) -> tuple:
+        img = decode_jpeg(b)
+        mean = round(sum(img["pixels"]) / max(1, len(img["pixels"])), 4)
+        return img["width"], img["height"], img["channels"], mean
 
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    img = decode_jpeg(blob)
-                    mean = round(
-                        sum(img["pixels"]) / max(1, len(img["pixels"])), 4
-                    )
-                    rows.append(
-                        (doc_id, img["width"], img["height"],
-                         img["channels"], mean)
-                    )
-                except (ValueError, NotImplementedError, IndexError,
-                        KeyError, struct.error):
-                    rows.append((doc_id, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "mean_pixel"],
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _jpeg_batch, schema=JPEG_FEATURE_SCHEMA
-    )
+    return _blob_stage(media, _row, JPEG_FEATURE_SCHEMA)
 
 
 def synth_jpeg_corpus(docs: DataFrame) -> DataFrame:
@@ -795,49 +801,28 @@ def synth_jpeg_corpus(docs: DataFrame) -> DataFrame:
     solid blocks make the DC round-trip EXACT (DC = 8*(v-128)
     quantized by 8), so ``jpeg_features`` decodes means that are
     exact rational functions of doc_id."""
+    from .jpeg import encode_jpeg, encode_jpeg_progressive
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import encode_jpeg, encode_jpeg_progressive
+    def _blob(i: int) -> bytes:
+        mode = i % 4
+        wb, hb = 1 + i % 3, 1 + i % 2
+        base = (i * 17) % 200 if mode in (0, 3) else (i * 17) % 180 + 10
+        img = [
+            [base + (y // 8) * wb + (x // 8) for x in range(8 * wb)]
+            for y in range(8 * hb)
+        ]
+        if mode == 0:
+            return encode_jpeg([img])
+        if mode == 3:
+            return encode_jpeg_progressive([img])
+        cb, cr = (128, 133) if mode == 1 else (123, 128)
+        solid = lambda v: [[v] * (8 * wb) for _ in range(8 * hb)]
+        sampling = (
+            [(2, 2), (1, 1), (1, 1)] if mode == 1 else [(2, 1), (1, 1), (1, 1)]
+        )
+        return encode_jpeg([img, solid(cb), solid(cr)], sampling=sampling)
 
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                mode = i % 4
-                wb, hb = 1 + i % 3, 1 + i % 2
-                base = (
-                    (i * 17) % 200
-                    if mode in (0, 3)
-                    else (i * 17) % 180 + 10
-                )
-                img = [
-                    [base + (y // 8) * wb + (x // 8) for x in range(8 * wb)]
-                    for y in range(8 * hb)
-                ]
-                if mode == 0:
-                    blobs.append(encode_jpeg([img]))
-                elif mode == 3:
-                    blobs.append(encode_jpeg_progressive([img]))
-                else:
-                    cb, cr = (128, 133) if mode == 1 else (123, 128)
-                    solid = lambda v: [
-                        [v] * (8 * wb) for _ in range(8 * hb)
-                    ]
-                    sampling = (
-                        [(2, 2), (1, 1), (1, 1)]
-                        if mode == 1
-                        else [(2, 1), (1, 1), (1, 1)]
-                    )
-                    blobs.append(
-                        encode_jpeg(
-                            [img, solid(cb), solid(cr)], sampling=sampling
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def _ulaw_expand(b: int) -> int:
@@ -1033,50 +1018,24 @@ def wav_features(media: DataFrame) -> DataFrame:
     n_samples, duration_ms, integer RMS over all channels); non-WAV
     or compressed blobs yield null features instead of failing the
     batch — poison media dead-letters, it never kills a task."""
+    return _blob_stage(
+        media, lambda b: _pcm_row(decode_wav(b)), WAV_FEATURE_SCHEMA
+    )
+
+
+def _pcm_row(w: dict) -> tuple:
+    """(sample_rate, channels, n_samples, duration_ms, integer RMS over
+    all channels) of a decoded recording — the WAV/FLAC feature row."""
     import math
-    import struct
 
-    def _wav_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    w = decode_wav(blob)
-                    s = w["samples"]
-                    rms = (
-                        int(math.sqrt(sum(x * x for x in s) / len(s)))
-                        if s
-                        else 0
-                    )
-                    rows.append(
-                        (
-                            doc_id,
-                            w["sample_rate"],
-                            w["channels"],
-                            w["n_samples"],
-                            w["n_samples"] * 1000 // max(1, w["sample_rate"]),
-                            rms,
-                        )
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    # struct.error belt-and-braces: decode_wav validates
-                    # the fmt chunk, but any residual short-buffer unpack
-                    # must still dead-letter, not kill the task.
-                    rows.append((doc_id, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "channels",
-                    "n_samples",
-                    "duration_ms",
-                    "rms",
-                ],
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _wav_batch, schema=WAV_FEATURE_SCHEMA
+    s = w["samples"]
+    rms = int(math.sqrt(sum(x * x for x in s) / len(s))) if s else 0
+    return (
+        w["sample_rate"],
+        w["channels"],
+        w["n_samples"],
+        w["n_samples"] * 1000 // max(1, w["sample_rate"]),
+        rms,
     )
 
 
@@ -1096,25 +1055,8 @@ def bmp_features(media: DataFrame) -> DataFrame:
     the binary column, BMP blobs decoded with ``decode_bmp`` into
     (width, height, channels, mean pixel value); poison blobs yield
     null features, never a task failure."""
-
-    def _bmp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    img = decode_bmp(blob)
-                    mean = sum(img["pixels"]) // max(1, len(img["pixels"]))
-                    rows.append(
-                        (doc_id, img["width"], img["height"], img["channels"], mean)
-                    )
-                except (ValueError, NotImplementedError):
-                    rows.append((doc_id, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "mean_pixel"]
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _bmp_batch, schema=BMP_FEATURE_SCHEMA
+    return _blob_stage(
+        media, lambda b: _image_row(decode_bmp(b)), BMP_FEATURE_SCHEMA
     )
 
 
@@ -1128,38 +1070,35 @@ def synth_wav_corpus(docs: DataFrame) -> DataFrame:
     oracle gate instead of unit-only coverage."""
     import struct
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rate = 8000 * (1 + i % 3)
-                channels = 1 + i % 2
-                bits = 8 if i % 4 < 2 else 16
-                amp = 50 + i % 70  # <= 119: fits 8-bit PCM
-                frames = 100 + (i % 5) * 30
-                n = frames * channels
-                samples = [amp if s % 2 == 0 else -amp for s in range(n)]
-                if bits == 8:
-                    data = bytes(s + 128 for s in samples)
-                else:
-                    data = struct.pack(f"<{n}h", *samples)
-                block = channels * bits // 8
-                fmt = struct.pack(
-                    "<HHIIHH", 1, channels, rate, rate * block, block, bits
-                )
-                chunks = (
-                    b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                blobs.append(
-                    b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        rate = 8000 * (1 + i % 3)
+        channels = 1 + i % 2
+        bits = 8 if i % 4 < 2 else 16
+        amp = 50 + i % 70  # <= 119: fits 8-bit PCM
+        frames = 100 + (i % 5) * 30
+        n = frames * channels
+        samples = [amp if s % 2 == 0 else -amp for s in range(n)]
+        if bits == 8:
+            data = bytes(s + 128 for s in samples)
+        else:
+            data = struct.pack(f"<{n}h", *samples)
+        block = channels * bits // 8
+        fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * block, block, bits)
+        return _riff_wave(fmt, data)
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
+    return _synth_stage(docs, _blob)
+
+
+def _riff_wave(fmt: bytes, data: bytes) -> bytes:
+    """A RIFF/WAVE file of one ``fmt `` chunk and one ``data`` chunk —
+    the container every synthesized WAV corpus writes."""
+    import struct
+
+    chunks = (
+        b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
     )
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 def decode_audio(blob: bytes) -> dict:
@@ -1217,37 +1156,17 @@ def pdf_text_features(media: DataFrame) -> DataFrame:
     with pages joined by form-feed; poison blobs — non-PDF bytes,
     encrypted documents, non-Flate filters, corrupt zlib — null out
     instead of killing the task (dead-letter contract).  /ObjStm
-    -packed documents (PDF 1.5) unpack for real."""
+    -packed documents (PDF 1.5) unpack for real.  Malformed crawled
+    PDFs reach ``TypeError`` (ObjStm ``int(None)``) and
+    ``RecursionError`` — the breadth ``_blob_stage``'s policy covers."""
+    from .pdf import extract_pdf_text
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .pdf import extract_pdf_text
+    def _row(b: bytes) -> tuple:
+        out = extract_pdf_text(b)
+        return out["n_pages"], len(out["text"]), out["text"]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    out = extract_pdf_text(bytes(blob))
-                    rows.append(
-                        (
-                            doc_id,
-                            out["n_pages"],
-                            len(out["text"]),
-                            out["text"],
-                        )
-                    )
-                except Exception:
-                    # the FULL breadth: malformed crawled PDFs reach
-                    # TypeError (ObjStm int(None)), RecursionError,
-                    # zlib paths, … — ONE hostile blob must null out,
-                    # never kill the Spark task and the corpus build
-                    rows.append((doc_id, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_pages", "n_chars", "text"]
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _batch,
-        schema="doc_id long, n_pages long, n_chars long, text string",
+    return _blob_stage(
+        media, _row, "doc_id long, n_pages long, n_chars long, text string"
     )
 
 
@@ -1271,38 +1190,25 @@ def synth_pdf_corpus(docs: DataFrame) -> DataFrame:
     real /O and /U (and R6 /UE) entries, per-object stream keys,
     per-stream IVs — extraction matches only if every decryption
     path genuinely runs."""
+    from .pdf import encode_pdf
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .pdf import encode_pdf
+    def _blob(i: int) -> bytes:
+        pages = [
+            [
+                "[%05d:%d:%d] word%02d." % (i, q, j, (i * 7 + q * 3 + j) % 100)
+                for j in range(2 + (i + q) % 2)
+            ]
+            for q in range(1 + i % 3)
+        ]
+        return encode_pdf(
+            pages,
+            compress=i % 2 == 0,
+            type0=i % 3 == 2,
+            encrypt="" if i % 4 == 3 else None,
+            encrypt_version=4 if i % 8 == 7 else 5 if i % 16 == 11 else 2,
+        )
 
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                pages = [
-                    [
-                        "[%05d:%d:%d] word%02d."
-                        % (i, q, j, (i * 7 + q * 3 + j) % 100)
-                        for j in range(2 + (i + q) % 2)
-                    ]
-                    for q in range(1 + i % 3)
-                ]
-                blobs.append(
-                    encode_pdf(
-                        pages,
-                        compress=i % 2 == 0,
-                        type0=i % 3 == 2,
-                        encrypt="" if i % 4 == 3 else None,
-                        encrypt_version=(
-                            4 if i % 8 == 7 else 5 if i % 16 == 11 else 2
-                        ),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def webp_features(media: DataFrame) -> DataFrame:
@@ -1313,60 +1219,32 @@ def webp_features(media: DataFrame) -> DataFrame:
     Lossy VP8 blobs keep their header audit (dims/format via
     ``webp_info``) with NULL pixel sums — the honest-refusal contract;
     poison blobs null out entirely (dead-letter contract)."""
+    from .webp import decode_webp, webp_info
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .webp import decode_webp, webp_info
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    info = webp_info(bytes(blob))
-                except Exception:
-                    rows.append((doc_id, None, None, None, None, None, None))
-                    continue
-                try:
-                    out = decode_webp(bytes(blob))
-                    px = out["pixels"]
-                    rows.append(
-                        (
-                            doc_id,
-                            out["width"],
-                            out["height"],
-                            out["format"],
-                            int(out["has_alpha"]),
-                            sum((p >> 16) & 0xFF for p in px),
-                            sum((p >> 8) & 0xFF for p in px),
-                        )
-                    )
-                except NotImplementedError:
-                    rows.append(
-                        (
-                            doc_id,
-                            info["width"],
-                            info["height"],
-                            info["format"],
-                            int(info.get("has_alpha", False)),
-                            None,
-                            None,
-                        )
-                    )
-                except Exception:
-                    rows.append((doc_id, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "fmt", "has_alpha",
-                    "sum_red", "sum_green",
-                ],
+    def _row(b: bytes) -> tuple:
+        info = webp_info(b)
+        try:
+            out = decode_webp(b)
+        except NotImplementedError:
+            return (
+                info["width"], info["height"], info["format"],
+                int(info.get("has_alpha", False)), None, None,
             )
+        px = out["pixels"]
+        return (
+            out["width"],
+            out["height"],
+            out["format"],
+            int(out["has_alpha"]),
+            sum((p >> 16) & 0xFF for p in px),
+            sum((p >> 8) & 0xFF for p in px),
+        )
 
-    return media.select("doc_id", "blob").mapInPandas(
-        _batch,
-        schema=(
-            "doc_id long, width long, height long, fmt string, "
-            "has_alpha long, sum_red long, sum_green long"
-        ),
+    return _blob_stage(
+        media,
+        _row,
+        "doc_id long, width long, height long, fmt string, "
+        "has_alpha long, sum_red long, sum_green long",
     )
 
 
@@ -1381,66 +1259,46 @@ def synth_webp_corpus(docs: DataFrame) -> DataFrame:
     function of (doc_id, x, y), so DuckDB predicts the channel sums
     exactly — a decoder that mishandles any transform, the bundling,
     or the prefix-code headers moves the sums."""
+    from .webp import encode_webp_lossless
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .webp import encode_webp_lossless
+    def _blob(i: int) -> bytes:
+        w, h = 4 + i % 5, 3 + i % 3
+        c = i % 5
+        if c == 0:
+            px = [
+                0xFF000000
+                | ((i % 100 + y) << 16)
+                | ((i % 90 + 2 * y) << 8)
+                | (i * 7 % 128)
+                for y in range(h)
+                for _ in range(w)
+            ]
+            return encode_webp_lossless(px, w, h, rle=True)
+        if c == 2:
+            c0 = 0xFF000000 | ((10 + i % 50) << 16) | ((20 + i % 60) << 8) | 5
+            c1 = 0xFF000000 | ((200 - i % 50) << 16) | ((150 - i % 60) << 8) | 99
+            px = [
+                c0 if (x + y) % 2 == 0 else c1
+                for y in range(h)
+                for x in range(w)
+            ]
+            return encode_webp_lossless(px, w, h, transform="palette")
+        px = [
+            0xFF000000
+            | ((i % 100 + x + y) << 16)
+            | ((i % 90 + 2 * x + y) << 8)
+            | ((i * 7 % 128 + x) & 0xFF)
+            for y in range(h)
+            for x in range(w)
+        ]
+        tf = {
+            1: "subtract_green",
+            3: ("predictor", 2, 2),
+            4: ("color", 16, 8, 4, 2),
+        }[c]
+        return encode_webp_lossless(px, w, h, transform=tf)
 
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 5, 3 + i % 3
-                c = i % 5
-                if c == 0:
-                    px = [
-                        0xFF000000
-                        | ((i % 100 + y) << 16)
-                        | ((i % 90 + 2 * y) << 8)
-                        | (i * 7 % 128)
-                        for y in range(h)
-                        for _ in range(w)
-                    ]
-                    blob = encode_webp_lossless(px, w, h, rle=True)
-                elif c == 2:
-                    c0 = (
-                        0xFF000000
-                        | ((10 + i % 50) << 16)
-                        | ((20 + i % 60) << 8)
-                        | 5
-                    )
-                    c1 = (
-                        0xFF000000
-                        | ((200 - i % 50) << 16)
-                        | ((150 - i % 60) << 8)
-                        | 99
-                    )
-                    px = [
-                        c0 if (x + y) % 2 == 0 else c1
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                    blob = encode_webp_lossless(px, w, h, transform="palette")
-                else:
-                    px = [
-                        0xFF000000
-                        | ((i % 100 + x + y) << 16)
-                        | ((i % 90 + 2 * x + y) << 8)
-                        | ((i * 7 % 128 + x) & 0xFF)
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                    tf = {
-                        1: "subtract_green",
-                        3: ("predictor", 2, 2),
-                        4: ("color", 16, 8, 4, 2),
-                    }[c]
-                    blob = encode_webp_lossless(px, w, h, transform=tf)
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def flac_features(media: DataFrame) -> DataFrame:
@@ -1451,44 +1309,10 @@ def flac_features(media: DataFrame) -> DataFrame:
     decorrelation) into (sample_rate, channels, n_samples,
     duration_ms, integer RMS); poison blobs — truncated
     bitstreams, non-FLAC bytes — null out (dead-letter contract)."""
-    import math
+    from .flac import decode_flac
 
-    def _flac_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .flac import decode_flac
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    w = decode_flac(blob)
-                    s = w["samples"]
-                    rms = (
-                        int(math.sqrt(sum(x * x for x in s) / len(s)))
-                        if s
-                        else 0
-                    )
-                    rows.append(
-                        (
-                            doc_id,
-                            w["sample_rate"],
-                            w["channels"],
-                            w["n_samples"],
-                            w["n_samples"] * 1000 // max(1, w["sample_rate"]),
-                            rms,
-                        )
-                    )
-                except (ValueError, NotImplementedError, IndexError):
-                    rows.append((doc_id, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "n_samples",
-                    "duration_ms", "rms",
-                ],
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _flac_batch, schema=WAV_FEATURE_SCHEMA
+    return _blob_stage(
+        media, lambda b: _pcm_row(decode_flac(b)), WAV_FEATURE_SCHEMA
     )
 
 
@@ -1499,29 +1323,15 @@ def synth_flac_corpus(docs: DataFrame) -> DataFrame:
     just CONSTANT subframes — so ``flac_features`` decodes an integer
     RMS exactly equal to the amplitude and every feature is an
     arithmetic function of doc_id."""
+    from .flac import encode_flac
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .flac import encode_flac
+    def _blob(i: int) -> bytes:
+        amp = 50 + i % 70
+        frames = 100 + (i % 5) * 30
+        sig = [amp if s % 2 == 0 else -amp for s in range(frames)]
+        return encode_flac([sig], sample_rate=8000 * (1 + i % 3), fixed_order=1)
 
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                amp = 50 + i % 70
-                frames = 100 + (i % 5) * 30
-                sig = [amp if s % 2 == 0 else -amp for s in range(frames)]
-                blobs.append(
-                    encode_flac(
-                        [sig],
-                        sample_rate=8000 * (1 + i % 3),
-                        fixed_order=1,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def synth_g711_corpus(docs: DataFrame) -> DataFrame:
@@ -1534,27 +1344,12 @@ def synth_g711_corpus(docs: DataFrame) -> DataFrame:
     companding tables themselves, not just the RIFF walk."""
     import struct
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                fmt_tag = 7 if i % 2 == 0 else 6
-                n = 80 + (i % 5) * 20
-                data = bytes([i % 256]) * n
-                fmt = struct.pack("<HHIIHH", fmt_tag, 1, 8000, 8000, 1, 8)
-                chunks = (
-                    b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                blobs.append(
-                    b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        fmt_tag = 7 if i % 2 == 0 else 6
+        fmt = struct.pack("<HHIIHH", fmt_tag, 1, 8000, 8000, 1, 8)
+        return _riff_wave(fmt, bytes([i % 256]) * (80 + (i % 5) * 20))
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def synth_bmp_corpus(docs: DataFrame) -> DataFrame:
@@ -1565,63 +1360,32 @@ def synth_bmp_corpus(docs: DataFrame) -> DataFrame:
     exact integer functions of doc_id."""
     import struct
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        palette = b"".join(
-            struct.pack("<BBBB", i, i, i, 0) for i in range(256)
-        )
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 4 + i % 8
-                h = 3 + i % 5
-                v = (i * 7) % 256
-                stride = (w + 3) & ~3
-                pixels = (bytes([v]) * w + b"\x00" * (stride - w)) * h
-                data_off = 14 + 40 + len(palette)
-                filehdr = b"BM" + struct.pack(
-                    "<IHHI", data_off + len(pixels), 0, 0, data_off
-                )
-                infohdr = struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 8, 0, len(pixels), 0, 0, 256, 0
-                )
-                blobs.append(filehdr + infohdr + palette + pixels)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    palette = b"".join(struct.pack("<BBBB", i, i, i, 0) for i in range(256))
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    def _blob(i: int) -> bytes:
+        w = 4 + i % 8
+        h = 3 + i % 5
+        v = (i * 7) % 256
+        stride = (w + 3) & ~3
+        pixels = (bytes([v]) * w + b"\x00" * (stride - w)) * h
+        data_off = 14 + 40 + len(palette)
+        filehdr = b"BM" + struct.pack(
+            "<IHHI", data_off + len(pixels), 0, 0, data_off
+        )
+        infohdr = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 8, 0, len(pixels), 0, 0, 256, 0
+        )
+        return filehdr + infohdr + palette + pixels
+
+    return _synth_stage(docs, _blob)
 
 
 def gif_features(media: DataFrame) -> DataFrame:
     """``png_features``'s GIF sibling: Arrow-batched mapInPandas,
     GIF blobs decoded with ``decode_gif`` (full LZW) into (width,
     height, channels, mean pixel); poison blobs null out."""
-
-    def _gif_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    img = decode_gif(blob)
-                    mean = sum(img["pixels"]) // max(1, len(img["pixels"]))
-                    rows.append(
-                        (doc_id, img["width"], img["height"], img["channels"], mean)
-                    )
-                except (ValueError, NotImplementedError, struct.error,
-                        IndexError):
-                    # dead-letter contract: truncated headers
-                    # (struct.error) and palette-out-of-range LZW output
-                    # (IndexError) null out, never kill the task.
-                    rows.append((doc_id, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "mean_pixel"]
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _gif_batch, schema=BMP_FEATURE_SCHEMA
+    return _blob_stage(
+        media, lambda b: _image_row(decode_gif(b)), BMP_FEATURE_SCHEMA
     )
 
 
@@ -1641,27 +1405,20 @@ def synth_png_corpus(docs: DataFrame) -> DataFrame:
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 4 + i % 6
-                h = 2 + i % 4
-                v = (i * 11) % 256
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-                raw = (b"\x00" + bytes([v]) * w) * h
-                blobs.append(
-                    _PNG_SIG
-                    + _chunk(b"IHDR", ihdr)
-                    + _chunk(b"IDAT", zlib.compress(raw))
-                    + _chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        w = 4 + i % 6
+        h = 2 + i % 4
+        v = (i * 11) % 256
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+        raw = (b"\x00" + bytes([v]) * w) * h
+        return (
+            _PNG_SIG
+            + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", zlib.compress(raw))
+            + _chunk(b"IEND", b"")
+        )
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def synth_gradient_png_corpus(docs: DataFrame) -> DataFrame:
@@ -1673,23 +1430,14 @@ def synth_gradient_png_corpus(docs: DataFrame) -> DataFrame:
     are exact arithmetic functions of doc_id. A constant-pixel corpus
     could not certify the resample index map; a gradient can."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 8 + (i % 5) * 4
-                h = 6 + (i % 3) * 2
-                base = (i * 7) % 200
-                px = bytes(
-                    base + x + y for y in range(h) for x in range(w)
-                )
-                blobs.append(encode_png(w, h, 1, px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        w = 8 + (i % 5) * 4
+        h = 6 + (i % 3) * 2
+        base = (i * 7) % 200
+        px = bytes(base + x + y for y in range(h) for x in range(w))
+        return encode_png(w, h, 1, px)
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
@@ -1742,31 +1490,25 @@ def synth_gif_corpus(docs: DataFrame) -> DataFrame:
     width/height/channels/mean back out exactly."""
     import struct
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        palette = b"".join(bytes((i, i, i)) for i in range(256))
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 3 + i % 7
-                h = 2 + i % 3
-                v = (i * 13) % 256
-                out = bytearray(b"GIF89a")
-                out += struct.pack("<HHBBB", w, h, 0x80 | 7, 0, 0)  # 256-color GCT
-                out += palette
-                out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-                out += bytes((8,))  # min LZW code size
-                data = _gif_lzw_encode(bytes([v]) * (w * h), 8)
-                for off in range(0, len(data), 255):
-                    chunk = data[off : off + 255]
-                    out += bytes((len(chunk),)) + chunk
-                out += b"\x00\x3b"
-                blobs.append(bytes(out))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    palette = b"".join(bytes((i, i, i)) for i in range(256))
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    def _blob(i: int) -> bytes:
+        w = 3 + i % 7
+        h = 2 + i % 3
+        v = (i * 13) % 256
+        out = bytearray(b"GIF89a")
+        out += struct.pack("<HHBBB", w, h, 0x80 | 7, 0, 0)  # 256-color GCT
+        out += palette
+        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
+        out += bytes((8,))  # min LZW code size
+        data = _gif_lzw_encode(bytes([v]) * (w * h), 8)
+        for off in range(0, len(data), 255):
+            chunk = data[off : off + 255]
+            out += bytes((len(chunk),)) + chunk
+        out += b"\x00\x3b"
+        return bytes(out)
+
+    return _synth_stage(docs, _blob)
 
 
 FRAME_FEATURE_SCHEMA = StructType(
@@ -1786,34 +1528,15 @@ def video_frame_features(media: DataFrame, max_frames: int = 8) -> DataFrame:
     reports frame count, total payload bytes, and the first frame's
     first byte; undemuxable blobs null out (dead-letter contract)."""
 
-    def _frames_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def _row(b: bytes) -> tuple:
+        frames = sample_frames(b, max_frames=max_frames)
+        return (
+            len(frames),
+            sum(len(f) for f in frames),
+            frames[0][0] if frames and frames[0] else None,
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    frames = sample_frames(bytes(blob), max_frames=max_frames)
-                    rows.append(
-                        (
-                            doc_id,
-                            len(frames),
-                            sum(len(f) for f in frames),
-                            frames[0][0] if frames and frames[0] else None,
-                        )
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((doc_id, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "total_frame_bytes", "first_frame_byte",
-                ],
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _frames_batch, schema=FRAME_FEATURE_SCHEMA
-    )
+    return _blob_stage(media, _row, FRAME_FEATURE_SCHEMA)
 
 
 def synth_video_corpus(
@@ -1861,29 +1584,20 @@ def synth_video_corpus(
         moov = box(b"moov", box(b"trak", box(b"mdia", hdlr + minf)))
         return ftyp + mdat + moov
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                b = i if shared_patterns is None else i % shared_patterns
-                # the frame byte enters mod 256, so b alone wraps at
-                # 256 distinct videos; the (b // 256) j-multiplier
-                # spread keeps distinct videos growing with the
-                # pattern count (~65k) — ZERO effect for b < 256, so
-                # the oracle substrates are bit-identical (r12
-                # scale-leg fix)
-                frames = [
-                    bytes([(b + j * (1 + 3 * (b // 256))) % 256])
-                    * (10 + j)
-                    for j in range(3 + i % 6)
-                ]
-                blobs.append(_avi(frames) if i % 2 == 0 else _mp4(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        b = i if shared_patterns is None else i % shared_patterns
+        # the frame byte enters mod 256, so b alone wraps at 256
+        # distinct videos; the (b // 256) j-multiplier spread keeps
+        # distinct videos growing with the pattern count (~65k) — ZERO
+        # effect for b < 256, so the oracle substrates are
+        # bit-identical (r12 scale-leg fix)
+        frames = [
+            bytes([(b + j * (1 + 3 * (b // 256))) % 256]) * (10 + j)
+            for j in range(3 + i % 6)
+        ]
+        return _avi(frames) if i % 2 == 0 else _mp4(frames)
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def synth_mkv_corpus(docs: DataFrame) -> DataFrame:
@@ -1963,20 +1677,11 @@ def synth_mkv_corpus(docs: DataFrame) -> DataFrame:
         cluster = _elem(b"\x1f\x43\xb6\x75", _elem(b"\xe7", b"\x00") + blocks)
         return header + _elem(b"\x18\x53\x80\x67", cluster)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                frames = [
-                    bytes([(i + j) % 256]) * (10 + j) for j in range(3 + i % 6)
-                ]
-                blobs.append(_mkv(frames, i % 4))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        frames = [bytes([(i + j) % 256]) * (10 + j) for j in range(3 + i % 6)]
+        return _mkv(frames, i % 4)
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 # MPEG-1 Layer III header tables (public spec constants): bitrate in
@@ -2074,28 +1779,16 @@ def mp3_features(media: DataFrame) -> DataFrame:
     (n_frames, sample_rate, bitrate_kbps, duration_ms, vbr) per blob;
     poison blobs null out (dead-letter contract)."""
 
-    def _mp3_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    m = mp3_stream_info(blob)
-                    rows.append(
-                        (doc_id, m["n_frames"], m["sample_rate"],
-                         m["bitrate_kbps"], m["duration_ms"], m["vbr"])
-                    )
-                except (ValueError, NotImplementedError, IndexError):
-                    rows.append((doc_id, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "sample_rate",
-                         "bitrate_kbps", "duration_ms", "vbr"],
-            )
+    def _row(b: bytes) -> tuple:
+        m = mp3_stream_info(b)
+        return (m["n_frames"], m["sample_rate"], m["bitrate_kbps"],
+                m["duration_ms"], m["vbr"])
 
-    return media.select("doc_id", "blob").mapInPandas(
-        _mp3_batch,
-        schema="doc_id long, n_frames long, sample_rate long, "
-               "bitrate_kbps long, duration_ms long, vbr boolean",
+    return _blob_stage(
+        media,
+        _row,
+        "doc_id long, n_frames long, sample_rate long, "
+        "bitrate_kbps long, duration_ms long, vbr boolean",
     )
 
 
@@ -2108,34 +1801,31 @@ def synth_mp3_corpus(docs: DataFrame) -> DataFrame:
     the header WALK is what's real and what the oracle predicts;
     nothing pretends to decode them."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n = 3 + i % 5
-                rate_idx = i % 3  # 44100/48000/32000
-                rate = _MP3_RATES[rate_idx]
-                out = bytearray()
-                if i % 2 == 1:
-                    tag = b"TAGDATA!" * (1 + i % 3)
-                    sz = len(tag)
-                    ss = bytes([(sz >> 21) & 0x7F, (sz >> 14) & 0x7F,
-                                (sz >> 7) & 0x7F, sz & 0x7F])
-                    out += b"ID3\x03\x00\x00" + ss + tag
-                for j in range(n):
-                    br_idx = 9 if (i % 2 == 1 and j % 2 == 1) else 8
-                    br = _MP3_BITRATES[br_idx]
-                    h = (0x7FF << 21) | (3 << 19) | (1 << 17)
-                    h |= br_idx << 12 | rate_idx << 10
-                    flen = 144 * br * 1000 // rate
-                    out += h.to_bytes(4, "big") + b"\x00" * (flen - 4)
-                blobs.append(bytes(out))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        rate_idx = i % 3  # 44100/48000/32000
+        rate = _MP3_RATES[rate_idx]
+        out = bytearray()
+        if i % 2 == 1:
+            out += _id3v2(b"TAGDATA!" * (1 + i % 3))
+        for j in range(3 + i % 5):
+            br_idx = 9 if (i % 2 == 1 and j % 2 == 1) else 8
+            br = _MP3_BITRATES[br_idx]
+            h = (0x7FF << 21) | (3 << 19) | (1 << 17)
+            h |= br_idx << 12 | rate_idx << 10
+            flen = 144 * br * 1000 // rate
+            out += h.to_bytes(4, "big") + b"\x00" * (flen - 4)
+        return bytes(out)
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
+
+
+def _id3v2(tag: bytes) -> bytes:
+    """An ID3v2.3 header (synchsafe size) in front of ``tag`` — the
+    prefix the synthesized mp3/AAC corpora put on some docs."""
+    sz = len(tag)
+    ss = bytes([(sz >> 21) & 0x7F, (sz >> 14) & 0x7F, (sz >> 7) & 0x7F,
+                sz & 0x7F])
+    return b"ID3\x03\x00\x00" + ss + tag
 
 
 def _ogg_crc(data: bytes) -> int:
@@ -2260,28 +1950,16 @@ def ogg_features(media: DataFrame) -> DataFrame:
     (codec, n_pages, channels, sample_rate, duration_ms) per blob;
     poison blobs null out (dead-letter contract)."""
 
-    def _ogg_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    m = ogg_stream_info(blob)
-                    rows.append(
-                        (doc_id, m["codec"], m["n_pages"], m["channels"],
-                         m["sample_rate"], m["duration_ms"])
-                    )
-                except (ValueError, NotImplementedError, IndexError):
-                    rows.append((doc_id, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "n_pages", "channels",
-                         "sample_rate", "duration_ms"],
-            )
+    def _row(b: bytes) -> tuple:
+        m = ogg_stream_info(b)
+        return (m["codec"], m["n_pages"], m["channels"], m["sample_rate"],
+                m["duration_ms"])
 
-    return media.select("doc_id", "blob").mapInPandas(
-        _ogg_batch,
-        schema="doc_id long, codec string, n_pages long, channels long, "
-               "sample_rate long, duration_ms long",
+    return _blob_stage(
+        media,
+        _row,
+        "doc_id long, codec string, n_pages long, channels long, "
+        "sample_rate long, duration_ms long",
     )
 
 
@@ -2295,53 +1973,46 @@ def synth_ogg_corpus(docs: DataFrame) -> DataFrame:
     samples per page — duration is an arithmetic function of i that
     the walk must reproduce through the page chain."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def page(serial, seq, granule, body, htype):
-            head = (b"OggS" + bytes([0, htype])
-                    + granule.to_bytes(8, "little", signed=True)
-                    + serial.to_bytes(4, "little")
-                    + seq.to_bytes(4, "little")
-                    + b"\x00\x00\x00\x00"
-                    + bytes([len(body) // 255 + 1])
-                    + b"\xff" * (len(body) // 255)
-                    + bytes([len(body) % 255]))
-            img = head + body
-            crc = _ogg_crc(img)
-            return (img[:22] + crc.to_bytes(4, "little") + img[26:])
+    def page(serial, seq, granule, body, htype):
+        head = (b"OggS" + bytes([0, htype])
+                + granule.to_bytes(8, "little", signed=True)
+                + serial.to_bytes(4, "little")
+                + seq.to_bytes(4, "little")
+                + b"\x00\x00\x00\x00"
+                + bytes([len(body) // 255 + 1])
+                + b"\xff" * (len(body) // 255)
+                + bytes([len(body) % 255]))
+        img = head + body
+        crc = _ogg_crc(img)
+        return (img[:22] + crc.to_bytes(4, "little") + img[26:])
 
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                serial = 0x1000 + i
-                opus = i % 2 == 0
-                pre_skip = 312 + i % 7
-                if opus:
-                    bos = (b"OpusHead" + bytes([1, 1 + i % 2])
-                           + pre_skip.to_bytes(2, "little")
-                           + (48000).to_bytes(4, "little")
-                           + b"\x00\x00" + b"\x00")
-                else:
-                    rate = [48000, 44100, 32000][i % 3]
-                    bos = (b"\x01vorbis" + (0).to_bytes(4, "little")
-                           + bytes([1 + i % 3])
-                           + rate.to_bytes(4, "little")
-                           + b"\x00" * 12 + b"\xb8" + b"\x01")
-                out = page(serial, 0, 0, bos, 0x02)
-                n_audio = 1 + i % 4
-                step = 960 * (2 + i % 3)
-                granule = pre_skip if opus else 0
-                for j in range(n_audio):
-                    granule += step
-                    payload = bytes([(i + j) % 256]) * (20 + 251 * (j % 2))
-                    out += page(serial, 1 + j, granule,
-                                payload, 0x04 if j == n_audio - 1 else 0)
-                blobs.append(out)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        serial = 0x1000 + i
+        opus = i % 2 == 0
+        pre_skip = 312 + i % 7
+        if opus:
+            bos = (b"OpusHead" + bytes([1, 1 + i % 2])
+                   + pre_skip.to_bytes(2, "little")
+                   + (48000).to_bytes(4, "little")
+                   + b"\x00\x00" + b"\x00")
+        else:
+            rate = [48000, 44100, 32000][i % 3]
+            bos = (b"\x01vorbis" + (0).to_bytes(4, "little")
+                   + bytes([1 + i % 3])
+                   + rate.to_bytes(4, "little")
+                   + b"\x00" * 12 + b"\xb8" + b"\x01")
+        out = page(serial, 0, 0, bos, 0x02)
+        n_audio = 1 + i % 4
+        step = 960 * (2 + i % 3)
+        granule = pre_skip if opus else 0
+        for j in range(n_audio):
+            granule += step
+            payload = bytes([(i + j) % 256]) * (20 + 251 * (j % 2))
+            out += page(serial, 1 + j, granule,
+                        payload, 0x04 if j == n_audio - 1 else 0)
+        return out
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 # ADTS sampling-frequency table (public spec constant, ISO 14496-3):
@@ -2445,32 +2116,16 @@ def aac_features(media: DataFrame) -> DataFrame:
     crc_frames) per blob; poison blobs null out (dead-letter
     contract)."""
 
-    def _aac_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    m = aac_stream_info(blob)
-                    rows.append(
-                        (doc_id, m["n_frames"], m["sample_rate"],
-                         m["channels"], m["profile"], m["duration_ms"],
-                         m["crc_frames"])
-                    )
-                except (ValueError, NotImplementedError, IndexError):
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "sample_rate", "channels",
-                         "profile", "duration_ms", "crc_frames"],
-            )
+    def _row(b: bytes) -> tuple:
+        m = aac_stream_info(b)
+        return (m["n_frames"], m["sample_rate"], m["channels"],
+                m["profile"], m["duration_ms"], m["crc_frames"])
 
-    return media.select("doc_id", "blob").mapInPandas(
-        _aac_batch,
-        schema="doc_id long, n_frames long, sample_rate long, "
-               "channels long, profile long, duration_ms long, "
-               "crc_frames long",
+    return _blob_stage(
+        media,
+        _row,
+        "doc_id long, n_frames long, sample_rate long, channels long, "
+        "profile long, duration_ms long, crc_frames long",
     )
 
 
@@ -2485,46 +2140,36 @@ def synth_aac_corpus(docs: DataFrame) -> DataFrame:
     form, dummy CRC), raw_data_blocks = i %% 2 (so duration doubles),
     ID3v2 prefix on i %% 5 == 1."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sfis = [3, 4, 8, 11]
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                prof = i % 4
-                sfi = sfis[i % 4]
-                ch = 1 + i % 3
-                crc = i % 3 == 0
-                rdb = i % 2
-                out = bytearray()
-                if i % 5 == 1:
-                    tag = b"AACTAG!!" * (1 + i % 2)
-                    sz = len(tag)
-                    out += (b"ID3\x03\x00\x00"
-                            + bytes([(sz >> 21) & 0x7F, (sz >> 14) & 0x7F,
-                                     (sz >> 7) & 0x7F, sz & 0x7F]) + tag)
-                for j in range(2 + i % 4):
-                    header_len = 9 if crc else 7
-                    payload = 5 + (i + j) % 7
-                    flen = header_len + payload
-                    out += bytes([
-                        0xFF,
-                        0xF0 | (0 << 3) | (0 << 1) | (0 if crc else 1),
-                        (prof << 6) | (sfi << 2) | (ch >> 2),
-                        ((ch & 3) << 6) | (flen >> 11),
-                        (flen >> 3) & 0xFF,
-                        ((flen & 7) << 5) | 0x1F,  # buffer fullness hi
-                        (0x3F << 2) | rdb,         # fullness lo + rdb
-                    ])
-                    if crc:
-                        out += b"\x00\x00"
-                    out += b"\x00" * payload
-                blobs.append(bytes(out))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    sfis = [3, 4, 8, 11]
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    def _blob(i: int) -> bytes:
+        prof = i % 4
+        sfi = sfis[i % 4]
+        ch = 1 + i % 3
+        crc = i % 3 == 0
+        rdb = i % 2
+        out = bytearray()
+        if i % 5 == 1:
+            out += _id3v2(b"AACTAG!!" * (1 + i % 2))
+        for j in range(2 + i % 4):
+            header_len = 9 if crc else 7
+            payload = 5 + (i + j) % 7
+            flen = header_len + payload
+            out += bytes([
+                0xFF,
+                0xF0 | (0 << 3) | (0 << 1) | (0 if crc else 1),
+                (prof << 6) | (sfi << 2) | (ch >> 2),
+                ((ch & 3) << 6) | (flen >> 11),
+                (flen >> 3) & 0xFF,
+                ((flen & 7) << 5) | 0x1F,  # buffer fullness hi
+                (0x3F << 2) | rdb,         # fullness lo + rdb
+            ])
+            if crc:
+                out += b"\x00\x00"
+            out += b"\x00" * payload
+        return bytes(out)
+
+    return _synth_stage(docs, _blob)
 
 
 def synth_mp3_l3_corpus(docs: DataFrame) -> DataFrame:
@@ -2542,63 +2187,51 @@ def synth_mp3_l3_corpus(docs: DataFrame) -> DataFrame:
     scalefac_compress = i %% 16 — every integer diagnostic the
     decoder reports is an arithmetic function of i."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .mp3 import encode_mp3
+    from .mp3 import encode_mp3
 
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rate = _MP3_RATES[i % 3]
-                stereo = i % 5 == 0
-                nch = 2 if stereo else 1
-                short = i % 6 == 3
-                silent = i % 4 == 0
+    def _blob(i: int) -> bytes:
+        rate = _MP3_RATES[i % 3]
+        stereo = i % 5 == 0
+        nch = 2 if stereo else 1
+        short = i % 6 == 3
+        silent = i % 4 == 0
 
-                def gran(ch):
-                    g = {
-                        "global_gain": 100 + i % 97,
-                        "scalefac_compress": i % 16,
-                        "scalefac_scale": i % 2,
-                        "block_type": 2 if short else 0,
-                        "subblock_gain": (i % 3, 0, 1),
-                        "big_pairs": [],
-                        "quads": [],
-                    }
-                    if not silent:
-                        n_pairs = 2 + i % 3
-                        g["big_pairs"] = [
-                            (1 if (k + ch) % 2 else -1,
-                             -1 if k % 2 else 1)
-                            for k in range(n_pairs)
-                        ]
-                        g["quads"] = [(1, 0, 0, 1)] * (1 + i % 2)
-                    return g
-
-                frames = [
-                    [[gran(ch) for ch in range(nch)] for _gr in range(2)]
-                    for _f in range(2 + i % 3)
+        def gran(ch):
+            g = {
+                "global_gain": 100 + i % 97,
+                "scalefac_compress": i % 16,
+                "scalefac_scale": i % 2,
+                "block_type": 2 if short else 0,
+                "subblock_gain": (i % 3, 0, 1),
+                "big_pairs": [],
+                "quads": [],
+            }
+            if not silent:
+                n_pairs = 2 + i % 3
+                g["big_pairs"] = [
+                    (1 if (k + ch) % 2 else -1, -1 if k % 2 else 1)
+                    for k in range(n_pairs)
                 ]
-                mode = 3 if not stereo else (1 if i % 10 == 5 else 0)
-                blob = encode_mp3(
-                    frames,
-                    sample_rate=rate,
-                    bitrate_idx=8,
-                    mode=mode,
-                    mode_ext=2 if mode == 1 else 0,
-                )
-                if i % 2 == 1:
-                    tag = b"TAGDATA!" * (1 + i % 3)
-                    sz = len(tag)
-                    ss = bytes([(sz >> 21) & 0x7F, (sz >> 14) & 0x7F,
-                                (sz >> 7) & 0x7F, sz & 0x7F])
-                    blob = b"ID3\x03\x00\x00" + ss + tag + blob
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+                g["quads"] = [(1, 0, 0, 1)] * (1 + i % 2)
+            return g
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+        frames = [
+            [[gran(ch) for ch in range(nch)] for _gr in range(2)]
+            for _f in range(2 + i % 3)
+        ]
+        mode = 3 if not stereo else (1 if i % 10 == 5 else 0)
+        blob = encode_mp3(
+            frames,
+            sample_rate=rate,
+            bitrate_idx=8,
+            mode=mode,
+            mode_ext=2 if mode == 1 else 0,
+        )
+        if i % 2 == 1:
+            blob = _id3v2(b"TAGDATA!" * (1 + i % 3)) + blob
+        return blob
+
+    return _synth_stage(docs, _blob)
 
 
 def mp3_audio_features(media: DataFrame) -> DataFrame:
@@ -2612,38 +2245,20 @@ def mp3_audio_features(media: DataFrame) -> DataFrame:
     float PCM through the full filterbank.  Poison blobs and
     unsupported shapes (Layers I/II, LSF, intensity stereo, tables
     outside the registry) null out (dead-letter contract)."""
+    from .mp3 import decode_mp3
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .mp3 import decode_mp3
+    def _row(b: bytes) -> tuple:
+        m = decode_mp3(b)
+        return (m["n_frames"], m["sample_rate"], m["channels"],
+                m["n_samples"], m["nz_lines"], m["sf_sum"], m["gg_sum"],
+                m["max_abs"] == 0.0)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    m = decode_mp3(bytes(blob))
-                    rows.append(
-                        (doc_id, m["n_frames"], m["sample_rate"],
-                         m["channels"], m["n_samples"], m["nz_lines"],
-                         m["sf_sum"], m["gg_sum"], m["max_abs"] == 0.0)
-                    )
-                except (ValueError, NotImplementedError, IndexError,
-                        KeyError):
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None,
-                         None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "sample_rate", "channels",
-                         "n_samples", "nz_lines", "sf_sum", "gg_sum",
-                         "silent"],
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _batch,
-        schema="doc_id long, n_frames long, sample_rate long, "
-               "channels long, n_samples long, nz_lines long, "
-               "sf_sum long, gg_sum long, silent boolean",
+    return _blob_stage(
+        media,
+        _row,
+        "doc_id long, n_frames long, sample_rate long, channels long, "
+        "n_samples long, nz_lines long, sf_sum long, gg_sum long, "
+        "silent boolean",
     )
 
 
@@ -3121,26 +2736,18 @@ def synth_pattern_png_corpus(docs: DataFrame, n_patterns: int = 13) -> DataFrame
     b < 200, so every oracle substrate (n_patterns=13) is
     bit-identical."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                b = i % n_patterns
-                p = (i // n_patterns) % 2
-                px = bytes(
-                    (b * (x + 1) + (b // 200) * 11 * (y + 1)
-                     + (y + 1) * (y + 1)) % 200
-                    + (40 if p == 1 and x < 4 else 0)
-                    for y in range(12)
-                    for x in range(16)
-                )
-                blobs.append(encode_png(16, 12, 1, px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
+    def _blob(i: int) -> bytes:
+        b = i % n_patterns
+        p = (i // n_patterns) % 2
+        px = bytes(
+            (b * (x + 1) + (b // 200) * 11 * (y + 1) + (y + 1) * (y + 1)) % 200
+            + (40 if p == 1 and x < 4 else 0)
+            for y in range(12)
+            for x in range(16)
+        )
+        return encode_png(16, 12, 1, px)
 
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def image_ahash(
@@ -3162,45 +2769,31 @@ def image_ahash(
     if hash_w > 8:
         raise ValueError("hash_w > 8 would overflow the per-row band byte")
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bands_col, hex_col = [], []
-            for blob in pdf["blob"]:
-                try:
-                    thumb = decode_png(
-                        resize_image(bytes(blob), hash_w, hash_h)
-                    )
-                    ch = thumb["channels"]
-                    raw = thumb["pixels"]
-                    vals = [
-                        sum(raw[(i * ch) + c] for c in range(ch)) // ch
-                        for i in range(hash_w * hash_h)
-                    ]
-                    mean = sum(vals) // len(vals)
-                    bands = [
-                        sum(
-                            (1 << x)
-                            for x in range(hash_w)
-                            if vals[y * hash_w + x] > mean
-                        )
-                        for y in range(hash_h)
-                    ]
-                    bands_col.append(bands)
-                    hex_col.append("".join(f"{b:02x}" for b in bands))
-                except Exception:
-                    bands_col.append(None)
-                    hex_col.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "bands": bands_col,
-                    "ahash_hex": hex_col,
-                }
-            )
+    def _row(b: bytes) -> tuple:
+        thumb = decode_png(resize_image(b, hash_w, hash_h))
+        ch = thumb["channels"]
+        raw = thumb["pixels"]
+        vals = [
+            sum(raw[(i * ch) + c] for c in range(ch)) // ch
+            for i in range(hash_w * hash_h)
+        ]
+        return _threshold_bands(vals, hash_w, hash_h)
 
-    return media.mapInPandas(
-        _batch, schema="doc_id long, bands array<int>, ahash_hex string"
+    return _blob_stage(
+        media, _row, "doc_id long, bands array<int>, ahash_hex string"
     )
+
+
+def _threshold_bands(vals: list[int], band_w: int, n_bands: int) -> tuple:
+    """(bands, hex) of the aHash construction: each value thresholded
+    against the integer mean (strict >), ``band_w`` bits packed
+    little-endian per band — the image and audio fingerprint row."""
+    mean = sum(vals) // len(vals)
+    bands = [
+        sum((1 << x) for x in range(band_w) if vals[y * band_w + x] > mean)
+        for y in range(n_bands)
+    ]
+    return bands, "".join(f"{v:02x}" for v in bands)
 
 
 def ahash_near_dup(
@@ -3502,30 +3095,17 @@ def synth_tone_wav_corpus(docs: DataFrame, n_patterns: int = 13) -> DataFrame:
     populations an audio near-dup gate must separate.  A
     constant-amplitude (square-wave) corpus could not certify the
     frame-energy profile; a modulated one can."""
+    return _synth_stage(
+        docs, lambda i: _tone_wav(_tone_samples(i, n_patterns))
+    )
+
+
+def _tone_wav(samples: list[int]) -> bytes:
+    """Mono 8 kHz 8-bit PCM RIFF/WAVE of the tone corpora's samples."""
     import struct
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                samples = _tone_samples(int(doc_id), n_patterns)
-                data = bytes(s + 128 for s in samples)
-                fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-                chunks = (
-                    b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                blobs.append(
-                    b"RIFF"
-                    + struct.pack("<I", 4 + len(chunks))
-                    + b"WAVE"
-                    + chunks
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
+    return _riff_wave(fmt, bytes(s + 128 for s in samples))
 
 
 def synth_tone_audio_corpus(
@@ -3541,40 +3121,15 @@ def synth_tone_audio_corpus(
     must land in the same near-dup cluster at hamming 0 (a regression
     to a WAV-only decode dead-letters every FLAC doc and both oracle
     pairs move)."""
-    import struct
+    from .flac import encode_flac
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .flac import encode_flac
+    def _blob(i: int) -> bytes:
+        samples = _tone_samples(i, n_patterns)
+        if i % flac_mod == 0:
+            return encode_flac([samples], sample_rate=8000, fixed_order=1)
+        return _tone_wav(samples)
 
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                samples = _tone_samples(i, n_patterns)
-                if i % flac_mod == 0:
-                    blobs.append(
-                        encode_flac(
-                            [samples], sample_rate=8000, fixed_order=1
-                        )
-                    )
-                else:
-                    data = bytes(s + 128 for s in samples)
-                    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-                    chunks = (
-                        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                        + b"data" + struct.pack("<I", len(data)) + data
-                    )
-                    blobs.append(
-                        b"RIFF"
-                        + struct.pack("<I", 4 + len(chunks))
-                        + b"WAVE"
-                        + chunks
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(
-        _encode, schema="doc_id long, blob binary"
-    )
+    return _synth_stage(docs, _blob)
 
 
 def audio_fingerprint(
@@ -3601,48 +3156,19 @@ def audio_fingerprint(
     if n_frames % band_w:
         raise ValueError("n_frames must be a multiple of band_w")
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bands_col, hex_col = [], []
-            for blob in pdf["blob"]:
-                try:
-                    wav = decode_audio(bytes(blob))
-                    s = wav["samples"]
-                    flen = len(s) // n_frames
-                    if flen == 0:
-                        raise ValueError("recording shorter than n_frames")
-                    e = [
-                        sum(
-                            abs(v)
-                            for v in s[f * flen : (f + 1) * flen]
-                        )
-                        // flen
-                        for f in range(n_frames)
-                    ]
-                    mean = sum(e) // n_frames
-                    bands = [
-                        sum(
-                            (1 << x)
-                            for x in range(band_w)
-                            if e[y * band_w + x] > mean
-                        )
-                        for y in range(n_frames // band_w)
-                    ]
-                    bands_col.append(bands)
-                    hex_col.append("".join(f"{v:02x}" for v in bands))
-                except Exception:
-                    bands_col.append(None)
-                    hex_col.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "bands": bands_col,
-                    "fp_hex": hex_col,
-                }
-            )
+    def _row(b: bytes) -> tuple:
+        s = decode_audio(b)["samples"]
+        flen = len(s) // n_frames
+        if flen == 0:
+            raise ValueError("recording shorter than n_frames")
+        e = [
+            sum(abs(v) for v in s[f * flen : (f + 1) * flen]) // flen
+            for f in range(n_frames)
+        ]
+        return _threshold_bands(e, band_w, n_frames // band_w)
 
-    return media.mapInPandas(
-        _batch, schema="doc_id long, bands array<int>, fp_hex string"
+    return _blob_stage(
+        media, _row, "doc_id long, bands array<int>, fp_hex string"
     )
 
 
@@ -3658,7 +3184,6 @@ def video_fingerprint(media: DataFrame, max_frames: int = 16) -> DataFrame:
     whole n-gram near-dup machinery applies verbatim —
     ``video_near_dup`` below feeds it to ``ngram_jaccard_pairs``."""
     import hashlib
-    import struct
 
     def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3666,7 +3191,7 @@ def video_fingerprint(media: DataFrame, max_frames: int = 16) -> DataFrame:
             for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 try:
                     frames = sample_frames(bytes(blob), max_frames=max_frames)
-                except (ValueError, NotImplementedError, struct.error):
+                except Exception:  # _blob_stage's poison policy
                     continue
                 seen = set()
                 for f in frames:

@@ -420,7 +420,13 @@ def kmeans_lloyd(
     table (no re-seeding) — deterministic on both engines.  At lake
     scale the exploded-dims table is the big operand: it is built once
     and persisted by the caller via ``_dims_df`` when shared with
-    other consumers.
+    other consumers.  ``_dims_df`` contract: the returned assignment
+    is a LAZY plan over the caller's dims (the per-round checkpoints
+    are ``eager=False``), so the caller must keep its dims persisted
+    until the returned frame has been materialized — unpersisting
+    earlier is still correct but silently replays the whole Lloyd loop
+    from the uncached source.  Without ``_dims_df`` the assignment is
+    checkpointed eagerly before the self-made dims are released.
 
     ``n_clusters=None`` derives k = ceil(n / target_cluster_size)
     from a scalar count — the SemDeDup-paper discipline (k grows with

@@ -38,23 +38,34 @@ def parquet_file_stats(path: str) -> tuple[int, int]:
     return n, total
 
 
-def _recover_compaction_residue(parent: str, base: str, path: str) -> None:
-    """Crash recovery, run at the START of every compaction: the
-    two-rename swap can die (a) after the rewrite with ``.compact_tmp``
-    residue, (b) between the renames with the live dir ABSENT and the
-    data under ``.compact_old`` — reads would silently omit the
-    partition and a naive re-run would see 0 files and return early —
-    or (c) after promotion with stale ``.compact_old``.  Restore the
-    old dir when the live one is missing; otherwise clear residue."""
+def recover_swap_residue(path: str, kind: str) -> tuple[str, str]:
+    """Crash recovery for the two-rename swap of ``path`` (rewrite to
+    ``tmp``, rename ``path`` aside to ``old``, promote ``tmp``, retire
+    ``old``), run before anything reads or rewrites ``path``.  A crash
+    can leave (a) ``tmp`` residue after the rewrite, (b) the live dir
+    ABSENT with the data under ``old`` — reads would silently see no
+    table — or (c) a stale ``old`` after promotion.  Restore the old
+    dir when the live one is missing; otherwise clear residue.
+
+    Returns (tmp, old): ``.{kind}_tmp_*`` / ``.{kind}_old_*``
+    siblings, dot-prefixed AND '='-free.  Spark keeps '_'-prefixed
+    dirs whose name contains '=' (that's how `_year=2021` partitions
+    survive), so a name derived from a leaf partition dir must strip
+    the '=' or partition discovery would pick it up (verified: an
+    '='-containing residue dir fails the read with
+    CONFLICTING_PARTITION_COLUMN_NAMES; a '.'-prefixed one is
+    invisible)."""
+    parent, base = os.path.split(os.path.normpath(path))
     safe = base.replace("=", "-")
-    tmp = os.path.join(parent, f".compact_tmp_{safe}")
-    old = os.path.join(parent, f".compact_old_{safe}")
+    tmp = os.path.join(parent, f".{kind}_tmp_{safe}")
+    old = os.path.join(parent, f".{kind}_old_{safe}")
     if os.path.isdir(old) and not os.path.isdir(path):
         os.rename(old, path)  # case (b): promote the retired copy back
     if os.path.isdir(old):
         shutil.rmtree(old)  # case (c): swap completed, retire for real
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)  # case (a): unpromoted rewrite is garbage
+    return tmp, old
 
 
 def compact_parquet(
@@ -83,8 +94,7 @@ def compact_parquet(
     removed — a crash between the renames leaves the data recoverable
     under ``.compact_old_*`` rather than half-deleted.
     """
-    parent, base = os.path.split(os.path.normpath(path))
-    _recover_compaction_residue(parent, base, path)
+    tmp, old = recover_swap_residue(path, "compact")
     if any(
         "=" in e and os.path.isdir(os.path.join(path, e))
         for e in os.listdir(path)
@@ -102,16 +112,6 @@ def compact_parquet(
     if n_files < min_files_to_compact or n_files <= n_target:
         return n_files
     df = spark.read.parquet(path)
-    # Dot-prefixed AND '='-free: Spark keeps '_'-prefixed dirs whose
-    # name contains '=' (that's how `_year=2021` partitions survive),
-    # so a tmp name derived from a leaf dir must strip the '=' or it
-    # would be picked up by partition discovery (verified: an
-    # '=' -containing residue dir fails the read with
-    # CONFLICTING_PARTITION_COLUMN_NAMES; a '.'-prefixed one is
-    # invisible).
-    safe = base.replace("=", "-")
-    tmp = os.path.join(parent, f".compact_tmp_{safe}")
-    old = os.path.join(parent, f".compact_old_{safe}")
     # coalesce, not repartition: narrowing to fewer files needs no
     # shuffle — each output task reads a run of input files.
     df.coalesce(n_target).write.mode("overwrite").parquet(tmp)

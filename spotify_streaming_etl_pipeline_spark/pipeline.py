@@ -57,6 +57,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.maintenance import recover_swap_residue
 from .plans import dims as dims_mod
 from .plans.facts import build_fact_podcasts, build_fact_tracks, write_fact
 from .sources.enrichment import enrich_partitions, fetch_in_batches
@@ -78,6 +79,12 @@ class RunResult:
 
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """The warehouse table at ``path``, or None when there is none.
+    Swap crash residue recovers first: a dim whose snapshot swap died
+    between its renames lives under ``.swap_old_*``, and reading it as
+    absent would rebuild the dim from this increment alone (keys from
+    1), which the swap would then promote over every older row."""
+    recover_swap_residue(path, "swap")
     if os.path.isdir(path):
         return spark.read.parquet(path)
     return None
@@ -95,16 +102,11 @@ def _overwrite_parquet_safe(df: DataFrame, path: str) -> None:
     (the compact_parquet shape) — rmtree-then-rename would leave NO
     table at all on a crash between the two, and the next run would
     silently treat the table as empty. Crash residue recovers on the
-    next call: a missing live dir restores from the retired copy."""
+    next read (``_read_if_exists``) or swap: a missing live dir
+    restores from the retired copy."""
     import shutil
 
-    parent, base = os.path.split(os.path.normpath(path))
-    tmp = os.path.join(parent, f".swap_tmp_{base}")
-    old = os.path.join(parent, f".swap_old_{base}")
-    if os.path.isdir(old) and not os.path.isdir(path):
-        os.rename(old, path)  # crashed between the renames: restore
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    tmp, old = recover_swap_residue(path, "swap")
     df.write.mode("overwrite").parquet(tmp)
     if os.path.isdir(path):
         os.rename(path, old)

@@ -146,9 +146,7 @@ def build_fact_podcasts(
     )
 
 
-def write_fact(
-    fact: DataFrame, path: str, partition_by_year: bool = True
-) -> dict:
+def write_fact(fact: DataFrame, path: str) -> dict:
     """Facts are partitioned by derived year at rest — date-range
     queries prune partitions; at 100 TB this is the difference between
     a full scan and reading one year.
@@ -168,8 +166,5 @@ def write_fact(
         F.min("_year").alias("min_year"),
         F.max("_year").alias("max_year"),
     )
-    writer = out.write.mode("append")
-    if partition_by_year:
-        writer = writer.partitionBy("_year")
-    writer.parquet(path)
+    out.write.mode("append").partitionBy("_year").parquet(path)
     return obs.get

@@ -39,6 +39,14 @@ def read_history(spark: SparkSession, path: str) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .json(path)
     )
+    return parse_ts(raw)
+
+
+def parse_ts(raw: DataFrame) -> DataFrame:
+    """The export's ``ts`` string → TimestampType UTC instant; rows
+    whose ts fails to parse are dropped here, not carried downstream
+    as NULL-keyed fact rows.  Shared by the batch reader and the
+    stream reader (streaming/ingest.py), so both parse alike."""
     return raw.withColumn(
         "ts", F.to_timestamp("ts", "yyyy-MM-dd'T'HH:mm:ssX")
     ).filter(F.col("ts").isNotNull())
@@ -48,8 +56,6 @@ def max_loaded_ts(
     fact_tracks: DataFrame | None,
     fact_podcasts: DataFrame | None,
     staging: DataFrame | None,
-    ts_col: str = "ts",
-    msk_cols: bool = True,
 ) -> dt.datetime:
     """A6/F7: GREATEST of the three maxes, 1900-01-01 floor.
 
@@ -61,11 +67,11 @@ def max_loaded_ts(
     for df, col, is_msk in (
         (fact_tracks, "ts_msk", True),
         (fact_podcasts, "ts_msk", True),
-        (staging, ts_col, False),
+        (staging, "ts", False),
     ):
         if df is None:
             continue
-        expr = to_utc(F.col(col)) if (is_msk and msk_cols) else F.col(col)
+        expr = to_utc(F.col(col)) if is_msk else F.col(col)
         row = df.agg(F.max(expr).alias("m")).collect()[0]
         if row["m"] is not None:
             candidates.append(row["m"])

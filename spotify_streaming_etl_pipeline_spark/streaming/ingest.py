@@ -28,25 +28,18 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.facts import build_fact_tracks
 from ..schemas import HISTORY_SCHEMA
+from ..sources.history import parse_ts
 
 
-def read_history_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_history_stream(spark: SparkSession, path: str) -> DataFrame:
     """S1 as a stream: the same declared 19-column schema over a
-    directory of export JSON files; new files become micro-batches."""
-    reader = spark.readStream.schema(HISTORY_SCHEMA).option("multiLine", "true")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.json(path)
-    # batch parity (sources/history.py read_history): rows whose ts
-    # fails to parse are dropped HERE, not smuggled downstream as
-    # NULL-keyed fact rows the batch path would never produce.
-    return raw.withColumn(
-        "ts", F.to_timestamp("ts", "yyyy-MM-dd'T'HH:mm:ssX")
-    ).filter(F.col("ts").isNotNull())
+    directory of export JSON files; new files become micro-batches.
+    The ts parse-and-drop is the batch reader's own (``parse_ts``)."""
+    return parse_ts(
+        spark.readStream.schema(HISTORY_SCHEMA)
+        .option("multiLine", "true")
+        .json(path)
+    )
 
 
 def hourly_platform_counts(

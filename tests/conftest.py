@@ -68,12 +68,10 @@ _SLOW_BATTERIES = {
     "test_aac.py::test_aac_features_dead_letters_poison",
 }
 
-_SKIP_BATTERY = pytest.mark.skip(
-    reason="long battery (>=10s); run with SPARK_GRAFT_FULL_TESTS=1"
-)
-_SKIP_PARITY = pytest.mark.skip(
-    reason="full 205-pair oracle sweep; run with SPARK_GRAFT_FULL_TESTS=1"
-)
+_BATTERY_REASON = "long battery (>=10s); run with SPARK_GRAFT_FULL_TESTS=1"
+_PARITY_REASON = "full 205-pair oracle sweep; run with SPARK_GRAFT_FULL_TESTS=1"
+_SKIP_BATTERY = pytest.mark.skip(reason=_BATTERY_REASON)
+_SKIP_PARITY = pytest.mark.skip(reason=_PARITY_REASON)
 
 
 def pytest_collection_modifyitems(config, items):
@@ -92,6 +90,25 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(_SKIP_PARITY)
         elif f"{fname}::{item.name}" in _SLOW_BATTERIES:
             item.add_marker(_SKIP_BATTERY)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say what a default run did not verify, so a green run with
+    hundreds of skips is never read as full verification.  Reports
+    only; which tests skip is decided above."""
+    reasons = [
+        str(r.longrepr[2])
+        for r in terminalreporter.stats.get("skipped", [])
+        if isinstance(r.longrepr, tuple)
+    ]
+    n_parity = sum(_PARITY_REASON in r for r in reasons)
+    n_battery = sum(_BATTERY_REASON in r for r in reasons)
+    if n_parity or n_battery:
+        terminalreporter.write_sep("-", "not verified by this run")
+        terminalreporter.write_line(
+            f"skipped {n_parity} oracle-parity pairs and {n_battery} long "
+            "batteries; SPARK_GRAFT_FULL_TESTS=1 runs them"
+        )
 
 
 @pytest.fixture(scope="session")

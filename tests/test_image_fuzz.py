@@ -1,14 +1,16 @@
-"""Seeded mutation-fuzz crash hygiene for the remaining raster /
-PCM decoders (PNG, BMP, GIF, WAV) — the same battery JPEG/PDF/lines
-(r11) and WebP/mp3/FLAC (r12) carry: random byte corruptions of a
-valid blob must raise ordinary data errors (the dead-letter
-contract), never hang, exhaust memory, or kill the interpreter with
-an exception outside the tuple the feature stages catch.
+"""Seeded mutation-fuzz crash hygiene for the raster / PCM decoders
+(PNG, BMP, GIF, WAV, JPEG) — the same battery PDF/lines (r11) and
+WebP/mp3/FLAC (r12) carry: random byte corruptions of a valid blob
+must raise ordinary data errors, never hang, exhaust memory, or
+escape as an exception outside ``_DATA_ERRORS``.
 
-Each decoder's allowed tuple mirrors its mapInPandas stage's
-``except`` clause in llm/multimodal.py — if the fuzz surfaces an
-exception type the stage does not catch, the STAGE is the bug (a
-poison blob would kill the Spark task instead of nulling out)."""
+The feature stages do not depend on these tuples: every stage
+runs through ``llm/multimodal.py:_blob_stage``, whose one poison
+policy dead-letters any ``Exception``.  The fuzz pins the decoders'
+own contract instead — corrupt input is reported as a data error
+(``ValueError`` and kin), not as an ``AttributeError`` /
+``OverflowError`` from deep inside a decode loop, which is how the
+JPEG scan defects this battery now covers first showed up."""
 
 from __future__ import annotations
 
@@ -181,10 +183,10 @@ def test_pdf_inflate_budgets():
 def test_video_container_mutation_fuzz(spark):
     """The container walkers (RIFF/AVI chunk walk, ISO-BMFF sample
     tables, EBML/Matroska clusters incl. all three lacings) under the
-    same seeded corruption battery — their feature stage catches
-    (ValueError, NotImplementedError, struct.error), so IndexError /
-    KeyError escaping a walker WOULD kill a Spark task: the fuzz pins
-    the walkers to that narrower tuple."""
+    same seeded corruption battery — the walkers report corruption as
+    (ValueError, NotImplementedError, struct.error), and the fuzz pins
+    them to that narrower tuple (the stages would dead-letter anything
+    else, but an IndexError / KeyError here is a walker bug)."""
     from spotify_streaming_etl_pipeline_spark.llm.multimodal import (
         sample_frames,
         synth_mkv_corpus,
@@ -216,3 +218,27 @@ def test_wav_mutation_fuzz():
             + b"data" + struct.pack("<I", len(pcm)) + pcm)
     assert decode_wav(blob)["n_samples"] == 24
     _fuzz(decode_wav, blob, seed=5)
+
+
+def test_jpeg_mutation_fuzz():
+    """4:2:0 color JPEGs, baseline and progressive, under the battery:
+    a corrupt SOS can name a Huffman table no DHT defined, and a
+    corrupt DC category can overflow the int32 coefficient block —
+    both must surface as ValueError, not AttributeError /
+    OverflowError."""
+    from spotify_streaming_etl_pipeline_spark.llm.jpeg import (
+        decode_jpeg,
+        encode_jpeg,
+        encode_jpeg_progressive,
+    )
+
+    rng = random.Random(7)
+    y = [[(x * 13 + r * 7 + rng.randrange(32)) % 256 for x in range(16)]
+         for r in range(16)]
+    cb = [[(100 + x * 3 + r) % 256 for x in range(16)] for r in range(16)]
+    cr = [[(150 - x - 2 * r) % 256 for x in range(16)] for r in range(16)]
+    sampling = [(2, 2), (1, 1), (1, 1)]
+    for seed, encode in ((8, encode_jpeg), (1, encode_jpeg_progressive)):
+        blob = encode([y, cb, cr], sampling=sampling)
+        assert decode_jpeg(blob)["width"] == 16
+        _fuzz(decode_jpeg, blob, seed=seed)

@@ -143,8 +143,9 @@ def test_truncated_and_garbage_blobs_raise_cleanly():
 def test_undeclared_table_and_component_refs_raise_valueerror():
     """Malformed streams whose SOS/SOF reference tables or component
     ids never declared must raise ValueError — not KeyError or the
-    RuntimeError PEP 479 makes of StopIteration — so jpeg_features'
-    dead-letter except clause catches them instead of the task dying."""
+    RuntimeError PEP 479 makes of StopIteration — so corrupt input
+    reads as a data error (jpeg_features dead-letters any exception,
+    but anything else here is a decoder bug)."""
     blob = encode_jpeg([_solid_image(1, 1, 50)])
     sos = blob.find(b"\xff\xda")
     sof = blob.find(b"\xff\xc0")

@@ -429,3 +429,25 @@ def test_write_fact_returns_observed_metrics(spark, tmp_path):
     assert (metrics["min_year"], metrics["max_year"]) == (2020, 2021)
     # the write itself succeeded with the observed plan attached
     assert spark.read.parquet(str(tmp_path / "fact")).count() == 3
+
+
+def test_dim_read_restores_swap_crash_residue(spark, tmp_path):
+    """A crash between the dim snapshot swap's two renames leaves the
+    live dim absent and its rows under ``.swap_old_<name>``.  The run's
+    dim read must restore them: reading the dim as absent would
+    rebuild it from the increment alone, keys from 1, and the swap
+    would then promote that over every older row."""
+    import os
+
+    from spotify_streaming_etl_pipeline_spark.pipeline import _read_if_exists
+
+    path = str(tmp_path / "dim_track")
+    old = str(tmp_path / ".swap_old_dim_track")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "track_id long, name string"
+    ).write.parquet(path)
+    os.rename(path, old)
+    df = _read_if_exists(spark, path)
+    assert df is not None
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]
+    assert not os.path.isdir(old)
