@@ -6,6 +6,11 @@ Postgres ``serial`` gives stable dense ids across incremental loads
 engine assigns ``row_number() OVER (ORDER BY natural_key) + max(existing)``
 — deterministic given the natural key, dense, append-safe.
 
+``with_surrogate_key_after`` computes ``max(existing)`` inside the plan
+(a one-row aggregate of the existing table, broadcast onto the new
+rows), so building a keyed frame starts no Spark job; the max is read
+when the frame itself runs.
+
 Scale note: ``with_surrogate_key``'s global row_number is a
 single-partition sort of ONLY the new rows (dims grow by small
 increments per load) — acceptable because dims are small. For
@@ -17,20 +22,41 @@ holds more than one partition's rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..schemas import local_frame
 
 
 def with_surrogate_key(
     new_rows: DataFrame,
     key_name: str,
     order_by: list[str],
-    existing_max: int = 0,
+    existing_max: int | Column = 0,
 ) -> DataFrame:
     w = Window.orderBy(*[F.col(c).asc_nulls_last() for c in order_by])
     return new_rows.withColumn(
         key_name, (F.row_number().over(w) + F.lit(existing_max)).cast("long")
     )
+
+
+def with_surrogate_key_after(
+    new_rows: DataFrame,
+    key_name: str,
+    order_by: list[str],
+    existing: DataFrame | None,
+) -> DataFrame:
+    """``with_surrogate_key`` continuing after ``max(existing[key_name])``
+    (keys from 1 when ``existing`` is None or empty).  The max is a
+    one-row aggregate of ``existing`` broadcast onto the new rows, so
+    it is computed when the keyed frame runs: building it runs no job."""
+    if existing is None:
+        return with_surrogate_key(new_rows, key_name, order_by)
+    top = existing.agg(F.coalesce(F.max(key_name), F.lit(0)).alias("_key_max"))
+    return with_surrogate_key(
+        new_rows.crossJoin(F.broadcast(top)), key_name, order_by, F.col("_key_max")
+    ).drop("_key_max")
 
 
 def with_surrogate_key_distributed(
@@ -70,8 +96,10 @@ def with_surrogate_key_distributed(
     for row in sorted(counts, key=lambda r: r["pid"]):
         offsets.append((row["pid"], acc))
         acc += row["cnt"]
-    off = new_rows.sparkSession.createDataFrame(
-        offsets or [(0, existing_max)], "pid int, off long"
+    off = local_frame(
+        new_rows.sparkSession,
+        offsets or [(0, existing_max)],
+        StructType.fromDDL("pid int, off long"),
     )
     w = Window.partitionBy("pid").orderBy(*cols)
     return (
@@ -82,9 +110,3 @@ def with_surrogate_key_distributed(
         .drop("pid", "_rn", "off")
     )
 
-
-def current_max_key(existing: DataFrame | None, key_name: str) -> int:
-    if existing is None:
-        return 0
-    row = existing.agg(F.max(key_name).alias("m")).collect()[0]
-    return int(row["m"]) if row["m"] is not None else 0

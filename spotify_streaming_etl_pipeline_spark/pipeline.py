@@ -39,6 +39,20 @@ run (lazy frames otherwise recompute a shared plan for each consumer):
 - fact row counts come from the write's own ``Observation``, not from
   a second run of each star join.
 
+The fixed part of a run (what it costs whatever the increment's size)
+runs on the JVM and its plans are built lazily:
+
+- rows the driver holds (the driver-loop envelopes, the sentinel dim
+  rows) are local relations (``schemas.local_frame``): no job starts a
+  Python worker to re-read them;
+- every warehouse read, before the load and after it, uses the table's
+  declared schema (``schemas.WAREHOUSE_SCHEMAS``): no job infers a
+  schema, and a fact table holding no rows yet still reads back;
+- building the dims runs no job: new surrogate keys continue after the
+  existing dim's max inside the plan, not after an eagerly collected
+  one;
+- the delta cutoff is one action over both facts.
+
 ``run`` owns every one of these caches.  Under ``write=True`` it
 releases them in a ``finally`` once the returned frames are re-read
 from the warehouse (and on any failure); under ``write=False`` the
@@ -56,11 +70,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators.maintenance import recover_swap_residue
 from .plans import dims as dims_mod
 from .plans.facts import build_fact_podcasts, build_fact_tracks, write_fact
-from .sources.enrichment import enrich_partitions, fetch_in_batches
+from .schemas import WAREHOUSE_SCHEMAS
+from .sources.enrichment import enrich_partitions, envelope_frame, fetch_in_batches
 from .sources.history import delta_filter, max_loaded_ts, read_history
 
 
@@ -78,15 +94,18 @@ class RunResult:
     compacted: dict[str, dict[str, int]] = field(default_factory=dict)
 
 
-def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """The warehouse table at ``path``, or None when there is none.
+def _read_if_exists(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The warehouse table at ``path``, or None when there is none; read
+    with ``schema`` when given, else with an inferred one.
     Swap crash residue recovers first: a dim whose snapshot swap died
     between its renames lives under ``.swap_old_*``, and reading it as
     absent would rebuild the dim from this increment alone (keys from
     1), which the swap would then promote over every older row."""
     recover_swap_residue(path, "swap")
     if os.path.isdir(path):
-        return spark.read.parquet(path)
+        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     return None
 
 
@@ -165,8 +184,6 @@ def _run(
     cached: list[DataFrame],
 ) -> RunResult:
     """The body of ``run``; every frame it persists goes on ``cached``."""
-    import json
-
     out = RunResult()
 
     def persist(df: DataFrame) -> DataFrame:
@@ -174,10 +191,13 @@ def _run(
         cached.append(df)
         return df
 
+    def read(table: str) -> DataFrame | None:
+        return _read_if_exists(
+            spark, f"{warehouse_dir}/{table}", WAREHOUSE_SCHEMAS[table]
+        )
+
     # -- 1. ingest history with the delta cutoff (S1/S2/A6) ----------------
-    fact_tracks_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_tracks")
-    fact_podcasts_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_podcasts")
-    cutoff = max_loaded_ts(fact_tracks_existing, fact_podcasts_existing, None)
+    cutoff = max_loaded_ts(read("fact_tracks"), read("fact_podcasts"), None)
     # The count fills the cache: URI discovery, dim_reason and both
     # star joins below read it instead of re-parsing the export.
     history = persist(delta_filter(read_history(spark, raw_dir), cutoff))
@@ -255,10 +275,7 @@ def _run(
             fetch = _resolve_fetch(fetch)
         result = fetch_in_batches(uri_list, fetch, entity)
         out.dead_letters.extend(result.failures)
-        return spark.createDataFrame(
-            [(u, json.dumps(p, sort_keys=True)) for u, p in result.records],
-            "uri string, raw_data string",
-        )
+        return envelope_frame(spark, result.records)
 
     envelopes["track"] = enrich(
         "track", dims_mod.distinct_uris(history, "spotify_track_uri")
@@ -267,7 +284,7 @@ def _run(
         "artist",
         dims_mod.artist_uris_from_track_envelopes(envelopes["track"])
         if envelopes["track"] is not None
-        else spark.createDataFrame([], "uri string"),
+        else envelope_frame(spark, []).select("uri"),
     )
     envelopes["episode"] = enrich(
         "episode", dims_mod.distinct_uris(history, "spotify_episode_uri")
@@ -276,7 +293,7 @@ def _run(
         "podcast",
         dims_mod.podcast_uris_from_episode_envelopes(envelopes["episode"])
         if envelopes["episode"] is not None
-        else spark.createDataFrame([], "uri string"),
+        else envelope_frame(spark, []).select("uri"),
     )
 
     # -- 3. clean envelopes -> idempotent dim loads (§2.10, J10, F23) -------
@@ -287,7 +304,7 @@ def _run(
         "podcast": (dims_mod.clean_podcasts, "spotify_podcast_uri", "podcast_id"),
     }
     for entity, (clean, natural_key, key_name) in cleaners.items():
-        existing = _read_if_exists(spark, f"{warehouse_dir}/dim_{entity}")
+        existing = read(f"dim_{entity}")
         if envelopes[entity] is None:
             if existing is not None:
                 out.dims[entity] = existing
@@ -305,8 +322,7 @@ def _run(
             out.dims["podcast"].filter(F.col("podcast_id") != 0)
         )
 
-    existing_reason = _read_if_exists(spark, f"{warehouse_dir}/dim_reason")
-    out.dims["reason"] = dims_mod.build_dim_reason(history, existing_reason)
+    out.dims["reason"] = dims_mod.build_dim_reason(history, read("dim_reason"))
 
     # Each final dim is computed once: the first fact broadcast that
     # reads it fills the cache, and its snapshot swap reads the cache.
@@ -352,9 +368,9 @@ def _run(
         # listings that no longer exist; callers get fresh frames, and
         # ``run`` releases this run's caches once this returns.
         for entity in out.dims:
-            out.dims[entity] = spark.read.parquet(f"{warehouse_dir}/dim_{entity}")
+            out.dims[entity] = read(f"dim_{entity}")
         for name in out.facts:
-            out.facts[name] = spark.read.parquet(f"{warehouse_dir}/fact_{name}")
+            out.facts[name] = read(f"fact_{name}")
         # The URI staging parquet is unreachable now too — drop it so
         # repeated runs don't accumulate stale snapshots beside the
         # real tables. (write=False keeps it: returned frames' lineage

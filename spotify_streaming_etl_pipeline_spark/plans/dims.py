@@ -5,6 +5,10 @@ The reference cleans API JSON row-by-row in Python
 entities by Python set difference (scripts/etl/extractor.py:227-252).
 Here both are pure column expressions / anti-joins — JVM-side,
 codegen-friendly, no UDFs (SURVEY §2.10).
+
+Every builder here is lazy: building a dim (including its surrogate
+keys, which continue after the existing dim's max inside the plan)
+starts no Spark job.
 """
 
 from __future__ import annotations
@@ -18,9 +22,9 @@ from ..functions.scalar import (
     normalize_release_date,
     part_of_day,
 )
-from ..operators.surrogate import current_max_key, with_surrogate_key
+from ..operators.surrogate import with_surrogate_key_after
 from ..operators.writer import dedup_new
-from ..schemas import ENVELOPE_SCHEMAS
+from ..schemas import ENVELOPE_SCHEMAS, WAREHOUSE_SCHEMAS, local_frame
 
 # ---------------------------------------------------------------------------
 # Entity discovery (A4/A5/J7/U2)
@@ -180,11 +184,8 @@ def build_dim_reason(history: DataFrame, existing: DataFrame | None = None) -> D
         .withColumn("reason_group", F.lit("end"))
     )
     new = dedup_new(start.unionByName(end), ["reason_type", "reason_group"], existing)
-    keyed = with_surrogate_key(
-        new,
-        "reason_id",
-        ["reason_group", "reason_type"],
-        current_max_key(existing, "reason_id"),
+    keyed = with_surrogate_key_after(
+        new, "reason_id", ["reason_group", "reason_type"], existing
     )
     cols = ["reason_id", "reason_type", "reason_group"]
     out = keyed.select(*cols)
@@ -201,9 +202,7 @@ def load_dim(
     existing (ON CONFLICT DO NOTHING), assign dense surrogate keys
     starting after the current max."""
     new = dedup_new(cleaned, [natural_key], existing)
-    keyed = with_surrogate_key(
-        new, key_name, [natural_key], current_max_key(existing, key_name)
-    )
+    keyed = with_surrogate_key_after(new, key_name, [natural_key], existing)
     cols = [key_name, *[c for c in cleaned.columns]]
     out = keyed.select(*cols)
     return existing.select(*cols).unionByName(out) if existing is not None else out
@@ -211,18 +210,15 @@ def load_dim(
 
 def sentinel_episode(spark: SparkSession) -> DataFrame:
     """episode_id=0 'Unknown' row (reference docs/sql/dummy_values.sql:1-4)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(0, "Unknown", None, None, "Unknown", "Unknown", None)],
-        "episode_id long, spotify_episode_uri string, duration_ms long, "
-        "duration_sec long, podcast_name string, spotify_podcast_uri string, "
-        "release_date date",
+        WAREHOUSE_SCHEMAS["dim_episode"],
     )
 
 
 def sentinel_podcast(spark: SparkSession) -> DataFrame:
     """podcast_id=0 'Unknown' row (dummy_values.sql:6-9)."""
-    return spark.createDataFrame(
-        [(0, "Unknown", "Unknown", None, None)],
-        "podcast_id long, spotify_podcast_uri string, podcast_name string, "
-        "description string, podcast_cover_art_url string",
+    return local_frame(
+        spark, [(0, "Unknown", "Unknown", None, None)], WAREHOUSE_SCHEMAS["dim_podcast"]
     )

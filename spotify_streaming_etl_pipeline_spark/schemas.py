@@ -4,14 +4,24 @@ The 19-column streaming-history contract mirrors the reference's
 extractor projection (reference scripts/etl/extractor.py:41-64) typed
 per docs/sql/staging_ddl.sql:1-22. The API envelope schemas declare
 exactly the nested fields the reference's cleaning functions consume
-(reference scripts/etl/transformer.py:13-130).
+(reference scripts/etl/transformer.py:13-130). ``WAREHOUSE_SCHEMAS``
+declares the tables the pipeline writes (the reference's
+docs/sql/core_ddl.sql), so reading them back infers nothing.
+
+``local_frame`` turns rows the driver already holds into a frame of a
+declared schema, planned as a ``LocalTableScan`` on the JVM.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DateType,
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -153,3 +163,87 @@ FAILED_URIS_SCHEMA = StructType(
         StructField("retry_attempts", IntegerType(), True),
     ]
 )
+
+
+# --- warehouse tables (reference docs/sql/core_ddl.sql) ---------------------
+
+
+_DDL_TYPES = {
+    "long": LongType(),
+    "int": IntegerType(),
+    "string": StringType(),
+    "date": DateType(),
+    "timestamp": TimestampType(),
+    "boolean": BooleanType(),
+    "double": DoubleType(),
+}
+
+
+def _table(ddl: str) -> StructType:
+    """``"name type, ..."`` as a schema whose columns are all nullable,
+    as ``spark.read.parquet`` reads every parquet column back."""
+    return StructType(
+        [
+            StructField(name, _DDL_TYPES[typ], True)
+            for name, typ in (col.split() for col in ddl.split(","))
+        ]
+    )
+
+
+#: Every table ``pipeline.run`` writes, keyed by its directory name under
+#: the warehouse.  The facts end with their ``_year`` partition column.
+WAREHOUSE_SCHEMAS = {
+    "dim_track": _table(
+        "track_id long, spotify_track_uri string, track_title string, "
+        "cover_art_url string, album_name string, album_spotify_id string, "
+        "album_type string, artist_name string, spotify_artist_uri string, "
+        "release_date date, duration_ms long, duration_sec long"
+    ),
+    "dim_artist": _table(
+        "artist_id long, spotify_artist_uri string, cover_art_url string, "
+        "artist_name string"
+    ),
+    "dim_episode": _table(
+        "episode_id long, spotify_episode_uri string, duration_ms long, "
+        "duration_sec long, podcast_name string, spotify_podcast_uri string, "
+        "release_date date"
+    ),
+    "dim_podcast": _table(
+        "podcast_id long, spotify_podcast_uri string, podcast_name string, "
+        "description string, podcast_cover_art_url string"
+    ),
+    "dim_reason": _table("reason_id long, reason_type string, reason_group string"),
+    "fact_tracks": _table(
+        "ts_msk timestamp, date_fk long, time_fk long, ms_played int, "
+        "sec_played long, track_fk long, artist_fk long, reason_start_fk long, "
+        "reason_end_fk long, shuffle boolean, percent_played double, "
+        "offline boolean, offline_timestamp long, _year int"
+    ),
+    "fact_podcasts": _table(
+        "ts_msk timestamp, date_fk long, time_fk long, sec_played long, "
+        "episode_fk long, podcast_fk long, reason_start_fk long, "
+        "reason_end_fk long, _year int"
+    ),
+}
+
+
+# --- driver-held rows ---------------------------------------------------------
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType
+) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order) as a frame planned
+    as a ``LocalTableScan``: the rows travel to the JVM as one Arrow
+    table, so no job starts a Python worker to re-read them.  A Python
+    list (or an empty pandas frame) would plan as ``Scan ExistingRDD``
+    over a PythonRDD instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_pydict(
+        {f.name: list(c) for f, c in zip(schema.fields, columns)},
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)

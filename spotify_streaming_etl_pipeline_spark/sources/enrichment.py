@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..schemas import local_frame
+
 BATCH_SIZE = 50
 RETRY_LIMIT = 2
 
@@ -197,6 +199,17 @@ def _retry_individually(
 # --- Spark integration -------------------------------------------------------
 
 
+def envelope_frame(spark: SparkSession, records: list[tuple[str, dict]]) -> DataFrame:
+    """Staged ``(uri, payload)`` records as a ``(uri, raw_data)`` frame:
+    each payload a sorted-key JSON string (S6), the rows a local
+    relation (``schemas.local_frame``)."""
+    return local_frame(
+        spark,
+        [(uri, json.dumps(payload, sort_keys=True)) for uri, payload in records],
+        ENVELOPE_SCHEMA,
+    )
+
+
 def enrich_uris(
     spark: SparkSession,
     new_uris: DataFrame,
@@ -225,11 +238,10 @@ def enrich_uris(
         retry_limit=retry_limit,
         sleeper=sleeper,
     )
-    staged = spark.createDataFrame(
-        [(uri, json.dumps(payload, sort_keys=True)) for uri, payload in result.records],
-        ENVELOPE_SCHEMA,
-    ).withColumn("fetched_at", F.current_timestamp())
-    failed = spark.createDataFrame(result.failures, FAILED_URI_SCHEMA).withColumn(
+    staged = envelope_frame(spark, result.records).withColumn(
+        "fetched_at", F.current_timestamp()
+    )
+    failed = local_frame(spark, result.failures, FAILED_URI_SCHEMA).withColumn(
         "failed_at", F.current_timestamp()
     )
     return staged, failed

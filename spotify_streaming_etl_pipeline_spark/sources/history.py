@@ -14,6 +14,7 @@ lake it prunes partitions; under Structured Streaming the file source
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,21 +62,23 @@ def max_loaded_ts(
 
     Fact tables store naive MSK wall-clock (``ts_msk``) — convert back
     to UTC before comparing, like the reference
-    (db_manager.py:144-146)."""
+    (db_manager.py:144-146).  The given tables' timestamps are unioned
+    under one aggregate, so the cutoff is one action, not one per
+    table."""
     floor = dt.datetime(1900, 1, 1)
-    candidates = [floor]
-    for df, col, is_msk in (
-        (fact_tracks, "ts_msk", True),
-        (fact_podcasts, "ts_msk", True),
-        (staging, "ts", False),
-    ):
-        if df is None:
-            continue
-        expr = to_utc(F.col(col)) if is_msk else F.col(col)
-        row = df.agg(F.max(expr).alias("m")).collect()[0]
-        if row["m"] is not None:
-            candidates.append(row["m"])
-    return max(candidates)
+    stamps = [
+        df.select((to_utc(F.col(col)) if is_msk else F.col(col)).alias("ts"))
+        for df, col, is_msk in (
+            (fact_tracks, "ts_msk", True),
+            (fact_podcasts, "ts_msk", True),
+            (staging, "ts", False),
+        )
+        if df is not None
+    ]
+    if not stamps:
+        return floor
+    top = functools.reduce(DataFrame.union, stamps).agg(F.max("ts")).collect()[0][0]
+    return floor if top is None else max(floor, top)
 
 
 def delta_filter(history: DataFrame, cutoff: dt.datetime) -> DataFrame:

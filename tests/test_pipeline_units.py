@@ -451,3 +451,99 @@ def test_dim_read_restores_swap_crash_residue(spark, tmp_path):
     assert df is not None
     assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]
     assert not os.path.isdir(old)
+
+
+# --- per-run fixed cost: local relations, lazy dim builds -------------------
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_rows_are_local_relations(spark):
+    """Rows the driver already holds must plan as a ``LocalTableScan``:
+    a ``Scan ExistingRDD`` re-reads them through a Python worker in a
+    job of its own every time the frame runs."""
+    from spotify_streaming_etl_pipeline_spark.sources.enrichment import (
+        envelope_frame,
+        enrich_uris,
+    )
+
+    records = [("spotify:track:B", {"uri": "spotify:track:B", "a": 1}),
+               ("spotify:track:A", {"a": 2, "uri": "spotify:track:A"})]
+    empty, two = envelope_frame(spark, []), envelope_frame(spark, records)
+
+    def fetch(batch):
+        return {"tracks": [None if u == "bad" else {"uri": u} for u in batch]}
+
+    new = spark.createDataFrame([("ok",), ("bad",)], "uri string")
+    staged, failed = enrich_uris(spark, new, fetch, "track", sleeper=lambda s: None)
+    frames = {
+        "envelope_frame(0)": empty,
+        "envelope_frame(2)": two,
+        "enrich_uris staged": staged,
+        "enrich_uris failed": failed,
+        "sentinel_episode": dims.sentinel_episode(spark),
+        "sentinel_podcast": dims.sentinel_podcast(spark),
+    }
+    for name, df in frames.items():
+        plan = _executed_plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
+
+    assert empty.count() == 0 and empty.columns == ["uri", "raw_data"]
+    assert [tuple(r) for r in two.collect()] == [
+        (u, json.dumps(p, sort_keys=True)) for u, p in records
+    ]
+    assert [r["uri"] for r in staged.collect()] == ["ok"]
+    assert [(r["uri"], r["error_reason"]) for r in failed.collect()] == [
+        ("bad", "API returned null")
+    ]
+    assert dims.sentinel_episode(spark).first()["episode_id"] == 0
+
+
+def test_dim_builds_start_no_job(spark, tmp_path):
+    """``load_dim`` and ``build_dim_reason`` over parquet-backed existing
+    dims build without starting a Spark job (the key offset is computed
+    inside the plan), yet keys continue after the existing max — and
+    start at 1 when the existing dim has no rows."""
+    sc = spark.sparkContext
+    env = spark.createDataFrame(
+        [track_envelope("spotify:track:A"), track_envelope("spotify:track:B")],
+        "spotify_track_uri string, raw_data string",
+    )
+    dims.load_dim(dims.clean_tracks(env), "spotify_track_uri", "track_id").write.parquet(
+        str(tmp_path / "dim_track")
+    )
+    dims.build_dim_reason(_history_df(spark, [history_row()])).write.parquet(
+        str(tmp_path / "dim_reason")
+    )
+    existing_track = spark.read.parquet(str(tmp_path / "dim_track"))
+    existing_reason = spark.read.parquet(str(tmp_path / "dim_reason"))
+    no_track = existing_track.limit(0)
+    env2 = spark.createDataFrame(
+        [track_envelope("spotify:track:A"), track_envelope("spotify:track:C")],
+        "spotify_track_uri string, raw_data string",
+    )
+    h2 = _history_df(spark, [history_row(reason_end="fwdbtn")])
+
+    group = "test-dim-builds-start-no-job"
+    sc.setJobGroup(group, "lazy dim build")
+    try:
+        track = dims.load_dim(
+            dims.clean_tracks(env2), "spotify_track_uri", "track_id", existing_track
+        )
+        reason = dims.build_dim_reason(h2, existing_reason)
+        fresh = dims.load_dim(
+            dims.clean_tracks(env2), "spotify_track_uri", "track_id", no_track
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    keys = {r["spotify_track_uri"]: r["track_id"] for r in track.collect()}
+    assert keys == {"spotify:track:A": 1, "spotify:track:B": 2, "spotify:track:C": 3}
+    new = reason.filter(F.col("reason_type") == "fwdbtn").collect()
+    assert [r["reason_id"] for r in new] == [3]  # after trackdone, endplay
+    assert sorted(r["track_id"] for r in fresh.collect()) == [1, 2]

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spotify_streaming_etl_pipeline_spark import pipeline
+from spotify_streaming_etl_pipeline_spark.schemas import WAREHOUSE_SCHEMAS
 from spotify_streaming_etl_pipeline_spark.streaming.ingest import (
     hourly_platform_counts,
     read_history_stream,
@@ -116,8 +117,12 @@ def test_pipeline_end_to_end_then_incremental_noop(spark, raw_dir, tmp_path):
     assert res2.dims["track"].count() == 2  # dims stable across reruns
 
 
-def _n_persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted_ids(spark) -> set[int]:
+    """Ids of the session's persisted RDDs.  Compared as sets, not
+    counts: RDDs that earlier tests persisted and dropped are unpersisted
+    by Spark's ContextCleaner whenever the JVM collects them, which can
+    happen during a run and lower the count."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
@@ -126,10 +131,9 @@ def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
     fact write itself, not by a second count) must equal the rows that
     landed in the fact parquet, the no-op run's empty writes must still
     report 0 for both facts, and every ``write=True`` run must release
-    the caches it made (the persistent RDD count is back where it
-    started)."""
+    the caches it made (no RDD it persisted is still persisted)."""
     wh = str(tmp_path / "warehouse")
-    n0 = _n_persisted(spark)
+    before = _persisted_ids(spark)
 
     def landed():
         return {
@@ -139,7 +143,7 @@ def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
 
     def load():
         res = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
-        assert _n_persisted(spark) == n0
+        assert _persisted_ids(spark) <= before
         return res
 
     res = load()
@@ -173,6 +177,27 @@ def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
     assert res.n_fact_rows == {"tracks": 0, "podcasts": 0}
     assert landed() == second
 
+    # The declared warehouse schemas are what the run wrote.
+    for table, schema in WAREHOUSE_SCHEMAS.items():
+        assert spark.read.parquet(f"{wh}/{table}").schema == schema, table
+
+
+def test_pipeline_first_load_without_podcast_plays(spark, tmp_path):
+    """A first load with no podcast play writes an empty fact_podcasts
+    (only ``_SUCCESS``, no parquet file to infer a schema from); the
+    run's re-read, the same read every later run starts with, must see
+    it as an empty table of its declared schema."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_export(
+        raw / "export_1.json",
+        [history_row(), history_row(ts="2021-01-01T00:30:00Z")],
+    )
+    res = pipeline.run(spark, str(raw), str(tmp_path / "wh"), fetchers=_fake_fetchers())
+    assert res.n_fact_rows == {"tracks": 2, "podcasts": 0}
+    assert res.facts["podcasts"].count() == 0
+    assert res.facts["podcasts"].schema == WAREHOUSE_SCHEMAS["fact_podcasts"]
+
 
 def test_pipeline_run_releases_its_caches_on_failure(
     spark, raw_dir, tmp_path, monkeypatch
@@ -184,11 +209,11 @@ def test_pipeline_run_releases_its_caches_on_failure(
         fact.count()  # fills the history and dim caches first
         raise RuntimeError("fact write failed")
 
-    n0 = _n_persisted(spark)
+    before = _persisted_ids(spark)
     monkeypatch.setattr(pipeline, "write_fact", failing_write_fact)
     with pytest.raises(RuntimeError, match="fact write failed"):
         pipeline.run(spark, str(raw_dir), str(tmp_path / "wh"), fetchers=_fake_fetchers())
-    assert _n_persisted(spark) == n0
+    assert _persisted_ids(spark) <= before
 
 
 def test_pipeline_size_switch_distributed_enrichment(spark, raw_dir, tmp_path):
