@@ -2,11 +2,16 @@
 plans/$SPARK_GRAFT_PLAN_DIR/<query>_<tag>.txt (default r13).
 
 Mostly planning only: building a registered query's DataFrame runs no
-job, with two exceptions.  ``dedup_funnel_summary`` and
-``copurchase_triangles`` run their Spark jobs (sequential driver
-collects) while the DataFrame is built and return a literal row, so
-capturing them executes the full computation, and their captured plan
-is that literal projection, not the work behind it.
+job, with these exceptions.  ``dedup_funnel_summary`` (three driver
+actions) and ``copurchase_triangles`` run their Spark jobs while the
+DataFrame is built and return a literal row, so capturing them executes
+the full computation, and their captured plan is that literal
+projection, not the work behind it.  Builders that take a lazy
+``localCheckpoint(eager=False)`` (the banded near-dup kernel
+``llm.dedup.band_candidates`` and ``llm.multimodal.ahash_near_dup``)
+run the shuffle-map stages below the checkpoint while the DataFrame is
+built: under AQE, planning the checkpointed RDD materializes its query
+stages; only the final stage stays lazy.
 
 Usage: python capture_plans.py <tag> [name1,name2,...]
 """

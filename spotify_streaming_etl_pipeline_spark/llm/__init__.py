@@ -8,7 +8,9 @@ decode stubs):
     text.py        -- tokenization, n-grams, language-ID, quality scores,
                       token counting, document fingerprinting
     dedup.py       -- exact (hash groupBy), canonical, n-gram Jaccard,
-                      MinHash+LSH banding, SimHash (banded hamming)
+                      MinHash+LSH and SimHash over one banded kernel
+                      (band_candidates / hamming_band_pairs, which the
+                      media fingerprint near-dups share)
     similarity.py  -- cosine top-k: brute-force baseline + LSH-bucketed
                       scale path over array<float> embeddings
     multimodal.py  -- opaque binary columns with typed metadata; decode /

@@ -17,9 +17,15 @@ Scale posture (the point of each design):
   deterministic here (portable hash), so the oracle reproduces it
   exactly.
 - **SimHash** (`simhash_near_dup`): 48-bit fingerprint; banding into
-  (t+1) chunks guarantees *exact recall* for hamming distance <= t by
-  pigeonhole, so the banded plan provably equals the brute-force
+  (t+1) bit ranges guarantees *exact recall* for hamming distance <= t
+  by pigeonhole, so the banded plan provably equals the brute-force
   oracle.
+- **One banded kernel** for both, and for the media fingerprints
+  (`multimodal.ahash_near_dup`): `band_candidates` is the package's
+  only (band, key) self-join with its giant-bucket star guard;
+  `hamming_band_pairs` slices a fingerprint into t+1 bit-range bands,
+  calls it, and verifies candidates by popcount (the banded
+  candidate-then-verify shape).
 
 Physical-plan discipline (this is where the 100 TB throughput lives):
 heavy per-shingle work (md5, signature arithmetic, sign votes) runs in
@@ -40,8 +46,12 @@ This module is the additive LLM-curation family.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 NGRAM_N = 3
 MASK48 = (1 << 48) - 1
@@ -450,6 +460,153 @@ def _bucket_marked(
     return bucketed.withColumns(cols)
 
 
+def _pair_cols(id_col: str) -> tuple[str, str]:
+    """Pair-table column names over ``id_col``: doc_id -> (doc_a,
+    doc_b), fp -> (fp_a, fp_b)."""
+    stem = id_col.removesuffix("_id")
+    return f"{stem}_a", f"{stem}_b"
+
+
+def band_candidates(
+    bands: DataFrame, max_bucket_size: int | None, id_col: str = "doc_id"
+) -> DataFrame:
+    """(<id>_a < <id>_b): distinct pairs of ids sharing >= 1 (band,
+    key) bucket of a banded index ``(id_col, band, key)`` — the
+    package's one bucket self-join, shared by MinHash-LSH, SimHash and
+    the media fingerprints (``hamming_band_pairs``).
+
+    ``max_bucket_size`` is the giant-bucket star guard, and its
+    semantics deliberately DIFFER from the hot-key exclusion of
+    ``cap_doc_freq`` / ``plans.quality.cap_basket_size``: a hot
+    shingle or basket carries no pairwise signal, but a hot bucket
+    (10⁶ mirror copies of one page) is exactly where the duplicates
+    are — dropping it would un-dedup the worst offenders. Instead,
+    buckets larger than the cap emit STAR edges (bucket-min id ->
+    every other member): m-1 candidates instead of m(m-1)/2,
+    connectivity within the bucket exactly preserved, so downstream
+    clustering (``dup_clusters``) yields identical components. What is
+    lost is only the non-representative pairwise candidates inside
+    oversized buckets — callers that report verified PAIRS (not
+    clusters) get a connectivity-preserving subset there. At a sane
+    cap (>= 64) every such bucket is boilerplate-degenerate and its
+    members near-identical, so cluster-level recall is unaffected
+    (the planted-bucket units pin this); None disables the guard.
+
+    Plan shape: the (id, band, key) table is lazily
+    ``localCheckpoint``-ed, so both join sides and the star branch
+    read it once (the self-join breaks exchange reuse, so without it
+    the upstream signature/fingerprint pipeline runs per side). Under
+    AQE, building the checkpoint runs its shuffle-map stages at once;
+    only the final stage stays lazy. With the guard on,
+    ``_bucket_marked`` windows the checkpoint by (band, key), the
+    partitioning the self-join needs anyway, so the guard's marginal
+    cost is a per-partition sort."""
+    a, b = _pair_cols(id_col)
+    bands = bands.select(id_col, "band", "key").localCheckpoint(eager=False)
+    if max_bucket_size is not None:
+        bands = _bucket_marked(bands, ["band", "key"], id_col=id_col)
+    small = bands if max_bucket_size is None else bands.filter(
+        F.col("m") <= max_bucket_size
+    )
+    pairs = (
+        small.select(F.col(id_col).alias(a), "band", "key")
+        .join(small.select(F.col(id_col).alias(b), "band", "key"), ["band", "key"])
+        .filter(F.col(a) < F.col(b))
+        .select(a, b)
+    )
+    if max_bucket_size is not None:
+        stars = bands.filter(
+            (F.col("m") > max_bucket_size) & (F.col(id_col) != F.col("rep"))
+        )
+        pairs = pairs.unionByName(
+            stars.select(F.col("rep").alias(a), F.col(id_col).alias(b))
+        )
+    return pairs.distinct()
+
+
+def _bit_range(word, lo: int, width: int) -> Column:
+    """Fingerprint bits [lo, lo + width) as one long, crossing a word
+    boundary where needed; ``word(i)`` is the i-th 64-bit word."""
+    w0, off = divmod(lo, 64)
+    col = F.shiftrightunsigned(word(w0), off)
+    got = 64 - off
+    if got >= width:
+        return col if width == 64 else col.bitwiseAND(F.lit((1 << width) - 1))
+    high = word(w0 + 1).bitwiseAND(F.lit((1 << (width - got)) - 1))
+    return col.bitwiseAND(F.lit((1 << got) - 1)).bitwiseOR(F.shiftleft(high, got))
+
+
+def hamming_band_pairs(
+    fps: DataFrame,
+    id_col: str,
+    total_bits: int,
+    max_hamming: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """(<id>_a, <id>_b, hamming): pairs of ``fps`` rows whose
+    fingerprint ``fp`` (one long, or a struct of long words) differs
+    in <= max_hamming of its ``total_bits`` bits.
+
+    Banded candidate-then-verify: the fingerprint is bit-sliced into
+    ``max_hamming + 1`` keys (leftover bits join the last band), so by
+    pigeonhole any pair within the threshold agrees on >= 1 whole band
+    and ``band_candidates`` has EXACT recall; candidates then keep the
+    pairs whose popcount of the word-wise xor is <= max_hamming.
+    Slicing into t+1 bands makes each key as wide as the threshold
+    allows. With the star guard firing, a pair confined to oversized
+    buckets is reported only through the bucket representative
+    (hamming still exact per emitted pair). Each band row carries its
+    fingerprint inside the bucket id (``struct(id, fp)``, ordered by
+    id), so the verify needs no join back to ``fps``."""
+    if max_hamming < 0:
+        raise ValueError("max_hamming must be >= 0")
+    nb = max_hamming + 1
+    if nb > total_bits:
+        raise ValueError(
+            "pigeonhole slicing needs max_hamming + 1 <= total fingerprint bits"
+        )
+    width, extra = divmod(total_bits, nb)
+    # band keys are equality-join keys, so a full 64-bit key is fine
+    # (sign bit included); only a > 64-bit band cannot fit a long
+    if width + extra > 64:
+        raise ValueError(
+            "a band key would exceed 64 bits; raise max_hamming or "
+            "shorten the fingerprint (t=0 on wide fingerprints is "
+            "exact dedup — group by the fingerprint instead)"
+        )
+    fp_type = fps.schema["fp"].dataType
+    names = fp_type.fieldNames() if isinstance(fp_type, StructType) else [None]
+
+    def word(fp: str, i: int) -> Column:
+        return F.col(fp) if names[i] is None else F.col(fp)[names[i]]
+
+    fp_word = functools.partial(word, "fp")
+    # t+1 bit ranges of `width` bits; leftover bits join the last one
+    keys = [_bit_range(fp_word, j * width, width) for j in range(max_hamming)]
+    keys.append(_bit_range(fp_word, max_hamming * width, width + extra))
+    node = F.struct(F.col(id_col).alias("id"), F.col("fp").alias("fp"))
+    bands = fps.select(
+        node.alias("node"), F.posexplode(F.array(*keys)).alias("band", "key")
+    )
+    hamming = functools.reduce(
+        operator.add,
+        [
+            F.bit_count(word("node_a.fp", i).bitwiseXOR(word("node_b.fp", i)))
+            for i in range(len(names))
+        ],
+    ).cast("long")
+    a, b = _pair_cols(id_col)
+    return (
+        band_candidates(bands, max_bucket_size, "node")
+        .select(
+            F.col("node_a.id").alias(a),
+            F.col("node_b.id").alias(b),
+            hamming.alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     k: int = MINHASH_K,
@@ -519,41 +676,15 @@ def minhash_lsh_candidates(
     _posting_df: DataFrame | None = None,
     _bands_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing >= 1 LSH band.
+    """Candidate near-dup pairs (doc_a, doc_b): docs sharing >= 1 LSH
+    band.
 
-    Plan: signature aggregation -> explode b band keys -> self
-    equi-join on (band, key) -> distinct pairs. The band join carries
-    (doc_id, band, key-string) — independent of document size.
-    Deterministic given the portable hash.
-
-    ``max_bucket_size`` is the giant-bucket guard, and its semantics
-    deliberately DIFFER from the hot-key exclusion of ``cap_doc_freq``
-    / ``plans.quality.cap_basket_size``: a hot shingle or basket
-    carries no pairwise signal, but a hot LSH bucket (10⁶ mirror
-    copies of one page) is exactly where the duplicates are —
-    dropping it would un-dedup the worst offenders. Instead, buckets
-    larger than the cap emit STAR edges (bucket-min doc -> every
-    other member): m-1 candidates instead of m(m-1)/2, connectivity
-    within the bucket exactly preserved, so downstream clustering
-    (``dup_clusters``) yields identical components. What is lost is
-    only the non-representative pairwise candidates inside oversized
-    buckets — callers that report verified PAIRS (not clusters) get a
-    connectivity-preserving subset there, and docs whose similarity
-    transits solely through a non-representative member of an
-    oversized bucket can score against the representative instead;
-    at a sane cap (≥ 64) every such bucket is boilerplate-degenerate
-    and the members near-identical, so cluster-level recall is
-    unaffected (the planted-bucket unit pins this).
-
-    Guard plan shape: one WINDOW over the bucket keys annotates each
-    band row with its bucket size and bucket-min doc
-    (``_bucket_marked`` — no broadcast job, no driver probe, no
-    membership arrays, so the guard cannot OOM on the pathology it
-    defends against); small buckets keep the classic self-join,
-    oversized rows become (rep, member) star edges with a narrow
-    filter. The window shuffles by (band, key) — the exact
-    partitioning the self-join needs — so the guard's marginal cost
-    is a per-partition sort, constant relative to scale."""
+    Plan: signature aggregation -> explode b band keys
+    (``minhash_band_table``) -> ``band_candidates``, the (band, key)
+    self-join with its giant-bucket star guard (``max_bucket_size``;
+    see there). The band join carries (doc_id, band, key-string) —
+    independent of document size. Deterministic given the portable
+    hash."""
     bands = (
         _bands_df
         if _bands_df is not None
@@ -561,36 +692,7 @@ def minhash_lsh_candidates(
             df, k, rows_per_band, n, text_col, _posting_df=_posting_df
         )
     )
-    if max_bucket_size is None:
-        # Both join sides derive from the same band table; without
-        # persist the whole tokenize->hash->signature pipeline runs
-        # twice (verified in the physical plan — the self-join breaks
-        # exchange reuse).
-        small = bands.persist()
-        stars = None
-    else:
-        marked = _bucket_marked(bands, ["band", "key"]).persist()
-        small = marked.filter(F.col("m") <= max_bucket_size)
-        stars = (
-            marked.filter(
-                (F.col("m") > max_bucket_size)
-                & (F.col("doc_id") != F.col("rep"))
-            )
-            .select(
-                F.col("rep").alias("doc_a"),
-                F.col("doc_id").alias("doc_b"),
-            )
-        )
-    a = small.select(F.col("doc_id").alias("doc_a"), "band", "key")
-    b = small.select(F.col("doc_id").alias("doc_b"), "band", "key")
-    pairs = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    if stars is not None:
-        pairs = pairs.unionByName(stars)
-    return pairs.distinct()
+    return band_candidates(bands, max_bucket_size)
 
 
 def minhash_near_dup(
@@ -611,7 +713,7 @@ def minhash_near_dup(
     doc on every candidate row, degrading for book-length docs).
 
     ``max_bucket_size`` passes through to the candidate stage's
-    giant-bucket star-edge guard (see ``minhash_lsh_candidates``);
+    giant-bucket star-edge guard (see ``band_candidates``);
     with star thinning active, verified pairs inside an oversized
     bucket are those scoring >= threshold AGAINST THE REPRESENTATIVE,
     which at a sane cap keeps ``dup_clusters`` components identical."""
@@ -782,94 +884,24 @@ def simhash_near_dup(
     max_bucket_size: int | None = None,
     _posting_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-dup pairs with SimHash hamming distance <= max_distance.
+    """Near-dup pairs (doc_a, doc_b, hamming) with SimHash hamming
+    distance <= max_distance: the 48-bit fingerprints through
+    ``hamming_band_pairs`` — (max_distance + 1) bit-sliced bands
+    (4 x 12 bits at the default t=3), so by pigeonhole the banded
+    plan equals the brute-force oracle at equi-join cost.
 
-    Banded exact-recall plan: split the 48-bit fingerprint into
-    (max_distance + 1) chunks; by pigeonhole, any pair within distance
-    t agrees on >= 1 chunk, so an equi-join on (chunk_idx, chunk_value)
-    finds every qualifying pair — brute-force-equivalent results at
-    equi-join cost.
-
-    ``max_bucket_size`` is the same giant-bucket star guard as
-    ``minhash_lsh_candidates`` (10⁶ boilerplate copies collide in
-    EVERY chunk, so the self-join emits m² rows from one key): chunk
-    buckets above the cap emit star edges to the bucket-min doc
-    (hamming still exact per emitted pair). The brute-force-equivalent
-    guarantee then holds for every pair that shares at least one
-    NON-oversized bucket — a pair confined to oversized buckets is
-    reported only through the representative. At a sane cap such
-    buckets are degenerate boilerplate groups, so cluster-level
-    recall is preserved (planted-bucket unit pins the bound and the
-    equivalence when the cap doesn't fire). Guard substrate:
-    ``_bucket_marked`` — a window over (chunk, val), whose shuffle is
-    the partitioning the self-join needs anyway."""
-    n_chunks = max_distance + 1
-    width = SIMHASH_BITS // n_chunks
-    mask = (1 << width) - 1
-    # Both sides of the chunk self-join derive from the fingerprint
-    # table; without persist (of the fingerprints, or of the marked
-    # chunk table when the guard is on) the posting->48-vote pipeline
-    # runs twice. 16 bytes/doc + chunk cols — cache-friendly anywhere.
-    fp = simhash_fingerprints(df, text_col, _posting_df=_posting_df)
-    if max_bucket_size is None:
-        fp = fp.persist()
-    chunks = fp.select(
+    ``max_bucket_size`` is the ``band_candidates`` star guard (10⁶
+    boilerplate copies collide in EVERY band): band buckets above the
+    cap emit star edges to the bucket-min doc, hamming still exact
+    per emitted pair. The brute-force guarantee then holds for every
+    pair that shares at least one NON-oversized bucket."""
+    fps = simhash_fingerprints(df, text_col, _posting_df=_posting_df)
+    return hamming_band_pairs(
+        fps.select("doc_id", F.col("simhash").alias("fp")),
         "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("val"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("cv"),
-    ).select("doc_id", "simhash", "cv.chunk", "cv.val")
-    if max_bucket_size is not None:
-        marked = _bucket_marked(chunks, ["chunk", "val"], "simhash").persist()
-        small = marked.filter(F.col("m") <= max_bucket_size)
-        stars = (
-            marked.filter(
-                (F.col("m") > max_bucket_size)
-                & (F.col("doc_id") != F.col("rep"))
-            )
-            .select(
-                F.col("rep").alias("doc_a"),
-                F.col("doc_id").alias("doc_b"),
-                F.col("rep_simhash").alias("sh_a"),
-                F.col("simhash").alias("sh_b"),
-            )
-        )
-    else:
-        small, stars = chunks, None
-    a = small.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "chunk", "val"
-    )
-    b = small.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "chunk", "val"
-    )
-    pairs = (
-        a.join(b, ["chunk", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-    )
-    if stars is not None:
-        pairs = pairs.unionByName(stars)
-    return (
-        pairs.select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_distance)
+        SIMHASH_BITS,
+        max_distance,
+        max_bucket_size,
     )
 
 

@@ -45,11 +45,12 @@ function handed to ``_blob_stage`` — one Arrow-batched
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -59,6 +60,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import dedup
 
 BLOB_FEATURE_SCHEMA = StructType(
     [
@@ -2809,14 +2812,12 @@ def ahash_near_dup(
     where many documents share a fingerprint (blank images, silence,
     re-encodes):
 
-    1. collapse documents to DISTINCT fingerprints (one groupBy on
+    1. collapse documents to DISTINCT fingerprints (one distinct on
        the 64-bit word; members stay relational, never collected);
-    2. band only the distinct fingerprints: the word is bit-sliced
-       into exactly ``max_hamming + 1`` keys, so by pigeonhole any
-       pair within the threshold agrees on >= 1 whole band and the
-       (band_no, key) equi-join has EXACT recall; slicing into t+1
-       bands makes each key as wide as the threshold allows (t=4 ->
-       12-16 bits, t=6 -> 9-10 bits on 64-bit fingerprints) —
+    2. search only the distinct fingerprints with the dedup family's
+       banded kernel (``llm.dedup.hamming_band_pairs``): the word is
+       bit-sliced into exactly ``max_hamming + 1`` keys, so by
+       pigeonhole the (band, key) equi-join has EXACT recall —
        candidates scale with DISTINCT-fingerprint bucket
        co-occurrence, not documents (banding raw documents measured
        13.8x wall at 10x docs on a dup-heavy corpus;
@@ -2830,27 +2831,27 @@ def ahash_near_dup(
        ``audio_fingerprint(n_frames=128)``, ``image_ahash(hash_h=16)``;
        wide fingerprints pack into a words struct and band keys are
        bit ranges crossing word boundaries;
-    3. verify candidate fingerprint pairs with a relational popcount
-       (zip_with xor bit_count over the band arrays);
+    3. the kernel verifies candidate fingerprint pairs with a
+       relational popcount of the word-wise xor;
     4. expand back to document pairs relationally: same-fingerprint
-       groups self-join on the fingerprint id (their pairs ARE the
-       required output — hamming 0), verified cross-fingerprint
-       pairs join members on each side.
+       groups are ``llm.dedup.band_candidates`` over one band keyed by
+       the fingerprint (their pairs ARE the required output — hamming
+       0), verified cross-fingerprint pairs join members on each side.
 
     ``max_bucket_size`` is the dedup-family giant-bucket star guard
-    (llm/dedup.py discipline), applied BOTH to same-fingerprint
-    groups and to band buckets: an oversized group/bucket degrades
-    to (min-id, member) star edges instead of an all-pairs blow-up —
-    connectivity for downstream clustering is preserved, exhaustive
-    member-member pairs inside the pathology are not enumerated;
-    None disables.  The default cannot bite on the oracle substrates
-    (largest group/bucket << 4096), so the gates certify brute-force
-    equality with the guard ON.
+    (``band_candidates``), applied BOTH to same-fingerprint groups and
+    to band buckets: an oversized group/bucket degrades to (min-id,
+    member) star edges instead of an all-pairs blow-up — connectivity
+    for downstream clustering is preserved, exhaustive member-member
+    pairs inside the pathology are not enumerated; None disables.  The
+    default cannot bite on the oracle substrates (largest group/bucket
+    << 4096), so the gates certify brute-force equality with the guard
+    ON.
 
-    The fingerprint tables feed several plan branches; without
+    The decoded fingerprint table feeds several plan branches; without
     lineage truncation each branch re-runs the upstream decode chain
-    (measured 4x the whole image pipeline), so both tiny tables are
-    lazily localCheckpoint-ed and computed once."""
+    (measured 4x the whole image pipeline), so it is lazily
+    localCheckpoint-ed and computed once."""
     if max_hamming < 0:
         raise ValueError("max_hamming must be >= 0")
     base = ah.filter(F.col("bands").isNotNull()).localCheckpoint(eager=False)
@@ -2864,13 +2865,8 @@ def ahash_near_dup(
         return base.sparkSession.createDataFrame(
             [], "doc_a long, doc_b long, hamming long"
         )
-    nb = max_hamming + 1
-    if nb > total_bits:
-        raise ValueError(
-            "pigeonhole slicing needs max_hamming + 1 <= total fingerprint bits"
-        )
     # the fingerprint as 64-bit words (two's-complement bitwise ops
-    # are well-defined; slices below use unsigned shifts).  WIDE
+    # are well-defined; band slices use unsigned shifts).  WIDE
     # fingerprints (> 64 bits) pack into a words STRUCT — the scale
     # path: at a fixed threshold, band-key width grows with
     # fingerprint bits (64-bit/t=6 keys are ~9 bits and their 512-key
@@ -2878,159 +2874,28 @@ def ahash_near_dup(
     # 47x wall at the 10->100x leg; 128-bit keys are ~18 bits and
     # keep bucket growth linear)
     bands_per_word = 64 // band_w
-    n_words = (n_rows + bands_per_word - 1) // bands_per_word
-    words = []
-    for wdx in range(n_words):
-        word = None
-        for k in range(bands_per_word):
-            i = wdx * bands_per_word + k
-            if i >= n_rows:
-                break
-            part = F.shiftleft(
-                F.element_at("bands", i + 1).cast("long"), k * band_w
-            )
-            word = part if word is None else word.bitwiseOR(part)
-        words.append(word)
-    if n_words == 1:
-        fp_col = words[0]
-    else:
-        fp_col = F.struct(
-            *[w.alias(f"w{i}") for i, w in enumerate(words)]
+    words = [
+        functools.reduce(
+            Column.bitwiseOR,
+            [
+                F.shiftleft(F.element_at("bands", i + 1).cast("long"), k * band_w)
+                for k, i in enumerate(range(w0, min(w0 + bands_per_word, n_rows)))
+            ],
         )
-    # band keys are equality-join keys, so a full 64-bit key is fine
-    # (sign bit included); only a > 64-bit band cannot fit a long
-    if total_bits // nb + total_bits % nb > 64:
-        raise ValueError(
-            "a band key would exceed 64 bits; raise max_hamming or "
-            "shorten the fingerprint (t=0 on wide fingerprints is "
-            "exact dedup — use the same-fingerprint path directly)"
-        )
-    docs = base.select("doc_id", F.col("bands"), fp_col.alias("fp"))
-    fps = (
-        docs.groupBy("fp")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            # bands is a pure function of fp — any member's copy is
-            # THE value, so first() is deterministic here
-            F.first("bands").alias("bands"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        .localCheckpoint(eager=False)
+        for w0 in range(0, n_rows, bands_per_word)
+    ]
+    fp_col = (
+        words[0]
+        if len(words) == 1
+        else F.struct(*[w.alias(f"w{i}") for i, w in enumerate(words)])
     )
-    mem = docs.select("doc_id", "fp")
-
-    # -- same-fingerprint document pairs (hamming 0) ------------------
-    mm = mem.join(fps.select("fp", "rep", "n_members"), "fp")
-    if max_bucket_size is None:
-        small_groups = mm
-        same_stars = None
-    else:
-        small_groups = mm.filter(F.col("n_members") <= max_bucket_size)
-        same_stars = (
-            mm.filter(
-                (F.col("n_members") > max_bucket_size)
-                & (F.col("doc_id") != F.col("rep"))
-            )
-            .select(
-                F.col("rep").alias("doc_a"),
-                F.col("doc_id").alias("doc_b"),
-                F.lit(0).cast("long").alias("hamming"),
-            )
-        )
-    same_pairs = (
-        small_groups.alias("a")
-        .join(
-            small_groups.alias("b"),
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.lit(0).cast("long").alias("hamming"),
-        )
-    )
-
-    # -- cross-fingerprint pairs via banded search over DISTINCT fps --
-    def _word(w: int):
-        return F.col("fp") if n_words == 1 else F.col("fp")[f"w{w}"]
-
-    def _bit_range(lo: int, width: int):
-        """The fingerprint bits [lo, lo+width) as one <=63-bit long,
-        crossing word boundaries where needed."""
-        w0, off = divmod(lo, 64)
-        col = F.shiftrightunsigned(_word(w0), off)
-        got = 64 - off
-        if got >= width:
-            if width < 64:
-                col = col.bitwiseAND(F.lit((1 << width) - 1))
-            return col
-        col = col.bitwiseAND(F.lit((1 << got) - 1))
-        high = _word(w0 + 1).bitwiseAND(F.lit((1 << (width - got)) - 1))
-        return col.bitwiseOR(F.shiftleft(high, got))
-
-    w_bits = total_bits // nb
-    keys = []
-    for j in range(nb):
-        lo = j * w_bits
-        width = total_bits - lo if j == nb - 1 else w_bits
-        keys.append(_bit_range(lo, width))
-    fband = fps.select(
-        "fp", F.posexplode(F.array(*keys)).alias("band_no", "key")
-    )
-    if max_bucket_size is None:
-        small_band, band_stars = fband, None
-    else:
-        bw = Window.partitionBy("band_no", "key")
-        marked = fband.withColumns(
-            {
-                "m": F.count(F.lit(1)).over(bw),
-                "bmin": F.min("fp").over(bw),
-            }
-        )
-        small_band = marked.filter(F.col("m") <= max_bucket_size).drop(
-            "m", "bmin"
-        )
-        band_stars = (
-            marked.filter(
-                (F.col("m") > max_bucket_size) & (F.col("fp") != F.col("bmin"))
-            )
-            .select(
-                F.col("bmin").alias("fp_a"), F.col("fp").alias("fp_b")
-            )
-        )
-    cand = (
-        small_band.alias("a")
-        .join(
-            small_band.alias("b"),
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.fp") < F.col("b.fp")),
-        )
-        .select(F.col("a.fp").alias("fp_a"), F.col("b.fp").alias("fp_b"))
-    )
-    if band_stars is not None:
-        # star edges carry an arbitrary fp order; normalize before the
-        # distinct so a pair never appears twice
-        cand = cand.unionByName(
-            band_stars.select(
-                F.least("fp_a", "fp_b").alias("fp_a"),
-                F.greatest("fp_a", "fp_b").alias("fp_b"),
-            )
-        )
-    cand = cand.distinct()
-    ha = fps.select(F.col("fp").alias("fp_a"), F.col("bands").alias("_ba"))
-    hb = fps.select(F.col("fp").alias("fp_b"), F.col("bands").alias("_bb"))
-    hamming = F.aggregate(
-        F.zip_with("_ba", "_bb", lambda x, y: F.bit_count(x.bitwiseXOR(y))),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ).cast("long")
-    fp_pairs = (
-        cand.join(ha, "fp_a")
-        .join(hb, "fp_b")
-        .select("fp_a", "fp_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    mem = base.select("doc_id", fp_col.alias("fp"))
+    same_pairs = dedup.band_candidates(
+        mem.select("doc_id", F.lit(0).alias("band"), F.col("fp").alias("key")),
+        max_bucket_size,
+    ).withColumn("hamming", F.lit(0).cast("long"))
+    fp_pairs = dedup.hamming_band_pairs(
+        mem.select("fp").distinct(), "fp", total_bits, max_hamming, max_bucket_size
     )
     cross_pairs = (
         fp_pairs.join(
@@ -3047,11 +2912,7 @@ def ahash_near_dup(
             "hamming",
         )
     )
-    out = same_pairs.unionByName(cross_pairs)
-    if same_stars is not None:
-        out = out.unionByName(same_stars)
-    return out
-
+    return same_pairs.unionByName(cross_pairs)
 
 
 #: ahash_near_dup is modality-agnostic — any (doc_id, bands) table
@@ -3223,10 +3084,8 @@ def video_near_dup(
     millions of videos hits the same ``cap_doc_freq`` guard as a
     boilerplate shingle).  Container-agnostic by construction: an AVI
     and an mp4 of the same frames match."""
-    from .dedup import ngram_jaccard_pairs
-
     posting = video_fingerprint(media, max_frames).persist()
-    return ngram_jaccard_pairs(
+    return dedup.ngram_jaccard_pairs(
         None,
         threshold=threshold,
         max_doc_freq=max_doc_freq,

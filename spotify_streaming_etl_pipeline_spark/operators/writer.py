@@ -11,9 +11,9 @@ dataflow:
                      at lake scale swap in Delta ``MERGE`` behind the
                      same signature.
 
-Both sides shuffle only on the key columns; when the incoming side is
-small relative to the target (the normal incremental-load case) Spark
-broadcasts it for the anti join — no target shuffle at all.
+Both sides shuffle only on the key columns; a left-anti join can only
+broadcast its right side, so when the target is dim-sized Spark
+broadcasts the target's keys — no shuffle at all.
 """
 
 from __future__ import annotations
@@ -25,19 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-#: Targets at or below this estimated byte size get their key set
-#: broadcast for the anti join; above it we leave strategy choice to
-#: AQE (sort-merge or shuffled-hash, with runtime conversion to
-#: broadcast if the distinct key set turns out small post-shuffle).
-BROADCAST_TARGET_BYTES = 64 * 1024 * 1024
-
-
 def dedup_new(
-    incoming: DataFrame,
-    keys: list[str],
-    target: DataFrame | None,
-    *,
-    broadcast_target: bool | None = None,
+    incoming: DataFrame, keys: list[str], target: DataFrame | None
 ) -> DataFrame:
     """Rows from ``incoming`` whose key is new: within-batch dedup then
     anti-join against the existing target (J10).
@@ -48,10 +37,13 @@ def dedup_new(
     ``dim_track`` gets ``track_fk IS NULL`` — is recognised as already
     present instead of landing again on every replay.
 
-    ``broadcast_target`` forces/forbids broadcasting the target's key
-    set; default (None) uses Catalyst's size estimate of the target —
-    a fact-sized target must NOT be broadcast (driver OOM at 100 TB),
-    while a dim-sized one should be.
+    The target's keys go to the anti join as they are: a left-anti
+    join emits each incoming row at most once however many target
+    rows match, so de-duplicating the keys first would only add an
+    aggregate and a shuffle. Catalyst picks the join strategy from the
+    target's size estimate (``autoBroadcastJoinThreshold``): a
+    dim-sized target is broadcast, a fact-sized one is not (a
+    broadcast fact key set would OOM the driver at 100 TB).
     """
     out = incoming.dropDuplicates(keys)
     if target is not None:
@@ -59,27 +51,13 @@ def dedup_new(
         # incoming and target share lineage.
         target_keys = target.select(
             *(F.col(k).alias(f"_target_{i}") for i, k in enumerate(keys))
-        ).distinct()
-        if broadcast_target is None:
-            broadcast_target = _estimated_bytes(target) <= BROADCAST_TARGET_BYTES
-        if broadcast_target:
-            target_keys = F.broadcast(target_keys)
+        )
         cond = functools.reduce(
             operator.and_,
             (out[k].eqNullSafe(target_keys[f"_target_{i}"]) for i, k in enumerate(keys)),
         )
         out = out.join(target_keys, cond, "left_anti")
     return out
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's plan-level size estimate (file sizes for scans)."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        return int(plan.stats().sizeInBytes())
-    except Exception:
-        # Unknown size: assume big — never broadcast blindly.
-        return 1 << 62
 
 
 def idempotent_append(

@@ -14,8 +14,6 @@ converts back to UTC for comparison (db_manager.py:144-146).
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,12 +30,25 @@ def _with_msk(history: DataFrame) -> DataFrame:
     return history.withColumn("ts_msk", from_utc(F.col("ts")))
 
 
+def _reason_keys(dim_reason: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (start, end) reason-key lookups both facts join, broadcast:
+    ``reason_start_fk``/``_rs_type`` and ``reason_end_fk``/``_re_type``."""
+    return tuple(
+        F.broadcast(
+            dim_reason.filter(F.col("reason_group") == group).select(
+                F.col("reason_id").alias(f"reason_{group}_fk"),
+                F.col("reason_type").alias(f"_r{group[0]}_type"),
+            )
+        )
+        for group in ("start", "end")
+    )
+
+
 def build_fact_tracks(
     history: DataFrame,
     dim_track: DataFrame,
     dim_artist: DataFrame,
     dim_reason: DataFrame,
-    cutoff: dt.datetime | None = None,
 ) -> DataFrame:
     """J1: track plays → fact_tracks_history.
 
@@ -46,10 +57,7 @@ def build_fact_tracks(
     reference's joins on generated dims (dim_date_populate.sql:5-7),
     but with two broadcast joins *eliminated* from the hot path; the
     generated dims still exist for query-time joins."""
-    h = history.filter(F.col("spotify_track_uri").isNotNull())
-    if cutoff is not None:
-        h = h.filter(F.col("ts") > F.lit(cutoff))  # P2 strict delta
-    h = _with_msk(h)
+    h = _with_msk(history.filter(F.col("spotify_track_uri").isNotNull()))
 
     dt_ = F.broadcast(
         dim_track.select(
@@ -57,18 +65,7 @@ def build_fact_tracks(
         ).withColumnRenamed("duration_ms", "_dur_ms")
     )
     da = F.broadcast(dim_artist.select("artist_id", "spotify_artist_uri"))
-    rs = F.broadcast(
-        dim_reason.filter(F.col("reason_group") == "start").select(
-            F.col("reason_id").alias("reason_start_fk"),
-            F.col("reason_type").alias("_rs_type"),
-        )
-    )
-    re_ = F.broadcast(
-        dim_reason.filter(F.col("reason_group") == "end").select(
-            F.col("reason_id").alias("reason_end_fk"),
-            F.col("reason_type").alias("_re_type"),
-        )
-    )
+    rs, re_ = _reason_keys(dim_reason)
 
     joined = (
         h.join(dt_, "spotify_track_uri", "left")
@@ -98,16 +95,15 @@ def build_fact_podcasts(
     dim_episode: DataFrame,
     dim_podcast: DataFrame,
     dim_reason: DataFrame,
-    cutoff: dt.datetime | None = None,
 ) -> DataFrame:
     """J2: podcast plays → fact_podcasts_history; missing dim lookups
     coalesce to sentinel key 0 (reference transformer.py:315-316)."""
-    h = history.filter(
-        F.col("spotify_episode_uri").isNotNull() & (F.col("spotify_episode_uri") != "")
+    h = _with_msk(
+        history.filter(
+            F.col("spotify_episode_uri").isNotNull()
+            & (F.col("spotify_episode_uri") != "")
+        )
     )
-    if cutoff is not None:
-        h = h.filter(F.col("ts") > F.lit(cutoff))
-    h = _with_msk(h)
 
     de = F.broadcast(
         dim_episode.select("episode_id", "spotify_episode_uri", "spotify_podcast_uri")
@@ -115,18 +111,7 @@ def build_fact_podcasts(
     dp = F.broadcast(
         dim_podcast.select("podcast_id", "spotify_podcast_uri")
     )
-    rs = F.broadcast(
-        dim_reason.filter(F.col("reason_group") == "start").select(
-            F.col("reason_id").alias("reason_start_fk"),
-            F.col("reason_type").alias("_rs_type"),
-        )
-    )
-    re_ = F.broadcast(
-        dim_reason.filter(F.col("reason_group") == "end").select(
-            F.col("reason_id").alias("reason_end_fk"),
-            F.col("reason_type").alias("_re_type"),
-        )
-    )
+    rs, re_ = _reason_keys(dim_reason)
 
     joined = (
         h.join(de, "spotify_episode_uri", "left")

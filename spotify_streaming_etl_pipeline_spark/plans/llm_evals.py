@@ -206,30 +206,33 @@ def dedup_funnel_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed = clusters.filter(
         F.col("doc_id") != F.col("cluster_id")
     ).select("doc_id")
-    # The six funnel scalars are collected sequentially and inlined as
-    # one literal row (the ``pagerank_integer`` / ``copurchase_
-    # triangles`` discipline): the five-way crossJoin of one-row
-    # aggregates put four BroadcastNestedLoopJoins in the plan, ran the
-    # un-persisted exact-dedup aggregation twice (n_unique_content AND
-    # the final anti-join), and raced every subtree against unfilled
-    # caches in one action.  Each collect moves one scalar; groups and
+    # The funnel scalars come from three sequential driver actions and
+    # are inlined as one literal row (the ``pagerank_integer`` /
+    # ``copurchase_triangles`` discipline): a crossJoin of one-row
+    # aggregates put BroadcastNestedLoopJoins in the plan and raced
+    # every subtree against unfilled caches in one action.  groups and
     # clusters fill their caches on first use and are read after.
-    n_docs = d.count()
-    n_keep = groups.count()
-    row = clusters.agg(
+    # Every doc lands in exactly one content group, so n_docs is the
+    # groups' copy sum; each cluster keeps exactly one doc (doc_id ==
+    # cluster_id, the min-label convention), so the near-dup removals
+    # are n_clustered - n_clusters.
+    g = groups.agg(
+        F.sum("n_copies").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_keep"),
+    ).collect()[0]
+    c = clusters.agg(
         F.count(F.lit(1)).alias("n_clustered"),
         F.countDistinct("cluster_id").alias("n_clusters"),
     ).collect()[0]
-    n_removed = removed.count()
     n_final = keep.join(removed, "doc_id", "left_anti").count()
     groups.unpersist()
     clusters.unpersist()
     return spark.range(1).select(
-        F.lit(n_docs).cast("long").alias("n_docs"),
-        F.lit(n_keep).cast("long").alias("n_unique_content"),
-        F.lit(row["n_clustered"]).cast("long").alias("n_clustered_docs"),
-        F.lit(row["n_clusters"]).cast("long").alias("n_clusters"),
-        F.lit(n_removed).cast("long").alias("n_near_removed"),
+        F.lit(g["n_docs"] or 0).cast("long").alias("n_docs"),
+        F.lit(g["n_keep"]).cast("long").alias("n_unique_content"),
+        F.lit(c["n_clustered"]).cast("long").alias("n_clustered_docs"),
+        F.lit(c["n_clusters"]).cast("long").alias("n_clusters"),
+        F.lit(c["n_clustered"] - c["n_clusters"]).cast("long").alias("n_near_removed"),
         F.lit(n_final).cast("long").alias("n_final"),
     )
 

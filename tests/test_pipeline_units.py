@@ -266,8 +266,9 @@ def test_fact_delta_cutoff_roundtrip(spark):
     h, dtr, da, de, dp, dr = _mini_warehouse(spark)
     fact = facts.build_fact_tracks(h, dtr, da, dr)
     cutoff = max_loaded_ts(fact, None, None)
-    # cutoff is the UTC instant of the newest loaded row; strict > filters it
-    fact_again = facts.build_fact_tracks(h, dtr, da, dr, cutoff=cutoff)
+    # cutoff is the UTC instant of the newest loaded row; the pipeline's
+    # strict-> delta filter drops it before the rebuild
+    fact_again = facts.build_fact_tracks(delta_filter(h, cutoff), dtr, da, dr)
     assert fact_again.count() == 0
 
 
@@ -320,38 +321,33 @@ def test_parent_mapping_queries(spark):
 
 
 def test_dedup_new_size_gate_paths_agree(spark):
-    """The broadcast and non-broadcast anti-join paths (and the
-    size-estimate default) must produce identical rows."""
+    """Within-batch dedup plus the anti join keep exactly the new keys,
+    whatever join strategy Catalyst picks for the target."""
     from spotify_streaming_etl_pipeline_spark.operators import writer
 
     incoming = spark.createDataFrame(
         [("a", 1), ("b", 2), ("b", 3), ("c", 4)], "k: string, v: int"
     )
-    target = spark.createDataFrame([("b", 0), ("d", 0)], "k: string, v: int")
-    expected = {("a",), ("c",)}
-    for forced in (True, False, None):
-        got = {
-            (r["k"],)
-            for r in writer.dedup_new(
-                incoming, ["k"], target, broadcast_target=forced
-            ).collect()
-        }
-        assert got == expected, f"broadcast_target={forced}"
+    # a key repeated in the target still removes its incoming row once
+    target = spark.createDataFrame(
+        [("b", 0), ("b", 1), ("d", 0)], "k: string, v: int"
+    )
+    got = [r["k"] for r in writer.dedup_new(incoming, ["k"], target).collect()]
+    assert sorted(got) == ["a", "c"]
 
 
 def test_dedup_new_never_broadcasts_fact_sized_target(spark):
     """Plan-level proof of the size gate: a target whose Catalyst
-    estimate exceeds BROADCAST_TARGET_BYTES must NOT plan a broadcast
-    anti-join (driver OOM at 100 TB); a dim-sized target must. Uses
-    spark.range's exact 8-byte/row stats so no data materializes."""
+    estimate exceeds the session's 64 MiB broadcast threshold must NOT
+    plan a broadcast anti-join (driver OOM at 100 TB); a dim-sized
+    target must. Uses spark.range's exact 8-byte/row stats so no data
+    materializes."""
     from spotify_streaming_etl_pipeline_spark.operators import writer
 
     incoming = spark.range(100).select(F.col("id").alias("k"))
-    # ~80 MB estimate > the 64 MB gate
+    # ~80 MB estimate > the 64 MB threshold
     big = spark.range(10_000_000).select(F.col("id").alias("k"))
     small = spark.range(10).select(F.col("id").alias("k"))
-    assert writer._estimated_bytes(big) > writer.BROADCAST_TARGET_BYTES
-    assert writer._estimated_bytes(small) <= writer.BROADCAST_TARGET_BYTES
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -360,24 +356,6 @@ def test_dedup_new_never_broadcasts_fact_sized_target(spark):
     assert "BroadcastHashJoin" not in big_plan
     small_plan = plan(writer.dedup_new(incoming, ["k"], small))
     assert "BroadcastHashJoin" in small_plan
-
-
-def test_estimated_bytes_sane(spark, tmp_path):
-    from spotify_streaming_etl_pipeline_spark.operators.writer import (
-        BROADCAST_TARGET_BYTES,
-        _estimated_bytes,
-    )
-
-    # Parquet-backed frames (the real target case) report file sizes.
-    path = str(tmp_path / "t")
-    spark.createDataFrame([(1,)], "a: int").write.parquet(path)
-    assert 0 < _estimated_bytes(spark.read.parquet(path)) <= BROADCAST_TARGET_BYTES
-    # In-memory relations report Long.MaxValue (unknown) -> treated as
-    # big; and outright failures also default to "big" — the gate must
-    # never broadcast blindly.
-    local = spark.createDataFrame([(1,)], "a: int")
-    assert _estimated_bytes(local) > BROADCAST_TARGET_BYTES
-    assert _estimated_bytes(None) > BROADCAST_TARGET_BYTES
 
 
 def test_read_history_skips_malformed_files(spark, tmp_path):

@@ -94,9 +94,11 @@ def test_monthly_agg_shuffles_on_integer_keys_only(spark, sf_dir, queries):
 
 def test_minhash_posting_is_cached_once(spark, sf_dir, queries):
     plan = _plan(queries["minhash_lsh_dedup"](spark, sf_dir))
-    # Both self-join sides must read the cached band table instead of
-    # recomputing the tokenize->md5->signature pipeline twice.
-    assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
+    # Both self-join sides must read the band table computed once (the
+    # band_candidates checkpoint) instead of recomputing the
+    # tokenize->md5->signature pipeline per side.
+    assert "Scan ExistingRDD" in plan
+    assert "md5" not in plan
 
 
 def test_minhash_verify_path_is_array_free(spark, sf_dir, queries):
