@@ -6,12 +6,18 @@ job, with these exceptions.  ``dedup_funnel_summary`` (three driver
 actions) and ``copurchase_triangles`` run their Spark jobs while the
 DataFrame is built and return a literal row, so capturing them executes
 the full computation, and their captured plan is that literal
-projection, not the work behind it.  Builders that take a lazy
-``localCheckpoint(eager=False)`` (the banded near-dup kernel
-``llm.dedup.band_candidates`` and ``llm.multimodal.ahash_near_dup``)
-run the shuffle-map stages below the checkpoint while the DataFrame is
-built: under AQE, planning the checkpointed RDD materializes its query
-stages; only the final stage stays lazy.
+projection, not the work behind it.  ``localCheckpoint(eager=False)``
+is not lazy under AQE either: taking it runs every shuffle-map stage
+below the checkpoint at once, and only its final result stage waits
+for an action.  So every builder that takes one over a shuffle runs
+Spark jobs while its DataFrame is built: the banded near-dup kernel
+``llm.dedup.band_candidates`` (every MinHash/SimHash query and the
+admission stream), ``llm.multimodal.ahash_near_dup`` (the image and
+audio fingerprint pairs), the k-means loops of ``llm.similarity``
+(``kmeans_lloyd``, ``kmeans_twolevel``, ``kmeans_multilevel``: the
+SemDeDup, IVF and cluster queries, one round after another), the
+PageRank loop of ``plans.quality`` (``copurchase_pagerank``) and the
+unigram training loop (``unigram_vocab``).
 
 Usage: python capture_plans.py <tag> [name1,name2,...]
 """

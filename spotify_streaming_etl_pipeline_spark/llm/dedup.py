@@ -492,12 +492,14 @@ def band_candidates(
     members near-identical, so cluster-level recall is unaffected
     (the planted-bucket units pin this); None disables the guard.
 
-    Plan shape: the (id, band, key) table is lazily
-    ``localCheckpoint``-ed, so both join sides and the star branch
-    read it once (the self-join breaks exchange reuse, so without it
-    the upstream signature/fingerprint pipeline runs per side). Under
-    AQE, building the checkpoint runs its shuffle-map stages at once;
-    only the final stage stays lazy. With the guard on,
+    Plan shape: the (id, band, key) table is
+    ``localCheckpoint(eager=False)``-ed, so both join sides and the
+    star branch read it once (the self-join breaks exchange reuse, so
+    without it the upstream signature/fingerprint pipeline runs per
+    side). The checkpoint is not lazy under AQE: taking it runs every
+    shuffle-map stage below it, so this function runs Spark jobs
+    while the frame is built (``minhash_lsh_dedup`` at sf0.01: 3);
+    only the checkpoint's final result stage waits for an action. With the guard on,
     ``_bucket_marked`` windows the checkpoint by (band, key), the
     partitioning the self-join needs anyway, so the guard's marginal
     cost is a per-partition sort."""

@@ -475,13 +475,17 @@ def kmeans_lloyd(
         .groupBy("cell", "dim")
         .agg(F.round(F.avg("x"), 4).alias("c"))
     )
-    # LAZY per-round checkpoints: lineage still truncates at the first
-    # materialization (each round's centroid rows persist and later
-    # rounds read them, not the replayed plan), but the whole loop now
-    # runs inside the consumer's ONE job instead of one eager job per
-    # round — at sf0.1 the per-action floor dominated these tiny
-    # (k x dim)-row checkpoints (r13 A/B: kmeans_twolevel 4.7 -> 3.0 s
-    # standalone).  Values are unchanged: checkpointing only pins rows.
+    # Per-round ``eager=False`` checkpoints: lineage truncates at each
+    # round (later rounds read the pinned centroid rows, not the
+    # replayed plan).  They are NOT lazy under AQE: taking one runs
+    # the shuffle-map stages below it at once, so the loop still runs
+    # its jobs round by round while the frame is built (kmeans_lloyd
+    # with n_iter=3 over 60 vectors on local[2]: 14 jobs while built,
+    # 1 at the first action).  What ``eager=False`` saves is the
+    # checkpoint's own result stage per round — at sf0.1 the
+    # per-action floor dominated these tiny (k x dim)-row checkpoints
+    # (r13 A/B: kmeans_twolevel 4.7 -> 3.0 s standalone).  Values are
+    # unchanged: checkpointing only pins rows.
     for _ in range(n_iter):
         cents = cents.localCheckpoint(eager=False)
         assigned = _nearest_cell(dims, cents)
@@ -656,11 +660,14 @@ def _grouped_lloyd(
             .select("vec_id", "grp", F.col("best.sub").alias("sub"))
         )
 
-    # Lazy per-round checkpoints — same rationale as the flat loop in
-    # ``kmeans_lloyd``: lineage truncation without one eager job per
-    # round.  Callers that unpersist ``dc`` materialize the returned
-    # assignment (eager localCheckpoint) first, so the lazy chain can
-    # never replay over a dropped cache.
+    # Per-round ``eager=False`` checkpoints — same rationale and the
+    # same caveat as the flat loop in ``kmeans_lloyd``: lineage
+    # truncates each round, and under AQE each checkpoint still runs
+    # the shuffle-map stages below it when taken, so the rounds run
+    # while the frame is built; only the final result stage waits for
+    # an action.  Callers that unpersist ``dc`` materialize the
+    # returned assignment (eager localCheckpoint) first, so that
+    # pending stage can never replay over a dropped cache.
     for _ in range(n_iter):
         cents = cents.localCheckpoint(eager=False)
         assigned = assign(cents)

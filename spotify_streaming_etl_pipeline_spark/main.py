@@ -7,8 +7,9 @@ end-to-end batch pipeline.
         --raw-dir data/raw --warehouse-dir warehouse
 
 API enrichment needs credentials/clients the engine does not own;
-callers inject fetchers programmatically via ``pipeline.run`` (see
-sources/enrichment.py). The CLI runs the no-enrichment path: ingest +
+callers name them programmatically as ``"module:attr"`` fetcher
+strings in ``pipeline.run(fetchers=...)`` (see pipeline.py and
+sources/restsource.py). The CLI runs the no-enrichment path: ingest +
 delta filter + dim_reason + any dims already in the warehouse.
 """
 

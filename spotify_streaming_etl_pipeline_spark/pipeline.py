@@ -9,20 +9,20 @@ track/episode envelopes (plans/dims.py A5), not from history.
 
 Every stage is the same builder the query layer uses — the runner only
 sequences them and handles warehouse I/O (idempotent appends, delta
-cutoff). ``fetchers`` injects the API clients per entity type, so runs
-are fully testable offline; None skips enrichment (dims load only from
-already-staged envelopes, if any).
+cutoff). ``fetchers`` names the API client per entity type as a
+``"module:attr"`` string (resolved by ``sources.restsource._resolve_fetch``;
+an attribute marked ``__rest_factory__`` builds a client that cannot be
+pickled), so runs are fully testable offline; None skips enrichment
+(dims load only from already-staged envelopes, if any).
 
-A fetcher may be a plain callable or a ``"module:attr"`` string.  The
-string form unlocks the planned-source scale path: above
-``enrich_collect_max`` new URIs the runner stages the URI set as
-parquet and reads it back through the ``rest_enrichment`` DataSource
-(``uris_path`` option), so the fetch is a real scan — planned,
-UI-visible, partition-scheduled — and the URI set never materializes
-on the driver (the DataSource plans row-range partitions from parquet
-footers alone).  A plain callable above the threshold falls back to
-the ``mapInPandas`` wrapper (same distributed loop, opaque stage);
-below the threshold both forms use the reference-shaped driver loop.
+Enrichment takes one of two paths, chosen by the size of the new-URI
+set alone.  Up to ``enrich_collect_max`` URIs the runner resolves the
+fetcher and runs the reference-shaped driver loop over the collected
+list.  Above it, ``sources.restsource.enrich_partitions`` stages the
+URI set as parquet and reads it back through the ``rest_enrichment``
+DataSource, so the fetch is a real scan — planned, UI-visible,
+partition-scheduled — and the URI set never materializes on the
+driver.
 
 Every intermediate that more than one step reads is computed once per
 run (lazy frames otherwise recompute a shared plan for each consumer):
@@ -53,19 +53,17 @@ runs on the JVM and its plans are built lazily:
   one;
 - the delta cutoff is one action over both facts.
 
-``run`` owns every one of these caches.  Under ``write=True`` it
-releases them in a ``finally`` once the returned frames are re-read
-from the warehouse (and on any failure); under ``write=False`` the
-returned dims/facts are lazy plans over them, so they stay cached —
-a recompute would re-scan the export and re-hit the REST source — and
-they live until the caller clears them
-(``spark.catalog.clearCache()``) or the session stops.
+``run`` always writes, and it owns every one of these caches and the
+URI staging parquet: its ``finally`` releases the caches and removes
+the staging once the returned frames are re-read from the warehouse,
+or when the run fails.  Small-file maintenance of the fact tables is
+a separate step (``operators.maintenance.compact_partitioned``).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,36 +74,40 @@ from .operators.maintenance import recover_swap_residue
 from .plans import dims as dims_mod
 from .plans.facts import build_fact_podcasts, build_fact_tracks, write_fact
 from .schemas import WAREHOUSE_SCHEMAS
-from .sources.enrichment import enrich_partitions, envelope_frame, fetch_in_batches
+from .sources.enrichment import envelope_frame, fetch_in_batches
 from .sources.history import delta_filter, max_loaded_ts, read_history
+from .sources.restsource import _resolve_fetch, enrich_partitions
+
+# Executor-path enrichment stages its URI sets under the warehouse,
+# which executors can reach.
+_URI_STAGING = "_staging/enrich_uris"
 
 
 @dataclass
 class RunResult:
-    """Outcome of one incremental load. After a persisted run, ``dims``
-    and ``facts`` are re-read from the warehouse (full tables, fresh
-    file listings); ``n_fact_rows`` counts the rows THIS run appended."""
+    """Outcome of one incremental load: ``dims`` and ``facts`` are
+    re-read from the warehouse (full tables, fresh file listings);
+    ``n_fact_rows`` counts the rows THIS run appended."""
 
     dims: dict[str, DataFrame] = field(default_factory=dict)
     facts: dict[str, DataFrame] = field(default_factory=dict)
     dead_letters: list[tuple[str, str, str]] = field(default_factory=list)
     n_history_rows: int = 0
     n_fact_rows: dict[str, int] = field(default_factory=dict)
-    compacted: dict[str, dict[str, int]] = field(default_factory=dict)
 
 
 def _read_if_exists(
-    spark: SparkSession, path: str, schema: StructType | None = None
+    spark: SparkSession, path: str, schema: StructType
 ) -> DataFrame | None:
-    """The warehouse table at ``path``, or None when there is none; read
-    with ``schema`` when given, else with an inferred one.
+    """The warehouse table at ``path`` read with its declared
+    ``schema``, or None when there is none.
     Swap crash residue recovers first: a dim whose snapshot swap died
     between its renames lives under ``.swap_old_*``, and reading it as
     absent would rebuild the dim from this increment alone (keys from
     1), which the swap would then promote over every older row."""
     recover_swap_residue(path, "swap")
     if os.path.isdir(path):
-        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+        return spark.read.schema(schema).parquet(path)
     return None
 
 
@@ -123,8 +125,6 @@ def _overwrite_parquet_safe(df: DataFrame, path: str) -> None:
     silently treat the table as empty. Crash residue recovers on the
     next read (``_read_if_exists``) or swap: a missing live dir
     restores from the retired copy."""
-    import shutil
-
     tmp, old = recover_swap_residue(path, "swap")
     df.write.mode("overwrite").parquet(tmp)
     if os.path.isdir(path):
@@ -141,46 +141,31 @@ def run(
     spark: SparkSession,
     raw_dir: str,
     warehouse_dir: str,
-    fetchers: dict[str, Callable[[list[str]], dict] | str] | None = None,
-    write: bool = True,
+    fetchers: dict[str, str] | None = None,
     enrich_collect_max: int = 10_000,
-    compact_facts: bool = False,
 ) -> RunResult:
-    """Execute one incremental load. Returns the resulting dim/fact
-    frames (also written under ``warehouse_dir`` when ``write``).
-
-    ``compact_facts`` folds small-file maintenance into the load: after
-    this run's appends land, each fact table's year partitions are
-    compacted to ~target-size files (operators/maintenance.py). Safe
-    here by construction — the runner is the table's only writer and
-    its appends have finished before compaction starts.
-
-    Caches: see the module docstring — released before returning when
-    ``write`` (or when the run fails), kept for the returned lazy
-    frames otherwise."""
+    """Execute one incremental load into ``warehouse_dir`` and return
+    the written dims/facts re-read from it.  ``fetchers`` maps an
+    entity type to its ``"module:attr"`` fetcher; above
+    ``enrich_collect_max`` new URIs an entity is enriched on executors.
+    Caches and URI staging: see the module docstring."""
     cached: list[DataFrame] = []
-    keep_cached = False
     try:
-        out = _run(
-            spark, raw_dir, warehouse_dir, fetchers or {}, write,
-            enrich_collect_max, compact_facts, cached,
+        return _run(
+            spark, raw_dir, warehouse_dir, fetchers or {}, enrich_collect_max, cached
         )
-        keep_cached = not write
-        return out
     finally:
-        if not keep_cached:
-            for df in cached:
-                df.unpersist()
+        for df in cached:
+            df.unpersist()
+        shutil.rmtree(f"{warehouse_dir}/{_URI_STAGING}", ignore_errors=True)
 
 
 def _run(
     spark: SparkSession,
     raw_dir: str,
     warehouse_dir: str,
-    fetchers: dict[str, Callable[[list[str]], dict] | str],
-    write: bool,
+    fetchers: dict[str, str],
     enrich_collect_max: int,
-    compact_facts: bool,
     cached: list[DataFrame],
 ) -> RunResult:
     """The body of ``run``; every frame it persists goes on ``cached``."""
@@ -197,7 +182,7 @@ def _run(
         )
 
     # -- 1. ingest history with the delta cutoff (S1/S2/A6) ----------------
-    cutoff = max_loaded_ts(read("fact_tracks"), read("fact_podcasts"), None)
+    cutoff = max_loaded_ts(read("fact_tracks"), read("fact_podcasts"))
     # The count fills the cache: URI discovery, dim_reason and both
     # star joins below read it instead of re-parsing the export.
     history = persist(delta_filter(read_history(spark, raw_dir), cutoff))
@@ -208,38 +193,6 @@ def _run(
     # from episode envelopes (reference extractor.py:317).
     envelopes: dict[str, DataFrame] = {}
 
-    def enrich_datasource(entity: str, uris: DataFrame, fetch_path: str) -> DataFrame:
-        """The planned-source scale path: stage the URI set as parquet
-        (repartitioned so each staging file ≈ one fetch partition —
-        the DataSource plans one partition per row group), scan it
-        back through the rest_enrichment DataSource.  The URI set
-        rides executor-to-executor — no driver-side list at any size.
-        Staging lives under the warehouse (executors must reach it);
-        ``write=True`` runs clean it up after the envelopes
-        re-materialize from the warehouse, ``write=False`` keeps it
-        (the returned frames' lineage still reads it)."""
-        from .sources.restsource import RestEnrichmentDataSource
-
-        spark.dataSource.register(RestEnrichmentDataSource)
-        staging = f"{warehouse_dir}/_staging/enrich_uris/{entity}"
-        n = uris.count()
-        n_parts = max(1, -(-n // 200))
-        uris.select("uri").repartition(n_parts).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        return (
-            spark.read.format("rest_enrichment")
-            .option("uris_path", staging)
-            .option("entity", entity)
-            .option("fetch", fetch_path)
-            .load()
-            .select(
-                "uri",
-                F.coalesce(F.col("error_reason"), F.lit("ok")).alias("status"),
-                "raw_data",
-            )
-        )
-
     def enrich(entity: str, uris: DataFrame) -> DataFrame | None:
         fetch = fetchers.get(entity)
         if fetch is None:
@@ -247,33 +200,32 @@ def _run(
         # Size-switch: the typical NEW-entity set (history minus
         # warehouse) is dim-sized and a driver-side collect is correct
         # (the reference materializes the same list, extractor.py:250).
-        # Past ``enrich_collect_max`` the fetch moves onto executors:
-        # the planned DataSource scan when the fetcher is importable
-        # ("module:attr"), else the mapInPandas wrapper — either way
-        # only the (rare) dead letters ever reach the driver.  One
-        # bounded collect decides the switch and, below it, is the
-        # driver list itself; uris reads the cached history (or the
-        # envelopes), so the executor path re-evaluating it is cheap.
+        # Past ``enrich_collect_max`` the fetch moves onto executors as
+        # a planned rest_enrichment scan, and only the (rare) dead
+        # letters ever reach the driver.  One bounded collect decides
+        # the switch and, below it, is the driver list itself; uris
+        # reads the cached history (or the envelopes), so the executor
+        # path re-evaluating it is cheap.
         head = uris.limit(enrich_collect_max + 1).collect()
         if len(head) > enrich_collect_max:
-            if isinstance(fetch, str):
-                enriched = persist(enrich_datasource(entity, uris, fetch))
-            else:
-                enriched = persist(enrich_partitions(uris, fetch, entity))
+            enriched = persist(
+                enrich_partitions(
+                    uris, fetch, entity, f"{warehouse_dir}/{_URI_STAGING}/{entity}"
+                )
+            )
             # The dead-letter collect materializes (and caches) every
             # partition of enriched — after it, the ok-split below
             # reads the cache, never re-fetching.
             out.dead_letters.extend(
-                (r["uri"], entity, r["status"])
-                for r in enriched.filter(F.col("status") != "ok").collect()
+                (r["uri"], entity, r["error_reason"])
+                for r in enriched.filter(F.col("error_reason").isNotNull()).collect()
             )
-            return enriched.filter(F.col("status") == "ok").select("uri", "raw_data")
-        uri_list = sorted(r["uri"] for r in head)
-        if isinstance(fetch, str):
-            from .sources.restsource import _resolve_fetch
-
-            fetch = _resolve_fetch(fetch)
-        result = fetch_in_batches(uri_list, fetch, entity)
+            return enriched.filter(F.col("error_reason").isNull()).select(
+                "uri", "raw_data"
+            )
+        result = fetch_in_batches(
+            sorted(r["uri"] for r in head), _resolve_fetch(fetch), entity
+        )
         out.dead_letters.extend(result.failures)
         return envelope_frame(spark, result.records)
 
@@ -339,45 +291,22 @@ def _run(
             history, out.dims["episode"], out.dims["podcast"], out.dims["reason"]
         )
 
-    # -- 5. persist ---------------------------------------------------------
-    # Computed once and cached: the history (filled by its count), the
-    # executor-path envelopes (filled by the dead-letter collect) and
-    # each dim (filled by the first fact broadcast, or by its swap).
-    # ``run`` releases them all after the re-read below; under
-    # write=False nothing here runs and they stay cached for the
-    # returned lazy frames.
-    if write:
-        # Facts first: the dim caches may be evicted, and an evicted
-        # dim recomputes from the CURRENT dim parquet, which the swap
-        # below deletes. Fact writes are appends, so ordering them
-        # first is both safe and required. Each star join runs once:
-        # its row count is observed by the write itself.
-        for name, df in out.facts.items():
-            obs = write_fact(df, f"{warehouse_dir}/fact_{name}")
-            out.n_fact_rows[name] = obs["n_rows"]
-        if compact_facts:
-            from .operators.maintenance import compact_partitioned
-
-            for name in out.facts:
-                out.compacted[name] = compact_partitioned(
-                    spark, f"{warehouse_dir}/fact_{name}"
-                )
-        for entity, df in out.dims.items():
-            _overwrite_parquet_safe(df, f"{warehouse_dir}/dim_{entity}")
-        # Re-read everything written: the pre-swap lazy plans pin file
-        # listings that no longer exist; callers get fresh frames, and
-        # ``run`` releases this run's caches once this returns.
-        for entity in out.dims:
-            out.dims[entity] = read(f"dim_{entity}")
-        for name in out.facts:
-            out.facts[name] = read(f"fact_{name}")
-        # The URI staging parquet is unreachable now too — drop it so
-        # repeated runs don't accumulate stale snapshots beside the
-        # real tables. (write=False keeps it: returned frames' lineage
-        # may still read it on cache eviction.)
-        import shutil
-
-        shutil.rmtree(
-            f"{warehouse_dir}/_staging/enrich_uris", ignore_errors=True
-        )
+    # -- 5. write ------------------------------------------------------------
+    # Facts first: the dim caches may be evicted, and an evicted dim
+    # recomputes from the CURRENT dim parquet, which the swap below
+    # deletes. Fact writes are appends, so ordering them first is both
+    # safe and required. Each star join runs once: its row count is
+    # observed by the write itself.
+    for name, df in out.facts.items():
+        obs = write_fact(df, f"{warehouse_dir}/fact_{name}")
+        out.n_fact_rows[name] = obs["n_rows"]
+    for entity, df in out.dims.items():
+        _overwrite_parquet_safe(df, f"{warehouse_dir}/dim_{entity}")
+    # Re-read everything written: the pre-swap lazy plans pin file
+    # listings that no longer exist; callers get fresh frames, and
+    # ``run`` releases this run's caches once this returns.
+    for entity in out.dims:
+        out.dims[entity] = read(f"dim_{entity}")
+    for name in out.facts:
+        out.facts[name] = read(f"fact_{name}")
     return out

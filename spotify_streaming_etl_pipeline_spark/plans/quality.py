@@ -1409,12 +1409,13 @@ def pagerank_integer(ed: DataFrame, iters: int) -> DataFrame:
     # iteration plan).  Same integer arithmetic, iters+1 fewer
     # aggregate subtrees.
     n = deg.count()
-    # LAZY checkpoints throughout the loop (the kmeans_lloyd r13
-    # discipline): lineage still truncates when each round's rank
-    # table first materializes — later rounds read pinned rows, the
-    # plan stays iteration-sized — but the whole power iteration now
-    # runs inside the caller's ONE job instead of one eager job per
-    # round + one for the init + one for the degree attach.
+    # ``eager=False`` checkpoints throughout the loop (the
+    # kmeans_lloyd r13 discipline): lineage truncates at each round's
+    # rank table — later rounds read pinned rows, the plan stays
+    # iteration-sized.  Under AQE taking each checkpoint still runs the
+    # shuffle-map stages below it, so the rounds run while the frame
+    # is built; what ``eager=False`` saves is each checkpoint's own
+    # result stage.
     ranks = deg.selectExpr(
         "u", f"cast({_PR_SCALE} div {n} as long) as rk"
     ).localCheckpoint(eager=False)

@@ -23,19 +23,19 @@ on uri (reference docs/sql/etl_internal_ddl.sql:3-11); use
 
 Scale split: ``enrich_uris`` is the reference-shaped driver-side path —
 correct when the *new-entity* set is dim-sized (the normal incremental
-case; the reference also materializes it as a Python list).
-``enrich_partitions`` is the 100 TB path: the same loop runs inside
-``mapInPandas`` per partition, so the URI set never lands on the
-driver and fetch parallelism scales with executors (mind the API's
-global rate limit — cap partitions or wrap ``fetch`` in a token
-bucket).
+case; the reference also materializes it as a Python list).  Larger
+sets go through ``sources.restsource.enrich_partitions``, the one
+executor-side path: the same loop runs inside the ``rest_enrichment``
+DataSource scan, so the URI set never lands on the driver and fetch
+parallelism scales with executors (mind the API's global rate limit —
+cap partitions or wrap ``fetch`` in a token bucket).
 """
 
 from __future__ import annotations
 
 import json
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -246,52 +246,3 @@ def enrich_uris(
     )
     return staged, failed
 
-
-def enrich_partitions(
-    new_uris: DataFrame,
-    fetch: Callable[[list[str]], dict],
-    entity_type: str,
-    *,
-    uri_col: str = "uri",
-    batch_size: int = BATCH_SIZE,
-    retry_limit: int = RETRY_LIMIT,
-) -> DataFrame:
-    """Distributed enrichment: the same batch loop inside mapInPandas,
-    for URI sets too large to collect. Output rows carry a ``status``
-    discriminator ('ok' -> raw_data, else error_reason) so one pass
-    yields both the envelope and the dead-letter split:
-
-        out = enrich_partitions(df, fetch, "track")
-        staged = out.filter("status = 'ok'").select("uri", "raw_data")
-        failed = out.filter("status != 'ok'")...
-
-    ``fetch`` must be picklable (a module-level function or a client
-    factory wrapper), as it ships to executors.
-    """
-    import pandas as pd
-
-    schema = StructType(
-        [
-            StructField("uri", StringType(), False),
-            StructField("status", StringType(), False),
-            StructField("raw_data", StringType(), True),
-        ]
-    )
-
-    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            uris = sorted(pdf[uri_col].dropna().unique().tolist())
-            result = fetch_in_batches(
-                uris,
-                fetch,
-                entity_type,
-                batch_size=batch_size,
-                retry_limit=retry_limit,
-            )
-            rows = [
-                (uri, "ok", json.dumps(payload, sort_keys=True))
-                for uri, payload in result.records
-            ] + [(uri, reason, None) for uri, _etype, reason in result.failures]
-            yield pd.DataFrame(rows, columns=["uri", "status", "raw_data"])
-
-    return new_uris.select(uri_col).distinct().mapInPandas(run_partition, schema)

@@ -54,11 +54,11 @@ def parse_ts(raw: DataFrame) -> DataFrame:
 
 
 def max_loaded_ts(
-    fact_tracks: DataFrame | None,
-    fact_podcasts: DataFrame | None,
-    staging: DataFrame | None,
+    fact_tracks: DataFrame | None, fact_podcasts: DataFrame | None
 ) -> dt.datetime:
-    """A6/F7: GREATEST of the three maxes, 1900-01-01 floor.
+    """A6/F7: GREATEST of the fact tables' maxes, 1900-01-01 floor.
+    (The reference also folds in its staging table; the engine keeps
+    none — see ``operators/staging.py``.)
 
     Fact tables store naive MSK wall-clock (``ts_msk``) — convert back
     to UTC before comparing, like the reference
@@ -67,12 +67,8 @@ def max_loaded_ts(
     table."""
     floor = dt.datetime(1900, 1, 1)
     stamps = [
-        df.select((to_utc(F.col(col)) if is_msk else F.col(col)).alias("ts"))
-        for df, col, is_msk in (
-            (fact_tracks, "ts_msk", True),
-            (fact_podcasts, "ts_msk", True),
-            (staging, "ts", False),
-        )
+        df.select(to_utc(F.col("ts_msk")).alias("ts"))
+        for df in (fact_tracks, fact_podcasts)
         if df is not None
     ]
     if not stamps:

@@ -1,27 +1,29 @@
 """The REST enrichment as a first-class Spark data source (Spark 4
-Python Data Source API): ``spark.read.format("rest_enrichment")``.
+Python Data Source API): ``spark.read.format("rest_enrichment")``,
+and the engine's one executor-side enrichment path on top of it,
+``enrich_partitions``.
 
-Where ``sources/enrichment.py`` offers a driver-side loop and a
-``mapInPandas`` wrapper, this registers the SAME batch/retry/
-dead-letter fetch loop (`fetch_in_batches`) as a planned SOURCE:
+Where ``sources/enrichment.py`` offers the driver-side loop, this
+registers the SAME batch/retry/dead-letter fetch loop
+(`fetch_in_batches`) as a planned SOURCE:
 
-- the URI list splits into ``uris_per_partition`` chunks, one input
-  partition each — fetch parallelism is cluster-scheduled like any
-  scan, shows up in the UI as a scan, and composes with every
-  downstream operator (the mapInPandas form is an opaque stage in the
-  middle of a plan);
+- the URI feed is a parquet file/dir with a URI column, planned one
+  input partition per row group from parquet FOOTER metadata alone;
+  each executor reads its own row group once with pyarrow, so an
+  arbitrarily large URI set never exists as a driver-side Python
+  object.  Fetch parallelism follows the staging file layout
+  (``enrich_partitions`` repartitions the URI frame before writing);
+  it is cluster-scheduled like any scan, shows up in the UI as a
+  scan, and composes with every downstream operator;
 - successes and dead letters come back in ONE frame
   (``error_reason IS NULL`` splits them), so the caller lands both
-  sides with ordinary filters instead of wiring two code paths;
-- the URI feed can ride an option two ways: ``uris`` (inline JSON
-  list — fine for dim-sized sets, but the list materializes on the
-  driver) or ``uris_path`` (a parquet file/dir with a ``uri`` column
-  — the SCALE form: the driver reads only parquet FOOTER metadata to
-  plan one partition per row group, and each executor reads its own
-  row group once with pyarrow, so an arbitrarily large URI set never
-  exists as a driver-side Python object; fetch parallelism follows
-  the staging file layout — repartition the URI frame before writing,
-  as ``pipeline.enrich_datasource`` does).
+  sides with ordinary filters instead of wiring two code paths.
+
+Batch reader options: ``uris_path`` (required), ``fetch`` (required),
+``entity``, ``uri_col`` (default ``uri``), ``batch_size``,
+``retry_limit``.  The stream reader takes its feed inline instead:
+``uris`` (a JSON list), ``fetch``, ``entity``, ``uris_per_batch``,
+``batch_size``, ``retry_limit``.
 
 The ``fetch`` callable must be importable on executors, so it is
 passed as a ``"module:attr"`` string option (options are strings by
@@ -30,9 +32,8 @@ API contract).  If the resolved attribute is marked with
 produce the real fetch callable — that lets tests and credentialed
 clients close over state that cannot be pickled into an option.
 
-At 100 TB scale-mind the API's global rate limit exactly as with
-``enrich_partitions``: cap ``uris_per_partition`` × concurrent tasks,
-or wrap ``fetch`` in a token bucket.
+At 100 TB scale mind the API's global rate limit: cap the staged row
+groups × concurrent tasks, or wrap ``fetch`` in a token bucket.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ import importlib
 import json
 from collections.abc import Iterator
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -51,9 +53,32 @@ from pyspark.sql.datasource import (
 from .enrichment import BATCH_SIZE, fetch_in_batches
 
 
-class UriChunk(InputPartition):
-    def __init__(self, uris: list[str]):
-        self.uris = uris
+def enrich_partitions(
+    uris: DataFrame, fetch: str, entity: str, staging_dir: str
+) -> DataFrame:
+    """Executor-side enrichment of a URI set of any size (``uris``: a
+    frame of distinct values in its ``uri`` column): stage the column
+    as parquet under ``staging_dir`` (repartitioned so each staging
+    file ≈ 200 URIs ≈ one fetch partition), then scan it back through
+    ``rest_enrichment`` with the ``"module:attr"`` fetcher ``fetch``.
+    The URI set rides executor-to-executor — no driver-side list at
+    any size.  Returns ``(uri, raw_data, error_reason)``:
+    ``error_reason IS NULL`` rows are envelopes, the rest dead letters.
+    The frame reads ``staging_dir``; the caller removes it once the
+    frame is no longer needed."""
+    spark = uris.sparkSession
+    spark.dataSource.register(RestEnrichmentDataSource)
+    n = uris.count()
+    uris.select("uri").repartition(max(1, -(-n // 200))).write.mode(
+        "overwrite"
+    ).parquet(staging_dir)
+    return (
+        spark.read.format("rest_enrichment")
+        .option("uris_path", staging_dir)
+        .option("entity", entity)
+        .option("fetch", fetch)
+        .load()
+    )
 
 
 class UriFileChunk(InputPartition):
@@ -65,7 +90,7 @@ class UriFileChunk(InputPartition):
     amplification on exactly the large feeds the path exists for.
     Fetch parallelism therefore follows the STAGING LAYOUT — writers
     control it by repartitioning the URI frame before the parquet
-    write, as ``pipeline.enrich_datasource`` does.)"""
+    write, as ``enrich_partitions`` does.)"""
 
     def __init__(self, path: str, row_group: int):
         self.path, self.row_group = path, row_group
@@ -79,22 +104,34 @@ def _resolve_fetch(path: str):
     return obj
 
 
+def _fetched_rows(uris: list[str], options) -> Iterator[tuple]:
+    """``(uri, raw_data, error_reason)`` rows of one fetch over ``uris``
+    with the source's ``fetch``/``entity``/``batch_size``/``retry_limit``
+    options."""
+    # Resolve first: importing the fetcher's module may rebind this
+    # module's ``fetch_in_batches`` (a wrapper that logs fetches), and
+    # the call below must look the name up after that.
+    fetch = _resolve_fetch(options["fetch"])
+    result = fetch_in_batches(
+        uris,
+        fetch,
+        options.get("entity", "artists"),
+        batch_size=int(options.get("batch_size", str(BATCH_SIZE))),
+        retry_limit=int(options.get("retry_limit", "2")),
+    )
+    for uri, payload in result.records:
+        yield (uri, json.dumps(payload, sort_keys=True), None)
+    for uri, _etype, reason in result.failures:
+        yield (uri, None, reason)
+
+
 class RestEnrichmentReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.uris = (
-            json.loads(options["uris"]) if "uris" in options else None
-        )
-        self.uris_path = options.get("uris_path")
-        if self.uris is None and self.uris_path is None:
-            raise ValueError("rest_enrichment needs 'uris' or 'uris_path'")
+        self.options = options
+        self.uris_path = options["uris_path"]
         self.uri_col = options.get("uri_col", "uri")
-        self.entity = options.get("entity", "artists")
-        self.fetch_path = options["fetch"]
-        self.per_partition = int(options.get("uris_per_partition", "200"))
-        self.batch_size = int(options.get("batch_size", str(BATCH_SIZE)))
-        self.retry_limit = int(options.get("retry_limit", "2"))
 
-    def _file_partitions(self) -> list[UriFileChunk]:
+    def partitions(self) -> list[InputPartition]:
         """One chunk per parquet row group, planned from footers alone
         — the driver never holds the URI values and each executor
         reads its own row group exactly once."""
@@ -104,56 +141,37 @@ class RestEnrichmentReader(DataSourceReader):
         import pyarrow.parquet as pq
 
         if os.path.isdir(self.uris_path):
-            files = sorted(
-                glob.glob(os.path.join(self.uris_path, "*.parquet"))
-            )
+            files = sorted(glob.glob(os.path.join(self.uris_path, "*.parquet")))
         else:
             files = [self.uris_path]
-        parts: list[UriFileChunk] = []
-        for f in files:
-            meta = pq.ParquetFile(f).metadata
-            parts.extend(UriFileChunk(f, g) for g in range(meta.num_row_groups))
-        return parts
-
-    def partitions(self) -> list[InputPartition]:
-        if self.uris_path is not None:
-            return self._file_partitions() or [UriChunk([])]
-        step = max(1, self.per_partition)
         return [
-            UriChunk(self.uris[i : i + step])
-            for i in range(0, len(self.uris), step)
-        ] or [UriChunk([])]
+            UriFileChunk(f, g)
+            for f in files
+            for g in range(pq.ParquetFile(f).metadata.num_row_groups)
+        ]
 
-    def _partition_uris(self, partition: InputPartition) -> list[str]:
-        if isinstance(partition, UriFileChunk):
-            import pyarrow.parquet as pq
+    def read(self, partition: UriFileChunk | None) -> Iterator[tuple]:
+        import pyarrow.parquet as pq
 
-            tbl = pq.ParquetFile(partition.path).read_row_group(
-                partition.row_group, columns=[self.uri_col]
-            )
-            return sorted(
-                {u for u in tbl.column(0).to_pylist() if u is not None}
-            )
-        return partition.uris
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        fetch = _resolve_fetch(self.fetch_path)
-        result = fetch_in_batches(
-            self._partition_uris(partition),
-            fetch,
-            self.entity,
-            batch_size=self.batch_size,
-            retry_limit=self.retry_limit,
+        if partition is None:
+            # A feed with no row group plans no chunk, and Spark then
+            # reads one partition of None.
+            return iter(())
+        tbl = pq.ParquetFile(partition.path).read_row_group(
+            partition.row_group, columns=[self.uri_col]
         )
-        for uri, payload in result.records:
-            yield (uri, json.dumps(payload, sort_keys=True), None)
-        for uri, _etype, reason in result.failures:
-            yield (uri, None, reason)
+        uris = sorted({u for u in tbl.column(0).to_pylist() if u is not None})
+        return _fetched_rows(uris, self.options)
 
 
 class RestEnrichmentDataSource(DataSource):
     """``spark.dataSource.register(RestEnrichmentDataSource)`` then
     ``spark.read.format("rest_enrichment").options(...).load()``."""
+
+    def __init__(self, options: dict):
+        if "fetch" not in options:
+            raise ValueError("rest_enrichment needs a 'fetch' option (\"module:attr\")")
+        super().__init__(options)
 
     @classmethod
     def name(cls) -> str:
@@ -186,34 +204,23 @@ class RestEnrichmentStreamReader(SimpleDataSourceStreamReader):
     instead of a processed-flag table."""
 
     def __init__(self, options: dict):
+        self.options = options
         self.uris = json.loads(options["uris"])
-        self.entity = options.get("entity", "artists")
-        self.fetch_path = options["fetch"]
         self.per_batch = int(options.get("uris_per_batch", "100"))
-        self.batch_size = int(options.get("batch_size", str(BATCH_SIZE)))
-        self.retry_limit = int(options.get("retry_limit", "2"))
 
     def initialOffset(self) -> dict:
         return {"index": 0}
 
-    def _rows(self, lo: int, hi: int):
-        fetch = _resolve_fetch(self.fetch_path)
-        result = fetch_in_batches(
-            self.uris[lo:hi], fetch, self.entity,
-            batch_size=self.batch_size, retry_limit=self.retry_limit,
-        )
-        for uri, payload in result.records:
-            yield (uri, json.dumps(payload, sort_keys=True), None)
-        for uri, _etype, reason in result.failures:
-            yield (uri, None, reason)
+    def _rows(self, lo: int, hi: int) -> list[tuple]:
+        # a list, not a generator: the simple-reader prefetch cache
+        # pickles the rows alongside the offset (generators don't
+        # pickle; list iterators do)
+        return list(_fetched_rows(self.uris[lo:hi], self.options))
 
     def read(self, start: dict):
         lo = start["index"]
         hi = min(lo + self.per_batch, len(self.uris))
-        # iter(list), not a generator: the simple-reader prefetch
-        # cache pickles the rows alongside the offset (generators
-        # don't pickle; list iterators do)
-        return iter(list(self._rows(lo, hi))), {"index": hi}
+        return iter(self._rows(lo, hi)), {"index": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(list(self._rows(start["index"], end["index"])))
+        return iter(self._rows(start["index"], end["index"]))

@@ -33,7 +33,6 @@ _SLOW_BATTERIES = {
     "test_streaming_pipeline.py::test_pipeline_datasource_enrichment_path",
     "test_streaming_pipeline.py::test_pipeline_end_to_end_then_incremental_noop",
     "test_streaming_pipeline.py::test_pipeline_compacts_fact_partitions_end_to_end",
-    "test_streaming_pipeline.py::test_pipeline_size_switch_distributed_enrichment",
     "test_streaming_pipeline.py::test_fact_ingest_batch_replay_is_idempotent",
     "test_streaming_pipeline.py::test_streaming_ingest_one_microbatch",
     "test_streaming_pipeline.py::test_stream_stream_join_matches_batch",

@@ -63,3 +63,13 @@ def episode_envelope(uri="spotify:episode:7", **over) -> tuple[str, str]:
     }
     obj.update(over)
     return (uri, json.dumps(obj))
+
+
+def frame(spark, rows: list[tuple], ddl: str):
+    """``rows`` (tuples in the field order of the DDL schema ``ddl``) as
+    a local relation (``schemas.local_frame``)."""
+    from pyspark.sql.types import StructType
+
+    from spotify_streaming_etl_pipeline_spark.schemas import local_frame
+
+    return local_frame(spark, rows, StructType.fromDDL(ddl))

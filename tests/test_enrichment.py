@@ -8,10 +8,11 @@ import pytest
 
 from spotify_streaming_etl_pipeline_spark.sources.enrichment import (
     ApiError,
-    enrich_partitions,
     enrich_uris,
     fetch_in_batches,
 )
+from spotify_streaming_etl_pipeline_spark.sources.restsource import enrich_partitions
+from tests.fixtures import frame
 
 
 def _ok_envelope(batch):
@@ -120,9 +121,7 @@ def test_batching_respects_batch_size():
 
 
 def test_enrich_uris_spark_roundtrip(spark):
-    new = spark.createDataFrame(
-        [("uri2",), ("uri1",), ("uri1",), (None,)], "uri: string"
-    )
+    new = frame(spark, [("uri2",), ("uri1",), ("uri1",), (None,)], "uri string")
     staged, failed = enrich_uris(spark, new, _ok_envelope, "track", sleeper=lambda s: None)
     rows = {r["uri"] for r in staged.collect()}
     assert rows == {"uri1", "uri2"}  # distinct, null dropped
@@ -131,24 +130,28 @@ def test_enrich_uris_spark_roundtrip(spark):
     assert failed.count() == 0
 
 
-def test_enrich_partitions_distributed_split(spark):
-    # Closure (not module-level): cloudpickle serializes it by value so
-    # executors don't need the test module on their import path.
-    def fetch(batch):
-        return {
-            "tracks": [
-                None if u.endswith("bad") else {"uri": u, "d": 1} for u in batch
-            ]
-        }
+def fetch_flagging_bad(batch):
+    # module-level: executors import it as "tests.test_enrichment:..."
+    return {
+        "tracks": [None if u.endswith("bad") else {"uri": u, "d": 1} for u in batch]
+    }
 
-    new = spark.createDataFrame(
-        [("u1",), ("u2",), ("u3bad",), ("u1",)], "uri: string"
+
+def test_enrich_partitions_distributed_split(spark, tmp_path):
+    """The executor-side path: the URI set is staged as parquet and
+    scanned back through rest_enrichment; one pass yields both the
+    envelopes and the dead letters."""
+    new = frame(spark, [("u1",), ("u2",), ("u3bad",), ("u1",)], "uri string")
+    out = enrich_partitions(
+        new.distinct(), "tests.test_enrichment:fetch_flagging_bad", "track",
+        str(tmp_path / "staging"),
     )
-    out = enrich_partitions(new, fetch, "track")
-    ok = {r["uri"] for r in out.filter("status = 'ok'").collect()}
-    bad = {(r["uri"], r["status"]) for r in out.filter("status != 'ok'").collect()}
-    assert ok == {"u1", "u2"}
-    assert bad == {("u3bad", "API returned null")}
+    assert out.columns == ["uri", "raw_data", "error_reason"]
+    rows = out.collect()
+    ok = [r["uri"] for r in rows if r["error_reason"] is None]
+    bad = [(r["uri"], r["error_reason"]) for r in rows if r["error_reason"] is not None]
+    assert sorted(ok) == ["u1", "u2"]
+    assert bad == [("u3bad", "API returned null")]
 
 
 def test_per_item_retry_honors_rate_limit(spark):

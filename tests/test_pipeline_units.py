@@ -23,13 +23,14 @@ from spotify_streaming_etl_pipeline_spark.sources.history import (
     max_loaded_ts,
     read_history,
 )
-from tests.fixtures import episode_envelope, history_row, track_envelope
+from tests.fixtures import episode_envelope, frame, history_row, track_envelope
 
 
 def _history_df(spark, rows):
-    from spotify_streaming_etl_pipeline_spark.schemas import HISTORY_SCHEMA
+    from spotify_streaming_etl_pipeline_spark.schemas import HISTORY_SCHEMA, local_frame
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [tuple(r[f.name] for f in HISTORY_SCHEMA.fields) for r in rows],
         HISTORY_SCHEMA,
     )
@@ -79,7 +80,7 @@ def test_read_history_json(spark, tmp_path):
     ],
 )
 def test_new_entity_dedup(spark, hist, core, staged, expected):
-    mk = lambda xs: spark.createDataFrame([(x,) for x in xs], "uri string") if xs else None
+    mk = lambda xs: frame(spark, [(x,) for x in xs], "uri string") if xs else None
     out = dims.new_entities(mk(hist), mk(core), mk(staged))
     assert {r["uri"] for r in out.collect()} == expected
 
@@ -89,7 +90,7 @@ def test_new_entity_dedup(spark, hist, core, staged, expected):
 
 def test_clean_tracks_nested_extraction(spark):
     uri, raw = track_envelope()
-    env = spark.createDataFrame([(uri, raw)], "spotify_track_uri string, raw_data string")
+    env = frame(spark, [(uri, raw)], "spotify_track_uri string, raw_data string")
     row = dims.clean_tracks(env).collect()[0]
     assert row["spotify_track_uri"] == uri
     assert row["cover_art_url"] == "http://img/1"
@@ -100,7 +101,8 @@ def test_clean_tracks_nested_extraction(spark):
 
 
 def test_clean_tracks_skips_broken_rows(spark):
-    env = spark.createDataFrame(
+    env = frame(
+        spark,
         [("u1", json.dumps({"name": "no uri"})), track_envelope("u2")],
         "spotify_track_uri string, raw_data string",
     )
@@ -110,7 +112,7 @@ def test_clean_tracks_skips_broken_rows(spark):
 
 def test_clean_episodes_show_fields(spark):
     uri, raw = episode_envelope()
-    env = spark.createDataFrame([(uri, raw)], "spotify_episode_uri string, raw_data string")
+    env = frame(spark, [(uri, raw)], "spotify_episode_uri string, raw_data string")
     row = dims.clean_episodes(env).collect()[0]
     assert row["podcast_name"] == "Test Show"
     assert row["spotify_podcast_uri"] == "spotify:show:42"
@@ -128,7 +130,7 @@ def test_release_date_normalization(spark):
         ("2020-07-15", "day", dt.date(2020, 7, 15)),
         (None, "day", None),
     ]
-    df = spark.createDataFrame(cases, "rd string, prec string, expected date")
+    df = frame(spark, cases, "rd string, prec string, expected date")
     out = df.select(
         normalize_release_date(F.col("rd"), F.col("prec")).alias("got"), "expected"
     ).collect()
@@ -140,7 +142,8 @@ def test_release_date_normalization(spark):
 
 
 def test_derived_measure_semantics(spark):
-    df = spark.createDataFrame(
+    df = frame(
+        spark,
         [(1999, 180000), (2500, 0), (999, 200000)], "ms int, dur int"
     )
     rows = df.select(
@@ -174,14 +177,16 @@ def test_dim_reason_build_and_increment(spark):
 
 def test_load_dim_conflict_ignore(spark):
     uri, raw = track_envelope("spotify:track:A")
-    env = spark.createDataFrame(
+    env = frame(
+        spark,
         [(uri, raw), track_envelope("spotify:track:B")],
         "spotify_track_uri string, raw_data string",
     )
     d1 = dims.load_dim(dims.clean_tracks(env), "spotify_track_uri", "track_id")
     assert d1.count() == 2
     # re-load same plus one new: existing keys stable, one appended
-    env2 = spark.createDataFrame(
+    env2 = frame(
+        spark,
         [track_envelope("spotify:track:A"), track_envelope("spotify:track:C")],
         "spotify_track_uri string, raw_data string",
     )
@@ -193,8 +198,8 @@ def test_load_dim_conflict_ignore(spark):
 
 
 def test_upsert_conflict_update(spark):
-    target = spark.createDataFrame([(1, "old"), (2, "keep")], "child_id long, v string")
-    incoming = spark.createDataFrame([(1, "new"), (3, "ins")], "child_id long, v string")
+    target = frame(spark, [(1, "old"), (2, "keep")], "child_id long, v string")
+    incoming = frame(spark, [(1, "new"), (3, "ins")], "child_id long, v string")
     out = {r["child_id"]: r["v"] for r in upsert(incoming, ["child_id"], target).collect()}
     assert out == {1: "new", 2: "keep", 3: "ins"}
 
@@ -216,17 +221,19 @@ def _mini_warehouse(spark):
             ),
         ],
     )
-    env_t = spark.createDataFrame([track_envelope("spotify:track:123")],
-                                  "spotify_track_uri string, raw_data string")
-    env_e = spark.createDataFrame([episode_envelope("spotify:episode:7")],
-                                  "spotify_episode_uri string, raw_data string")
+    env_t = frame(spark, [track_envelope("spotify:track:123")],
+                  "spotify_track_uri string, raw_data string")
+    env_e = frame(spark, [episode_envelope("spotify:episode:7")],
+                  "spotify_episode_uri string, raw_data string")
     dim_track = dims.load_dim(dims.clean_tracks(env_t), "spotify_track_uri", "track_id")
     dim_episode = dims.load_dim(dims.clean_episodes(env_e), "spotify_episode_uri", "episode_id")
-    dim_artist = spark.createDataFrame(
+    dim_artist = frame(
+        spark,
         [(1, "spotify:artist:9", None, "Test Artist")],
         "artist_id long, spotify_artist_uri string, cover_art_url string, artist_name string",
     )
-    dim_podcast = spark.createDataFrame(
+    dim_podcast = frame(
+        spark,
         [(5, "spotify:show:42", "Test Show", None, None)],
         "podcast_id long, spotify_podcast_uri string, podcast_name string, "
         "description string, podcast_cover_art_url string",
@@ -265,7 +272,7 @@ def test_fact_podcasts_sentinel_coalesce(spark):
 def test_fact_delta_cutoff_roundtrip(spark):
     h, dtr, da, de, dp, dr = _mini_warehouse(spark)
     fact = facts.build_fact_tracks(h, dtr, da, dr)
-    cutoff = max_loaded_ts(fact, None, None)
+    cutoff = max_loaded_ts(fact, None)
     # cutoff is the UTC instant of the newest loaded row; the pipeline's
     # strict-> delta filter drops it before the rebuild
     fact_again = facts.build_fact_tracks(delta_filter(h, cutoff), dtr, da, dr)
@@ -293,7 +300,8 @@ def test_marts_end_to_end(spark):
 
 
 def test_parent_mapping_queries(spark):
-    dim_track = spark.createDataFrame(
+    dim_track = frame(
+        spark,
         [
             (1, "spotify:track:a", "Style", "1989", "Taylor Swift"),
             (2, "spotify:track:b", "Style (Taylor's Version)", "1989 (Taylor's Version)", "Taylor Swift"),
@@ -307,7 +315,8 @@ def test_parent_mapping_queries(spark):
     sug = mapping.suggest_parents(dim_track, unmapped).collect()
     assert sug[0]["parent_track_title"] == "Style"
     merged = mapping.upsert_parent_mappings(
-        spark.createDataFrame(
+        frame(
+            spark,
             [("spotify:track:b", 2, "Taylor Swift", "Style (Taylor's Version)",
               "1989 (Taylor's Version)", "Style", "1989")],
             "child_track_uri string, child_id long, artist string, "
@@ -325,11 +334,13 @@ def test_dedup_new_size_gate_paths_agree(spark):
     whatever join strategy Catalyst picks for the target."""
     from spotify_streaming_etl_pipeline_spark.operators import writer
 
-    incoming = spark.createDataFrame(
+    incoming = frame(
+        spark,
         [("a", 1), ("b", 2), ("b", 3), ("c", 4)], "k: string, v: int"
     )
     # a key repeated in the target still removes its incoming row once
-    target = spark.createDataFrame(
+    target = frame(
+        spark,
         [("b", 0), ("b", 1), ("d", 0)], "k: string, v: int"
     )
     got = [r["k"] for r in writer.dedup_new(incoming, ["k"], target).collect()]
@@ -387,7 +398,7 @@ def test_get_chart_data_validates_item_type(spark):
     dashboard/dashboard_queries.py:19-20)."""
     import pytest as _pytest
 
-    fact = spark.createDataFrame([], "date_fk long, sec_played long, percent_played double, track_fk long, artist_fk long")
+    fact = frame(spark, [], "date_fk long, sec_played long, percent_played double, track_fk long, artist_fk long")
     with _pytest.raises(ValueError, match="item_type"):
         marts.get_chart_data("playlist", fact)
 
@@ -397,7 +408,8 @@ def test_write_fact_returns_observed_metrics(spark, tmp_path):
 
     from spotify_streaming_etl_pipeline_spark.plans.facts import write_fact
 
-    df = spark.createDataFrame(
+    df = frame(
+        spark,
         [(20200101, 1.0), (20200102, 2.0), (20210301, 3.0)],
         "date_fk long, v double",
     )
@@ -421,11 +433,10 @@ def test_dim_read_restores_swap_crash_residue(spark, tmp_path):
 
     path = str(tmp_path / "dim_track")
     old = str(tmp_path / ".swap_old_dim_track")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "track_id long, name string"
-    ).write.parquet(path)
+    rows = frame(spark, [(1, "a"), (2, "b")], "track_id long, name string")
+    rows.write.parquet(path)
     os.rename(path, old)
-    df = _read_if_exists(spark, path)
+    df = _read_if_exists(spark, path, rows.schema)
     assert df is not None
     assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]
     assert not os.path.isdir(old)
@@ -454,7 +465,7 @@ def test_driver_rows_are_local_relations(spark):
     def fetch(batch):
         return {"tracks": [None if u == "bad" else {"uri": u} for u in batch]}
 
-    new = spark.createDataFrame([("ok",), ("bad",)], "uri string")
+    new = frame(spark, [("ok",), ("bad",)], "uri string")
     staged, failed = enrich_uris(spark, new, fetch, "track", sleeper=lambda s: None)
     frames = {
         "envelope_frame(0)": empty,
@@ -485,7 +496,8 @@ def test_dim_builds_start_no_job(spark, tmp_path):
     inside the plan), yet keys continue after the existing max — and
     start at 1 when the existing dim has no rows."""
     sc = spark.sparkContext
-    env = spark.createDataFrame(
+    env = frame(
+        spark,
         [track_envelope("spotify:track:A"), track_envelope("spotify:track:B")],
         "spotify_track_uri string, raw_data string",
     )
@@ -498,7 +510,8 @@ def test_dim_builds_start_no_job(spark, tmp_path):
     existing_track = spark.read.parquet(str(tmp_path / "dim_track"))
     existing_reason = spark.read.parquet(str(tmp_path / "dim_reason"))
     no_track = existing_track.limit(0)
-    env2 = spark.createDataFrame(
+    env2 = frame(
+        spark,
         [track_envelope("spotify:track:A"), track_envelope("spotify:track:C")],
         "spotify_track_uri string, raw_data string",
     )

@@ -1,16 +1,21 @@
 """The REST enrichment exposed as a Spark 4 Python Data Source
-(sources/restsource.py): partitioned fetch, success + dead-letter
-rows in one frame, factory-resolved fetch callables."""
+(sources/restsource.py): a parquet-staged URI feed fetched one
+partition per row group, success + dead-letter rows in one frame,
+factory-resolved fetch callables, and the stream reader's inline
+feed."""
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from spotify_streaming_etl_pipeline_spark.sources.restsource import (
     RestEnrichmentDataSource,
 )
+from tests.fixtures import frame
 
 # importable on executors (local mode shares the interpreter; on a
 # real cluster this module ships with the package)
@@ -31,22 +36,31 @@ def make_fetch():
 make_fetch.__rest_factory__ = True
 
 
-def _read(spark, uris, fetch_path, per_partition=2):
+def _stage(tmp_path, uris, per_row_group=2):
+    """``uris`` as one parquet file, ``per_row_group`` URIs per row
+    group (the reader plans one partition per row group)."""
+    path = str(tmp_path / "uris.parquet")
+    pq.write_table(
+        pa.table({"uri": pa.array(uris, pa.string())}), path, row_group_size=per_row_group
+    )
+    return path
+
+
+def _read(spark, uris_path, fetch_path):
     spark.dataSource.register(RestEnrichmentDataSource)
     return (
         spark.read.format("rest_enrichment")
-        .option("uris", json.dumps(uris))
+        .option("uris_path", uris_path)
         .option("entity", "artists")
         .option("fetch", fetch_path)
-        .option("uris_per_partition", str(per_partition))
         .option("batch_size", "2")
         .load()
     )
 
 
-def test_rest_source_reads_successes_and_dead_letters(spark):
+def test_rest_source_reads_successes_and_dead_letters(spark, tmp_path):
     uris = [f"uri:{i}" for i in range(5)] + ["uri:99"]  # 99 -> null
-    df = _read(spark, uris, "tests.test_restsource:fake_fetch")
+    df = _read(spark, _stage(tmp_path, uris), "tests.test_restsource:fake_fetch")
     rows = {r.uri: r for r in df.collect()}
     assert set(rows) == set(uris)
     ok = [r for r in rows.values() if r.error_reason is None]
@@ -58,52 +72,48 @@ def test_rest_source_reads_successes_and_dead_letters(spark):
     assert payload["name"] == "artist 2"
 
 
-def test_rest_source_partitions_the_uri_list(spark):
+def test_rest_source_partitions_the_uri_list(spark, tmp_path):
     uris = [f"uri:{i}" for i in range(6)]
-    df = _read(spark, uris, "tests.test_restsource:fake_fetch", per_partition=2)
-    assert df.rdd.getNumPartitions() == 3
+    df = _read(spark, _stage(tmp_path, uris), "tests.test_restsource:fake_fetch")
+    assert df.rdd.getNumPartitions() == 3  # one per row group of the one file
     assert df.count() == 6
 
 
-def test_rest_source_resolves_fetch_factories(spark):
+def test_rest_source_resolves_fetch_factories(spark, tmp_path):
     uris = ["uri:0", "uri:1"]
-    df = _read(spark, uris, "tests.test_restsource:make_fetch")
+    df = _read(spark, _stage(tmp_path, uris), "tests.test_restsource:make_fetch")
     assert df.filter(F.col("error_reason").isNull()).count() == 2
 
 
 def test_rest_source_reads_uris_from_parquet_path(spark, tmp_path):
-    """uris_path: the URI feed rides parquet, partitions are planned
-    from footer metadata (one per row group — the staging layout sets
-    fetch parallelism, and no row group is ever read twice), and the
-    scan output matches the inline-option form exactly — the
-    no-driver-side-list scale path."""
+    """uris_path as a directory of Spark-written files: partitions are
+    planned from footer metadata (one per row group — the staging layout
+    sets fetch parallelism, and no row group is ever read twice), the
+    scan output matches the single-file feed exactly, and an empty feed
+    (a file with no row group) reads as no rows."""
     uris = [f"uri:{i}" for i in range(6)] + ["uri:99"]
     staged = str(tmp_path / "uris")
-    spark.createDataFrame([(u,) for u in uris], "uri string").repartition(
-        3
-    ).write.parquet(staged)
-    spark.dataSource.register(RestEnrichmentDataSource)
-    df = (
-        spark.read.format("rest_enrichment")
-        .option("uris_path", staged)
-        .option("entity", "artists")
-        .option("fetch", "tests.test_restsource:fake_fetch")
-        .load()
+    frame(spark, [(u,) for u in uris], "uri string").repartition(3).write.parquet(
+        staged
     )
+    df = _read(spark, staged, "tests.test_restsource:fake_fetch")
     assert df.rdd.getNumPartitions() == 3  # one per staged row group
     rows = {r.uri: r for r in df.collect()}
-    inline = {
+    single = {
         r.uri: r
         for r in _read(
-            spark, uris, "tests.test_restsource:fake_fetch"
+            spark, _stage(tmp_path, uris), "tests.test_restsource:fake_fetch"
         ).collect()
     }
-    assert set(rows) == set(inline) == set(uris)
+    assert set(rows) == set(single) == set(uris)
     for u in uris:
         assert (rows[u].raw_data, rows[u].error_reason) == (
-            inline[u].raw_data,
-            inline[u].error_reason,
+            single[u].raw_data,
+            single[u].error_reason,
         )
+    empty = str(tmp_path / "no_uris")
+    frame(spark, [], "uri string").write.parquet(empty)
+    assert _read(spark, empty, "tests.test_restsource:fake_fetch").count() == 0
 
 
 def test_rest_source_streams_the_feed_incrementally(spark, tmp_path):

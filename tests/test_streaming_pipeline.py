@@ -4,6 +4,7 @@ and the end-to-end pipeline runner (fixture JSON -> queryable marts)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,7 +16,7 @@ from spotify_streaming_etl_pipeline_spark.streaming.ingest import (
     read_history_stream,
     start_fact_tracks_ingest,
 )
-from tests.fixtures import episode_envelope, history_row, track_envelope
+from tests.fixtures import episode_envelope, frame, history_row, track_envelope
 
 
 def _write_export(path, rows):
@@ -48,42 +49,45 @@ def raw_dir(tmp_path):
     return d
 
 
-def _fake_fetchers():
-    def tracks(batch):
-        return {
-            "tracks": [
-                json.loads(track_envelope(uri)[1]) | {"uri": uri} for uri in batch
-            ]
-        }
-
-    def artists(batch):
-        return {
-            "artists": [
-                {"uri": u, "name": f"Artist {u[-1]}", "images": [{"url": "http://a"}]}
-                for u in batch
-            ]
-        }
-
-    def episodes(batch):
-        return {
-            "episodes": [
-                json.loads(episode_envelope(uri)[1]) | {"uri": uri} for uri in batch
-            ]
-        }
-
-    def podcasts(batch):
-        return {
-            "shows": [
-                {"uri": u, "name": "Test Show", "description": "d", "images": []}
-                for u in batch
-            ]
-        }
-
+# Offline fetchers, importable on executors as "module:attr" strings.
+def fake_tracks(batch):
     return {
-        "track": tracks,
-        "artist": artists,
-        "episode": episodes,
-        "podcast": podcasts,
+        "tracks": [
+            json.loads(track_envelope(uri)[1]) | {"uri": uri} for uri in batch
+        ]
+    }
+
+
+def fake_artists(batch):
+    return {
+        "artists": [
+            {"uri": u, "name": f"Artist {u[-1]}", "images": [{"url": "http://a"}]}
+            for u in batch
+        ]
+    }
+
+
+def fake_episodes(batch):
+    return {
+        "episodes": [
+            json.loads(episode_envelope(uri)[1]) | {"uri": uri} for uri in batch
+        ]
+    }
+
+
+def fake_podcasts(batch):
+    return {
+        "shows": [
+            {"uri": u, "name": "Test Show", "description": "d", "images": []}
+            for u in batch
+        ]
+    }
+
+
+def _fake_fetchers():
+    return {
+        e: f"tests.test_streaming_pipeline:fake_{e}s"
+        for e in ("track", "artist", "episode", "podcast")
     }
 
 
@@ -130,8 +134,8 @@ def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
     increment, no-op rerun.  Each run's ``n_fact_rows`` (observed by the
     fact write itself, not by a second count) must equal the rows that
     landed in the fact parquet, the no-op run's empty writes must still
-    report 0 for both facts, and every ``write=True`` run must release
-    the caches it made (no RDD it persisted is still persisted)."""
+    report 0 for both facts, and every run must release the caches it
+    made (no RDD it persisted is still persisted)."""
     wh = str(tmp_path / "warehouse")
     before = _persisted_ids(spark)
 
@@ -216,78 +220,19 @@ def test_pipeline_run_releases_its_caches_on_failure(
     assert _persisted_ids(spark) <= before
 
 
-def test_pipeline_size_switch_distributed_enrichment(spark, raw_dir, tmp_path):
-    """enrich_collect_max=0 forces every URI set down the distributed
-    mapInPandas path; the warehouse must come out identical to the
-    driver-collect path (same dims, facts, zero dead letters)."""
-    wh_driver = str(tmp_path / "wh_driver")
-    wh_dist = str(tmp_path / "wh_dist")
-    res_driver = pipeline.run(spark, str(raw_dir), wh_driver, fetchers=_fake_fetchers())
-    res_dist = pipeline.run(
-        spark, str(raw_dir), wh_dist, fetchers=_fake_fetchers(), enrich_collect_max=0
-    )
-    assert res_dist.dead_letters == []
-    assert res_dist.n_fact_rows == res_driver.n_fact_rows
-    for entity in ("track", "artist", "episode", "podcast", "reason"):
-        d_rows = sorted(map(tuple, res_driver.dims[entity].collect()))
-        x_rows = sorted(map(tuple, res_dist.dims[entity].collect()))
-        assert x_rows == d_rows, f"dim_{entity} differs across enrichment paths"
-
-
-# Module-level fetchers (importable on executors) for the planned
-# DataSource enrichment path — same payloads as _fake_fetchers.
-def ds_tracks(batch):
-    return {
-        "tracks": [
-            json.loads(track_envelope(uri)[1]) | {"uri": uri} for uri in batch
-        ]
-    }
-
-
-def ds_artists(batch):
-    return {
-        "artists": [
-            {"uri": u, "name": f"Artist {u[-1]}", "images": [{"url": "http://a"}]}
-            for u in batch
-        ]
-    }
-
-
-def ds_episodes(batch):
-    return {
-        "episodes": [
-            json.loads(episode_envelope(uri)[1]) | {"uri": uri} for uri in batch
-        ]
-    }
-
-
-def ds_podcasts(batch):
-    return {
-        "shows": [
-            {"uri": u, "name": "Test Show", "description": "d", "images": []}
-            for u in batch
-        ]
-    }
-
-
 def test_pipeline_datasource_enrichment_path(spark, raw_dir, tmp_path):
-    """String ("module:attr") fetchers + enrich_collect_max=0 force
-    every URI set through the planned rest_enrichment DataSource scan
-    (URI staging parquet -> footer-planned row ranges); the warehouse
-    must come out identical to the driver-collect path, and the same
-    string fetchers below the threshold must resolve for the driver
-    loop."""
-    path_fetchers = {
-        e: f"tests.test_streaming_pipeline:ds_{e}s"
-        for e in ("track", "artist", "episode", "podcast")
-    }
+    """enrich_collect_max=0 sends every URI set through the planned
+    rest_enrichment DataSource scan (URI staging parquet -> one
+    partition per staged row group); the warehouse must come out
+    identical to the driver-loop path, and the run must remove its URI
+    staging."""
     wh_driver = str(tmp_path / "wh_driver")
     wh_ds = str(tmp_path / "wh_ds")
     res_driver = pipeline.run(
         spark, str(raw_dir), wh_driver, fetchers=_fake_fetchers()
     )
     res_ds = pipeline.run(
-        spark, str(raw_dir), wh_ds, fetchers=path_fetchers,
+        spark, str(raw_dir), wh_ds, fetchers=_fake_fetchers(),
         enrich_collect_max=0,
     )
     assert res_ds.dead_letters == []
@@ -296,12 +241,7 @@ def test_pipeline_datasource_enrichment_path(spark, raw_dir, tmp_path):
         d_rows = sorted(map(tuple, res_driver.dims[entity].collect()))
         x_rows = sorted(map(tuple, res_ds.dims[entity].collect()))
         assert x_rows == d_rows, f"dim_{entity} differs on the DataSource path"
-    # string fetchers resolve on the small-set driver loop too
-    wh_small = str(tmp_path / "wh_small")
-    res_small = pipeline.run(
-        spark, str(raw_dir), wh_small, fetchers=path_fetchers
-    )
-    assert res_small.n_fact_rows == res_driver.n_fact_rows
+    assert not os.path.exists(f"{wh_ds}/_staging/enrich_uris")
 
 
 def test_streaming_ingest_one_microbatch(spark, raw_dir, tmp_path):
@@ -427,8 +367,6 @@ def test_session_windows_batch_stream_parity(spark, tmp_path):
     deployment starts from) — one logical operator, two front ends,
     zero semantic drift. Runs on the driver's correctness corpus
     (sf0.01 events when present, else the conftest default)."""
-    import os
-
     from spotify_streaming_etl_pipeline_spark.sources.catalog import load_table
     from spotify_streaming_etl_pipeline_spark.streaming.ingest import session_windows
 
@@ -466,11 +404,13 @@ def test_session_windows_batch_stream_parity(spark, tmp_path):
 
 
 def test_pipeline_compacts_fact_partitions_end_to_end(spark, raw_dir, tmp_path):
-    """compact_facts=True on the runner: after incremental appends
-    fragment a year partition, the run leaves each `_year=` leaf at the
-    size-derived file count with every row and the partition column
-    intact — exercising the pipeline call site, not just the operator."""
+    """Compaction after the runner's appends: once incremental runs
+    fragment a year partition, ``compact_partitioned`` leaves each
+    `_year=` leaf at the size-derived file count with every row and the
+    partition column intact, and the next run reads the compacted
+    table back."""
     from spotify_streaming_etl_pipeline_spark.operators.maintenance import (
+        compact_partitioned,
         parquet_file_stats,
     )
 
@@ -482,18 +422,19 @@ def test_pipeline_compacts_fact_partitions_end_to_end(spark, raw_dir, tmp_path):
         [history_row(ts="2021-07-01T00:00:00Z", spotify_track_uri="spotify:track:456")],
     )
     fact_dir = f"{wh}/fact_tracks"
-    n_before, _ = parquet_file_stats(fact_dir)
-    res = pipeline.run(
-        spark, str(raw_dir), wh, fetchers=_fake_fetchers(), compact_facts=True
-    )
+    res = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
     assert res.n_fact_rows["tracks"] == 1  # the new play appended
+    n_before, _ = parquet_file_stats(fact_dir)
     assert n_before >= 2  # appends really did fragment before compaction
-    assert res.compacted["tracks"].get("_year=2021") == 1
+    compacted = compact_partitioned(spark, fact_dir)
+    assert compacted.get("_year=2021") == 1
     # no work-dir residue is visible to (or breaks) the partitioned read
     fact = spark.read.parquet(fact_dir)
     assert fact.count() == 4
     assert fact.filter(F.col("_year") == 2021).count() == 4
-    # returned frame is the re-read table and agrees
+    # the next run's cutoff and re-read see the compacted table
+    res = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
+    assert res.n_fact_rows["tracks"] == 0
     assert res.facts["tracks"].count() == 4
 
 
@@ -501,8 +442,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     """Watermarked stream-stream attribution join == the same join run
     as one batch: every (click, purchase-within-30min) pair, no
     duplicates, no losses, under an availableNow drain."""
-    import os
-
     from spotify_streaming_etl_pipeline_spark.sources.catalog import load_table
     from spotify_streaming_etl_pipeline_spark.streaming.joins import attribution_join
 
@@ -564,7 +503,7 @@ def test_dedup_within_watermark_drops_redeliveries(spark, tmp_path):
         (3, base + dt.timedelta(minutes=2), "c"),
         (3, base + dt.timedelta(minutes=2), "c-dup"),
     ]
-    df = spark.createDataFrame(rows, "k long, ts timestamp, payload string")
+    df = frame(spark, rows, "k long, ts timestamp, payload string")
     src = str(tmp_path / "dedup_src")
     df.write.parquet(src)
 
