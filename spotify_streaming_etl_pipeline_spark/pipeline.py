@@ -31,9 +31,9 @@ run (lazy frames otherwise recompute a shared plan for each consumer):
   action that fills the cache — URI discovery, ``dim_reason`` and both
   star joins read the cache, so the multi-line JSON export is scanned
   once per run;
-- each final dim (after the sentinel rows and ``dim_reason``) is
-  persisted, so the fact broadcasts and the snapshot swap share one
-  computed snapshot;
+- each final dim (after the sentinel rows, and ``dim_reason``, which
+  both star joins read) is persisted, so the fact broadcasts and the
+  snapshot swap share one computed snapshot;
 - the executor-path enrichment envelopes are persisted, so the
   dead-letter collect and the dims share one fetch;
 - fact row counts come from the write's own ``Observation``, not from
@@ -53,22 +53,51 @@ runs on the JVM and its plans are built lazily:
   one;
 - the delta cutoff is one action over both facts.
 
-``run`` always writes, and it owns every one of these caches and the
-URI staging parquet: its ``finally`` releases the caches and removes
-the staging once the returned frames are re-read from the warehouse,
-or when the run fails.  Small-file maintenance of the fact tables is
-a separate step (``operators.maintenance.compact_partitioned``).
+The two star branches run at the same time.  After the shared prefix
+(the delta cutoff, the persisted and counted history, the lazily
+persisted ``dim_reason``) the run splits into two driver threads that
+share nothing else:
+
+- **tracks**: track enrichment -> artist enrichment -> ``dim_track``
+  and ``dim_artist`` -> ``fact_tracks`` star join and append;
+- **podcasts**: episode enrichment -> podcast enrichment ->
+  ``dim_episode`` and ``dim_podcast`` with their sentinel rows ->
+  ``fact_podcasts`` star join and append.
+
+Spark runs jobs submitted from separate threads concurrently, so one
+branch's driver round trips and small jobs overlap the other's.  On
+the driver-loop path the two branches' fetches reach the API at the
+same time; each loop still batches, splits and sleeps out a 429's
+Retry-After on its own.  **Facts, then swaps**: the five dim snapshot
+swaps start only once both fact writes have ended (a failed write
+swaps nothing), then run in parallel, one thread per dim.  Every
+thread carries the caller's job group, description and tags, and the
+dims, surrogate keys and files written are those of one serial run.
+
+A run over nothing new writes nothing: when the delta-filtered
+history is empty and every table of ``schemas.WAREHOUSE_SCHEMAS``
+exists, ``run`` returns those tables right after the count.  Otherwise
+it owns every cache above and the URI staging parquet: its
+``finally`` releases the caches and removes the staging once every
+thread has stopped and the returned frames are re-read from the
+warehouse, or when the run fails.  Small-file maintenance of the fact
+tables is a separate step
+(``operators.maintenance.compact_partitioned``).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from .operators.maintenance import recover_swap_residue
 from .plans import dims as dims_mod
@@ -76,7 +105,11 @@ from .plans.facts import build_fact_podcasts, build_fact_tracks, write_fact
 from .schemas import WAREHOUSE_SCHEMAS
 from .sources.enrichment import envelope_frame, fetch_in_batches
 from .sources.history import delta_filter, max_loaded_ts, read_history
-from .sources.restsource import _resolve_fetch, enrich_partitions
+from .sources.restsource import (
+    RestEnrichmentDataSource,
+    _resolve_fetch,
+    enrich_partitions,
+)
 
 # Executor-path enrichment stages its URI sets under the warehouse,
 # which executors can reach.
@@ -137,6 +170,17 @@ def _overwrite_parquet_safe(df: DataFrame, path: str) -> None:
     df.sparkSession.catalog.refreshByPath(path)
 
 
+def _concurrently(spark: SparkSession, tasks: list[Callable]) -> list:
+    """Run each of ``tasks`` on its own driver thread and return their
+    results in order.  Every thread carries the calling thread's job
+    group, description and tags, so the jobs it starts are the
+    caller's.  Returns, or re-raises the first failure in ``tasks``
+    order, only once every thread has stopped."""
+    with ThreadPoolExecutor(len(tasks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
+    return [f.result() for f in futures]
+
+
 def run(
     spark: SparkSession,
     raw_dir: str,
@@ -182,18 +226,27 @@ def _run(
         )
 
     # -- 1. ingest history with the delta cutoff (S1/S2/A6) ----------------
-    cutoff = max_loaded_ts(read("fact_tracks"), read("fact_podcasts"))
+    tables = {table: read(table) for table in WAREHOUSE_SCHEMAS}
+    cutoff = max_loaded_ts(tables["fact_tracks"], tables["fact_podcasts"])
     # The count fills the cache: URI discovery, dim_reason and both
     # star joins below read it instead of re-parsing the export.
     history = persist(delta_filter(read_history(spark, raw_dir), cutoff))
     out.n_history_rows = history.count()
+    if out.n_history_rows == 0 and None not in tables.values():
+        # Nothing past the cutoff and every table written: the load
+        # would rewrite the same dims and append no fact row.
+        for table, df in tables.items():
+            kind, name = table.split("_", 1)
+            (out.dims if kind == "dim" else out.facts)[name] = df
+        out.n_fact_rows = dict.fromkeys(out.facts, 0)
+        return out
+    reason = persist(dims_mod.build_dim_reason(history, tables["dim_reason"]))
+    if fetchers:
+        # Once, before the branches: both may take the executor path.
+        spark.dataSource.register(RestEnrichmentDataSource)
 
     # -- 2. entity discovery + enrichment (A4/A5/J7, S3/S4/S7) --------------
-    # ORDER MATTERS: artist URIs come from track envelopes, podcast URIs
-    # from episode envelopes (reference extractor.py:317).
-    envelopes: dict[str, DataFrame] = {}
-
-    def enrich(entity: str, uris: DataFrame) -> DataFrame | None:
+    def enrich(entity: str, uris: DataFrame, dead: list) -> DataFrame | None:
         fetch = fetchers.get(entity)
         if fetch is None:
             return None
@@ -216,7 +269,7 @@ def _run(
             # The dead-letter collect materializes (and caches) every
             # partition of enriched — after it, the ok-split below
             # reads the cache, never re-fetching.
-            out.dead_letters.extend(
+            dead.extend(
                 (r["uri"], entity, r["error_reason"])
                 for r in enriched.filter(F.col("error_reason").isNotNull()).collect()
             )
@@ -226,27 +279,8 @@ def _run(
         result = fetch_in_batches(
             sorted(r["uri"] for r in head), _resolve_fetch(fetch), entity
         )
-        out.dead_letters.extend(result.failures)
+        dead.extend(result.failures)
         return envelope_frame(spark, result.records)
-
-    envelopes["track"] = enrich(
-        "track", dims_mod.distinct_uris(history, "spotify_track_uri")
-    )
-    envelopes["artist"] = enrich(
-        "artist",
-        dims_mod.artist_uris_from_track_envelopes(envelopes["track"])
-        if envelopes["track"] is not None
-        else envelope_frame(spark, []).select("uri"),
-    )
-    envelopes["episode"] = enrich(
-        "episode", dims_mod.distinct_uris(history, "spotify_episode_uri")
-    )
-    envelopes["podcast"] = enrich(
-        "podcast",
-        dims_mod.podcast_uris_from_episode_envelopes(envelopes["episode"])
-        if envelopes["episode"] is not None
-        else envelope_frame(spark, []).select("uri"),
-    )
 
     # -- 3. clean envelopes -> idempotent dim loads (§2.10, J10, F23) -------
     cleaners = {
@@ -255,58 +289,82 @@ def _run(
         "episode": (dims_mod.clean_episodes, "spotify_episode_uri", "episode_id"),
         "podcast": (dims_mod.clean_podcasts, "spotify_podcast_uri", "podcast_id"),
     }
-    for entity, (clean, natural_key, key_name) in cleaners.items():
-        existing = read(f"dim_{entity}")
-        if envelopes[entity] is None:
-            if existing is not None:
-                out.dims[entity] = existing
-            continue
-        cleaned = clean(envelopes[entity])
-        out.dims[entity] = dims_mod.load_dim(cleaned, natural_key, key_name, existing)
-
     # Sentinel rows for fact lookups that miss (dummy_values.sql).
-    if "episode" in out.dims:
-        out.dims["episode"] = dims_mod.sentinel_episode(spark).unionByName(
-            out.dims["episode"].filter(F.col("episode_id") != 0)
-        )
-    if "podcast" in out.dims:
-        out.dims["podcast"] = dims_mod.sentinel_podcast(spark).unionByName(
-            out.dims["podcast"].filter(F.col("podcast_id") != 0)
-        )
+    sentinels = {
+        "episode": dims_mod.sentinel_episode,
+        "podcast": dims_mod.sentinel_podcast,
+    }
 
-    out.dims["reason"] = dims_mod.build_dim_reason(history, read("dim_reason"))
-
-    # Each final dim is computed once: the first fact broadcast that
-    # reads it fills the cache, and its snapshot swap reads the cache.
-    for entity in out.dims:
-        out.dims[entity] = persist(out.dims[entity])
-
-    # -- 4. facts: the two star joins (J1/J2) -------------------------------
-    if {"track", "artist"} <= out.dims.keys():
-        out.facts["tracks"] = build_fact_tracks(
-            history, out.dims["track"], out.dims["artist"], out.dims["reason"]
+    def star(fact: str, entity: str, parent: str, parent_uris, build_fact):
+        """One star branch: enrich ``entity``, then ``parent`` (whose
+        URIs ``parent_uris`` mines from ``entity``'s envelopes — ORDER
+        MATTERS, reference extractor.py:317), load both dims, then
+        build and append ``fact_<fact>`` (J1/J2).  Returns the
+        branch's dead letters, its final dims and ``{fact: rows
+        appended}`` (empty when a dim is missing and no fact is
+        built)."""
+        dead: list[tuple[str, str, str]] = []
+        uris = dims_mod.distinct_uris(history, cleaners[entity][1])
+        envelopes = {entity: enrich(entity, uris, dead)}
+        envelopes[parent] = enrich(
+            parent,
+            parent_uris(envelopes[entity])
+            if envelopes[entity] is not None
+            else envelope_frame(spark, []).select("uri"),
+            dead,
         )
-    if {"episode", "podcast"} <= out.dims.keys():
-        out.facts["podcasts"] = build_fact_podcasts(
-            history, out.dims["episode"], out.dims["podcast"], out.dims["reason"]
-        )
+        dims: dict[str, DataFrame] = {}
+        for e, env in envelopes.items():
+            clean, natural_key, key_name = cleaners[e]
+            dim = tables[f"dim_{e}"]
+            if env is not None:
+                dim = dims_mod.load_dim(clean(env), natural_key, key_name, dim)
+            if dim is None:
+                continue
+            if e in sentinels:
+                dim = sentinels[e](spark).unionByName(dim.filter(F.col(key_name) != 0))
+            # Each final dim is computed once: the fact broadcast that
+            # reads it fills the cache, and its snapshot swap reads it.
+            dims[e] = persist(dim)
+        if len(dims) < 2:
+            return dead, dims, {}
+        fact_df = build_fact(history, dims[entity], dims[parent], reason)
+        # The star join runs once: the write observes its row count.
+        obs = write_fact(fact_df, f"{warehouse_dir}/fact_{fact}")
+        return dead, dims, {fact: obs["n_rows"]}
 
-    # -- 5. write ------------------------------------------------------------
-    # Facts first: the dim caches may be evicted, and an evicted dim
-    # recomputes from the CURRENT dim parquet, which the swap below
-    # deletes. Fact writes are appends, so ordering them first is both
-    # safe and required. Each star join runs once: its row count is
-    # observed by the write itself.
-    for name, df in out.facts.items():
-        obs = write_fact(df, f"{warehouse_dir}/fact_{name}")
-        out.n_fact_rows[name] = obs["n_rows"]
-    for entity, df in out.dims.items():
-        _overwrite_parquet_safe(df, f"{warehouse_dir}/dim_{entity}")
+    branches = _concurrently(
+        spark,
+        [
+            partial(star, "tracks", "track", "artist",
+                    dims_mod.artist_uris_from_track_envelopes, build_fact_tracks),
+            partial(star, "podcasts", "episode", "podcast",
+                    dims_mod.podcast_uris_from_episode_envelopes, build_fact_podcasts),
+        ],
+    )
+    for dead, dims, n_fact_rows in branches:
+        out.dead_letters.extend(dead)
+        out.dims.update(dims)
+        out.n_fact_rows.update(n_fact_rows)
+    out.dims["reason"] = reason
+
+    # -- 4. swap the dim snapshots ------------------------------------------
+    # Facts, then swaps: both fact writes have ended here.  A dim cache
+    # may be evicted, and an evicted dim recomputes from the CURRENT dim
+    # parquet, which its swap deletes; fact writes are appends, so
+    # ordering them first is both safe and required, and a failed fact
+    # write swaps nothing.  Each swap touches only its own dim.
+    _concurrently(
+        spark,
+        [
+            partial(_overwrite_parquet_safe, df, f"{warehouse_dir}/dim_{entity}")
+            for entity, df in out.dims.items()
+        ],
+    )
     # Re-read everything written: the pre-swap lazy plans pin file
     # listings that no longer exist; callers get fresh frames, and
     # ``run`` releases this run's caches once this returns.
     for entity in out.dims:
         out.dims[entity] = read(f"dim_{entity}")
-    for name in out.facts:
-        out.facts[name] = read(f"fact_{name}")
+    out.facts = {name: read(f"fact_{name}") for name in out.n_fact_rows}
     return out

@@ -12,7 +12,7 @@ registers the SAME batch/retry/dead-letter fetch loop
   each executor reads its own row group once with pyarrow, so an
   arbitrarily large URI set never exists as a driver-side Python
   object.  Fetch parallelism follows the staging file layout
-  (``enrich_partitions`` repartitions the URI frame before writing);
+  (``enrich_partitions`` caps each staged file at 200 URIs);
   it is cluster-scheduled like any scan, shows up in the UI as a
   scan, and composes with every downstream operator;
 - successes and dead letters come back in ONE frame
@@ -58,19 +58,20 @@ def enrich_partitions(
 ) -> DataFrame:
     """Executor-side enrichment of a URI set of any size (``uris``: a
     frame of distinct values in its ``uri`` column): stage the column
-    as parquet under ``staging_dir`` (repartitioned so each staging
-    file ≈ 200 URIs ≈ one fetch partition), then scan it back through
-    ``rest_enrichment`` with the ``"module:attr"`` fetcher ``fetch``.
-    The URI set rides executor-to-executor — no driver-side list at
-    any size.  Returns ``(uri, raw_data, error_reason)``:
-    ``error_reason IS NULL`` rows are envelopes, the rest dead letters.
-    The frame reads ``staging_dir``; the caller removes it once the
-    frame is no longer needed."""
+    as parquet under ``staging_dir``, at most 200 URIs per file (one
+    row group, so one fetch partition, each), then scan it back
+    through ``rest_enrichment`` with the ``"module:attr"`` fetcher
+    ``fetch``.  Staging is the write alone: the file cap sizes the
+    fetch partitions without counting or reshuffling the set.  The URI
+    set rides executor-to-executor — no driver-side list at any size.
+    Returns ``(uri, raw_data, error_reason)``: ``error_reason IS
+    NULL`` rows are envelopes, the rest dead letters.  The session must
+    have ``RestEnrichmentDataSource`` registered (``pipeline.run``
+    registers it once per run).  The frame reads ``staging_dir``; the
+    caller removes it once the frame is no longer needed."""
     spark = uris.sparkSession
-    spark.dataSource.register(RestEnrichmentDataSource)
-    n = uris.count()
-    uris.select("uri").repartition(max(1, -(-n // 200))).write.mode(
-        "overwrite"
+    uris.select("uri").write.mode("overwrite").option(
+        "maxRecordsPerFile", 200
     ).parquet(staging_dir)
     return (
         spark.read.format("rest_enrichment")
@@ -89,8 +90,8 @@ class UriFileChunk(InputPartition):
     group would each decode the whole group — k-fold read
     amplification on exactly the large feeds the path exists for.
     Fetch parallelism therefore follows the STAGING LAYOUT — writers
-    control it by repartitioning the URI frame before the parquet
-    write, as ``enrich_partitions`` does.)"""
+    control it by capping the URIs per staged file, as
+    ``enrich_partitions`` does.)"""
 
     def __init__(self, path: str, row_group: int):
         self.path, self.row_group = path, row_group

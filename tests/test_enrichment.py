@@ -4,6 +4,7 @@ the reference's own truth tables
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 
 from spotify_streaming_etl_pipeline_spark.sources.enrichment import (
@@ -11,7 +12,10 @@ from spotify_streaming_etl_pipeline_spark.sources.enrichment import (
     enrich_uris,
     fetch_in_batches,
 )
-from spotify_streaming_etl_pipeline_spark.sources.restsource import enrich_partitions
+from spotify_streaming_etl_pipeline_spark.sources.restsource import (
+    RestEnrichmentDataSource,
+    enrich_partitions,
+)
 from tests.fixtures import frame
 
 
@@ -138,19 +142,26 @@ def fetch_flagging_bad(batch):
 
 
 def test_enrich_partitions_distributed_split(spark, tmp_path):
-    """The executor-side path: the URI set is staged as parquet and
-    scanned back through rest_enrichment; one pass yields both the
-    envelopes and the dead letters."""
-    new = frame(spark, [("u1",), ("u2",), ("u3bad",), ("u1",)], "uri string")
+    """The executor-side path: the URI set is staged as parquet, at most
+    200 URIs per file, each file one row group and so one fetch
+    partition, and scanned back through rest_enrichment; one pass
+    yields both the envelopes and the dead letters.  The set is one
+    partition, so a single write task must split it across files."""
+    spark.dataSource.register(RestEnrichmentDataSource)
+    uris = [f"u{i}" for i in range(450)] + ["u3bad"]
+    new = frame(spark, [(u,) for u in uris], "uri string").coalesce(1)
+    staging = tmp_path / "staging"
     out = enrich_partitions(
-        new.distinct(), "tests.test_enrichment:fetch_flagging_bad", "track",
-        str(tmp_path / "staging"),
+        new, "tests.test_enrichment:fetch_flagging_bad", "track", str(staging)
     )
+    staged = [pq.ParquetFile(f).metadata for f in staging.glob("*.parquet")]
+    assert sorted(m.num_rows for m in staged) == [51, 200, 200]
+    assert all(m.num_row_groups == 1 for m in staged)
     assert out.columns == ["uri", "raw_data", "error_reason"]
     rows = out.collect()
     ok = [r["uri"] for r in rows if r["error_reason"] is None]
     bad = [(r["uri"], r["error_reason"]) for r in rows if r["error_reason"] is not None]
-    assert sorted(ok) == ["u1", "u2"]
+    assert sorted(ok) == sorted(uris[:-1])
     assert bad == [("u3bad", "API returned null")]
 
 

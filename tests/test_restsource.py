@@ -163,3 +163,46 @@ def test_rest_source_streams_the_feed_incrementally(spark, tmp_path):
     # restart from the same checkpoint: feed exhausted, nothing re-read
     got2 = drain(0)
     assert len(got2) == 0
+
+
+FETCHER_REBINDING_ON_IMPORT = '''
+from spotify_streaming_etl_pipeline_spark.sources import restsource
+
+CALLS = []
+_inner = restsource.fetch_in_batches
+
+
+def _recording(uris, fetch, entity_type, **kw):
+    CALLS.append(list(uris))
+    return _inner(uris, fetch, entity_type, **kw)
+
+
+restsource.fetch_in_batches = _recording
+
+
+def fetch(batch):
+    return {"artists": [{"uri": u} for u in batch]}
+'''
+
+
+def test_fetch_is_looked_up_after_the_fetcher_resolves(tmp_path, monkeypatch):
+    """A fetcher whose import rebinds ``restsource.fetch_in_batches``
+    (as a worker-side fetch log does) must see the very call that
+    imported it: ``_fetched_rows`` resolves the fetcher first and looks
+    the name up after."""
+    import importlib
+    import sys
+
+    from spotify_streaming_etl_pipeline_spark.sources import restsource
+    from spotify_streaming_etl_pipeline_spark.sources.restsource import _fetched_rows
+
+    name = "rebinding_fetcher"
+    (tmp_path / f"{name}.py").write_text(FETCHER_REBINDING_ON_IMPORT)
+    monkeypatch.syspath_prepend(str(tmp_path))
+    monkeypatch.delitem(sys.modules, name, raising=False)
+    # restored at teardown: the module rebinds it
+    monkeypatch.setattr(restsource, "fetch_in_batches", restsource.fetch_in_batches)
+
+    rows = list(_fetched_rows(["uri:1", "uri:2"], {"fetch": f"{name}:fetch"}))
+    assert [r[0] for r in rows] == ["uri:1", "uri:2"]
+    assert importlib.import_module(name).CALLS == [["uri:1", "uri:2"]]

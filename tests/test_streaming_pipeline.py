@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -129,13 +131,23 @@ def _persisted_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
+def _dim_files(wh) -> dict[str, list[str]]:
+    """Each dim's file names: a snapshot swap writes new part files."""
+    return {
+        t: sorted(os.listdir(f"{wh}/{t}"))
+        for t in WAREHOUSE_SCHEMAS
+        if t.startswith("dim_")
+    }
+
+
 def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
     """Default-tier pass over the runner: first load, one daily
     increment, no-op rerun.  Each run's ``n_fact_rows`` (observed by the
     fact write itself, not by a second count) must equal the rows that
     landed in the fact parquet, the no-op run's empty writes must still
     report 0 for both facts, and every run must release the caches it
-    made (no RDD it persisted is still persisted)."""
+    made (no RDD it persisted is still persisted).  The no-op run
+    writes nothing: every dim keeps its files."""
     wh = str(tmp_path / "warehouse")
     before = _persisted_ids(spark)
 
@@ -176,10 +188,14 @@ def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
     assert res.n_fact_rows == {"tracks": 2, "podcasts": 1}
     assert res.dims["track"].count() == 3  # the new track enriched once
 
+    dims = _dim_files(wh)
     res = load()
     assert res.n_history_rows == 0
     assert res.n_fact_rows == {"tracks": 0, "podcasts": 0}
+    assert res.dead_letters == []
     assert landed() == second
+    assert _dim_files(wh) == dims
+    assert res.dims["track"].count() == 3
 
     # The declared warehouse schemas are what the run wrote.
     for table, schema in WAREHOUSE_SCHEMAS.items():
@@ -218,6 +234,61 @@ def test_pipeline_run_releases_its_caches_on_failure(
     with pytest.raises(RuntimeError, match="fact write failed"):
         pipeline.run(spark, str(raw_dir), str(tmp_path / "wh"), fetchers=_fake_fetchers())
     assert _persisted_ids(spark) <= before
+
+
+def test_pipeline_jobs_belong_to_the_callers_job_group(spark, raw_dir, tmp_path):
+    """Every job a run starts, on its branch and swap threads too,
+    belongs to the job group the caller set: the run's jobs are those
+    between a marker job before it and one after it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group: str) -> list[int]:
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        deadline = time.time() + 30  # the status store updates asynchronously
+        while not tracker.getJobIdsForGroup(group) and time.time() < deadline:
+            time.sleep(0.05)
+        return tracker.getJobIdsForGroup(group)
+
+    try:
+        lo = max(marker("before-run"))
+        sc.setJobGroup("g", "pipeline.run under a caller's job group")
+        pipeline.run(spark, str(raw_dir), str(tmp_path / "wh"), fetchers=_fake_fetchers())
+        hi = min(marker("after-run"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert hi - lo > 1
+    assert sorted(tracker.getJobIdsForGroup("g")) == list(range(lo + 1, hi))
+
+
+def test_pipeline_branch_failure_swaps_nothing(spark, raw_dir, tmp_path, monkeypatch):
+    """Only the podcasts branch's fact write fails, while the tracks
+    branch is still at work: ``run`` re-raises once both branches have
+    stopped, releases every cache it made and swaps no dim."""
+    wh = str(tmp_path / "wh")
+    pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
+    _write_export(raw_dir / "export_3.json", [history_row(ts="2022-01-01T08:00:00Z")])
+    dims = _dim_files(wh)
+    before = _persisted_ids(spark)
+    write_fact = pipeline.write_fact
+    podcasts_failed = threading.Event()
+
+    def podcasts_fail(fact, path):
+        if path.endswith("fact_podcasts"):
+            fact.count()  # fills the history and dim caches first
+            podcasts_failed.set()
+            raise RuntimeError("podcasts write failed")
+        # The tracks branch works on until the podcasts write has failed.
+        assert podcasts_failed.wait(60), "the branches did not overlap"
+        return write_fact(fact, path)
+
+    monkeypatch.setattr(pipeline, "write_fact", podcasts_fail)
+    with pytest.raises(RuntimeError, match="podcasts write failed"):
+        pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
+    assert _persisted_ids(spark) <= before
+    assert _dim_files(wh) == dims
 
 
 def test_pipeline_datasource_enrichment_path(spark, raw_dir, tmp_path):
