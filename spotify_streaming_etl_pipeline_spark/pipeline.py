@@ -18,11 +18,11 @@ pickled), so runs are fully testable offline; None skips enrichment
 Enrichment takes one of two paths, chosen by the size of the new-URI
 set alone.  Up to ``enrich_collect_max`` URIs the runner resolves the
 fetcher and runs the reference-shaped driver loop over the collected
-list.  Above it, ``sources.restsource.enrich_partitions`` stages the
-URI set as parquet and reads it back through the ``rest_enrichment``
-DataSource, so the fetch is a real scan — planned, UI-visible,
-partition-scheduled — and the URI set never materializes on the
-driver.
+list.  Above it, ``sources.restsource.enrich_partitions`` spreads the
+URI set over the session's default parallelism and fetches it in one
+Arrow map (``mapInArrow``), so the fetch is a planned,
+partition-scheduled stage and the URI set never materializes on the
+driver.  Neither path registers a data source or stages a file.
 
 Every intermediate that more than one step reads is computed once per
 run (lazy frames otherwise recompute a shared plan for each consumer):
@@ -77,11 +77,14 @@ dims, surrogate keys and files written are those of one serial run.
 A run over nothing new writes nothing: when the delta-filtered
 history is empty and every table of ``schemas.WAREHOUSE_SCHEMAS``
 exists, ``run`` returns those tables right after the count.  Otherwise
-it owns every cache above and the URI staging parquet: its
-``finally`` releases the caches and removes the staging once every
+it owns every cache above: its ``finally`` releases them once every
 thread has stopped and the returned frames are re-read from the
-warehouse, or when the run fails.  Small-file maintenance of the fact
-tables is a separate step
+warehouse, or when the run fails.  A run that fails leaves both fact
+tables as it found them: each branch lists its fact dir before the
+append, and ``run`` removes whatever either append added (the next
+run's delta cutoff is the max over both facts, so a fact row that
+outlived its failed run would hide the other fact's plays for good).
+Small-file maintenance of the fact tables is a separate step
 (``operators.maintenance.compact_partitioned``).
 """
 
@@ -105,15 +108,7 @@ from .plans.facts import build_fact_podcasts, build_fact_tracks, write_fact
 from .schemas import WAREHOUSE_SCHEMAS
 from .sources.enrichment import envelope_frame, fetch_in_batches
 from .sources.history import delta_filter, max_loaded_ts, read_history
-from .sources.restsource import (
-    RestEnrichmentDataSource,
-    _resolve_fetch,
-    enrich_partitions,
-)
-
-# Executor-path enrichment stages its URI sets under the warehouse,
-# which executors can reach.
-_URI_STAGING = "_staging/enrich_uris"
+from .sources.restsource import _resolve_fetch, enrich_partitions
 
 
 @dataclass
@@ -170,6 +165,33 @@ def _overwrite_parquet_safe(df: DataFrame, path: str) -> None:
     df.sparkSession.catalog.refreshByPath(path)
 
 
+def _tree(path: str) -> set[str] | None:
+    """Every file and dir under ``path``, relative to it, or None when
+    there is no dir at ``path``."""
+    if not os.path.isdir(path):
+        return None
+    return {
+        os.path.relpath(os.path.join(top, name), path)
+        for top, dirs, files in os.walk(path)
+        for name in dirs + files
+    }
+
+
+def _undo_append(spark: SparkSession, path: str, before: set[str] | None) -> None:
+    """Put the table dir ``path`` back to ``before`` (its ``_tree``
+    ahead of an append): remove every file and dir added since."""
+    if before is None:
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        for rel in sorted(_tree(path) - before):
+            target = os.path.join(path, rel)
+            if os.path.isdir(target):
+                shutil.rmtree(target)
+            elif os.path.exists(target):  # gone with an added parent dir
+                os.remove(target)
+    spark.catalog.refreshByPath(path)
+
+
 def _concurrently(spark: SparkSession, tasks: list[Callable]) -> list:
     """Run each of ``tasks`` on its own driver thread and return their
     results in order.  Every thread carries the calling thread's job
@@ -192,16 +214,22 @@ def run(
     the written dims/facts re-read from it.  ``fetchers`` maps an
     entity type to its ``"module:attr"`` fetcher; above
     ``enrich_collect_max`` new URIs an entity is enriched on executors.
-    Caches and URI staging: see the module docstring."""
+    Caches, and the fact appends a failed run removes: see the module
+    docstring."""
     cached: list[DataFrame] = []
+    appends: dict[str, set[str] | None] = {}
     try:
         return _run(
-            spark, raw_dir, warehouse_dir, fetchers or {}, enrich_collect_max, cached
+            spark, raw_dir, warehouse_dir, fetchers or {}, enrich_collect_max,
+            cached, appends,
         )
+    except BaseException:
+        for path, before in appends.items():
+            _undo_append(spark, path, before)
+        raise
     finally:
         for df in cached:
             df.unpersist()
-        shutil.rmtree(f"{warehouse_dir}/{_URI_STAGING}", ignore_errors=True)
 
 
 def _run(
@@ -211,8 +239,10 @@ def _run(
     fetchers: dict[str, str],
     enrich_collect_max: int,
     cached: list[DataFrame],
+    appends: dict[str, set[str] | None],
 ) -> RunResult:
-    """The body of ``run``; every frame it persists goes on ``cached``."""
+    """The body of ``run``; every frame it persists goes on ``cached``,
+    and each fact dir's ``_tree`` before its append on ``appends``."""
     out = RunResult()
 
     def persist(df: DataFrame) -> DataFrame:
@@ -241,9 +271,6 @@ def _run(
         out.n_fact_rows = dict.fromkeys(out.facts, 0)
         return out
     reason = persist(dims_mod.build_dim_reason(history, tables["dim_reason"]))
-    if fetchers:
-        # Once, before the branches: both may take the executor path.
-        spark.dataSource.register(RestEnrichmentDataSource)
 
     # -- 2. entity discovery + enrichment (A4/A5/J7, S3/S4/S7) --------------
     def enrich(entity: str, uris: DataFrame, dead: list) -> DataFrame | None:
@@ -254,18 +281,14 @@ def _run(
         # warehouse) is dim-sized and a driver-side collect is correct
         # (the reference materializes the same list, extractor.py:250).
         # Past ``enrich_collect_max`` the fetch moves onto executors as
-        # a planned rest_enrichment scan, and only the (rare) dead
-        # letters ever reach the driver.  One bounded collect decides
+        # a planned Arrow map, and only the (rare) dead letters ever
+        # reach the driver.  One bounded collect decides
         # the switch and, below it, is the driver list itself; uris
         # reads the cached history (or the envelopes), so the executor
         # path re-evaluating it is cheap.
         head = uris.limit(enrich_collect_max + 1).collect()
         if len(head) > enrich_collect_max:
-            enriched = persist(
-                enrich_partitions(
-                    uris, fetch, entity, f"{warehouse_dir}/{_URI_STAGING}/{entity}"
-                )
-            )
+            enriched = persist(enrich_partitions(uris, fetch, entity))
             # The dead-letter collect materializes (and caches) every
             # partition of enriched — after it, the ok-split below
             # reads the cache, never re-fetching.
@@ -329,8 +352,10 @@ def _run(
         if len(dims) < 2:
             return dead, dims, {}
         fact_df = build_fact(history, dims[entity], dims[parent], reason)
+        path = f"{warehouse_dir}/fact_{fact}"
+        appends[path] = _tree(path)
         # The star join runs once: the write observes its row count.
-        obs = write_fact(fact_df, f"{warehouse_dir}/fact_{fact}")
+        obs = write_fact(fact_df, path)
         return dead, dims, {fact: obs["n_rows"]}
 
     branches = _concurrently(

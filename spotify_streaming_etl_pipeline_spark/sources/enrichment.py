@@ -25,10 +25,11 @@ Scale split: ``enrich_uris`` is the reference-shaped driver-side path —
 correct when the *new-entity* set is dim-sized (the normal incremental
 case; the reference also materializes it as a Python list).  Larger
 sets go through ``sources.restsource.enrich_partitions``, the one
-executor-side path: the same loop runs inside the ``rest_enrichment``
-DataSource scan, so the URI set never lands on the driver and fetch
-parallelism scales with executors (mind the API's global rate limit —
-cap partitions or wrap ``fetch`` in a token bucket).
+executor-side path: the same loop runs once per Arrow batch inside a
+``mapInArrow`` stage, so the URI set never lands on the driver and
+fetch parallelism scales with executors (mind the API's global rate
+limit — cap the concurrent tasks or wrap ``fetch`` in a token
+bucket).
 """
 
 from __future__ import annotations

@@ -1,39 +1,36 @@
-"""The REST enrichment as a first-class Spark data source (Spark 4
-Python Data Source API): ``spark.read.format("rest_enrichment")``,
-and the engine's one executor-side enrichment path on top of it,
-``enrich_partitions``.
+"""The REST enrichment on executors: ``enrich_partitions``, the
+engine's one executor-side enrichment path, and a Spark 4 Python
+streaming data source over the same fetch,
+``spark.readStream.format("rest_enrichment")``.
 
-Where ``sources/enrichment.py`` offers the driver-side loop, this
-registers the SAME batch/retry/dead-letter fetch loop
-(`fetch_in_batches`) as a planned SOURCE:
+Where ``sources/enrichment.py`` offers the driver-side loop, this runs
+the SAME batch/retry/dead-letter fetch loop (`fetch_in_batches`)
+inside Spark tasks:
 
-- the URI feed is a parquet file/dir with a URI column, planned one
-  input partition per row group from parquet FOOTER metadata alone;
-  each executor reads its own row group once with pyarrow, so an
-  arbitrarily large URI set never exists as a driver-side Python
-  object.  Fetch parallelism follows the staging file layout
-  (``enrich_partitions`` caps each staged file at 200 URIs);
-  it is cluster-scheduled like any scan, shows up in the UI as a
-  scan, and composes with every downstream operator;
+- ``enrich_partitions`` spreads the URI set over the session's default
+  parallelism and fetches each Arrow batch of it in one ``mapInArrow``
+  call, so an arbitrarily large URI set never exists as a driver-side
+  Python object; the fetch is a planned, partition-scheduled stage
+  like any other, with no data-source registration or staging file;
 - successes and dead letters come back in ONE frame
   (``error_reason IS NULL`` splits them), so the caller lands both
   sides with ordinary filters instead of wiring two code paths.
 
-Batch reader options: ``uris_path`` (required), ``fetch`` (required),
-``entity``, ``uri_col`` (default ``uri``), ``batch_size``,
-``retry_limit``.  The stream reader takes its feed inline instead:
-``uris`` (a JSON list), ``fetch``, ``entity``, ``uris_per_batch``,
-``batch_size``, ``retry_limit``.
+The stream reader takes its feed inline, as options: ``uris`` (a JSON
+list), ``fetch``, ``entity``, ``uris_per_batch``, ``batch_size``,
+``retry_limit``.
 
-The ``fetch`` callable must be importable on executors, so it is
-passed as a ``"module:attr"`` string option (options are strings by
-API contract).  If the resolved attribute is marked with
-``__rest_factory__ = True`` it is called once per partition to
-produce the real fetch callable — that lets tests and credentialed
-clients close over state that cannot be pickled into an option.
+The ``fetch`` callable must be importable on executors, so it is named
+by a ``"module:attr"`` string (data-source options are strings by API
+contract).  If the resolved attribute is marked with
+``__rest_factory__ = True`` it is called once per fetch (one Arrow
+batch, or one stream read) to produce the real fetch callable — that
+lets tests and credentialed clients close over state that cannot be
+pickled.
 
-At 100 TB scale mind the API's global rate limit: cap the staged row
-groups × concurrent tasks, or wrap ``fetch`` in a token bucket.
+At 100 TB scale mind the API's global rate limit: every running task
+fetches at once, so cap the concurrent tasks, or wrap ``fetch`` in a
+token bucket.
 """
 
 from __future__ import annotations
@@ -41,60 +38,48 @@ from __future__ import annotations
 import importlib
 import json
 from collections.abc import Iterator
+from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from .enrichment import BATCH_SIZE, fetch_in_batches
 
+_ROW_FIELDS = ("uri", "raw_data", "error_reason")
+_ROW_SCHEMA = "uri string, raw_data string, error_reason string"
 
-def enrich_partitions(
-    uris: DataFrame, fetch: str, entity: str, staging_dir: str
-) -> DataFrame:
+
+def enrich_partitions(uris: DataFrame, fetch: str, entity: str) -> DataFrame:
     """Executor-side enrichment of a URI set of any size (``uris``: a
-    frame of distinct values in its ``uri`` column): stage the column
-    as parquet under ``staging_dir``, at most 200 URIs per file (one
-    row group, so one fetch partition, each), then scan it back
-    through ``rest_enrichment`` with the ``"module:attr"`` fetcher
-    ``fetch``.  Staging is the write alone: the file cap sizes the
-    fetch partitions without counting or reshuffling the set.  The URI
-    set rides executor-to-executor — no driver-side list at any size.
-    Returns ``(uri, raw_data, error_reason)``: ``error_reason IS
-    NULL`` rows are envelopes, the rest dead letters.  The session must
-    have ``RestEnrichmentDataSource`` registered (``pipeline.run``
-    registers it once per run).  The frame reads ``staging_dir``; the
-    caller removes it once the frame is no longer needed."""
-    spark = uris.sparkSession
-    uris.select("uri").write.mode("overwrite").option(
-        "maxRecordsPerFile", 200
-    ).parquet(staging_dir)
+    frame of distinct values in its ``uri`` column) with the
+    ``"module:attr"`` fetcher ``fetch``: the set is spread round-robin
+    over ``defaultParallelism`` tasks, and each Arrow batch of a task
+    (at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` URIs) is
+    one fetch.  The URI set rides executor to executor — no
+    driver-side list at any size.  Returns ``(uri, raw_data,
+    error_reason)``: ``error_reason IS NULL`` rows are envelopes, the
+    rest dead letters."""
+    n_tasks = uris.sparkSession.sparkContext.defaultParallelism
     return (
-        spark.read.format("rest_enrichment")
-        .option("uris_path", staging_dir)
-        .option("entity", entity)
-        .option("fetch", fetch)
-        .load()
+        uris.select("uri")
+        .repartition(n_tasks)
+        .mapInArrow(
+            partial(_fetch_batches, {"fetch": fetch, "entity": entity}), _ROW_SCHEMA
+        )
     )
 
 
-class UriFileChunk(InputPartition):
-    """One parquet ROW GROUP: (path, row_group).  Planned from footer
-    metadata only; the rows are read executor-side, each row group
-    read exactly once.  (A row-RANGE chunking was rejected: parquet
-    cannot seek to a row inside a row group, so k sub-chunks of one
-    group would each decode the whole group — k-fold read
-    amplification on exactly the large feeds the path exists for.
-    Fetch parallelism therefore follows the STAGING LAYOUT — writers
-    control it by capping the URIs per staged file, as
-    ``enrich_partitions`` does.)"""
-
-    def __init__(self, path: str, row_group: int):
-        self.path, self.row_group = path, row_group
+def _fetch_batches(
+    options: dict, batches: Iterator[pa.RecordBatch]
+) -> Iterator[pa.RecordBatch]:
+    """One fetch per Arrow batch of URIs, as ``_ROW_FIELDS`` rows."""
+    for batch in batches:
+        uris = sorted({u for u in batch.column(0).to_pylist() if u is not None})
+        cols = list(zip(*_fetched_rows(uris, options))) or [()] * len(_ROW_FIELDS)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, pa.string()) for c in cols], names=list(_ROW_FIELDS)
+        )
 
 
 def _resolve_fetch(path: str):
@@ -107,7 +92,7 @@ def _resolve_fetch(path: str):
 
 def _fetched_rows(uris: list[str], options) -> Iterator[tuple]:
     """``(uri, raw_data, error_reason)`` rows of one fetch over ``uris``
-    with the source's ``fetch``/``entity``/``batch_size``/``retry_limit``
+    with the ``fetch``/``entity``/``batch_size``/``retry_limit``
     options."""
     # Resolve first: importing the fetcher's module may rebind this
     # module's ``fetch_in_batches`` (a wrapper that logs fetches), and
@@ -126,48 +111,9 @@ def _fetched_rows(uris: list[str], options) -> Iterator[tuple]:
         yield (uri, None, reason)
 
 
-class RestEnrichmentReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.options = options
-        self.uris_path = options["uris_path"]
-        self.uri_col = options.get("uri_col", "uri")
-
-    def partitions(self) -> list[InputPartition]:
-        """One chunk per parquet row group, planned from footers alone
-        — the driver never holds the URI values and each executor
-        reads its own row group exactly once."""
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(self.uris_path):
-            files = sorted(glob.glob(os.path.join(self.uris_path, "*.parquet")))
-        else:
-            files = [self.uris_path]
-        return [
-            UriFileChunk(f, g)
-            for f in files
-            for g in range(pq.ParquetFile(f).metadata.num_row_groups)
-        ]
-
-    def read(self, partition: UriFileChunk | None) -> Iterator[tuple]:
-        import pyarrow.parquet as pq
-
-        if partition is None:
-            # A feed with no row group plans no chunk, and Spark then
-            # reads one partition of None.
-            return iter(())
-        tbl = pq.ParquetFile(partition.path).read_row_group(
-            partition.row_group, columns=[self.uri_col]
-        )
-        uris = sorted({u for u in tbl.column(0).to_pylist() if u is not None})
-        return _fetched_rows(uris, self.options)
-
-
 class RestEnrichmentDataSource(DataSource):
     """``spark.dataSource.register(RestEnrichmentDataSource)`` then
-    ``spark.read.format("rest_enrichment").options(...).load()``."""
+    ``spark.readStream.format("rest_enrichment").options(...).load()``."""
 
     def __init__(self, options: dict):
         if "fetch" not in options:
@@ -179,10 +125,7 @@ class RestEnrichmentDataSource(DataSource):
         return "rest_enrichment"
 
     def schema(self) -> str:
-        return "uri string, raw_data string, error_reason string"
-
-    def reader(self, schema) -> RestEnrichmentReader:
-        return RestEnrichmentReader(self.options)
+        return _ROW_SCHEMA
 
     def simpleStreamReader(self, schema) -> "RestEnrichmentStreamReader":
         return RestEnrichmentStreamReader(self.options)

@@ -30,7 +30,6 @@ _SLOW_BATTERIES = {
     "test_corpus_build.py::test_build_training_corpus_verbatim_span_removal",
     "test_corpus_build.py::test_build_training_corpus_end_to_end",
     "test_corpus_build.py::test_build_training_corpus_occurrence_mode",
-    "test_streaming_pipeline.py::test_pipeline_datasource_enrichment_path",
     "test_streaming_pipeline.py::test_pipeline_end_to_end_then_incremental_noop",
     "test_streaming_pipeline.py::test_pipeline_compacts_fact_partitions_end_to_end",
     "test_streaming_pipeline.py::test_fact_ingest_batch_replay_is_idempotent",

@@ -4,18 +4,18 @@ the reference's own truth tables
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
+import json
+import os
+
 import pytest
+from pyspark import TaskContext
 
 from spotify_streaming_etl_pipeline_spark.sources.enrichment import (
     ApiError,
     enrich_uris,
     fetch_in_batches,
 )
-from spotify_streaming_etl_pipeline_spark.sources.restsource import (
-    RestEnrichmentDataSource,
-    enrich_partitions,
-)
+from spotify_streaming_etl_pipeline_spark.sources.restsource import enrich_partitions
 from tests.fixtures import frame
 
 
@@ -141,24 +141,37 @@ def fetch_flagging_bad(batch):
     }
 
 
+def fetch_logging_flagging_bad(batch):
+    # Logs each call, with the task that makes it, under the dir the
+    # calling job names in its "test.fetch_log" local property.
+    ctx = TaskContext.get()
+    log = os.path.join(ctx.getLocalProperty("test.fetch_log"), f"{os.getpid()}.jsonl")
+    with open(log, "a") as f:
+        f.write(json.dumps({"task": ctx.partitionId(), "uris": batch}) + "\n")
+    return fetch_flagging_bad(batch)
+
+
 def test_enrich_partitions_distributed_split(spark, tmp_path):
-    """The executor-side path: the URI set is staged as parquet, at most
-    200 URIs per file, each file one row group and so one fetch
-    partition, and scanned back through rest_enrichment; one pass
-    yields both the envelopes and the dead letters.  The set is one
-    partition, so a single write task must split it across files."""
-    spark.dataSource.register(RestEnrichmentDataSource)
+    """The executor-side path: a URI set held in one partition is
+    fetched by ``defaultParallelism`` tasks, each URI exactly once, and
+    one pass yields both the envelopes and the dead letters."""
     uris = [f"u{i}" for i in range(450)] + ["u3bad"]
     new = frame(spark, [(u,) for u in uris], "uri string").coalesce(1)
-    staging = tmp_path / "staging"
     out = enrich_partitions(
-        new, "tests.test_enrichment:fetch_flagging_bad", "track", str(staging)
+        new, "tests.test_enrichment:fetch_logging_flagging_bad", "track"
     )
-    staged = [pq.ParquetFile(f).metadata for f in staging.glob("*.parquet")]
-    assert sorted(m.num_rows for m in staged) == [51, 200, 200]
-    assert all(m.num_row_groups == 1 for m in staged)
     assert out.columns == ["uri", "raw_data", "error_reason"]
-    rows = out.collect()
+    sc = spark.sparkContext
+    sc.setLocalProperty("test.fetch_log", str(tmp_path))
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("test.fetch_log", None)
+    calls = [
+        json.loads(line) for log in tmp_path.glob("*.jsonl") for line in log.open()
+    ]
+    assert {c["task"] for c in calls} == set(range(sc.defaultParallelism))
+    assert sorted(u for c in calls for u in c["uris"]) == sorted(uris)
     ok = [r["uri"] for r in rows if r["error_reason"] is None]
     bad = [(r["uri"], r["error_reason"]) for r in rows if r["error_reason"] is not None]
     assert sorted(ok) == sorted(uris[:-1])

@@ -1,19 +1,18 @@
-"""The REST enrichment exposed as a Spark 4 Python Data Source
-(sources/restsource.py): a parquet-staged URI feed fetched one
-partition per row group, success + dead-letter rows in one frame,
-factory-resolved fetch callables, and the stream reader's inline
+"""The REST enrichment on executors (sources/restsource.py):
+``enrich_partitions`` spreads a URI frame over the default parallelism
+and returns successes and dead letters in one frame, fetch callables
+resolve through factories, and the stream reader drains its inline
 feed."""
 
 from __future__ import annotations
 
 import json
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from spotify_streaming_etl_pipeline_spark.sources.restsource import (
     RestEnrichmentDataSource,
+    enrich_partitions,
 )
 from tests.fixtures import frame
 
@@ -36,31 +35,16 @@ def make_fetch():
 make_fetch.__rest_factory__ = True
 
 
-def _stage(tmp_path, uris, per_row_group=2):
-    """``uris`` as one parquet file, ``per_row_group`` URIs per row
-    group (the reader plans one partition per row group)."""
-    path = str(tmp_path / "uris.parquet")
-    pq.write_table(
-        pa.table({"uri": pa.array(uris, pa.string())}), path, row_group_size=per_row_group
-    )
-    return path
-
-
-def _read(spark, uris_path, fetch_path):
-    spark.dataSource.register(RestEnrichmentDataSource)
-    return (
-        spark.read.format("rest_enrichment")
-        .option("uris_path", uris_path)
-        .option("entity", "artists")
-        .option("fetch", fetch_path)
-        .option("batch_size", "2")
-        .load()
+def _enrich(spark, uris, fetch_path):
+    return enrich_partitions(
+        frame(spark, [(u,) for u in uris], "uri string"), fetch_path, "artists"
     )
 
 
-def test_rest_source_reads_successes_and_dead_letters(spark, tmp_path):
+def test_rest_source_reads_successes_and_dead_letters(spark):
     uris = [f"uri:{i}" for i in range(5)] + ["uri:99"]  # 99 -> null
-    df = _read(spark, _stage(tmp_path, uris), "tests.test_restsource:fake_fetch")
+    df = _enrich(spark, uris, "tests.test_restsource:fake_fetch")
+    assert df.columns == ["uri", "raw_data", "error_reason"]
     rows = {r.uri: r for r in df.collect()}
     assert set(rows) == set(uris)
     ok = [r for r in rows.values() if r.error_reason is None]
@@ -68,52 +52,25 @@ def test_rest_source_reads_successes_and_dead_letters(spark, tmp_path):
     assert len(ok) == 5 and len(dead) == 1
     assert dead[0].uri == "uri:99"
     assert dead[0].error_reason == "API returned null"
+    assert dead[0].raw_data is None
     payload = json.loads(rows["uri:2"].raw_data)
     assert payload["name"] == "artist 2"
 
 
-def test_rest_source_partitions_the_uri_list(spark, tmp_path):
+def test_rest_source_partitions_the_uri_list(spark):
     uris = [f"uri:{i}" for i in range(6)]
-    df = _read(spark, _stage(tmp_path, uris), "tests.test_restsource:fake_fetch")
-    assert df.rdd.getNumPartitions() == 3  # one per row group of the one file
+    df = _enrich(spark, uris, "tests.test_restsource:fake_fetch")
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert df.count() == 6
 
 
-def test_rest_source_resolves_fetch_factories(spark, tmp_path):
-    uris = ["uri:0", "uri:1"]
-    df = _read(spark, _stage(tmp_path, uris), "tests.test_restsource:make_fetch")
+def test_rest_source_resolves_fetch_factories(spark):
+    df = _enrich(spark, ["uri:0", "uri:1"], "tests.test_restsource:make_fetch")
     assert df.filter(F.col("error_reason").isNull()).count() == 2
 
 
-def test_rest_source_reads_uris_from_parquet_path(spark, tmp_path):
-    """uris_path as a directory of Spark-written files: partitions are
-    planned from footer metadata (one per row group — the staging layout
-    sets fetch parallelism, and no row group is ever read twice), the
-    scan output matches the single-file feed exactly, and an empty feed
-    (a file with no row group) reads as no rows."""
-    uris = [f"uri:{i}" for i in range(6)] + ["uri:99"]
-    staged = str(tmp_path / "uris")
-    frame(spark, [(u,) for u in uris], "uri string").repartition(3).write.parquet(
-        staged
-    )
-    df = _read(spark, staged, "tests.test_restsource:fake_fetch")
-    assert df.rdd.getNumPartitions() == 3  # one per staged row group
-    rows = {r.uri: r for r in df.collect()}
-    single = {
-        r.uri: r
-        for r in _read(
-            spark, _stage(tmp_path, uris), "tests.test_restsource:fake_fetch"
-        ).collect()
-    }
-    assert set(rows) == set(single) == set(uris)
-    for u in uris:
-        assert (rows[u].raw_data, rows[u].error_reason) == (
-            single[u].raw_data,
-            single[u].error_reason,
-        )
-    empty = str(tmp_path / "no_uris")
-    frame(spark, [], "uri string").write.parquet(empty)
-    assert _read(spark, empty, "tests.test_restsource:fake_fetch").count() == 0
+def test_rest_source_empty_uri_set_reads_no_rows(spark):
+    assert _enrich(spark, [], "tests.test_restsource:fake_fetch").count() == 0
 
 
 def test_rest_source_streams_the_feed_incrementally(spark, tmp_path):

@@ -140,6 +140,15 @@ def _dim_files(wh) -> dict[str, list[str]]:
     }
 
 
+def _files(path) -> list[str]:
+    """Every file under the table dir ``path``, relative to it."""
+    return sorted(
+        os.path.relpath(os.path.join(top, name), path)
+        for top, _dirs, names in os.walk(path)
+        for name in names
+    )
+
+
 def test_pipeline_first_load_increment_noop_smoke(spark, raw_dir, tmp_path):
     """Default-tier pass over the runner: first load, one daily
     increment, no-op rerun.  Each run's ``n_fact_rows`` (observed by the
@@ -266,11 +275,13 @@ def test_pipeline_jobs_belong_to_the_callers_job_group(spark, raw_dir, tmp_path)
 def test_pipeline_branch_failure_swaps_nothing(spark, raw_dir, tmp_path, monkeypatch):
     """Only the podcasts branch's fact write fails, while the tracks
     branch is still at work: ``run`` re-raises once both branches have
-    stopped, releases every cache it made and swaps no dim."""
+    stopped, releases every cache it made, swaps no dim and removes the
+    tracks append, so a rerun still loads the new play."""
     wh = str(tmp_path / "wh")
     pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
     _write_export(raw_dir / "export_3.json", [history_row(ts="2022-01-01T08:00:00Z")])
     dims = _dim_files(wh)
+    fact_tracks = _files(f"{wh}/fact_tracks")
     before = _persisted_ids(spark)
     write_fact = pipeline.write_fact
     podcasts_failed = threading.Event()
@@ -289,30 +300,33 @@ def test_pipeline_branch_failure_swaps_nothing(spark, raw_dir, tmp_path, monkeyp
         pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
     assert _persisted_ids(spark) <= before
     assert _dim_files(wh) == dims
+    assert _files(f"{wh}/fact_tracks") == fact_tracks
+    monkeypatch.setattr(pipeline, "write_fact", write_fact)
+    res = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
+    assert res.n_fact_rows["tracks"] == 1
 
 
-def test_pipeline_datasource_enrichment_path(spark, raw_dir, tmp_path):
-    """enrich_collect_max=0 sends every URI set through the planned
-    rest_enrichment DataSource scan (URI staging parquet -> one
-    partition per staged row group); the warehouse must come out
-    identical to the driver-loop path, and the run must remove its URI
-    staging."""
+def test_pipeline_executor_enrichment_path(spark, raw_dir, tmp_path):
+    """enrich_collect_max=0 sends every URI set through the executor
+    path (``enrich_partitions``, one Arrow map); the warehouse must
+    come out identical to the driver-loop path, and the run must leave
+    no URI staging behind."""
     wh_driver = str(tmp_path / "wh_driver")
-    wh_ds = str(tmp_path / "wh_ds")
+    wh_exec = str(tmp_path / "wh_exec")
     res_driver = pipeline.run(
         spark, str(raw_dir), wh_driver, fetchers=_fake_fetchers()
     )
-    res_ds = pipeline.run(
-        spark, str(raw_dir), wh_ds, fetchers=_fake_fetchers(),
+    res_exec = pipeline.run(
+        spark, str(raw_dir), wh_exec, fetchers=_fake_fetchers(),
         enrich_collect_max=0,
     )
-    assert res_ds.dead_letters == []
-    assert res_ds.n_fact_rows == res_driver.n_fact_rows
+    assert res_exec.dead_letters == []
+    assert res_exec.n_fact_rows == res_driver.n_fact_rows
     for entity in ("track", "artist", "episode", "podcast", "reason"):
         d_rows = sorted(map(tuple, res_driver.dims[entity].collect()))
-        x_rows = sorted(map(tuple, res_ds.dims[entity].collect()))
-        assert x_rows == d_rows, f"dim_{entity} differs on the DataSource path"
-    assert not os.path.exists(f"{wh_ds}/_staging/enrich_uris")
+        x_rows = sorted(map(tuple, res_exec.dims[entity].collect()))
+        assert x_rows == d_rows, f"dim_{entity} differs on the executor path"
+    assert not os.path.exists(f"{wh_exec}/_staging")
 
 
 def test_streaming_ingest_one_microbatch(spark, raw_dir, tmp_path):
