@@ -47,7 +47,7 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from .enrichment import BATCH_SIZE, fetch_in_batches
 
 _ROW_FIELDS = ("uri", "raw_data", "error_reason")
-_ROW_SCHEMA = "uri string, raw_data string, error_reason string"
+_ROW_SCHEMA = ", ".join(f"{name} string" for name in _ROW_FIELDS)
 
 
 def enrich_partitions(uris: DataFrame, fetch: str, entity: str) -> DataFrame:
@@ -76,7 +76,8 @@ def _fetch_batches(
     """One fetch per Arrow batch of URIs, as ``_ROW_FIELDS`` rows."""
     for batch in batches:
         uris = sorted({u for u in batch.column(0).to_pylist() if u is not None})
-        cols = list(zip(*_fetched_rows(uris, options))) or [()] * len(_ROW_FIELDS)
+        rows = list(_fetched_rows(uris, options))
+        cols = [[r[i] for r in rows] for i in range(len(_ROW_FIELDS))]
         yield pa.RecordBatch.from_arrays(
             [pa.array(c, pa.string()) for c in cols], names=list(_ROW_FIELDS)
         )

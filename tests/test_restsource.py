@@ -70,7 +70,8 @@ def test_rest_source_resolves_fetch_factories(spark):
 
 
 def test_rest_source_empty_uri_set_reads_no_rows(spark):
-    assert _enrich(spark, [], "tests.test_restsource:fake_fetch").count() == 0
+    for uris in ([], [None]):  # a null URI is never fetched
+        assert _enrich(spark, uris, "tests.test_restsource:fake_fetch").count() == 0
 
 
 def test_rest_source_streams_the_feed_incrementally(spark, tmp_path):
