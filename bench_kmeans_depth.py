@@ -70,7 +70,9 @@ def main() -> None:
                 spark.sparkContext._jvm.System.gc()
             return round(statistics.median(samples), 2)
 
-        two = timed(lambda: similarity.kmeans_twolevel(emb, n_iter=2))
+        two = timed(
+            lambda: similarity.kmeans_multilevel(emb, n_iter=2, levels=2)
+        )
         three = timed(
             lambda: similarity.kmeans_multilevel(emb, n_iter=2, levels=3)
         )

@@ -14,7 +14,7 @@ Spark jobs while its DataFrame is built: the banded near-dup kernel
 ``llm.dedup.band_candidates`` (every MinHash/SimHash query and the
 admission stream), ``llm.multimodal.ahash_near_dup`` (the image and
 audio fingerprint pairs), the k-means loops of ``llm.similarity``
-(``kmeans_lloyd``, ``kmeans_twolevel``, ``kmeans_multilevel``: the
+(``kmeans_lloyd``, ``kmeans_multilevel``: the
 SemDeDup, IVF and cluster queries, one round after another), the
 PageRank loop of ``plans.quality`` (``copurchase_pagerank``) and the
 unigram training loop (``unigram_vocab``).

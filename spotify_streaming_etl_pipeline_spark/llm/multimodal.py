@@ -53,7 +53,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
@@ -71,24 +70,6 @@ BLOB_FEATURE_SCHEMA = StructType(
         StructField("content_md5", StringType()),
     ]
 )
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("mime", StringType()),
-                    StructField("n_bytes", LongType()),
-                    StructField("source", StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 
 def _blob_stage(
     media: DataFrame,

@@ -92,6 +92,16 @@ def _ranked(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _exploded(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """(vec_id, dim, x): one row per vector component, as double — the
+    operand of every relational centroid join here and in the online
+    sink.  Callers add their own repartition / persist."""
+    return df.select(
+        "vec_id",
+        F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x"),
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -133,10 +143,7 @@ def _ivf_from_centroid_table(
     cell id — both required for the SQL oracle to agree bit-for-bit."""
     from pyspark.sql import Window
 
-    dims = emb.select(
-        "vec_id",
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x"),
-    )
+    dims = _exploded(emb, vec_col)
     d2 = (
         dims.join(F.broadcast(cents), "dim")
         .groupBy("vec_id", "cell")
@@ -376,10 +383,7 @@ def ivf_topk_hashseed(
     Rounding discipline: centroid components and cell distances round
     to 4dp before any comparison, absorbing float sum-order drift
     between engines; ties break on cell id."""
-    dims = emb.select(
-        "vec_id",
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x"),
-    )
+    dims = _exploded(emb, vec_col)
     cents = (
         dims.withColumn("cell", (F.col("vec_id") % n_centroids).cast("int"))
         .groupBy("cell", "dim")
@@ -403,30 +407,18 @@ def kmeans_lloyd(
     n_clusters == c) — the deterministic, oracle-unrollable form of
     KMeans training (same discipline as ``bpe_train`` /
     ``copurchase_pagerank``: a fixed iteration count whose DuckDB
-    oracle replays every round).
+    oracle replays every round).  The rounds are ``_lloyd``'s.
 
-    Round shape (all relational, all codegen): assignment is the
-    exploded-dims join against the BROADCAST centroid table — linear
-    in corpus x n_clusters, never a pairwise shuffle; the update is
-    one per-(cell, dim) mean over the assigned dims. The centroid
-    table (n_clusters x dim rows) is ``localCheckpoint``-ed per round:
-    it is tiny, but its lineage contains the full previous assignment
-    — without truncation round N replays rounds 1..N-1 (the
-    ``dup_clusters`` lesson).  Rounding discipline: centroid
-    components and distances round to 4dp before comparison, ties
-    break on cell id — required for bit-exact SQL parity.
-
-    A cell that loses all members simply disappears from the centroid
-    table (no re-seeding) — deterministic on both engines.  At lake
-    scale the exploded-dims table is the big operand: it is built once
-    and persisted by the caller via ``_dims_df`` when shared with
-    other consumers.  ``_dims_df`` contract: the returned assignment
-    is a LAZY plan over the caller's dims (the per-round checkpoints
-    are ``eager=False``), so the caller must keep its dims persisted
-    until the returned frame has been materialized — unpersisting
-    earlier is still correct but silently replays the whole Lloyd loop
-    from the uncached source.  Without ``_dims_df`` the assignment is
-    checkpointed eagerly before the self-made dims are released.
+    At lake scale the exploded-dims table is the big operand: it is
+    built once and persisted by the caller via ``_dims_df`` when
+    shared with other consumers.  ``_dims_df`` contract: the returned
+    assignment is a LAZY plan over the caller's dims (the per-round
+    checkpoints are ``eager=False``), so the caller must keep its dims
+    persisted until the returned frame has been materialized —
+    unpersisting earlier is still correct but silently replays the
+    whole Lloyd loop from the uncached source.  Without ``_dims_df``
+    the assignment is checkpointed eagerly before the self-made dims
+    are released.
 
     ``n_clusters=None`` derives k = ceil(n / target_cluster_size)
     from a scalar count — the SemDeDup-paper discipline (k grows with
@@ -436,85 +428,112 @@ def kmeans_lloyd(
     landed).  Above ``twolevel_crossover`` vectors (measured ~10k
     crossover: flat auto-k assignment is O(n*k) = O(n²/64) candidate
     rows, 22x slower than two-level at n=200k and diverging) the
-    auto-k path DELEGATES to ``kmeans_twolevel``, so every auto-k
-    caller — SemDeDup, IVF training — gets the O(n*sqrt(k)) plan by
-    default; pass ``twolevel_crossover=None`` to force the flat plan.
-    ``n`` is derived from the persisted exploded-dims table (one pass
-    over cached data), never a second action over a possibly-expensive
-    un-cached input plan, and a self-created dims persist is released
-    before returning (the final assignment is eagerly
-    localCheckpoint-ed first — n x 2 longs, tiny)."""
+    auto-k path DELEGATES to ``kmeans_multilevel(levels=2)``, so every
+    auto-k caller — SemDeDup, IVF training — gets the O(n*sqrt(k))
+    plan by default; pass ``twolevel_crossover=None`` to force the
+    flat plan.  ``n`` is derived from the persisted exploded-dims
+    table (one pass over cached data), never a second action over a
+    possibly-expensive un-cached input plan, and a self-created dims
+    persist is released before returning (the final assignment is
+    eagerly localCheckpoint-ed first — n x 2 longs, tiny)."""
     owns_dims = _dims_df is None
     dims = (
-        _dims_df
-        if _dims_df is not None
-        else emb.select(
-            "vec_id",
-            F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x"),
-        )
-        .repartition("vec_id")
-        .persist()
+        _exploded(emb, vec_col).repartition("vec_id").persist()
+        if owns_dims
+        else _dims_df
     )
     if n_clusters is None:
         n = dims.select("vec_id").distinct().count()
         if twolevel_crossover is not None and n > twolevel_crossover:
-            out = kmeans_twolevel(
-                emb,
-                n_iter,
-                vec_col,
-                target_cluster_size,
-                _dims_df=dims,
-                _n=n,
+            out = kmeans_multilevel(
+                emb, None, n_iter, vec_col, target_cluster_size, levels=2,
+                _dims_df=dims, _n=n,
             )
             if owns_dims:
                 dims.unpersist()
             return out
         n_clusters = max(1, -(-n // target_cluster_size))
-    cents = (
-        dims.withColumn("cell", (F.col("vec_id") % n_clusters).cast("int"))
-        .groupBy("cell", "dim")
-        .agg(F.round(F.avg("x"), 4).alias("c"))
-    )
-    # Per-round ``eager=False`` checkpoints: lineage truncates at each
-    # round (later rounds read the pinned centroid rows, not the
-    # replayed plan).  They are NOT lazy under AQE: taking one runs
-    # the shuffle-map stages below it at once, so the loop still runs
-    # its jobs round by round while the frame is built (kmeans_lloyd
-    # with n_iter=3 over 60 vectors on local[2]: 14 jobs while built,
-    # 1 at the first action).  What ``eager=False`` saves is the
-    # checkpoint's own result stage per round — at sf0.1 the
-    # per-action floor dominated these tiny (k x dim)-row checkpoints
-    # (r13 A/B: kmeans_twolevel 4.7 -> 3.0 s standalone).  Values are
-    # unchanged: checkpointing only pins rows.
-    for _ in range(n_iter):
-        cents = cents.localCheckpoint(eager=False)
-        assigned = _nearest_cell(dims, cents)
-        cents = (
-            dims.join(assigned, "vec_id")
-            .groupBy("cell", "dim")
-            .agg(F.round(F.avg("x"), 4).alias("c"))
-        )
-    cents = cents.localCheckpoint(eager=False)
-    out = _nearest_cell(dims, cents)
+    out = _lloyd(dims, n_clusters, n_iter)
     if owns_dims:
         out = out.localCheckpoint(eager=True)
         dims.unpersist()
     return out
 
 
-def _nearest_cell(dims: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell): nearest centroid per vector from an exploded
-    (vec_id, dim, x) table and a (cell, dim, c) centroid table —
-    the assignment core shared by ``kmeans_lloyd`` and
-    ``_ivf_from_centroid_table`` (4dp-rounded distances, cell-id tie
-    break).  The argmin is a partially-aggregated min(struct(d2,
-    cell)) — identical result to a row_number-over-(d2, cell) window,
-    but the map side collapses the n x k candidate rows to one per
-    vector per partition BEFORE the shuffle, where the window form
-    sorts the full candidate table through the exchange."""
+def _lloyd(
+    dims: DataFrame,
+    k: int,
+    n_iter: int,
+    keys: tuple[str, ...] = (),
+    broadcast: bool = True,
+) -> DataFrame:
+    """(vec_id, *keys, cell): Lloyd's k-means run independently within
+    each ``keys`` group of an exploded (vec_id, *keys, dim, x) table —
+    the one loop behind flat clustering (``keys=()``) and every
+    refinement level of ``kmeans_multilevel`` (``keys=("grp",)``).
+    Init cell = vec_id % k within the group (hash-seeded, oracle-
+    replayable); each round assigns through ``_nearest_cell`` and
+    re-estimates every centroid as the per-(*keys, cell, dim) mean of
+    its members.  All relational and codegen: every centroid table is
+    keyed on the group, so each vector only ever meets its own group's
+    k centroids — the candidate join is O(rows x k), never a pairwise
+    shuffle.  Rounding discipline: centroid components and distances
+    round to 4dp before comparison, ties break on cell id — required
+    for bit-exact SQL parity.  A cell that loses all members simply
+    disappears from the centroid table (no re-seeding) —
+    deterministic on both engines.
+
+    Per-round ``eager=False`` checkpoints: the centroid table (k x dim
+    rows per group) is tiny, but its lineage contains the full
+    previous assignment — without truncation round N replays rounds
+    1..N-1 (the ``dup_clusters`` lesson).  They are NOT lazy under
+    AQE: taking one runs the shuffle-map stages below it at once, so
+    the loop still runs its jobs round by round while the frame is
+    built (kmeans_lloyd with n_iter=3 over 60 vectors on local[2]: 14
+    jobs while built, 1 at the first action).  What ``eager=False``
+    saves is the checkpoint's own result stage per round — at sf0.1
+    the per-action floor dominated these tiny checkpoints (r13 A/B:
+    the ``kmeans_twolevel`` query 4.7 -> 3.0 s standalone).  Values
+    are unchanged: checkpointing only pins rows.  Callers that release
+    ``dims`` materialize the returned assignment (eager
+    localCheckpoint) first, so its pending result stage can never
+    replay over a dropped cache."""
+
+    def means(df: DataFrame) -> DataFrame:
+        return df.groupBy(*keys, "cell", "dim").agg(
+            F.round(F.avg("x"), 4).alias("c")
+        )
+
+    cents = means(dims.withColumn("cell", (F.col("vec_id") % k).cast("int")))
+    for _ in range(n_iter):
+        cents = cents.localCheckpoint(eager=False)
+        assigned = _nearest_cell(dims, cents, keys, broadcast)
+        cents = means(dims.join(assigned, ["vec_id", *keys]))
+    cents = cents.localCheckpoint(eager=False)
+    return _nearest_cell(dims, cents, keys, broadcast)
+
+
+def _nearest_cell(
+    dims: DataFrame,
+    cents: DataFrame,
+    keys: tuple[str, ...] = (),
+    broadcast: bool = True,
+) -> DataFrame:
+    """(vec_id, *keys, cell): nearest centroid per vector from an
+    exploded (vec_id, *keys, dim, x) table and a (*keys, cell, dim, c)
+    centroid table — the assignment core of ``_lloyd`` and of the
+    online sink (``streaming.embeddings``): 4dp-rounded distances,
+    cell-id tie break.  The argmin is a partially-aggregated
+    min(struct(d2, cell)) — identical result to a row_number-over-(d2,
+    cell) window, but the map side collapses the candidate rows to one
+    per vector per partition BEFORE the shuffle, where the window form
+    sorts the full candidate table through the exchange.  ``broadcast``
+    picks an explicit broadcast of the centroids or, past
+    ``_FINE_BROADCAST_MAX_ROWS``, a shuffle_hash join on (*keys, dim)."""
+    side = F.broadcast(cents) if broadcast else cents.hint("shuffle_hash")
     d2 = (
-        dims.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "cell")
+        dims.join(side, [*keys, "dim"])
+        .groupBy("vec_id", *keys, "cell")
         .agg(
             F.round(
                 F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))), 4
@@ -522,9 +541,9 @@ def _nearest_cell(dims: DataFrame, cents: DataFrame) -> DataFrame:
         )
     )
     return (
-        d2.groupBy("vec_id")
+        d2.groupBy("vec_id", *keys)
         .agg(F.min(F.struct("d2", "cell")).alias("best"))
-        .select("vec_id", F.col("best.cell").alias("cell"))
+        .select("vec_id", *keys, F.col("best.cell").alias("cell"))
     )
 
 
@@ -532,55 +551,57 @@ def _nearest_cell(dims: DataFrame, cents: DataFrame) -> DataFrame:
 #: switches from an explicit broadcast to a shuffle_hash-hinted join:
 #: the fine centroid table holds ~k1*k2*ndim ≈ n rows — CORPUS-
 #: PROPORTIONAL, so a single broadcast hits the same ~10M-centroid
-#: memory boundary flat auto-k does.  Two-level only shrinks the
-#: CANDIDATE term (O(n*k) -> O(n*sqrt(k))); the (coarse, dim)-keyed
+#: memory boundary flat auto-k does.  Hierarchical levels only shrink
+#: the CANDIDATE term (O(n*k) -> O(n*sqrt(k))); the (grp, dim)-keyed
 #: shuffle_hash join removes the broadcast memory bound too, at the
 #: cost of shuffling the dims table per round — worth it only past
 #: ~2M centroid rows (~60 MB broadcast at 30 B/row).
 _FINE_BROADCAST_MAX_ROWS = 2_000_000
 
 
-def kmeans_twolevel(
+def kmeans_multilevel(
     emb: DataFrame,
+    ks: list[int] | None = None,
     n_iter: int = 2,
     vec_col: str = "embedding",
     target_cluster_size: int = 64,
+    levels: int = 3,
     _dims_df: DataFrame | None = None,
     _n: int | None = None,
 ) -> DataFrame:
-    """(vec_id, cell): IVF-style two-level k-means — the scale path
-    past flat auto-k Lloyd. Flat assignment with k = ceil(n/t)
+    """(vec_id, cell): hierarchical (IVF-style) k-means — the scale
+    path past flat auto-k Lloyd.  Flat assignment with k = ceil(n/t)
     centroids compares every vector against every centroid: O(n*k) =
     O(n^2/t) candidate rows, the one super-linear term left in the
-    clustering family. Two levels cut it to O(n*(k1+k2)) ~ 2n*sqrt(k):
-    a coarse Lloyd pass over k1 = ceil(sqrt(k)) cells, then an
-    independent fine Lloyd pass WITHIN each coarse cell for k2 =
-    ceil(k/k1) sub-clusters — the fine candidate join is keyed on
-    (coarse, dim), so each vector only ever meets its own coarse
-    cell's k2 centroids. Same determinism discipline as
-    ``kmeans_lloyd`` (hash-seeded init vec_id % k within the cell,
-    4dp-rounded means/distances, (d2, cell)-struct argmin); a deeper
-    hierarchy generalizes the same shape at n^(1/3) etc. Returns
-    composite cell ids coarse * k2 + sub, consumable by
-    ``semantic_dedup(assignments=...)``.
+    clustering family.  Level 1 is a flat Lloyd pass with k_1 cells;
+    every later level refines each existing cell independently
+    (``_lloyd`` keyed on the accumulated group id) with k_i
+    sub-clusters, so each vector only ever meets its own cell's k_i
+    centroids.  Candidate work is O(n * sum(k_i)) ~ levels * n *
+    kt^(1/levels): ``levels=2`` is the two-level form (k1 =
+    ceil(sqrt(kt)), k2 = ceil(kt/k1); the ``kmeans_twolevel`` oracle
+    pair), and at kt = 10⁹ clusters three levels put ~1000 centroids
+    per join side where two levels need ~32k and flat needs the full
+    10⁹.  ``ks`` gives explicit per-level branching (tests plant
+    coprime 2x3x5 hierarchies); None derives a balanced split of
+    auto-k (k_i ~ kt^(1/(levels-i)) of the remainder, product >= kt).
+    Composite ids fold left: cell = ((l1 * k2) + l2) * k3 + l3 ...,
+    consumable by ``semantic_dedup(assignments=...)``.
 
-    Join strategy for the fine assign: the fine centroid table is
-    ~k_total x ndim ≈ n rows — corpus-proportional, so past
+    Join strategy per level: that level's centroid table is
+    prod(k_1..k_i) x ndim rows — corpus-proportional, so past
     ``_FINE_BROADCAST_MAX_ROWS`` the per-round join switches from an
-    explicit broadcast to a shuffle_hash hint on (coarse, dim); below
-    it the broadcast keeps the dims table un-shuffled.  Persists
-    (dims when self-created, dc always) are released before returning,
-    after eagerly localCheckpoint-ing the n x 2 output."""
+    explicit broadcast to a shuffle_hash hint on (grp, dim); below it
+    the broadcast keeps the dims table un-shuffled.  ``_dims_df`` /
+    ``_n`` take ``kmeans_lloyd``'s persisted dims and vector count on
+    its auto-k delegation.  Persists (dims when self-created, each
+    level's grouped dims always) are released before returning, after
+    eagerly localCheckpoint-ing each level's n x 2 output."""
     owns_dims = _dims_df is None
     dims = (
-        _dims_df
-        if _dims_df is not None
-        else emb.select(
-            "vec_id",
-            F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x"),
-        )
-        .repartition("vec_id")
-        .persist()
+        _exploded(emb, vec_col).repartition("vec_id").persist()
+        if owns_dims
+        else _dims_df
     )
     if _n is None:
         # ONE pass over the cached dims for both scalars (r12: the
@@ -594,132 +615,6 @@ def kmeans_twolevel(
         )
     else:
         n, n_rows = _n, dims.count()
-    k_total = max(1, -(-n // target_cluster_size))
-    k1 = max(1, int(k_total**0.5 + 0.9999))
-    k2 = max(1, -(-k_total // k1))
-    ndim = max(1, n_rows // max(1, n))
-    fine_broadcast = k1 * k2 * ndim <= _FINE_BROADCAST_MAX_ROWS
-    coarse = kmeans_lloyd(emb, k1, n_iter, vec_col, _dims_df=dims)
-    dc = (
-        dims.join(coarse.withColumnRenamed("cell", "grp"), "vec_id")
-        .persist()
-    )
-    out = (
-        _grouped_lloyd(dc, k2, n_iter, fine_broadcast)
-        .select(
-            "vec_id",
-            (F.col("grp").cast("long") * k2 + F.col("sub")).alias("cell"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    dc.unpersist()
-    if owns_dims:
-        dims.unpersist()
-    return out
-
-
-def _grouped_lloyd(
-    dc: DataFrame, k: int, n_iter: int, broadcast_cents: bool
-) -> DataFrame:
-    """Lloyd's k-means run INDEPENDENTLY within each group of an
-    exploded (vec_id, grp, dim, x) table — the per-cell refinement
-    core shared by ``kmeans_twolevel`` and ``kmeans_multilevel``.
-    Init sub = vec_id % k within the group (hash-seeded, oracle-
-    replayable); every centroid/distance CTE is keyed on (grp, ...),
-    so each vector only ever meets its own group's k centroids —
-    the candidate join is O(rows x k), never O(rows x total_cells).
-    Same 4dp rounding and (d2, sub)-struct argmin as the flat core.
-    Returns (vec_id, grp, sub); ``broadcast_cents`` picks the
-    explicit-broadcast vs shuffle_hash join per the
-    ``_FINE_BROADCAST_MAX_ROWS`` bound."""
-    cents = (
-        dc.withColumn("sub", (F.col("vec_id") % k).cast("int"))
-        .groupBy("grp", "sub", "dim")
-        .agg(F.round(F.avg("x"), 4).alias("c"))
-    )
-
-    def assign(cents_df: DataFrame) -> DataFrame:
-        side = (
-            F.broadcast(cents_df)
-            if broadcast_cents
-            else cents_df.hint("shuffle_hash")
-        )
-        d2 = (
-            dc.join(side, ["grp", "dim"])
-            .groupBy("vec_id", "grp", "sub")
-            .agg(
-                F.round(
-                    F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))),
-                    4,
-                ).alias("d2")
-            )
-        )
-        return (
-            d2.groupBy("vec_id", "grp")
-            .agg(F.min(F.struct("d2", "sub")).alias("best"))
-            .select("vec_id", "grp", F.col("best.sub").alias("sub"))
-        )
-
-    # Per-round ``eager=False`` checkpoints — same rationale and the
-    # same caveat as the flat loop in ``kmeans_lloyd``: lineage
-    # truncates each round, and under AQE each checkpoint still runs
-    # the shuffle-map stages below it when taken, so the rounds run
-    # while the frame is built; only the final result stage waits for
-    # an action.  Callers that unpersist ``dc`` materialize the
-    # returned assignment (eager localCheckpoint) first, so that
-    # pending stage can never replay over a dropped cache.
-    for _ in range(n_iter):
-        cents = cents.localCheckpoint(eager=False)
-        assigned = assign(cents)
-        cents = (
-            dc.join(assigned, ["vec_id", "grp"])
-            .groupBy("grp", "sub", "dim")
-            .agg(F.round(F.avg("x"), 4).alias("c"))
-        )
-    cents = cents.localCheckpoint(eager=False)
-    return assign(cents)
-
-
-def kmeans_multilevel(
-    emb: DataFrame,
-    ks: list[int] | None = None,
-    n_iter: int = 2,
-    vec_col: str = "embedding",
-    target_cluster_size: int = 64,
-    levels: int = 3,
-) -> DataFrame:
-    """(vec_id, cell): the N-LEVEL generalization of
-    ``kmeans_twolevel`` — the recursion the two-level docstring
-    promises past its own boundary.  Level 1 is a flat Lloyd pass
-    with k_1 cells; every later level refines each existing cell
-    independently via ``_grouped_lloyd`` with k_i sub-clusters, all
-    candidate joins keyed on the accumulated group id.  Candidate
-    work is O(n * sum(k_i)) ~ levels * n * kt^(1/levels): at kt = 10⁹
-    clusters (the ~10⁹-vector corpus), three levels put ~1000
-    centroids per join side where two levels need ~32k and flat needs
-    the full 10⁹ — and the per-level centroid table is
-    prod(k_1..k_i) x ndim rows, so the broadcast-vs-shuffle_hash
-    switch inherits the same ``_FINE_BROADCAST_MAX_ROWS`` bound per
-    level.  ``ks`` gives explicit per-level branching (tests plant
-    coprime 2x3x5 hierarchies); None derives a balanced split of
-    auto-k (k_i ~ kt^(1/(levels-i)) of the remainder, product >= kt).
-    Composite ids fold left: cell = ((l1 * k2) + l2) * k3 + l3 ...
-    — ``kmeans_twolevel`` is exactly ``ks=[k1, k2]`` (unit-pinned)."""
-    dims = (
-        emb.select(
-            "vec_id",
-            F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x"),
-        )
-        .repartition("vec_id")
-        .persist()
-    )
-    # One pass over cached dims for both scalars (see kmeans_twolevel).
-    n, n_rows = (
-        dims.agg(
-            F.countDistinct("vec_id").alias("n"),
-            F.count(F.lit(1)).alias("rows"),
-        ).collect()[0]
-    )
     if ks is None:
         rem = max(1, -(-n // target_cluster_size))
         ks = []
@@ -728,7 +623,7 @@ def kmeans_multilevel(
             ks.append(k_i)
             rem = max(1, -(-rem // k_i))
     ndim = max(1, n_rows // max(1, n))
-    grp = kmeans_lloyd(emb, ks[0], n_iter, vec_col, _dims_df=dims).select(
+    grp = _lloyd(dims, ks[0], n_iter).select(
         "vec_id", F.col("cell").cast("long").alias("grp")
     )
     if len(ks) == 1:
@@ -739,20 +634,16 @@ def kmeans_multilevel(
     cells_so_far = ks[0]
     for k in ks[1:]:
         dc = dims.join(grp, "vec_id").persist()
-        broadcast_cents = (
-            cells_so_far * k * ndim <= _FINE_BROADCAST_MAX_ROWS
-        )
+        broadcast = cells_so_far * k * ndim <= _FINE_BROADCAST_MAX_ROWS
         grp = (
-            _grouped_lloyd(dc, k, n_iter, broadcast_cents)
-            .select(
-                "vec_id",
-                (F.col("grp").cast("long") * k + F.col("sub")).alias("grp"),
-            )
+            _lloyd(dc, k, n_iter, ("grp",), broadcast)
+            .select("vec_id", (F.col("grp") * k + F.col("cell")).alias("grp"))
             .localCheckpoint(eager=True)
         )
         dc.unpersist()
         cells_so_far *= k
-    dims.unpersist()
+    if owns_dims:
+        dims.unpersist()
     return grp.withColumnRenamed("grp", "cell")
 
 
@@ -790,13 +681,11 @@ def semantic_dedup(
     still gets a keep/drop verdict against the representative.
 
     ``assignments`` supplies a precomputed (vec_id, cell) table — e.g.
-    ``kmeans_twolevel`` output, the O(n*sqrt(k)) scale path — and
+    ``kmeans_multilevel`` output, the O(n*sqrt(k)) scale path — and
     skips the flat clustering entirely; the drop rule is clustering-
     agnostic.  ``twolevel_crossover`` passes through to the auto-k
     clusterer (None pins the FLAT plan — what the flat oracle gates
     do, since their SQL unrolls flat Lloyd specifically)."""
-    from .dedup import _bucket_marked
-
     assigned = (
         assignments
         if assignments is not None
@@ -809,65 +698,8 @@ def semantic_dedup(
     v = emb.select("vec_id", F.col(vec_col).alias("vec")).join(
         assigned, "vec_id"
     )
-    if max_cluster_size is not None:
-        marked = _bucket_marked(v, ["cell"], "vec", id_col="vec_id").persist()
-        small = marked.filter(F.col("m") <= max_cluster_size)
-        stars = (
-            marked.filter(
-                (F.col("m") > max_cluster_size)
-                & (F.col("vec_id") != F.col("rep"))
-            )
-            .select(
-                F.col("rep").alias("vec_a"),
-                F.col("vec_id").alias("vec_b"),
-                F.col("rep_vec").alias("va"),
-                F.col("vec").alias("vb"),
-            )
-        )
-    else:
-        small, stars = v, None
-    # Norms computed once PER VECTOR before the self-join: the HOF
-    # cosine re-derived both norms on every candidate row — an O(m²)
-    # term per cell where O(m) suffices; identical doubles, so the
-    # rounded cosine is bit-equal (interleaved A/B: 0.49 -> 0.40 s on
-    # the sf0.1 pair stage, collect-compared equal).
-    a = small.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("vec").alias("va"),
-        _norm(F.col("vec")).alias("norm_a"),
-        "cell",
-    )
-    b = small.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("vec").alias("vb"),
-        _norm(F.col("vec")).alias("norm_b"),
-        "cell",
-    )
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", "va", "vb", "norm_a", "norm_b")
-    )
-    if stars is not None:
-        pairs = pairs.unionByName(
-            stars.select(
-                "vec_a",
-                "vec_b",
-                "va",
-                "vb",
-                _norm(F.col("va")).alias("norm_a"),
-                _norm(F.col("vb")).alias("norm_b"),
-            )
-        )
     dropped = (
-        pairs.select(
-            "vec_b",
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                4,
-            ).alias("cosine"),
-        )
+        _group_cosine_pairs(v, "cell", max_cluster_size)
         .filter(F.col("cosine") >= threshold)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
@@ -884,44 +716,37 @@ def semantic_dedup(
     )
 
 
-def embedding_near_dup(
-    emb: DataFrame,
-    threshold: float = 0.45,
-    vec_col: str = "embedding",
-    n_planes: int = N_PLANES,
-    max_bucket_size: int | None = None,
+def _group_cosine_pairs(
+    v: DataFrame, group: str, max_group_size: int | None
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cosine >=
-    threshold), candidates restricted to same-LSH-bucket pairs — the
-    embedding-space member of the dedup family. Same-bucket blocking
-    makes pairwise work ~|corpus|²/2^n_planes; recall is the standard
-    hyperplane-LSH trade-off (raise with multi-probe at scale).
+    """(vec_a, vec_b, cosine): every vec_a < vec_b pair of a
+    (vec_id, vec, ``group``) table that shares a ``group`` value, with
+    its 4dp-rounded cosine — the in-group pair kernel of
+    ``semantic_dedup`` (group = k-means cell) and
+    ``embedding_near_dup`` (group = LSH bucket).
 
-    ``max_bucket_size`` is the giant-bucket star guard shared with the
+    ``max_group_size`` is the giant-group star guard shared with the
     text dedup family (``llm.dedup._bucket_marked``): a degenerate
-    embedding bucket (augmentation copies, zero vectors, collapsed
-    encoder outputs) makes the self-join emit m(m-1)/2 rows from one
-    key; buckets over the cap instead emit (bucket-min, member) star
-    edges with the cosine still computed exactly per emitted pair —
-    connectivity within the bucket preserved, so duplicate-group
-    assembly is unaffected. Opt-in for the same measured reason as the
-    text guards (PLANS.md round-7 economics): the window costs a
-    constant ~0.5 s/query at sf0.1 that clean corpora don't need."""
+    group (collapsed encoder outputs, augmentation copies, zero
+    vectors) makes the self-join emit m(m-1)/2 rows from one key;
+    groups over the cap instead emit (group-min, member) star edges
+    with the cosine still computed exactly per emitted pair, so every
+    member is still scored against the representative and
+    connectivity within the group is preserved.
+
+    Norms are computed once PER VECTOR before the self-join: the HOF
+    cosine re-derived both norms on every candidate row — an O(m²)
+    term per group where O(m) suffices; identical doubles, so the
+    rounded cosine is bit-equal (interleaved A/B: 0.49 -> 0.40 s on
+    the sf0.1 SemDeDup pair stage, collect-compared equal)."""
     from .dedup import _bucket_marked
 
-    bucketed = emb.select(
-        "vec_id",
-        F.col(vec_col).alias("vec"),
-        bucket_col(F.col(vec_col), n_planes).alias("bucket"),
-    )
-    if max_bucket_size is not None:
-        marked = _bucket_marked(
-            bucketed, ["bucket"], "vec", id_col="vec_id"
-        ).persist()
-        small = marked.filter(F.col("m") <= max_bucket_size)
+    if max_group_size is not None:
+        marked = _bucket_marked(v, [group], "vec", id_col="vec_id").persist()
+        small = marked.filter(F.col("m") <= max_group_size)
         stars = (
             marked.filter(
-                (F.col("m") > max_bucket_size)
+                (F.col("m") > max_group_size)
                 & (F.col("vec_id") != F.col("rep"))
             )
             .select(
@@ -932,24 +757,18 @@ def embedding_near_dup(
             )
         )
     else:
-        small, stars = bucketed, None
-    # Per-side norms before the self-join (see semantic_dedup): the
-    # per-pair HOF cosine re-derived both norms on every candidate
-    # row; identical doubles, O(m²) -> O(m) norm work per bucket.
-    a = small.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("vec").alias("va"),
-        _norm(F.col("vec")).alias("norm_a"),
-        "bucket",
-    )
-    b = small.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("vec").alias("vb"),
-        _norm(F.col("vec")).alias("norm_b"),
-        "bucket",
-    )
+        small, stars = v, None
+
+    def side(s: str) -> DataFrame:
+        return small.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            F.col("vec").alias(f"v{s}"),
+            _norm(F.col("vec")).alias(f"norm_{s}"),
+            group,
+        )
+
     pairs = (
-        a.join(b, "bucket")
+        side("a").join(side("b"), group)
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", "va", "vb", "norm_a", "norm_b")
     )
@@ -964,17 +783,42 @@ def embedding_near_dup(
                 _norm(F.col("vb")).alias("norm_b"),
             )
         )
-    return (
-        pairs.select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                4,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    return pairs.select(
+        "vec_a",
+        "vec_b",
+        F.round(
+            _dot(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b")),
+            4,
+        ).alias("cosine"),
+    )
+
+
+def embedding_near_dup(
+    emb: DataFrame,
+    threshold: float = 0.45,
+    vec_col: str = "embedding",
+    n_planes: int = N_PLANES,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cosine >=
+    threshold), candidates restricted to same-LSH-bucket pairs — the
+    embedding-space member of the dedup family. Same-bucket blocking
+    makes pairwise work ~|corpus|²/2^n_planes; recall is the standard
+    hyperplane-LSH trade-off (raise with multi-probe at scale).
+
+    ``max_bucket_size`` is the giant-bucket star guard of
+    ``_group_cosine_pairs``: buckets over the cap emit (bucket-min,
+    member) star edges instead of m(m-1)/2 pairs, so duplicate-group
+    assembly is unaffected. Opt-in for the same measured reason as the
+    text guards (PLANS.md round-7 economics): the window costs a
+    constant ~0.5 s/query at sf0.1 that clean corpora don't need."""
+    bucketed = emb.select(
+        "vec_id",
+        F.col(vec_col).alias("vec"),
+        bucket_col(F.col(vec_col), n_planes).alias("bucket"),
+    )
+    return _group_cosine_pairs(bucketed, "bucket", max_bucket_size).filter(
+        F.col("cosine") >= threshold
     )
 
 
@@ -1158,24 +1002,28 @@ def int8_recall_at_k(
 ) -> DataFrame:
     """Per query: |exact top-k ∩ int8 top-k| — the accuracy cost of
     serving quantized, measured against the certified exact path."""
+    approx = cosine_topk_int8(emb, query_ids, k)
+    return _recall_vs_exact(emb, query_ids, k, approx)
+
+
+def _recall_vs_exact(
+    emb: DataFrame, query_ids: list[int], k: int, approx: DataFrame
+) -> DataFrame:
+    """(q_id, k, n_overlap): per query, how many of the exact top-k
+    (``cosine_topk``) the ``approx`` (q_id, vec_id, ...) retriever
+    also returns — 0 when it returns none of them."""
     exact = cosine_topk(emb, query_ids, k).select("q_id", "vec_id")
-    approx = cosine_topk_int8(emb, query_ids, k).select("q_id", "vec_id")
-    hits = exact.join(approx, ["q_id", "vec_id"])
+    hits = exact.join(approx.select("q_id", "vec_id"), ["q_id", "vec_id"])
     base = exact.groupBy("q_id").agg(
         F.count(F.lit(1)).cast("long").alias("k")
     )
     n = hits.groupBy("q_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_overlap")
     )
-    return (
-        base.join(n, "q_id", "left")
-        .select(
-            "q_id",
-            "k",
-            F.coalesce("n_overlap", F.lit(0)).cast("long").alias(
-                "n_overlap"
-            ),
-        )
+    return base.join(n, "q_id", "left").select(
+        "q_id",
+        "k",
+        F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
     )
 
 
@@ -1242,20 +1090,8 @@ def sign_bit_recall_at_k(
     """Per query: |exact top-k ∩ 1-bit hamming top-k| — how much of
     the exact neighborhood the 64×-compressed retriever keeps (use it
     as stage one with a float or int8 re-rank, never alone)."""
-    exact = cosine_topk(emb, query_ids, k).select("q_id", "vec_id")
-    approx = hamming_topk_1bit(emb, query_ids, k).select("q_id", "vec_id")
-    hits = exact.join(approx, ["q_id", "vec_id"])
-    base = exact.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("long").alias("k")
-    )
-    n = hits.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_overlap")
-    )
-    return base.join(n, "q_id", "left").select(
-        "q_id",
-        "k",
-        F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-    )
+    approx = hamming_topk_1bit(emb, query_ids, k)
+    return _recall_vs_exact(emb, query_ids, k, approx)
 
 
 def rerank_recall_at_k(
@@ -1296,16 +1132,4 @@ def rerank_recall_at_k(
         .filter(F.col("rn") <= k)
         .select("q_id", "vec_id")
     )
-    exact = cosine_topk(emb, query_ids, k).select("q_id", "vec_id")
-    hits = exact.join(reranked, ["q_id", "vec_id"])
-    base = exact.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("long").alias("k")
-    )
-    n = hits.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_overlap")
-    )
-    return base.join(n, "q_id", "left").select(
-        "q_id",
-        "k",
-        F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-    )
+    return _recall_vs_exact(emb, query_ids, k, reranked)

@@ -341,20 +341,6 @@ def fingerprint_table(
     return long_docs.unionByName(short_docs)
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis feature set to a documents frame."""
-    c = F.col(text_col)
-    metrics = quality_metrics(c)
-    return df.select(
-        "*",
-        token_count_ws(c).alias("n_tokens_ws"),
-        token_count_bpe(c).alias("n_tokens_bpe"),
-        lang_id(c).alias("lang_pred"),
-        *[v.alias(k) for k, v in metrics.items() if k not in ("n_chars",)],
-        doc_fingerprint(c).alias("fingerprint"),
-    )
-
-
 def repetition_table(
     df: DataFrame,
     text_col: str = "text",

@@ -51,9 +51,6 @@ from pyspark.sql import functions as F
 
 from .bpe import word_freq
 
-VOCAB_SCHEMA = "piece string, cnt long"
-
-
 def seed_vocab(
     docs: DataFrame,
     max_piece_len: int = 2,

@@ -68,6 +68,29 @@ def recover_swap_residue(path: str, kind: str) -> tuple[str, str]:
     return tmp, old
 
 
+def swap_write(df: DataFrame, path: str, kind: str) -> None:
+    """Replace the parquet dir ``path`` with ``df`` through the
+    two-rename swap: recover crash residue, write ``df`` to the tmp
+    sibling, rename the live dir ASIDE, promote tmp, retire the old
+    dir, then drop Spark's cached file listing of ``path``.  ``df``'s
+    plan may read ``path`` itself: the live files stay in place until
+    the write has finished.  ``kind`` names the residue siblings
+    (``.{kind}_tmp_*`` / ``.{kind}_old_*``, see
+    ``recover_swap_residue``).  A crash between the renames leaves the
+    data under the old sibling, which the next recovery restores;
+    rmtree-then-rename would leave no table at all."""
+    tmp, old = recover_swap_residue(path, kind)
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    # Spark's shared FileStatusCache still holds the old listing for
+    # this path; invalidate it or later reads hit deleted part files.
+    df.sparkSession.catalog.refreshByPath(path)
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -94,7 +117,7 @@ def compact_parquet(
     removed — a crash between the renames leaves the data recoverable
     under ``.compact_old_*`` rather than half-deleted.
     """
-    tmp, old = recover_swap_residue(path, "compact")
+    recover_swap_residue(path, "compact")  # the listing below needs it
     if any(
         "=" in e and os.path.isdir(os.path.join(path, e))
         for e in os.listdir(path)
@@ -111,14 +134,9 @@ def compact_parquet(
     n_target = max(1, -(-total_bytes // target_file_bytes))  # ceil
     if n_files < min_files_to_compact or n_files <= n_target:
         return n_files
-    df = spark.read.parquet(path)
     # coalesce, not repartition: narrowing to fewer files needs no
     # shuffle — each output task reads a run of input files.
-    df.coalesce(n_target).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    spark.catalog.refreshByPath(path)
+    swap_write(spark.read.parquet(path).coalesce(n_target), path, "compact")
     return parquet_file_stats(path)[0]
 
 

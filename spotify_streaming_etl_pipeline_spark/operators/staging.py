@@ -26,6 +26,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .maintenance import swap_write
+
 
 def unprocessed(staged: DataFrame) -> DataFrame:
     """P4: ``WHERE is_processed = FALSE``
@@ -70,6 +72,4 @@ def truncate_table(path: str) -> None:
 def rewrite_staging(staged: DataFrame, path: str) -> None:
     """Persist a staging rewrite (flag update / conditional delete) via
     the temp-then-swap dance so the plan never reads deleted files."""
-    from ..pipeline import _overwrite_parquet_safe
-
-    _overwrite_parquet_safe(staged, path)
+    swap_write(staged, path, "swap")

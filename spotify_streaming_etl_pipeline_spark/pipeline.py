@@ -102,7 +102,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
-from .operators.maintenance import recover_swap_residue
+from .operators.maintenance import recover_swap_residue, swap_write
 from .plans import dims as dims_mod
 from .plans.facts import build_fact_podcasts, build_fact_tracks, write_fact
 from .schemas import WAREHOUSE_SCHEMAS
@@ -147,22 +147,11 @@ def _overwrite_parquet_safe(df: DataFrame, path: str) -> None:
     them -> FAILED_READ_FILE. With a table format (Delta/Iceberg) the
     transaction log makes this dance unnecessary.
 
-    The swap renames the current dir ASIDE before promoting the new one
-    (the compact_parquet shape) — rmtree-then-rename would leave NO
-    table at all on a crash between the two, and the next run would
-    silently treat the table as empty. Crash residue recovers on the
+    The swap is ``operators.maintenance.swap_write`` (rename aside,
+    promote, retire) with ``.swap_*`` residue, which recovers on the
     next read (``_read_if_exists``) or swap: a missing live dir
     restores from the retired copy."""
-    tmp, old = recover_swap_residue(path, "swap")
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    # Spark's shared FileStatusCache still holds the old listing for
-    # this path; invalidate it or later reads hit deleted part files.
-    df.sparkSession.catalog.refreshByPath(path)
+    swap_write(df, path, "swap")
 
 
 def _tree(path: str) -> set[str] | None:

@@ -631,7 +631,8 @@ _K_SQL = "SELECT greatest(1, cast(ceil(count(*) / 64.0) AS INT)) FROM embeddings
 
 
 def _twolevel_oracle_sql(n_iter: int = 2) -> str:
-    """Unrolled TWO-LEVEL Lloyd oracle (similarity.kmeans_twolevel):
+    """Unrolled TWO-LEVEL Lloyd oracle (similarity.kmeans_multilevel,
+    levels=2):
     the auto-k scalar CTEs (kt = ceil(n/64), k1 = ceil(sqrt(kt)),
     k2 = ceil(kt/k1) — bit-equal to the Python derivation for every
     integer kt below ~25M, far past any DuckDB-replayable corpus),
@@ -759,7 +760,7 @@ def semantic_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_twolevel_oracle_sql(threshold: float = 0.45) -> str:
     """Oracle for SemDeDup composed on TWO-LEVEL assignments — the
     operator's 100 TB form (semantic_dedup(assignments=
-    kmeans_twolevel(...))): the unrolled two-level closure feeds the
+    kmeans_multilevel(..., levels=2))): the unrolled two-level closure feeds the
     same within-cluster smaller-id drop rule the flat
     ``semantic_dedup_decisions`` pair certifies. Parity-unit-verified
     in round 8 (tests/test_scale_ops.py); registered as the
@@ -869,7 +870,8 @@ def online_kmeans_assignments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("kmeans_twolevel", _twolevel_oracle_sql(2))
 def kmeans_twolevel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style two-level k-means (llm/similarity.py:kmeans_twolevel)
+    """IVF-style two-level k-means (llm/similarity.py:kmeans_multilevel
+    at levels=2)
     — the clustering SCALE path (O(n*sqrt(k)) candidate rows vs flat
     auto-k's O(n*k); measured 22x faster at n=200k, diverging as n^1.5
     vs n²). Auto-k two-level: kt = ceil(n/64), coarse k1 = ceil(
@@ -879,21 +881,21 @@ def kmeans_twolevel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (coarse, ...) — so a regression anywhere in either loop or in the
     composite-id arithmetic breaks the hash on the full assignment
     table."""
-    asg = similarity.kmeans_twolevel(_emb(spark, sf_dir), n_iter=2)
+    asg = similarity.kmeans_multilevel(_emb(spark, sf_dir), n_iter=2, levels=2)
     return asg.select("vec_id", F.col("cell").cast("long").alias("cell"))
 
 
 @query("semantic_dedup_twolevel", _semantic_twolevel_oracle_sql(0.45))
 def semantic_dedup_twolevel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup composed on two-level assignments — the operator's
-    actual 100 TB form (semantic_dedup(assignments=kmeans_twolevel(
-    ...))): clustering via the O(n*sqrt(k)) hierarchy, then the same
+    actual 100 TB form (semantic_dedup(assignments=kmeans_multilevel(
+    ..., levels=2))): clustering via the O(n*sqrt(k)) hierarchy, then the same
     within-cluster smaller-id drop rule the flat pair certifies
     (threshold 0.45; the drop path provably fires on this substrate).
     Full decision table hashed against the unrolled two-level closure
     + drop-rule oracle."""
     emb = _emb(spark, sf_dir)
-    asg = similarity.kmeans_twolevel(emb, n_iter=2)
+    asg = similarity.kmeans_multilevel(emb, n_iter=2, levels=2)
     dec = similarity.semantic_dedup(emb, threshold=0.45, assignments=asg)
     return dec.select(
         "vec_id", F.col("cell").cast("long").alias("cell"), "kept"

@@ -24,9 +24,6 @@ from ..llm.similarity import _norm
 from ..sources.catalog import load_table
 from .analytics import query
 
-_DIM = 64
-
-
 @query(
     "embedding_norm_stats",
     """

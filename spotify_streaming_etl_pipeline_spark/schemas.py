@@ -56,8 +56,6 @@ HISTORY_SCHEMA = StructType(
     ]
 )
 
-HISTORY_COLS = [f.name for f in HISTORY_SCHEMA.fields]
-
 # --- API enrichment envelopes (jsonb in the reference) ---------------------
 
 _IMAGE = ArrayType(StructType([StructField("url", StringType(), True)]))
@@ -138,32 +136,6 @@ ENVELOPE_SCHEMAS = {
     "podcast": PODCAST_SCHEMA,
     "episode": EPISODE_SCHEMA,
 }
-
-# --- staging envelope table shape (S6) -------------------------------------
-
-def envelope_schema(uri_col: str) -> StructType:
-    return StructType(
-        [
-            StructField(uri_col, StringType(), False),
-            StructField("raw_data", StringType(), False),  # JSON string
-            StructField("fetched_at", TimestampType(), True),
-            StructField("is_processed", BooleanType(), True),
-        ]
-    )
-
-
-# --- dead-letter table (S7) -------------------------------------------------
-
-FAILED_URIS_SCHEMA = StructType(
-    [
-        StructField("uri", StringType(), False),
-        StructField("entity_type", StringType(), True),
-        StructField("error_reason", StringType(), True),
-        StructField("failed_at", TimestampType(), True),
-        StructField("retry_attempts", IntegerType(), True),
-    ]
-)
-
 
 # --- warehouse tables (reference docs/sql/core_ddl.sql) ---------------------
 

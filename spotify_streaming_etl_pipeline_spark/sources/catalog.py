@@ -25,9 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension-sized tables: always safe (and intended) to broadcast.
-SMALL_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
-
 # Tables whose consumers do heavy per-row compute (per-shingle md5,
 # vector math): spread an under-split scan before those stages. For
 # lineitem/events the per-row work is trivial column arithmetic, and

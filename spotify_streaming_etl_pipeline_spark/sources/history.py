@@ -22,9 +22,6 @@ from pyspark.sql import functions as F
 from ..functions.scalar import to_utc
 from ..schemas import HISTORY_SCHEMA
 
-EPOCH_FLOOR = "1900-01-01 00:00:00"
-
-
 def read_history(spark: SparkSession, path: str) -> DataFrame:
     """S1: parse export files; ts string → TimestampType UTC instant.
 

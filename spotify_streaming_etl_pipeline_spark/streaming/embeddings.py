@@ -15,8 +15,9 @@ the shared ``_ingest_batch`` path):
    clusterer in this repo (cell = vec_id % k; centroid = per-dim mean,
    4dp-rounded) — the seeding IS batch 0's assignment;
 2. batch t >= 1 assigns every vector to its nearest CURRENT centroid
-   (4dp-rounded distances, cell-id tie break — the `_nearest_cell`
-   discipline), then updates each touched centroid to the
+   through the batch clusterers' own kernel
+   (``llm.similarity._nearest_cell``: 4dp-rounded distances, cell-id
+   tie break), then updates each touched centroid to the
    count-weighted running mean round((c*n + sum_batch x)/(n + m), 4);
    untouched cells carry over verbatim.  Assignments are FROZEN at
    arrival time (online semantics — history does not re-cluster);
@@ -46,6 +47,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..llm.similarity import _exploded, _nearest_cell
 from .aggregates import publish_snapshot, read_state
 
 #: Subdirectory of the sink's state_dir holding the append-only
@@ -62,13 +64,6 @@ def read_assignment_log(spark, state_dir: str) -> DataFrame | None:
         return None
     df = spark.read.option("basePath", path).parquet(path)
     return df.select("vec_id", F.col("batch").cast("int").alias("batch"), "cell")
-
-
-def _explode(batch: DataFrame, vec_col: str) -> DataFrame:
-    return batch.select(
-        "vec_id",
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x"),
-    )
 
 
 def _ingest_batch(
@@ -93,7 +88,7 @@ def _ingest_batch(
     per consumer; an EAGER checkpoint paid one extra job per batch) —
     and the lazy updated state, which callers materialize through
     their write (sink) or their next action (batch replay)."""
-    dims = _explode(batch.dropDuplicates(["vec_id"]), vec_col)
+    dims = _exploded(batch.dropDuplicates(["vec_id"]), vec_col)
     if state is None or state.isEmpty():
         seeded = dims.withColumn("cell", (F.col("vec_id") % k).cast("int"))
         new_state = seeded.groupBy("cell", "dim").agg(
@@ -106,22 +101,9 @@ def _ingest_batch(
             .localCheckpoint(eager=False)
         )
         return assignments, new_state
-    cents = state.select("cell", "dim", "c")
-    d2 = (
-        dims.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "cell")
-        .agg(
-            F.round(
-                F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))), 4
-            ).alias("d2")
-        )
-    )
-    assignments = (
-        d2.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("best"))
-        .select("vec_id", F.col("best.cell").alias("cell"))
-        .localCheckpoint(eager=False)
-    )
+    assignments = _nearest_cell(
+        dims, state.select("cell", "dim", "c")
+    ).localCheckpoint(eager=False)
     adds = (
         dims.join(assignments, "vec_id")
         .groupBy("cell", "dim")

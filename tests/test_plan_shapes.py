@@ -258,25 +258,25 @@ def test_crawl_corpus_has_no_shuffle(spark, sf_dir, queries):
 
 
 def test_grouped_lloyd_join_strategy_switch(spark):
-    """The hierarchical-k-means refinement core: below the centroid
-    bound the candidate join must broadcast (dims un-shuffled); above
-    it the shuffle_hash hint must produce a ShuffledHashJoin, never a
-    SortMergeJoin — the documented 10M-centroid memory-boundary fix."""
+    """The Lloyd kernel at a hierarchical-k-means refinement level
+    (grouped on ``grp``): below the centroid bound the candidate join
+    must broadcast (dims un-shuffled); above it the shuffle_hash hint
+    must produce a ShuffledHashJoin, never a SortMergeJoin — the
+    documented 10M-centroid memory-boundary fix."""
     from pyspark.sql import functions as F
 
     from spotify_streaming_etl_pipeline_spark.llm import similarity
+    from tests.fixtures import frame
 
-    emb = spark.createDataFrame(
+    emb = frame(
+        spark,
         [(i, [float(i % 7), float(i % 3)] + [0.0] * 6) for i in range(40)],
-        "vec_id: long, embedding: array<float>",
+        "vec_id long, embedding array<float>",
     )
-    dc = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "x"),
-    ).withColumn("grp", F.lit(0))
-    bc = _plan(similarity._grouped_lloyd(dc, 2, 1, broadcast_cents=True))
+    dc = similarity._exploded(emb).withColumn("grp", F.lit(0))
+    bc = _plan(similarity._lloyd(dc, 2, 1, ("grp",), broadcast=True))
     assert "BroadcastHashJoin" in bc
-    sh = _plan(similarity._grouped_lloyd(dc, 2, 1, broadcast_cents=False))
+    sh = _plan(similarity._lloyd(dc, 2, 1, ("grp",), broadcast=False))
     assert "ShuffledHashJoin" in sh
     assert "SortMergeJoin" not in sh
 

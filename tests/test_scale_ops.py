@@ -9,6 +9,10 @@ from spotify_streaming_etl_pipeline_spark.operators.skew import (
     salted_agg,
     salted_join,
 )
+from tests.fixtures import frame
+
+#: DDL of the vector frames these tests build.
+_EMB = "vec_id long, embedding array<float>"
 
 
 def _skewed(spark):
@@ -242,7 +246,8 @@ def test_arrow_assignment_agrees_with_relational(spark, sf_dir):
 
     # cell-for-cell assignment parity (relational path re-derived the
     # same way _ivf_from_centroid_table computes it)
-    cents = spark.createDataFrame(
+    cents = frame(
+        spark,
         [
             (cell, dim, float(c))
             for cell, row in enumerate(IVF_CENTROIDS)
@@ -252,10 +257,7 @@ def test_arrow_assignment_agrees_with_relational(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    dims = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "x"),
-    )
+    dims = similarity._exploded(emb)
     d2 = (
         dims.join(F.broadcast(cents), "dim")
         .groupBy("vec_id", "cell")
@@ -339,7 +341,7 @@ def _planted_vectors(spark, per_cluster=20,
         for i in range(per_cluster):
             vec = [cx + (i % 5) * 0.01, cy + (i % 3) * 0.01] + [0.0] * 62
             rows.append((c + 3 * i, [float(x) for x in vec]))
-    return spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    return frame(spark, rows, _EMB)
 
 
 def test_kmeans_lloyd_stable_and_deterministic(spark):
@@ -376,17 +378,17 @@ def test_kmeans_lloyd_auto_k_matches_explicit(spark):
 def test_kmeans_lloyd_auto_k_delegates_to_twolevel_above_crossover(spark):
     """The scale switch (llm/similarity.py:kmeans_lloyd): auto-k above
     ``twolevel_crossover`` vectors must return exactly the two-level
-    assignment (row-identical to calling kmeans_twolevel directly), so
-    SemDeDup / IVF training get the O(n*sqrt(k)) plan by default at
-    scale; below the crossover — and with crossover=None — the flat
-    plan is unchanged."""
+    assignment (row-identical to calling kmeans_multilevel(levels=2)
+    directly), so SemDeDup / IVF training get the O(n*sqrt(k)) plan
+    by default at scale; below the crossover — and with
+    crossover=None — the flat plan is unchanged."""
     emb = _planted_vectors(spark)  # 60 vectors
     delegated = similarity.kmeans_lloyd(
         emb, n_clusters=None, n_iter=2, target_cluster_size=20,
         twolevel_crossover=50,  # 60 > 50 -> two-level path
     )
-    direct = similarity.kmeans_twolevel(
-        emb, n_iter=2, target_cluster_size=20
+    direct = similarity.kmeans_multilevel(
+        emb, n_iter=2, target_cluster_size=20, levels=2
     )
     assert sorted(map(tuple, delegated.collect())) == sorted(
         map(tuple, direct.collect())
@@ -414,16 +416,18 @@ def test_kmeans_twolevel_recovers_planted_hierarchy(spark):
         for i in range(20):
             vec = [x + (i % 5) * 0.01, y + (i % 3) * 0.01] + [0.0] * 62
             rows.append((c + 6 * i, [float(v) for v in vec]))
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    asg = similarity.kmeans_twolevel(emb, n_iter=2, target_cluster_size=20)
+    emb = frame(spark, rows, _EMB)
+    asg = similarity.kmeans_multilevel(
+        emb, n_iter=2, target_cluster_size=20, levels=2
+    )
     got = {r["vec_id"]: r["cell"] for r in asg.collect()}
     assert len(got) == 120
     labels = [{got[c + 6 * i] for i in range(20)} for c in range(6)]
     assert all(len(s) == 1 for s in labels), labels
     assert len(set.union(*labels)) == 6
     again = {r["vec_id"]: r["cell"] for r in
-             similarity.kmeans_twolevel(
-                 emb, n_iter=2, target_cluster_size=20).collect()}
+             similarity.kmeans_multilevel(
+                 emb, n_iter=2, target_cluster_size=20, levels=2).collect()}
     assert again == got
 
 
@@ -439,7 +443,7 @@ def test_kmeans_multilevel_recovers_planted_hierarchy(spark):
         for i in range(8):
             vec = [x + (i % 3) * 0.01, y + (i % 2) * 0.01, z] + [0.0] * 61
             rows.append((c + 30 * i, [float(v) for v in vec]))
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    emb = frame(spark, rows, _EMB)
     asg = similarity.kmeans_multilevel(emb, ks=[2, 3, 5], n_iter=2)
     got = {r["vec_id"]: r["cell"] for r in asg.collect()}
     assert len(got) == 240
@@ -449,25 +453,6 @@ def test_kmeans_multilevel_recovers_planted_hierarchy(spark):
     again = {r["vec_id"]: r["cell"] for r in
              similarity.kmeans_multilevel(emb, ks=[2, 3, 5], n_iter=2).collect()}
     assert again == got
-
-
-def test_kmeans_multilevel_with_two_levels_matches_twolevel(spark):
-    """kmeans_multilevel(ks=[k1, k2]) must be row-identical to
-    kmeans_twolevel at the same branching — the generalization
-    contains the certified two-level operator as its depth-2 case."""
-    rows = []
-    for c in range(6):
-        x, y = 20.0 * (c % 3) - 20.0, 8.0 * (c % 2)
-        for i in range(20):
-            vec = [x + (i % 5) * 0.01, y + (i % 3) * 0.01] + [0.0] * 62
-            rows.append((c + 6 * i, [float(v) for v in vec]))
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    # twolevel auto-derives kt=ceil(120/20)=6 -> k1=3, k2=2
-    two = similarity.kmeans_twolevel(emb, n_iter=2, target_cluster_size=20)
-    multi = similarity.kmeans_multilevel(emb, ks=[3, 2], n_iter=2)
-    assert sorted(map(tuple, multi.collect())) == sorted(
-        map(tuple, two.collect())
-    )
 
 
 def test_kmeans_multilevel_depth_one_is_flat_lloyd(spark):
@@ -492,7 +477,9 @@ def test_semantic_dedup_consumes_twolevel_assignments(spark):
         (F.col("vec_id") + 100).alias("vec_id"), "embedding"
     )
     both = emb.unionByName(dup)
-    asg = similarity.kmeans_twolevel(both, n_iter=2, target_cluster_size=16)
+    asg = similarity.kmeans_multilevel(
+        both, n_iter=2, target_cluster_size=16, levels=2
+    )
     dec = {r["vec_id"]: r["kept"] for r in
            similarity.semantic_dedup(
                both, threshold=0.999, assignments=asg).collect()}
@@ -513,10 +500,7 @@ def test_kmeans_lloyd_update_rounds_move_centroids(spark):
         + [(100 + i, [-10.0, 10.0 + (i % 3) * 0.01] + [0.0] * 62)
            for i in range(1, 21)]
     )
-    emb = spark.createDataFrame(
-        [(v, [float(x) for x in vec]) for v, vec in rows],
-        "vec_id: long, embedding: array<float>",
-    )
+    emb = frame(spark, [(v, [float(x) for x in vec]) for v, vec in rows], _EMB)
     asg = {r["vec_id"]: r["cell"] for r in
            similarity.kmeans_lloyd(emb, n_clusters=2, n_iter=2).collect()}
     a_labels = {asg[i] for i in range(15)}
@@ -560,7 +544,7 @@ def test_pca_recovers_planted_subspace(spark):
         b = ((i * 7) % 13) - 6.0    # spread along axis v = e1
         vec = [a, b] + [0.001 * ((i + d) % 3) for d in range(62)]
         rows.append((i, [float(x) for x in vec]))
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    emb = frame(spark, rows, _EMB)
 
     mean, vals, vecs = projections.pca_components(emb, n_components=4)
     assert vals[0] > 100 * vals[2] and vals[1] > 100 * vals[2], vals
@@ -588,7 +572,7 @@ def test_pca_whiten_unit_variance(spark):
         b = ((i % 5) - 2.0) * 0.5    # low-variance axis
         vec = [a, b] + [0.0] * 62
         rows.append((i, [float(x) for x in vec]))
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    emb = frame(spark, rows, _EMB)
     proj = [r["projection"] for r in
             projections.pca_project(emb, n_components=2, whiten=True).collect()]
     for c in range(2):
@@ -610,7 +594,7 @@ def test_kmeans_twolevel_matches_duckdb_oracle(spark, sf_dir):
     from tests.oracle_utils import compare, duckdb_con
 
     emb = load_table(spark, sf_dir, "embeddings")
-    got = similarity.kmeans_twolevel(emb, n_iter=2).select(
+    got = similarity.kmeans_multilevel(emb, n_iter=2, levels=2).select(
         "vec_id", F.col("cell").cast("long").alias("cell")
     )
     want = duckdb_con(sf_dir).execute(_twolevel_oracle_sql(2)).fetchdf()
@@ -628,7 +612,7 @@ def test_semantic_dedup_twolevel_matches_duckdb_oracle(spark, sf_dir):
     from tests.oracle_utils import compare, duckdb_con
 
     emb = load_table(spark, sf_dir, "embeddings")
-    asg = similarity.kmeans_twolevel(emb, n_iter=2)
+    asg = similarity.kmeans_multilevel(emb, n_iter=2, levels=2)
     got = similarity.semantic_dedup(
         emb, threshold=0.45, assignments=asg
     ).select("vec_id", F.col("cell").cast("long").alias("cell"), "kept")

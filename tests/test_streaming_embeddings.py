@@ -12,6 +12,7 @@ from spotify_streaming_etl_pipeline_spark.streaming.embeddings import (
     online_kmeans_sink,
     read_assignment_log,
 )
+from tests.fixtures import frame
 
 SCHEMA = "vec_id long, embedding array<float>"
 
@@ -27,7 +28,7 @@ def _planted(spark, n_per=12):
             v = list(base)
             v[c] = 30.0 + (i % 4) * 0.01
             rows.append((c + 3 * i, [float(x) for x in v]))
-    return spark.createDataFrame(rows, SCHEMA)
+    return frame(spark, rows, SCHEMA)
 
 
 def _canon(df):
