@@ -443,11 +443,12 @@ def kmeans_lloyd(
         else _dims_df
     )
     if n_clusters is None:
-        n = dims.select("vec_id").distinct().count()
+        counts = _dims_counts(dims)
+        n = counts[0]
         if twolevel_crossover is not None and n > twolevel_crossover:
             out = kmeans_multilevel(
                 emb, None, n_iter, vec_col, target_cluster_size, levels=2,
-                _dims_df=dims, _n=n,
+                _dims_df=dims, _counts=counts,
             )
             if owns_dims:
                 dims.unpersist()
@@ -458,6 +459,18 @@ def kmeans_lloyd(
         out = out.localCheckpoint(eager=True)
         dims.unpersist()
     return out
+
+
+def _dims_counts(dims: DataFrame) -> tuple[int, int]:
+    """(vectors, rows) of an exploded-dims table, in ONE pass over it
+    (a separate distinct().count() + count() pair costs two jobs over
+    the same cached table for two numbers)."""
+    return tuple(
+        dims.agg(
+            F.countDistinct("vec_id").alias("n"),
+            F.count(F.lit(1)).alias("rows"),
+        ).collect()[0]
+    )
 
 
 def _lloyd(
@@ -567,7 +580,7 @@ def kmeans_multilevel(
     target_cluster_size: int = 64,
     levels: int = 3,
     _dims_df: DataFrame | None = None,
-    _n: int | None = None,
+    _counts: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(vec_id, cell): hierarchical (IVF-style) k-means — the scale
     path past flat auto-k Lloyd.  Flat assignment with k = ceil(n/t)
@@ -593,28 +606,18 @@ def kmeans_multilevel(
     ``_FINE_BROADCAST_MAX_ROWS`` the per-round join switches from an
     explicit broadcast to a shuffle_hash hint on (grp, dim); below it
     the broadcast keeps the dims table un-shuffled.  ``_dims_df`` /
-    ``_n`` take ``kmeans_lloyd``'s persisted dims and vector count on
-    its auto-k delegation.  Persists (dims when self-created, each
-    level's grouped dims always) are released before returning, after
-    eagerly localCheckpoint-ing each level's n x 2 output."""
+    ``_counts`` take ``kmeans_lloyd``'s persisted dims and their
+    ``_dims_counts`` on its auto-k delegation.  Persists (dims when
+    self-created, each level's grouped dims always) are released
+    before returning, after eagerly localCheckpoint-ing each level's
+    n x 2 output."""
     owns_dims = _dims_df is None
     dims = (
         _exploded(emb, vec_col).repartition("vec_id").persist()
         if owns_dims
         else _dims_df
     )
-    if _n is None:
-        # ONE pass over the cached dims for both scalars (r12: the
-        # separate distinct().count() + count() pair cost two jobs
-        # over the same cached table for two numbers).
-        n, n_rows = (
-            dims.agg(
-                F.countDistinct("vec_id").alias("n"),
-                F.count(F.lit(1)).alias("rows"),
-            ).collect()[0]
-        )
-    else:
-        n, n_rows = _n, dims.count()
+    n, n_rows = _counts or _dims_counts(dims)
     if ks is None:
         rem = max(1, -(-n // target_cluster_size))
         ks = []
@@ -1007,12 +1010,16 @@ def int8_recall_at_k(
 
 
 def _recall_vs_exact(
-    emb: DataFrame, query_ids: list[int], k: int, approx: DataFrame
+    emb: DataFrame,
+    query_ids: list[int],
+    k: int,
+    approx: DataFrame,
+    vec_col: str = "embedding",
 ) -> DataFrame:
     """(q_id, k, n_overlap): per query, how many of the exact top-k
-    (``cosine_topk``) the ``approx`` (q_id, vec_id, ...) retriever
-    also returns — 0 when it returns none of them."""
-    exact = cosine_topk(emb, query_ids, k).select("q_id", "vec_id")
+    (``cosine_topk`` on ``vec_col``) the ``approx`` (q_id, vec_id, ...)
+    retriever also returns — 0 when it returns none of them."""
+    exact = cosine_topk(emb, query_ids, k, vec_col).select("q_id", "vec_id")
     hits = exact.join(approx.select("q_id", "vec_id"), ["q_id", "vec_id"])
     base = exact.groupBy("q_id").agg(
         F.count(F.lit(1)).cast("long").alias("k")
@@ -1132,4 +1139,4 @@ def rerank_recall_at_k(
         .filter(F.col("rn") <= k)
         .select("q_id", "vec_id")
     )
-    return _recall_vs_exact(emb, query_ids, k, reranked)
+    return _recall_vs_exact(emb, query_ids, k, reranked, vec_col)

@@ -38,17 +38,9 @@ def parquet_file_stats(path: str) -> tuple[int, int]:
     return n, total
 
 
-def recover_swap_residue(path: str, kind: str) -> tuple[str, str]:
-    """Crash recovery for the two-rename swap of ``path`` (rewrite to
-    ``tmp``, rename ``path`` aside to ``old``, promote ``tmp``, retire
-    ``old``), run before anything reads or rewrites ``path``.  A crash
-    can leave (a) ``tmp`` residue after the rewrite, (b) the live dir
-    ABSENT with the data under ``old`` — reads would silently see no
-    table — or (c) a stale ``old`` after promotion.  Restore the old
-    dir when the live one is missing; otherwise clear residue.
-
-    Returns (tmp, old): ``.{kind}_tmp_*`` / ``.{kind}_old_*``
-    siblings, dot-prefixed AND '='-free.  Spark keeps '_'-prefixed
+def _siblings(path: str, kind: str) -> tuple[str, str]:
+    """(tmp, old): the ``.{kind}_tmp_*`` / ``.{kind}_old_*`` siblings
+    of ``path``, dot-prefixed AND '='-free.  Spark keeps '_'-prefixed
     dirs whose name contains '=' (that's how `_year=2021` partitions
     survive), so a name derived from a leaf partition dir must strip
     the '=' or partition discovery would pick it up (verified: an
@@ -57,8 +49,22 @@ def recover_swap_residue(path: str, kind: str) -> tuple[str, str]:
     invisible)."""
     parent, base = os.path.split(os.path.normpath(path))
     safe = base.replace("=", "-")
-    tmp = os.path.join(parent, f".{kind}_tmp_{safe}")
-    old = os.path.join(parent, f".{kind}_old_{safe}")
+    return (
+        os.path.join(parent, f".{kind}_tmp_{safe}"),
+        os.path.join(parent, f".{kind}_old_{safe}"),
+    )
+
+
+def recover_swap_residue(path: str, kind: str) -> tuple[str, str]:
+    """Crash recovery for the two-rename swap of ``path`` (rewrite to
+    ``tmp``, rename ``path`` aside to ``old``, promote ``tmp``, retire
+    ``old``), run before anything reads or rewrites ``path``.  A crash
+    can leave (a) ``tmp`` residue after the rewrite, (b) the live dir
+    ABSENT with the data under ``old`` — reads would silently see no
+    table — or (c) a stale ``old`` after promotion.  Restore the old
+    dir when the live one is missing; otherwise clear residue.
+    Returns the (tmp, old) siblings (``_siblings``)."""
+    tmp, old = _siblings(path, kind)
     if os.path.isdir(old) and not os.path.isdir(path):
         os.rename(old, path)  # case (b): promote the retired copy back
     if os.path.isdir(old):
@@ -68,19 +74,23 @@ def recover_swap_residue(path: str, kind: str) -> tuple[str, str]:
     return tmp, old
 
 
-def swap_write(df: DataFrame, path: str, kind: str) -> None:
-    """Replace the parquet dir ``path`` with ``df`` through the
-    two-rename swap: recover crash residue, write ``df`` to the tmp
-    sibling, rename the live dir ASIDE, promote tmp, retire the old
-    dir, then drop Spark's cached file listing of ``path``.  ``df``'s
-    plan may read ``path`` itself: the live files stay in place until
-    the write has finished.  ``kind`` names the residue siblings
-    (``.{kind}_tmp_*`` / ``.{kind}_old_*``, see
-    ``recover_swap_residue``).  A crash between the renames leaves the
-    data under the old sibling, which the next recovery restores;
-    rmtree-then-rename would leave no table at all."""
-    tmp, old = recover_swap_residue(path, kind)
+def write_aside(df: DataFrame, path: str, kind: str) -> str:
+    """The write half of the swap of ``path``: recover crash residue,
+    then write ``df`` to the tmp sibling and return its path.  The live
+    files stay in place, so ``df``'s plan may read ``path`` itself."""
+    tmp, _old = recover_swap_residue(path, kind)
     df.write.mode("overwrite").parquet(tmp)
+    return tmp
+
+
+def promote(spark: SparkSession, path: str, kind: str) -> None:
+    """The promote half of the swap of ``path``: rename the live dir
+    ASIDE, promote the tmp sibling ``write_aside`` wrote, retire the
+    old dir, then drop Spark's cached file listing of ``path``.
+    Renames only, no Spark job.  A crash between the renames leaves
+    the data under the old sibling, which the next recovery restores;
+    rmtree-then-rename would leave no table at all."""
+    tmp, old = _siblings(path, kind)
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(tmp, path)
@@ -88,7 +98,19 @@ def swap_write(df: DataFrame, path: str, kind: str) -> None:
         shutil.rmtree(old)
     # Spark's shared FileStatusCache still holds the old listing for
     # this path; invalidate it or later reads hit deleted part files.
-    df.sparkSession.catalog.refreshByPath(path)
+    spark.catalog.refreshByPath(path)
+
+
+def swap_write(df: DataFrame, path: str, kind: str) -> None:
+    """Replace the parquet dir ``path`` with ``df`` through the
+    two-rename swap: ``write_aside``, then ``promote``.  ``kind`` names
+    the residue siblings (``.{kind}_tmp_*`` / ``.{kind}_old_*``, see
+    ``recover_swap_residue``).  A caller that must run other writes
+    between the two halves (``pipeline.run``: every dim is written
+    before the fact appends and promoted after them) calls them
+    itself."""
+    write_aside(df, path, kind)
+    promote(df.sparkSession, path, kind)
 
 
 def compact_parquet(

@@ -32,8 +32,9 @@ run (lazy frames otherwise recompute a shared plan for each consumer):
   star joins read the cache, so the multi-line JSON export is scanned
   once per run;
 - each final dim (after the sentinel rows, and ``dim_reason``, which
-  both star joins read) is persisted, so the fact broadcasts and the
-  snapshot swap share one computed snapshot;
+  both star joins read) is written once, to its swap sibling, as soon
+  as it is built; the fact star joins broadcast those written
+  snapshots, and the swap after the facts only renames them in;
 - the executor-path enrichment envelopes are persisted, so the
   dead-letter collect and the dims share one fetch;
 - fact row counts come from the write's own ``Observation``, not from
@@ -54,36 +55,39 @@ runs on the JVM and its plans are built lazily:
 - the delta cutoff is one action over both facts.
 
 The two star branches run at the same time.  After the shared prefix
-(the delta cutoff, the persisted and counted history, the lazily
-persisted ``dim_reason``) the run splits into two driver threads that
-share nothing else:
+(the delta cutoff, the persisted and counted history) the run splits
+into three driver threads:
 
+- **reason**: ``dim_reason`` written to its swap sibling;
 - **tracks**: track enrichment -> artist enrichment -> ``dim_track``
-  and ``dim_artist`` -> ``fact_tracks`` star join and append;
+  and ``dim_artist``, written at once -> ``fact_tracks`` star join and
+  append;
 - **podcasts**: episode enrichment -> podcast enrichment ->
-  ``dim_episode`` and ``dim_podcast`` with their sentinel rows ->
-  ``fact_podcasts`` star join and append.
+  ``dim_episode`` and ``dim_podcast`` with their sentinel rows,
+  written at once -> ``fact_podcasts`` star join and append.
 
-Spark runs jobs submitted from separate threads concurrently, so one
-branch's driver round trips and small jobs overlap the other's.  On
-the driver-loop path the two branches' fetches reach the API at the
-same time; each loop still batches, splits and sleeps out a 429's
-Retry-After on its own.  **Facts, then swaps**: the five dim snapshot
-swaps start only once both fact writes have ended (a failed write
-swaps nothing), then run in parallel, one thread per dim.  Every
-thread carries the caller's job group, description and tags, and the
-dims, surrogate keys and files written are those of one serial run.
+Both star joins wait for the written ``dim_reason``.  Spark runs jobs
+submitted from separate threads concurrently, so one branch's driver
+round trips and small jobs overlap the other's.  On the driver-loop
+path the two branches' fetches reach the API at the same time; each
+loop still batches, splits and sleeps out a 429's Retry-After on its
+own.  **Facts, then swaps**: the five written dims are promoted over
+the live ones (renames, no Spark job) only once both fact writes have
+ended, so a failed run promotes nothing.  Every thread carries the
+caller's job group, description and tags, and the dims, surrogate
+keys and files written are those of one serial run.
 
 A run over nothing new writes nothing: when the delta-filtered
 history is empty and every table of ``schemas.WAREHOUSE_SCHEMAS``
 exists, ``run`` returns those tables right after the count.  Otherwise
-it owns every cache above: its ``finally`` releases them once every
-thread has stopped and the returned frames are re-read from the
-warehouse, or when the run fails.  A run that fails leaves both fact
-tables as it found them: each branch lists its fact dir before the
-append, and ``run`` removes whatever either append added (the next
-run's delta cutoff is the max over both facts, so a fact row that
-outlived its failed run would hide the other fact's plays for good).
+it owns the history and envelope caches: its ``finally`` releases
+them once every thread has stopped and the returned frames are
+re-read from the warehouse, or when the run fails.  A run that fails
+leaves both fact tables as it found them and removes the dims it
+wrote aside: each branch lists its fact dir before the append, and
+``run`` removes whatever either append added (the next run's delta
+cutoff is the max over both facts, so a fact row that outlived its
+failed run would hide the other fact's plays for good).
 Small-file maintenance of the fact tables is a separate step
 (``operators.maintenance.compact_partitioned``).
 """
@@ -92,17 +96,17 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable, Iterator
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
-from .operators.maintenance import recover_swap_residue, swap_write
+from .operators.maintenance import promote, recover_swap_residue, write_aside
 from .plans import dims as dims_mod
 from .plans.facts import build_fact_podcasts, build_fact_tracks, write_fact
 from .schemas import WAREHOUSE_SCHEMAS
@@ -139,19 +143,19 @@ def _read_if_exists(
     return None
 
 
-def _overwrite_parquet_safe(df: DataFrame, path: str) -> None:
-    """Overwrite a parquet dir that ``df``'s plan may itself be reading
-    (incremental dim loads union the existing table): write the new
-    snapshot to a sibling temp dir first, then swap. A plain
+def _overwrite_parquet_safe(staged: DataFrame, path: str) -> None:
+    """Swap the new snapshot ``staged`` of the parquet dir ``path`` in:
+    ``staged`` reads what ``operators.maintenance.write_aside`` wrote
+    to ``path``'s swap sibling, and this is the promote half
+    (rename aside, promote, retire; renames only).  The snapshot's
+    plan may itself read ``path`` (incremental dim loads union the
+    existing table), so its files stay in place until now; a plain
     mode('overwrite') deletes the input files before the plan has read
-    them -> FAILED_READ_FILE. With a table format (Delta/Iceberg) the
-    transaction log makes this dance unnecessary.
-
-    The swap is ``operators.maintenance.swap_write`` (rename aside,
-    promote, retire) with ``.swap_*`` residue, which recovers on the
-    next read (``_read_if_exists``) or swap: a missing live dir
-    restores from the retired copy."""
-    swap_write(df, path, "swap")
+    them -> FAILED_READ_FILE.  With a table format (Delta/Iceberg) the
+    transaction log makes this dance unnecessary.  ``.swap_*`` residue
+    recovers on the next read (``_read_if_exists``) or write aside: a
+    missing live dir restores from the retired copy."""
+    promote(staged.sparkSession, path, "swap")
 
 
 def _tree(path: str) -> set[str] | None:
@@ -181,15 +185,17 @@ def _undo_append(spark: SparkSession, path: str, before: set[str] | None) -> Non
     spark.catalog.refreshByPath(path)
 
 
-def _concurrently(spark: SparkSession, tasks: list[Callable]) -> list:
-    """Run each of ``tasks`` on its own driver thread and return their
-    results in order.  Every thread carries the calling thread's job
-    group, description and tags, so the jobs it starts are the
-    caller's.  Returns, or re-raises the first failure in ``tasks``
-    order, only once every thread has stopped."""
-    with ThreadPoolExecutor(len(tasks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
-    return [f.result() for f in futures]
+@contextmanager
+def _threads(spark: SparkSession) -> Iterator[Callable[..., Future]]:
+    """Yield ``submit(fn, *args)``, which starts ``fn(*args)`` on a
+    driver thread of its own and returns its ``Future``; leave the
+    block only once every thread has stopped.  Every thread carries
+    the calling thread's job group, description and tags, so the jobs
+    it starts are the caller's."""
+    with ThreadPoolExecutor() as pool:
+        yield lambda fn, *args: pool.submit(
+            inheritable_thread_target(spark)(fn), *args
+        )
 
 
 def run(
@@ -203,8 +209,7 @@ def run(
     the written dims/facts re-read from it.  ``fetchers`` maps an
     entity type to its ``"module:attr"`` fetcher; above
     ``enrich_collect_max`` new URIs an entity is enriched on executors.
-    Caches, and the fact appends a failed run removes: see the module
-    docstring."""
+    Caches, and what a failed run removes: see the module docstring."""
     cached: list[DataFrame] = []
     appends: dict[str, set[str] | None] = {}
     try:
@@ -215,6 +220,9 @@ def run(
     except BaseException:
         for path, before in appends.items():
             _undo_append(spark, path, before)
+        for table in WAREHOUSE_SCHEMAS:
+            if table.startswith("dim_"):
+                recover_swap_residue(f"{warehouse_dir}/{table}", "swap")
         raise
     finally:
         for df in cached:
@@ -244,6 +252,10 @@ def _run(
             spark, f"{warehouse_dir}/{table}", WAREHOUSE_SCHEMAS[table]
         )
 
+    def write_aside_and_read(table: str, df: DataFrame) -> DataFrame:
+        tmp = write_aside(df, f"{warehouse_dir}/{table}", "swap")
+        return spark.read.schema(WAREHOUSE_SCHEMAS[table]).parquet(tmp)
+
     # -- 1. ingest history with the delta cutoff (S1/S2/A6) ----------------
     tables = {table: read(table) for table in WAREHOUSE_SCHEMAS}
     cutoff = max_loaded_ts(tables["fact_tracks"], tables["fact_podcasts"])
@@ -259,7 +271,6 @@ def _run(
             (out.dims if kind == "dim" else out.facts)[name] = df
         out.n_fact_rows = dict.fromkeys(out.facts, 0)
         return out
-    reason = persist(dims_mod.build_dim_reason(history, tables["dim_reason"]))
 
     # -- 2. entity discovery + enrichment (A4/A5/J7, S3/S4/S7) --------------
     def enrich(entity: str, uris: DataFrame, dead: list) -> DataFrame | None:
@@ -307,76 +318,74 @@ def _run(
         "podcast": dims_mod.sentinel_podcast,
     }
 
+    def write_dim(e: str, env: DataFrame | None) -> DataFrame | None:
+        """The final ``dim_<e>`` over the envelopes ``env``, written
+        aside and read back; None when there is no such dim yet."""
+        clean, natural_key, key_name = cleaners[e]
+        dim = tables[f"dim_{e}"]
+        if env is not None:
+            dim = dims_mod.load_dim(clean(env), natural_key, key_name, dim)
+        if dim is None:
+            return None
+        if e in sentinels:
+            dim = sentinels[e](spark).unionByName(dim.filter(F.col(key_name) != 0))
+        return write_aside_and_read(f"dim_{e}", dim)
+
     def star(fact: str, entity: str, parent: str, parent_uris, build_fact):
         """One star branch: enrich ``entity``, then ``parent`` (whose
         URIs ``parent_uris`` mines from ``entity``'s envelopes — ORDER
-        MATTERS, reference extractor.py:317), load both dims, then
-        build and append ``fact_<fact>`` (J1/J2).  Returns the
-        branch's dead letters, its final dims and ``{fact: rows
-        appended}`` (empty when a dim is missing and no fact is
-        built)."""
+        MATTERS, reference extractor.py:317), write both dims aside at
+        once, then build and append ``fact_<fact>`` (J1/J2) over the
+        written dims and the written ``dim_reason`` (``reason``).
+        Returns the branch's dead letters, its written dims and
+        ``{fact: rows appended}`` (empty when a dim is missing and no
+        fact is built)."""
         dead: list[tuple[str, str, str]] = []
         uris = dims_mod.distinct_uris(history, cleaners[entity][1])
-        envelopes = {entity: enrich(entity, uris, dead)}
-        envelopes[parent] = enrich(
+        env = enrich(entity, uris, dead)
+        parent_env = enrich(
             parent,
-            parent_uris(envelopes[entity])
-            if envelopes[entity] is not None
+            parent_uris(env) if env is not None
             else envelope_frame(spark, []).select("uri"),
             dead,
         )
-        dims: dict[str, DataFrame] = {}
-        for e, env in envelopes.items():
-            clean, natural_key, key_name = cleaners[e]
-            dim = tables[f"dim_{e}"]
-            if env is not None:
-                dim = dims_mod.load_dim(clean(env), natural_key, key_name, dim)
-            if dim is None:
-                continue
-            if e in sentinels:
-                dim = sentinels[e](spark).unionByName(dim.filter(F.col(key_name) != 0))
-            # Each final dim is computed once: the fact broadcast that
-            # reads it fills the cache, and its snapshot swap reads it.
-            dims[e] = persist(dim)
+        with _threads(spark) as submit:
+            written = {entity: submit(write_dim, entity, env),
+                       parent: submit(write_dim, parent, parent_env)}
+        dims = {e: w.result() for e, w in written.items() if w.result() is not None}
         if len(dims) < 2:
             return dead, dims, {}
-        fact_df = build_fact(history, dims[entity], dims[parent], reason)
+        fact_df = build_fact(history, dims[entity], dims[parent], reason.result())
         path = f"{warehouse_dir}/fact_{fact}"
         appends[path] = _tree(path)
         # The star join runs once: the write observes its row count.
         obs = write_fact(fact_df, path)
         return dead, dims, {fact: obs["n_rows"]}
 
-    branches = _concurrently(
-        spark,
-        [
-            partial(star, "tracks", "track", "artist",
-                    dims_mod.artist_uris_from_track_envelopes, build_fact_tracks),
-            partial(star, "podcasts", "episode", "podcast",
-                    dims_mod.podcast_uris_from_episode_envelopes, build_fact_podcasts),
-        ],
-    )
-    for dead, dims, n_fact_rows in branches:
+    with _threads(spark) as submit:
+        reason = submit(write_aside_and_read, "dim_reason",
+                        dims_mod.build_dim_reason(history, tables["dim_reason"]))
+        branches = [
+            submit(star, "tracks", "track", "artist",
+                   dims_mod.artist_uris_from_track_envelopes, build_fact_tracks),
+            submit(star, "podcasts", "episode", "podcast",
+                   dims_mod.podcast_uris_from_episode_envelopes, build_fact_podcasts),
+        ]
+    for branch in branches:
+        dead, dims, n_fact_rows = branch.result()
         out.dead_letters.extend(dead)
         out.dims.update(dims)
         out.n_fact_rows.update(n_fact_rows)
-    out.dims["reason"] = reason
+    out.dims["reason"] = reason.result()
 
-    # -- 4. swap the dim snapshots ------------------------------------------
-    # Facts, then swaps: both fact writes have ended here.  A dim cache
-    # may be evicted, and an evicted dim recomputes from the CURRENT dim
-    # parquet, which its swap deletes; fact writes are appends, so
-    # ordering them first is both safe and required, and a failed fact
-    # write swaps nothing.  Each swap touches only its own dim.
-    _concurrently(
-        spark,
-        [
-            partial(_overwrite_parquet_safe, df, f"{warehouse_dir}/dim_{entity}")
-            for entity, df in out.dims.items()
-        ],
-    )
-    # Re-read everything written: the pre-swap lazy plans pin file
-    # listings that no longer exist; callers get fresh frames, and
+    # -- 4. swap the written dims in ------------------------------------------
+    # Facts, then swaps: both fact writes have ended here, and a failed
+    # one promotes nothing.  Each dim's snapshot is written aside
+    # already, so the swap is renames only.
+    for entity, staged in out.dims.items():
+        _overwrite_parquet_safe(staged, f"{warehouse_dir}/dim_{entity}")
+    # Re-read everything written: the staged frames pin file listings
+    # that the promote renamed away; callers get fresh frames, and
     # ``run`` releases this run's caches once this returns.
     for entity in out.dims:
         out.dims[entity] = read(f"dim_{entity}")

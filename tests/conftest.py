@@ -118,6 +118,18 @@ def pytest_terminal_summary(terminalreporter):
             f"skipped {n_parity} oracle-parity pairs and {n_battery} long "
             "batteries; SPARK_GRAFT_FULL_TESTS=1 runs them"
         )
+    # Caches no test released: the session's RDDs still persisted at
+    # the end (read from the JVM, so a cache a builder made and never
+    # handed back counts too).  Starts no session.
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        terminalreporter.write_sep(
+            "-",
+            f"{sc._jsc.getPersistentRDDs().size()} RDDs still persisted "
+            "in the Spark session at the end of the run",
+        )
 
 
 @pytest.fixture(scope="session")

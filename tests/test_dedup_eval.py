@@ -150,6 +150,22 @@ def test_rerank_recall_dominates_raw_sign_bit(spark, sf_dir):
     assert sum(rer.values()) >= sum(raw.values())
 
 
+def test_rerank_recall_measures_exact_top_k_on_vec_col(spark, sf_dir):
+    """``vec_col`` names the vectors of the exact top-k too: on a frame
+    whose vectors live only in column ``e``, the call returns the rows
+    the default-column call returns on the original frame."""
+    from spotify_streaming_etl_pipeline_spark.llm import similarity
+    from spotify_streaming_etl_pipeline_spark.sources.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qids = [0, 1, 2, 3, 4]
+    default = similarity.rerank_recall_at_k(emb, qids, k=5).collect()
+    renamed = similarity.rerank_recall_at_k(
+        emb.withColumnRenamed("embedding", "e"), qids, k=5, vec_col="e"
+    ).collect()
+    assert sorted(map(tuple, renamed)) == sorted(map(tuple, default))
+
+
 def test_quantization_ladder_ordering(spark, sf_dir):
     rows = {
         r.method: r.recall_at_5

@@ -375,14 +375,58 @@ def test_kmeans_lloyd_auto_k_matches_explicit(spark):
     )
 
 
-def test_kmeans_lloyd_auto_k_delegates_to_twolevel_above_crossover(spark):
+def _group_jobs(spark, group: str, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, read from ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kmeans_lloyd_auto_k_delegates_to_twolevel_above_crossover(
+    spark, monkeypatch
+):
     """The scale switch (llm/similarity.py:kmeans_lloyd): auto-k above
     ``twolevel_crossover`` vectors must return exactly the two-level
     assignment (row-identical to calling kmeans_multilevel(levels=2)
     directly), so SemDeDup / IVF training get the O(n*sqrt(k)) plan
     by default at scale; below the crossover — and with
-    crossover=None — the flat plan is unchanged."""
+    crossover=None — the flat plan is unchanged.  The delegation
+    counts the vectors and rows once: up to the first Lloyd round it
+    runs the jobs of one ``_dims_counts`` pass over fresh dims."""
     emb = _planted_vectors(spark)  # 60 vectors
+
+    class FirstRound(Exception):
+        pass
+
+    def first_round(dims, *args, **kwargs):
+        dims.unpersist()  # the delegation's own dims
+        raise FirstRound
+
+    def delegate():
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "_lloyd", first_round)
+            try:
+                similarity.kmeans_lloyd(
+                    emb, n_clusters=None, n_iter=2, target_cluster_size=20,
+                    twolevel_crossover=50,
+                )
+            except FirstRound:
+                pass
+
+    def one_pass():
+        dims = similarity._exploded(emb, "embedding").repartition("vec_id").persist()
+        similarity._dims_counts(dims)
+        dims.unpersist()
+
+    assert _group_jobs(spark, "kmeans-delegation", delegate) == _group_jobs(
+        spark, "kmeans-one-pass", one_pass
+    )
     delegated = similarity.kmeans_lloyd(
         emb, n_clusters=None, n_iter=2, target_cluster_size=20,
         twolevel_crossover=50,  # 60 > 50 -> two-level path

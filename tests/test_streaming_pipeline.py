@@ -306,6 +306,82 @@ def test_pipeline_branch_failure_swaps_nothing(spark, raw_dir, tmp_path, monkeyp
     assert res.n_fact_rows["tracks"] == 1
 
 
+def _swap_siblings(wh) -> list[str]:
+    """The ``.swap_tmp_*`` / ``.swap_old_*`` dirs beside the tables."""
+    return sorted(n for n in os.listdir(wh) if n.startswith(".swap_"))
+
+
+def _table_rows(spark, wh) -> dict[str, list[tuple]]:
+    """Every warehouse table's rows, sorted."""
+    return {
+        t: sorted(
+            map(tuple, spark.read.schema(s).parquet(f"{wh}/{t}").collect()), key=repr
+        )
+        for t, s in WAREHOUSE_SCHEMAS.items()
+    }
+
+
+def test_pipeline_persists_only_the_history(spark, raw_dir, tmp_path, monkeypatch):
+    """On the driver-loop path the run's one cache is the delta-filtered
+    history: each dim is computed once, by its write aside, and the
+    fact star joins read the written snapshots.  Counted as each dim
+    is swapped in, after both fact writes."""
+    before = _persisted_ids(spark)
+    new_caches = []
+    swap_in = pipeline._overwrite_parquet_safe
+
+    def counting_swap_in(staged, path):
+        new_caches.append(len(_persisted_ids(spark) - before))
+        swap_in(staged, path)
+
+    monkeypatch.setattr(pipeline, "_overwrite_parquet_safe", counting_swap_in)
+    pipeline.run(spark, str(raw_dir), str(tmp_path / "wh"), fetchers=_fake_fetchers())
+    assert new_caches == [1] * 5
+
+
+def test_pipeline_leaves_no_swap_siblings_and_reruns_clean(
+    spark, raw_dir, tmp_path, monkeypatch
+):
+    """A successful run, a no-op run and a failed run (its fact write
+    raising after every dim is written aside) leave no swap sibling in
+    the warehouse, and a rerun after the failure leaves the dims (keys
+    included) and facts of a run that never failed."""
+    wh, clean = str(tmp_path / "wh"), str(tmp_path / "clean")
+
+    def load(warehouse):
+        return pipeline.run(spark, str(raw_dir), warehouse, fetchers=_fake_fetchers())
+
+    def failing_write_fact(fact, path):
+        raise RuntimeError("fact write failed")
+
+    load(wh)
+    assert _swap_siblings(wh) == []
+    load(clean)
+    assert load(wh).n_history_rows == 0
+    assert _swap_siblings(wh) == []
+    _write_export(
+        raw_dir / "export_3.json",
+        [
+            history_row(ts="2022-01-01T08:00:00Z", spotify_track_uri="spotify:track:789"),
+            history_row(
+                ts="2022-01-01T09:00:00Z",
+                spotify_track_uri=None,
+                master_metadata_track_name=None,
+                episode_name="Ep 2",
+                episode_show_name="Test Show",
+                spotify_episode_uri="spotify:episode:8",
+            ),
+        ],
+    )
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "write_fact", failing_write_fact)
+        with pytest.raises(RuntimeError, match="fact write failed"):
+            load(wh)
+    assert _swap_siblings(wh) == []
+    assert load(wh).n_fact_rows == load(clean).n_fact_rows == {"tracks": 1, "podcasts": 1}
+    assert _table_rows(spark, wh) == _table_rows(spark, clean)
+
+
 def test_pipeline_executor_enrichment_path(spark, raw_dir, tmp_path):
     """enrich_collect_max=0 sends every URI set through the executor
     path (``enrich_partitions``, one Arrow map); the warehouse must
