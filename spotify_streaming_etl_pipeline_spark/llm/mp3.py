@@ -71,13 +71,26 @@ boundary flagged by the round-11 review.
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
 
-__all__ = ["decode_mp3", "encode_mp3"]
+__all__ = ["decode_mp3", "encode_mp3", "frame_headers", "id3v2_end"]
 
-_RATES = [44100, 48000, 32000]  # sample-rate index 0/1/2 (MPEG-1)
+# Layer III header tables (public spec constants): bitrate in kbps by
+# 4-bit index (0 = free format, 15 = reserved) for MPEG-1 and for the
+# MPEG-2/2.5 low-sampling-frequency (LSF) extension; sample rate by
+# 2-bit index (3 = reserved), keyed by the 2-bit version id (3 =
+# MPEG-1, 2 = MPEG-2, 0 = MPEG-2.5; 1 is reserved).
 _BITRATES = [
     0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 0,
 ]
+_BITRATES_LSF = [
+    0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160, 0,
+]
+_RATES = {
+    3: [44100, 48000, 32000, 0],
+    2: [22050, 24000, 16000, 0],
+    0: [11025, 12000, 8000, 0],
+}
 
 # scalefac_compress -> (slen1, slen2): the published 16-entry table
 _SLEN = [
@@ -597,51 +610,75 @@ class _Synth:
 # frame walk + top-level decode
 
 
-def _walk_frames(blob: bytes) -> list[dict]:
-    blob = bytes(blob)
-    pos = 0
-    if blob[:3] == b"ID3":
-        if len(blob) < 10:
-            raise ValueError("truncated ID3v2 header")
-        size = 0
-        for b in blob[6:10]:
-            size = (size << 7) | (b & 0x7F)
-        pos = 10 + size
-    frames = []
+def id3v2_end(blob: bytes) -> int:
+    """Offset just past an ID3v2 prefix (10-byte header plus its
+    synchsafe 28-bit size), 0 when the blob has none — the prefix mp3
+    and ADTS AAC streams share."""
+    if blob[:3] != b"ID3":
+        return 0
+    if len(blob) < 10:
+        raise ValueError("truncated ID3v2 header")
+    size = 0
+    for b in blob[6:10]:
+        size = (size << 7) | (b & 0x7F)
+    return 10 + size
+
+
+def frame_headers(blob: bytes) -> Iterator[tuple[int, int, int, int, int]]:
+    """The one MPEG audio frame walk: ``(pos, header, bitrate_kbps,
+    sample_rate, length)`` per Layer III frame (MPEG-1, -2 or -2.5),
+    from past the ID3v2 prefix to the end of the blob or to an ID3v1
+    (``TAG``) / APE (``APETAGEX``) end tag after the first frame.
+    A frame is ``samples / 8 * bitrate / rate`` bytes plus the padding
+    bit, with 1152 samples for MPEG-1 and 576 otherwise.  Lost sync, a
+    free-format or reserved field, a truncated final frame or no frame
+    at all raise ValueError; Layers I/II and the reserved version raise
+    NotImplementedError."""
+    pos = id3v2_end(blob)
+    n = 0
     while pos + 4 <= len(blob):
-        if frames and blob[pos : pos + 3] == b"TAG":
-            break
-        if frames and blob[pos : pos + 8] == b"APETAGEX":
+        # real-world mp3s ubiquitously end in these tags
+        if n and (blob[pos : pos + 3] == b"TAG"
+                  or blob[pos : pos + 8] == b"APETAGEX"):
             break
         h = int.from_bytes(blob[pos : pos + 4], "big")
         if (h >> 21) & 0x7FF != 0x7FF:
             raise ValueError("lost MPEG frame sync mid-stream")
         version = (h >> 19) & 3
-        layer = (h >> 17) & 3
-        if version != 3:
+        if version == 1 or (h >> 17) & 3 != 1:
+            raise NotImplementedError(
+                "only Layer III frames walk here (Layers I/II use "
+                "different frame formulas)"
+            )
+        br = (_BITRATES if version == 3 else _BITRATES_LSF)[(h >> 12) & 0xF]
+        rate = _RATES[version][(h >> 10) & 3]
+        if not br or not rate:
+            raise ValueError(
+                "free-format/reserved bitrate or reserved sample rate"
+            )
+        flen = (144 if version == 3 else 72) * br * 1000 // rate
+        flen += (h >> 9) & 1
+        if pos + flen > len(blob):
+            raise ValueError("truncated final mp3 frame")
+        yield pos, h, br, rate, flen
+        n += 1
+        pos += flen
+    if not n:
+        raise ValueError("not an MPEG audio stream (no frame sync)")
+
+
+def _walk_frames(blob: bytes) -> list[dict]:
+    blob = bytes(blob)
+    frames = []
+    for pos, h, _br, rate, flen in frame_headers(blob):
+        if (h >> 19) & 3 != 3:
             raise NotImplementedError(
                 "mp3 PCM decode covers MPEG-1 only (MPEG-2/2.5 LSF "
                 "streams keep the mp3_stream_info header audit)"
             )
-        if layer != 1:
-            raise NotImplementedError(
-                "Layers I/II use different payload formats; only "
-                "Layer III decodes here"
-            )
         protection = (h >> 16) & 1
-        br = _BITRATES[(h >> 12) & 0xF]
-        sr_idx = (h >> 10) & 3
-        if not br or sr_idx == 3:
-            raise ValueError(
-                "free-format/reserved bitrate or reserved sample rate"
-            )
-        rate = _RATES[sr_idx]
-        pad = (h >> 9) & 1
         mode = (h >> 6) & 3
         mode_ext = (h >> 4) & 3
-        flen = 144 * br * 1000 // rate + pad
-        if pos + flen > len(blob):
-            raise ValueError("truncated final mp3 frame")
         nch = 1 if mode == 3 else 2
         body = pos + 4
         if protection == 0:
@@ -660,9 +697,6 @@ def _walk_frames(blob: bytes) -> list[dict]:
                 "main": blob[body + side_len : pos + flen],
             }
         )
-        pos += flen
-    if not frames:
-        raise ValueError("not an MPEG audio stream (no frame sync)")
     return frames
 
 
@@ -870,9 +904,10 @@ def encode_mp3(
     (each frame self-contained); stuffing bits pad to the spec frame
     length.  See the module docstring for what conformant means
     here."""
-    if sample_rate not in _RATES:
-        raise ValueError(f"MPEG-1 sample rate must be one of {_RATES}")
-    rate_idx = _RATES.index(sample_rate)
+    rates = _RATES[3][:3]
+    if sample_rate not in rates:
+        raise ValueError(f"MPEG-1 sample rate must be one of {rates}")
+    rate_idx = rates.index(sample_rate)
     br = _BITRATES[bitrate_idx]
     if not br:
         raise ValueError("free-format bitrate index is not supported")

@@ -32,15 +32,21 @@ set (length, first byte, md5) so the Spark-side plumbing — schema,
 batch shape, partitioning — is oracle-testable end to end regardless
 of codec availability.
 
-Plumbing: every one-row-per-blob feature stage is a per-blob row
-function handed to ``_blob_stage`` — one Arrow-batched
-``mapInPandas`` over ``(doc_id, blob)`` that emits
-``(doc_id, *row_of(blob))`` under the stage's schema — and every
-``synth_*_corpus`` substrate is a per-doc blob function handed to
-``_synth_stage``.  The poison policy is stated once, in
-``_blob_stage``: a row function that raises any ``Exception`` yields
-``doc_id`` plus NULLs (dead-letter), never a killed task;
-``BaseException`` (interrupts, exits) still propagates.
+Plumbing: every Python step over media runs through one of two Arrow
+stages.  Every feature stage is a per-blob row function handed to
+``_blob_stage`` — one Arrow-batched ``mapInPandas`` over
+``(doc_id, blob)`` that emits ``(doc_id, *row_of(blob))`` under the
+stage's schema.  The many-row stages (``video_fingerprint`` here,
+``warc_record_table`` and ``pdf_record_table`` in ``warc.py``) go
+through ``_blob_rows``: their rows ride one ``array<struct>`` cell per
+blob through ``_blob_stage`` and the JVM explodes it.  Every
+``synth_*_corpus`` substrate, and ``warc.py``'s archive synthesizers,
+is a per-doc blob function handed to ``_synth_stage``.  The poison
+policy is stated once, in ``_blob_stage``: a row function that raises
+any ``Exception`` yields ``doc_id`` plus NULLs (dead-letter; no rows
+for a many-row stage), never a killed task; ``BaseException``
+(interrupts, exits) still propagates.  Counting dead letters by
+reason would go in that one ``except``.
 """
 
 from __future__ import annotations
@@ -53,6 +59,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     LongType,
     StringType,
@@ -61,6 +68,7 @@ from pyspark.sql.types import (
 )
 
 from . import dedup
+from .mp3 import _BITRATES, _RATES, frame_headers, id3v2_end
 
 BLOB_FEATURE_SCHEMA = StructType(
     [
@@ -76,8 +84,8 @@ def _blob_stage(
     row_of: Callable[[bytes], tuple],
     schema: StructType | str,
 ) -> DataFrame:
-    """The media stage every one-row-per-blob feature extractor runs
-    through: Arrow-batched ``mapInPandas`` over ``(doc_id, blob)``
+    """The media stage every per-blob Python step runs through (the
+    many-row ones by way of ``_blob_rows``): Arrow-batched ``mapInPandas`` over ``(doc_id, blob)``
     emitting ``(doc_id, *row_of(bytes(blob)))`` — one output row per
     input row, columns named by ``schema``.
 
@@ -107,21 +115,52 @@ def _blob_stage(
     return media.select("doc_id", "blob").mapInPandas(_batch, schema=schema)
 
 
-def _synth_stage(docs: DataFrame, blob_of: Callable[[int], bytes]) -> DataFrame:
+def _blob_rows(
+    media: DataFrame,
+    rows_of: Callable[[bytes], list[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The many-row media stage: ``rows_of(blob)`` returns a list of
+    rows under ``schema``'s columns after ``doc_id``.  They ride one
+    ``array<struct>`` cell per blob through ``_blob_stage``, and the
+    JVM explodes it — so a poison blob, whose cell is NULL, gives no
+    rows."""
+    doc_id, *fields = StructType.fromDDL(schema).fields
+    cell = StructType(
+        [doc_id, StructField("rows", ArrayType(StructType(fields)))]
+    )
+    return (
+        _blob_stage(media, lambda b: (rows_of(b),), cell)
+        .select("doc_id", F.explode("rows").alias("r"))
+        .select("doc_id", "r.*")
+    )
+
+
+def _synth_stage(
+    docs: DataFrame,
+    blob_of: Callable[..., bytes],
+    arg_col: str | None = None,
+) -> DataFrame:
     """The synthetic-corpus stage every ``synth_*_corpus`` runs
-    through: ``(doc_id, blob_of(int(doc_id)))`` per doc, Arrow-batched,
-    under the shared ``doc_id long, blob binary`` media shape."""
+    through: ``(doc_id, blob_of(int(doc_id)))`` per doc — or
+    ``blob_of(int(doc_id), value)`` when ``arg_col`` names an input
+    column to pass along — Arrow-batched, under the shared
+    ``doc_id long, blob binary`` media shape."""
+    cols = ["doc_id"] + ([arg_col] if arg_col else [])
 
     def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "blob": [blob_of(int(i)) for i in pdf["doc_id"]],
+                    "blob": [
+                        blob_of(int(i), *rest)
+                        for i, *rest in zip(*(pdf[c] for c in cols))
+                    ],
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(
+    return docs.select(*cols).mapInPandas(
         _batch, schema="doc_id long, blob binary"
     )
 
@@ -149,30 +188,15 @@ def extract_blob_features(media: DataFrame) -> DataFrame:
     This is where a real pipeline decodes images / resamples audio /
     samples video frames per batch. Here the features are a
     deterministic function of the bytes (length, first byte, md5) so
-    correctness is oracle-checkable; swap `_features_batch` internals
-    for a real decoder without touching the Spark plan.
+    correctness is oracle-checkable; swap the row function for a real
+    decoder without touching the Spark plan.
     """
+    import hashlib
 
-    def _features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            blobs = pdf["blob"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": blobs.map(len).astype("int64"),
-                    "first_byte": blobs.map(
-                        lambda b: b[0] if len(b) else -1
-                    ).astype("int64"),
-                    "content_md5": blobs.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                }
-            )
-
-    return media.select("doc_id", "blob").mapInPandas(
-        _features_batch, schema=BLOB_FEATURE_SCHEMA
+    return _blob_stage(
+        media,
+        lambda b: (len(b), b[0] if b else -1, hashlib.md5(b).hexdigest()),
+        BLOB_FEATURE_SCHEMA,
     )
 
 
@@ -415,11 +439,13 @@ def encode_png(
     )
 
 
-def _decode_raster(blob: bytes) -> dict:
-    """Dispatch bytes to the pure in-repo raster decoders by magic
-    signature (PNG / BMP / GIF / baseline JPEG) — the
-    library-independent path ``resize_image`` builds on. Returns the
-    common {"width","height","channels","pixels"} contract."""
+def decode_image(blob: bytes) -> dict:
+    """The one raster dispatcher: bytes to the in-repo decoders by
+    magic signature (PNG / BMP / GIF / JPEG / WebP), the path
+    ``resize_image`` builds on.  Returns the common
+    {"width","height","channels","pixels"} contract (WebP's packed
+    ARGB unpacked to channel values); any other signature raises
+    ValueError."""
     b = bytes(blob)
     if b[:8] == _PNG_SIG:
         return decode_png(b)
@@ -435,29 +461,13 @@ def _decode_raster(blob: bytes) -> dict:
         from .webp import decode_webp
 
         out = decode_webp(b)
-        px = out["pixels"]
-        if out["has_alpha"]:
-            flat = [
-                c
-                for p in px
-                for c in (
-                    (p >> 16) & 255, (p >> 8) & 255, p & 255,
-                    (p >> 24) & 255,
-                )
-            ]
-            ch = 4
-        else:
-            flat = [
-                c
-                for p in px
-                for c in ((p >> 16) & 255, (p >> 8) & 255, p & 255)
-            ]
-            ch = 3
+        ch = 4 if out["has_alpha"] else 3
+        shifts = (16, 8, 0, 24)[:ch]  # ARGB -> R, G, B(, A)
         return {
             "width": out["width"],
             "height": out["height"],
             "channels": ch,
-            "pixels": flat,
+            "pixels": [(p >> k) & 255 for p in out["pixels"] for k in shifts],
         }
     raise ValueError(
         "unrecognized raster signature (PNG/BMP/GIF/JPEG/WebP decode here)"
@@ -466,14 +476,14 @@ def _decode_raster(blob: bytes) -> dict:
 
 def resize_image(blob: bytes, width: int, height: int) -> bytes:
     """REAL image resize with zero external dependencies: decode via
-    the in-repo codecs (``_decode_raster``), nearest-neighbor resample
+    the in-repo codecs (``decode_image``), nearest-neighbor resample
     to (width, height) with floor index mapping sx = x*src_w // width
     (deterministic, oracle-expressible), re-encode as PNG — the
     canonical normalization format (lossless, carries 1-4 channels),
     regardless of input format. Channel count is preserved."""
     if width <= 0 or height <= 0:
         raise ValueError("resize target must be positive")
-    img = _decode_raster(blob)
+    img = decode_image(blob)
     sw, sh, ch = img["width"], img["height"], img["channels"]
     px = img["pixels"]  # packed bytes, or a list of ints (JPEG)
     xs = [(x * sw) // width * ch for x in range(width)]
@@ -698,7 +708,8 @@ def decode_gif(blob: bytes) -> dict:
     raise ValueError("GIF contains no image descriptor")
 
 
-PNG_FEATURE_SCHEMA = StructType(
+#: The PNG/BMP/GIF feature row: ``_image_row`` under ``doc_id``.
+IMAGE_FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
         StructField("width", LongType()),
@@ -716,7 +727,7 @@ def png_features(media: DataFrame) -> DataFrame:
     non-PNG blobs yield null features instead of failing the batch —
     at corpus scale a poison blob must dead-letter, not kill a task."""
     return _blob_stage(
-        media, lambda b: _image_row(decode_png(b)), PNG_FEATURE_SCHEMA
+        media, lambda b: _image_row(decode_png(b)), IMAGE_FEATURE_SCHEMA
     )
 
 
@@ -1023,24 +1034,13 @@ def _pcm_row(w: dict) -> tuple:
     )
 
 
-BMP_FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("channels", LongType()),
-        StructField("mean_pixel", LongType()),
-    ]
-)
-
-
 def bmp_features(media: DataFrame) -> DataFrame:
     """``png_features``'s BMP sibling: Arrow-batched mapInPandas over
     the binary column, BMP blobs decoded with ``decode_bmp`` into
     (width, height, channels, mean pixel value); poison blobs yield
     null features, never a task failure."""
     return _blob_stage(
-        media, lambda b: _image_row(decode_bmp(b)), BMP_FEATURE_SCHEMA
+        media, lambda b: _image_row(decode_bmp(b)), IMAGE_FEATURE_SCHEMA
     )
 
 
@@ -1126,9 +1126,9 @@ def decode_audio(blob: bytes) -> dict:
 
         return decode_mp3(blob)
     raise NotImplementedError(
-        "decode_audio handles RIFF/WAVE and FLAC; plug a codec into the "
-        "mapInPandas batch function for other containers — the Spark "
-        "plumbing is container-agnostic"
+        "decode_audio handles RIFF/WAVE, FLAC and MPEG-1 Layer III; other "
+        "containers need a codec, which plugs in as a _blob_stage row "
+        "function — the Spark plumbing is container-agnostic"
     )
 
 
@@ -1369,7 +1369,7 @@ def gif_features(media: DataFrame) -> DataFrame:
     GIF blobs decoded with ``decode_gif`` (full LZW) into (width,
     height, channels, mean pixel); poison blobs null out."""
     return _blob_stage(
-        media, lambda b: _image_row(decode_gif(b)), BMP_FEATURE_SCHEMA
+        media, lambda b: _image_row(decode_gif(b)), IMAGE_FEATURE_SCHEMA
     )
 
 
@@ -1668,20 +1668,6 @@ def synth_mkv_corpus(docs: DataFrame) -> DataFrame:
     return _synth_stage(docs, _blob)
 
 
-# MPEG-1 Layer III header tables (public spec constants): bitrate in
-# kbps by 4-bit index, sample rate by 2-bit index.
-_MP3_BITRATES = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                 224, 256, 320, 0]
-_MP3_RATES = [44100, 48000, 32000, 0]
-
-
-# MPEG-2/2.5 Layer III tables (public spec constants).
-_MP3_BITRATES_V2 = [0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112,
-                    128, 144, 160, 0]
-_MP3_RATES_V2 = [22050, 24000, 16000, 0]
-_MP3_RATES_V25 = [11025, 12000, 8000, 0]
-
-
 def mp3_stream_info(blob: bytes) -> dict:
     """REAL pure-stdlib MPEG Layer III header walk — the corpus-QA
     primitive for audio duration/bitrate audits WITHOUT a PCM decode
@@ -1694,61 +1680,19 @@ def mp3_stream_info(blob: bytes) -> dict:
     "duration_ms", "vbr"}. MPEG-1 Layer III payloads PCM-decode via
     llm/mp3.py (``decode_audio``); this walk stays the cheap
     header-only audit that also covers MPEG-2/2.5 and the huffman
-    tables outside mp3.py's embedded registry."""
-    blob = bytes(blob)
-    pos = 0
-    if blob[:3] == b"ID3":  # ID3v2 container prefix: 4-byte synchsafe size
-        if len(blob) < 10:
-            raise ValueError("truncated ID3v2 header")
-        size = 0
-        for b in blob[6:10]:
-            size = (size << 7) | (b & 0x7F)
-        pos = 10 + size
-    n_frames = 0
-    rate = None
-    spf = None  # samples per frame (version-fixed)
+    tables outside mp3.py's embedded registry.  The frames come from
+    ``llm.mp3.frame_headers``, the walk the decoder runs too, so a
+    truncated final frame raises here as it does there."""
+    rate = spf = None  # samples per frame (version-fixed)
     bitrates = []
-    while pos + 4 <= len(blob):
-        # End-of-stream tags: real-world mp3s ubiquitously carry a
-        # 128-byte ID3v1 trailer ("TAG") and/or an APE tag after the
-        # last frame — after at least one valid frame these end the
-        # walk cleanly instead of failing the whole stream.
-        if n_frames and blob[pos : pos + 3] == b"TAG":
-            break
-        if n_frames and blob[pos : pos + 8] == b"APETAGEX":
-            break
-        h = int.from_bytes(blob[pos : pos + 4], "big")
-        if (h >> 21) & 0x7FF != 0x7FF:
-            raise ValueError("lost MPEG frame sync mid-stream")
-        version = (h >> 19) & 3  # 0=MPEG-2.5, 2=MPEG-2, 3=MPEG-1
-        layer = (h >> 17) & 3
-        if version == 1 or layer != 1:  # reserved version / not Layer III
-            raise NotImplementedError(
-                "only Layer III headers parse here (Layers I/II use "
-                "different frame formulas)"
-            )
-        if version == 3:
-            br = _MP3_BITRATES[(h >> 12) & 0xF]
-            sr = _MP3_RATES[(h >> 10) & 3]
-            samples, step = 1152, 144
-        else:
-            br = _MP3_BITRATES_V2[(h >> 12) & 0xF]
-            sr = (_MP3_RATES_V2 if version == 2 else _MP3_RATES_V25)[
-                (h >> 10) & 3
-            ]
-            samples, step = 576, 72
-        pad = (h >> 9) & 1
-        if not br or not sr:
-            raise ValueError("free-format/reserved bitrate or sample rate")
+    for _pos, h, br, sr, _len in frame_headers(bytes(blob)):
+        samples = 1152 if (h >> 19) & 3 == 3 else 576
         if rate is None:
             rate, spf = sr, samples
         elif sr != rate or samples != spf:
             raise ValueError("sample rate/version changes mid-stream")
         bitrates.append(br)
-        n_frames += 1
-        pos += step * br * 1000 // sr + pad
-    if n_frames == 0:
-        raise ValueError("not an MPEG audio stream (no frame sync)")
+    n_frames = len(bitrates)
     return {
         "n_frames": n_frames,
         "sample_rate": rate,
@@ -1787,13 +1731,13 @@ def synth_mp3_corpus(docs: DataFrame) -> DataFrame:
 
     def _blob(i: int) -> bytes:
         rate_idx = i % 3  # 44100/48000/32000
-        rate = _MP3_RATES[rate_idx]
+        rate = _RATES[3][rate_idx]
         out = bytearray()
         if i % 2 == 1:
             out += _id3v2(b"TAGDATA!" * (1 + i % 3))
         for j in range(3 + i % 5):
             br_idx = 9 if (i % 2 == 1 and j % 2 == 1) else 8
-            br = _MP3_BITRATES[br_idx]
+            br = _BITRATES[br_idx]
             h = (0x7FF << 21) | (3 << 19) | (1 << 17)
             h |= br_idx << 12 | rate_idx << 10
             flen = 144 * br * 1000 // rate
@@ -2019,14 +1963,7 @@ def aac_stream_info(blob: bytes) -> dict:
     in llm/mp3.py); LOAS/LATM muxing, the explicit-frequency escape,
     and reserved frequency indices refuse by name."""
     blob = bytes(blob)
-    pos = 0
-    if blob[:3] == b"ID3":  # same ID3v2 prefix convention as mp3
-        if len(blob) < 10:
-            raise ValueError("truncated ID3v2 header")
-        size = 0
-        for b in blob[6:10]:
-            size = (size << 7) | (b & 0x7F)
-        pos = 10 + size
+    pos = id3v2_end(blob)  # same ID3v2 prefix convention as mp3
     if blob[pos : pos + 2] in (b"\x56\xe0", b"\x56\xe1") or bytes(
         blob[pos : pos + 4]
     ) == b"ADIF":
@@ -2174,7 +2111,7 @@ def synth_mp3_l3_corpus(docs: DataFrame) -> DataFrame:
     from .mp3 import encode_mp3
 
     def _blob(i: int) -> bytes:
-        rate = _MP3_RATES[i % 3]
+        rate = _RATES[3][i % 3]
         stereo = i % 5 == 0
         nch = 2 if stereo else 1
         short = i % 6 == 3
@@ -2292,44 +2229,6 @@ def jpeg_dimensions(blob: bytes) -> dict:
             break  # EOI / start-of-scan without SOF: give up
         pos += size
     raise ValueError("JPEG has no SOF frame header")
-
-
-def decode_image(blob: bytes) -> object:
-    """Image decode: Pillow when importable (any format), else the
-    pure-stdlib ``decode_png`` for PNG bytes / ``decode_bmp`` for BMP
-    bytes. Other formats raise NotImplementedError pointing at the
-    pluggable batch function — swap the inner function of
-    ``extract_blob_features`` / ``png_features`` (mapInPandas) for
-    your decoder; the Spark-side schema, batching, and partitioning
-    don't change."""
-    try:
-        from PIL import Image  # noqa: F401
-        import io
-
-        return Image.open(io.BytesIO(blob))
-    except ImportError:
-        if bytes(blob[:8]) == _PNG_SIG:
-            return decode_png(blob)
-        if bytes(blob[:2]) == b"BM":
-            return decode_bmp(blob)
-        if bytes(blob[:6]) in (b"GIF87a", b"GIF89a"):
-            return decode_gif(blob)
-        if bytes(blob[:2]) == b"\xff\xd8":
-            from .jpeg import decode_jpeg
-
-            return decode_jpeg(blob)
-        if bytes(blob[:4]) == b"RIFF" and bytes(blob[8:12]) == b"WEBP":
-            from .webp import decode_webp
-
-            return decode_webp(blob)
-        raise NotImplementedError(
-            "decode for this format requires an image library (e.g. Pillow); "
-            "only PNG, BMP, GIF, WebP (VP8L), and baseline JPEG decode via "
-            "the built-in pure-python paths. Plug a real decoder into the mapInPandas "
-            "batch function (extract_blob_features / png_features) — the "
-            "Spark plumbing (schema, Arrow batching, partitioning) is "
-            "decoder-agnostic."
-        ) from None
 
 
 def avi_frames(blob: bytes, every: int = 1, max_frames: int = 8) -> list[bytes]:
@@ -2695,8 +2594,8 @@ def sample_frames(blob: bytes, every: int = 1, max_frames: int = 8) -> list[byte
         return mkv_frames(blob, every=every, max_frames=max_frames)
     raise NotImplementedError(
         "sample_frames demuxes AVI (RIFF), mp4/mov (ISO-BMFF), and "
-        "mkv/webm (EBML); other containers need a real demuxer. Plug one "
-        "into the mapInPandas batch function — the Spark plumbing is "
+        "mkv/webm (EBML); other containers need a real demuxer, which "
+        "plugs in as a _blob_stage row function — the Spark plumbing is "
         "container-agnostic."
     )
 
@@ -3027,26 +2926,15 @@ def video_fingerprint(media: DataFrame, max_frames: int = 16) -> DataFrame:
     ``video_near_dup`` below feeds it to ``ngram_jaccard_pairs``."""
     import hashlib
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    frames = sample_frames(bytes(blob), max_frames=max_frames)
-                except Exception:  # _blob_stage's poison policy
-                    continue
-                seen = set()
-                for f in frames:
-                    h = hashlib.md5(bytes(f)).hexdigest()
-                    pair = (int(h[:12], 16), int(h[12:24], 16))
-                    if pair not in seen:
-                        seen.add(pair)
-                        rows.append((int(doc_id), pair[0], pair[1]))
-            yield pd.DataFrame(rows, columns=["doc_id", "h1", "h2"])
+    def _rows(b: bytes) -> list[tuple]:
+        hexes = (
+            hashlib.md5(bytes(f)).hexdigest()
+            for f in sample_frames(b, max_frames=max_frames)
+        )
+        pairs = ((int(h[:12], 16), int(h[12:24], 16)) for h in hexes)
+        return list(dict.fromkeys(pairs))  # distinct, first-seen order
 
-    return media.select("doc_id", "blob").mapInPandas(
-        _batch, schema="doc_id long, h1 long, h2 long"
-    )
+    return _blob_rows(media, _rows, "doc_id long, h1 long, h2 long")
 
 
 def video_near_dup(

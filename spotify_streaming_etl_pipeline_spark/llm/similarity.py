@@ -255,111 +255,6 @@ def ivf_topk(
     return _ranked(pairs, k)
 
 
-def assign_cells_arrow(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched IVF cell assignment: one numpy matmul per batch
-    against the broadcast centroid matrix — the scale tier of the
-    relational posexplode assignment in ``_ivf_from_centroid_table``.
-
-    The relational form inflates the corpus ×dim (posexplode to
-    (vec_id, dim, x) rows) before the groupBy re-collapses it; fully
-    codegen and linear, but at 100 TB that 64× row inflation is the
-    dominant cost.  Here each Arrow batch becomes a (batch × dim)
-    matrix and ``|v|² − 2vCᵀ + |c|²`` scores all cells in one BLAS
-    call — no row inflation, no shuffle (assignment is a map).
-
-    Tie/rounding discipline mirrors the relational form so both paths
-    agree cell-for-cell: d² rounds HALF-UP to 4dp before comparison
-    (``floor(x·10⁴ + ½)`` — np.round is half-EVEN and disagrees with
-    Spark's HALF_UP at exact .00005 boundaries) and ties break toward
-    the lowest cell id (np.argmin keeps the first minimum, matching
-    ``orderBy(d2, cell)``).  Caveat shared with the relational gate
-    itself: the matmul expansion and the per-dim difference sum differ
-    in the last ulps, so a d² landing WITHIN an ulp of a 4dp rounding
-    boundary could still split the paths — the same sub-ulp-vs-boundary
-    coincidence the Spark↔DuckDB oracle comparison already tolerates."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
-    c_sq = (C * C).sum(axis=1)
-
-    def _assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(
-                pdf[vec_col].map(lambda a: np.asarray(a, dtype=np.float64))
-            )
-            d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + c_sq[None, :]
-            # HALF_UP to 4dp (d2 >= 0 up to cancellation ulps)
-            cell = (np.floor(d2 * 10000.0 + 0.5) / 10000.0).argmin(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": cell.astype("int32")}
-            )
-
-    return emb.select("vec_id", vec_col).mapInPandas(
-        _assign, schema="vec_id long, cell int"
-    )
-
-
-def ivf_topk_arrow(
-    emb: DataFrame,
-    query_ids: list[int],
-    centroids: list[list[float]],
-    k: int = 5,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN with the Arrow-batched assignment path
-    (``assign_cells_arrow``) — identical semantics to
-    ``ivf_topk(centroids=...)`` (the relational, oracle-gated form),
-    different physical plan: corpus assignment is a mapInPandas matmul
-    instead of a posexplode join, and query probes are a driver-side
-    numpy argsort over the (tiny) query × centroid matrix with the
-    same round-4dp/(d2, cell) tie rule."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.float64)
-    assigned = assign_cells_arrow(emb, centroids, vec_col)
-    q_rows = (
-        emb.filter(F.col("vec_id").isin(query_ids))
-        .select("vec_id", vec_col)
-        .collect()
-    )
-    probe_pairs = []
-    for r in q_rows:
-        qv = np.asarray(r[vec_col], dtype=np.float64)
-        # HALF_UP to 4dp, matching assign_cells_arrow / the relational form
-        d2 = np.floor(((C - qv) ** 2).sum(axis=1) * 10000.0 + 0.5) / 10000.0
-        order = sorted(range(len(C)), key=lambda c: (d2[c], c))
-        for cell in order[:n_probe]:
-            probe_pairs.append((r["vec_id"], int(cell)))
-    probes = emb.sparkSession.createDataFrame(
-        probe_pairs, "q_id: long, cell: int"
-    )
-    # q_rows already holds the query vectors — build the (tiny) q_vecs
-    # frame from them instead of re-filtering the corpus table (which
-    # would re-scan it once more per action).
-    q_vecs = emb.sparkSession.createDataFrame(
-        [(r["vec_id"], list(r[vec_col])) for r in q_rows],
-        "q_id: long, q_vec: array<float>",
-    )
-    pairs = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(emb.select("vec_id", F.col(vec_col).alias("vec")), "vec_id")
-        .join(F.broadcast(q_vecs), "q_id")
-        .select(
-            "q_id", "vec_id", cosine(F.col("vec"), F.col("q_vec")).alias("cosine")
-        )
-    )
-    return _ranked(pairs, k)
-
-
 def ivf_topk_hashseed(
     emb: DataFrame,
     query_ids: list[int],

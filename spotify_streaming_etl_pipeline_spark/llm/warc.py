@@ -8,19 +8,22 @@ gzip member, concatenated — seekable extraction without global
 decompression). A matching writer synthesizes genuine bytes for the
 oracle corpora, making faking structurally hard.
 
-Spark shape: blobs ride a ``binary`` column into an Arrow-batched
-``mapInPandas`` (the per-blob codec path — never a row-at-a-time
-Python UDF); everything after the record table (URL canonicalization,
-HTML -> text, language ID, dedup) is the existing native-expression
-chain, so one scan feeds the whole crawl-to-corpus pipeline.
+Spark shape: the archive synthesizers run through
+``multimodal._synth_stage`` and the record tables through
+``multimodal._blob_rows`` — the one Arrow-batched per-blob path and
+poison policy every codec uses, never a row-at-a-time Python UDF;
+everything after the record table (URL canonicalization, HTML ->
+text, language ID, dedup) is the existing native-expression chain, so
+one scan feeds the whole crawl-to-corpus pipeline.
 """
 
 from __future__ import annotations
 
 import gzip
-from typing import Iterator
 
 from pyspark.sql import DataFrame
+
+from .multimodal import _blob_rows, _synth_stage
 
 CRLF = b"\r\n"
 
@@ -195,104 +198,37 @@ def synth_linked_warc_blob(doc_id: int, n_pages: int) -> bytes:
 def attach_linked_warc_blob(df: DataFrame, n_pages: int) -> DataFrame:
     """(doc_id, blob): the hyperlinked-archive column for the
     bytes-to-ranks gate — Arrow-batched like every blob stage."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": [
-                        synth_linked_warc_blob(int(d), n_pages)
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return df.select("doc_id").mapInPandas(_encode, "doc_id long, blob binary")
+    return _synth_stage(df, lambda d: synth_linked_warc_blob(d, n_pages))
 
 
 def attach_warc_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, blob): the synthesized-archive column for the gate —
     Arrow-batched like every blob stage (zero row-wise Python UDFs is
     a repo invariant, pinned by test_no_row_python_udfs_anywhere)."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": [
-                        synth_warc_blob(int(d), str(t))
-                        for d, t in zip(pdf["doc_id"], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(
-        _encode, "doc_id long, blob binary"
+    return _synth_stage(
+        df, lambda d, t: synth_warc_blob(d, str(t)), arg_col=text_col
     )
 
 
 def warc_record_table(blobs: DataFrame) -> DataFrame:
     """One row per archive record from a (doc_id, blob) frame — the
     real parse, Arrow batch by Arrow batch."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                for i, r in enumerate(parse_warc(bytes(blob))):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            r["url"],
-                            r["status"],
-                            r["content_type"],
-                            r["n_body_bytes"],
-                            r["body"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "rec",
-                    "url",
-                    "status",
-                    "content_type",
-                    "n_body_bytes",
-                    "body",
-                ],
-            )
-
-    return blobs.mapInPandas(batches, WARC_RECORD_SCHEMA)
+    return _blob_rows(
+        blobs,
+        lambda b: [
+            (i, r["url"], r["status"], r["content_type"],
+             r["n_body_bytes"], r["body"])
+            for i, r in enumerate(parse_warc(b))
+        ],
+        WARC_RECORD_SCHEMA,
+    )
 
 
 def attach_mixed_warc_blob(df: DataFrame) -> DataFrame:
     """(doc_id, blob): the mixed-modality archive column for the PDF
     -route gate — one ``synth_mixed_warc_blob`` per doc, Arrow
     -batched."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": [
-                        synth_mixed_warc_blob(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return df.select("doc_id").mapInPandas(
-        _encode, "doc_id long, blob binary"
-    )
+    return _synth_stage(df, synth_mixed_warc_blob)
 
 
 PDF_RECORD_SCHEMA = "doc_id long, rec int, url string, blob binary"
@@ -306,25 +242,15 @@ def pdf_record_table(blobs: DataFrame) -> DataFrame:
     route re-parses the archive keeping bytes intact.  Same
     Arrow-batched per-blob shape as every codec stage; feed the
     output to ``multimodal.pdf_text_features``."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                for i, r in enumerate(parse_warc(bytes(blob))):
-                    if (
-                        r["status"] == 200
-                        and r["content_type"] == "application/pdf"
-                    ):
-                        rows.append(
-                            (int(doc_id), i, r["url"], r["raw_body"])
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "rec", "url", "blob"]
-            )
-
-    return blobs.mapInPandas(batches, PDF_RECORD_SCHEMA)
+    return _blob_rows(
+        blobs,
+        lambda b: [
+            (i, r["url"], r["raw_body"])
+            for i, r in enumerate(parse_warc(b))
+            if r["status"] == 200 and r["content_type"] == "application/pdf"
+        ],
+        PDF_RECORD_SCHEMA,
+    )
 
 
 def synth_mixed_warc_blob(doc_id: int) -> bytes:

@@ -63,8 +63,10 @@ _SLOW_BATTERIES = {
 #: Oracle-parity pairs the default run keeps: one per embedding-family
 #: kernel in ``llm/similarity.py`` / ``streaming/embeddings.py`` (flat
 #: and hierarchical Lloyd, SemDeDup on each, the online sink, the
-#: in-group cosine pairs, the recall evaluator, IVF assignment) —
-#: about 25 s of calls at sf0.001 on 4 CPUs.
+#: in-group cosine pairs, the recall evaluator, IVF assignment), and
+#: one per media step that runs through ``multimodal._blob_stage`` /
+#: ``_synth_stage`` in its own way (byte features, the WARC record and
+#: PDF record tables, the exploded video fingerprint).
 _DEFAULT_PARITY = {
     "kmeans_assignments",
     "kmeans_twolevel",
@@ -74,6 +76,10 @@ _DEFAULT_PARITY = {
     "embedding_near_dup",
     "rerank_ann_recall",
     "ann_topk_ivf",
+    "multimodal_features",
+    "warc_records",
+    "warc_pdf_text",
+    "video_near_dup",
 }
 
 _BATTERY_REASON = "long battery (>=10s); run with SPARK_GRAFT_FULL_TESTS=1"

@@ -1,13 +1,16 @@
 """The one poison policy, stage by stage: every feature stage that runs
 through ``llm/multimodal.py:_blob_stage`` gets one valid blob from its
-own synth corpus plus five poison blobs — empty bytes, 64 seeded random
+own synth corpus plus four poison blobs — empty bytes, 64 seeded random
 bytes, and two single-byte mutations of real ``synth_jpeg_corpus``
 blobs (doc 3 byte 85 -> 0x00 names an undefined Huffman table; doc 5
 byte 112 -> 0x7f overflows the DC predictor).  Each stage must keep one
 row per input, NULL every feature column of a poison row, and give the
-valid row the values it gets when decoded alone.
+valid row the values it gets when decoded alone.  The many-row stages
+(``_blob_rows``: ``video_fingerprint``, ``warc_record_table``,
+``pdf_record_table``) must give the valid blob exactly the rows it
+gives alone and a poison blob no row at all.
 
-All sixteen stages, each fed by its own corpus, run as ONE Spark job:
+All nineteen stages, each fed by its own corpus, run as ONE Spark job:
 each stage's output is folded to ``(stage, doc_id, to_json(features))``
 and the branches unioned (``to_json`` drops NULL fields, so an all-NULL
 row reads ``{}``)."""
@@ -15,12 +18,14 @@ row reads ``{}``)."""
 from __future__ import annotations
 
 import random
+from collections import Counter
 from functools import reduce
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from spotify_streaming_etl_pipeline_spark.llm import multimodal as mm
+from spotify_streaming_etl_pipeline_spark.llm import warc
 
 #: stage name -> (stage, the synth corpus its valid blob comes from)
 STAGES = {
@@ -40,6 +45,16 @@ STAGES = {
     "video_frame_features": (mm.video_frame_features, mm.synth_video_corpus),
     "image_ahash": (mm.image_ahash, mm.synth_pattern_png_corpus),
     "audio_fingerprint": (mm.audio_fingerprint, mm.synth_tone_audio_corpus),
+}
+
+#: many-row stages (one output row per frame / archive record)
+ROW_STAGES = {
+    "video_fingerprint": (mm.video_fingerprint, mm.synth_video_corpus),
+    "warc_record_table": (
+        warc.warc_record_table,
+        lambda d: warc.attach_warc_blob(d.withColumn("text", F.lit("t"))),
+    ),
+    "pdf_record_table": (warc.pdf_record_table, warc.attach_mixed_warc_blob),
 }
 
 VALID_DOC = 1
@@ -79,7 +94,7 @@ def test_every_blob_stage_dead_letters_poison(spark):
     # doc 0 is the valid blob alone, doc 10 the same blob in one batch
     # (coalesce(1)) with every poison blob.
     branches = []
-    for name, (stage, synth) in STAGES.items():
+    for name, (stage, synth) in {**STAGES, **ROW_STAGES}.items():
         corpus = synth(docs)
         alone = corpus.select(F.lit(0).cast("long").alias("doc_id"), "blob")
         mixed = corpus.select(
@@ -94,15 +109,22 @@ def test_every_blob_stage_dead_letters_poison(spark):
                 F.to_json(F.struct(*feats)).alias("v"),
             )
         )
-    got: dict[str, dict[int, str]] = {}
+    got: dict[str, dict[int, list[str]]] = {}
     for r in reduce(lambda a, b: a.unionByName(b), branches).collect():
-        assert r["doc_id"] not in got.setdefault(r["stage"], {})
-        got[r["stage"]][r["doc_id"]] = r["v"]
+        got.setdefault(r["stage"], {}).setdefault(r["doc_id"], []).append(
+            r["v"]
+        )
 
     for name in STAGES:
         rows = got[name]
         assert sorted(rows) == [0, 10] + poison_ids, name
-        assert rows[0] != "{}", f"{name} nulls its own corpus"
+        assert all(len(v) == 1 for v in rows.values()), name
+        assert rows[0] != ["{}"], f"{name} nulls its own corpus"
         assert rows[10] == rows[0], f"{name} valid row moved among poison"
         for k in poison_ids:
-            assert rows[k] == "{}", (name, k, rows[k])
+            assert rows[k] == ["{}"], (name, k, rows[k])
+
+    for name in ROW_STAGES:
+        rows = got[name]
+        assert sorted(rows) == [0, 10], (name, sorted(rows))
+        assert Counter(rows[10]) == Counter(rows[0]), name

@@ -170,10 +170,7 @@ def test_undeclared_table_and_component_refs_raise_valueerror():
 def test_decode_image_routes_jpeg():
     img = _solid_image(1, 1, 77)
     out = multimodal.decode_image(encode_jpeg([img]))
-    # Pillow absent in this container -> the pure-python path; either
-    # way the decoded content must match.
-    if isinstance(out, dict):
-        assert out["width"] == 8 and set(out["pixels"]) == {77}
+    assert out["width"] == 8 and set(out["pixels"]) == {77}
 
 
 def test_jpeg_features_dead_letters_poison_blobs(spark):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spotify_streaming_etl_pipeline_spark.llm import dedup, multimodal, similarity
+from spotify_streaming_etl_pipeline_spark.llm import dedup, mp3, multimodal, similarity
 from spotify_streaming_etl_pipeline_spark.llm.text import (
     doc_fingerprint,
     lang_id,
@@ -1323,14 +1323,22 @@ def test_adpcm_stereo_channels_track_independently():
 
 def _mp3_frame(br_idx: int, rate_idx: int, version: int = 3) -> bytes:
     h = (0x7FF << 21) | (version << 19) | (1 << 17) | (br_idx << 12) | (rate_idx << 10)
-    if version == 3:
-        br, sr, step = (multimodal._MP3_BITRATES[br_idx],
-                        multimodal._MP3_RATES[rate_idx], 144)
-    else:
-        rates = multimodal._MP3_RATES_V2 if version == 2 else multimodal._MP3_RATES_V25
-        br, sr, step = multimodal._MP3_BITRATES_V2[br_idx], rates[rate_idx], 72
-    flen = step * br * 1000 // sr
+    br = (mp3._BITRATES if version == 3 else mp3._BITRATES_LSF)[br_idx]
+    step = 144 if version == 3 else 72
+    flen = step * br * 1000 // mp3._RATES[version][rate_idx]
     return h.to_bytes(4, "big") + b"\x00" * (flen - 4)
+
+
+def test_mp3_truncated_final_frame_raises_in_both_walks():
+    """The header audit and the decoder share one frame walk: a final
+    frame cut short raises ValueError in both (the row dead-letters),
+    never a count that includes the partial frame."""
+    blob = _mp3_frame(8, 0) * 3 + _mp3_frame(8, 0)[:100]
+    with pytest.raises(ValueError, match="truncated final mp3 frame"):
+        multimodal.mp3_stream_info(blob)
+    with pytest.raises(ValueError, match="truncated final mp3 frame"):
+        mp3.decode_mp3(blob)
+    assert multimodal.mp3_stream_info(_mp3_frame(8, 0) * 3)["n_frames"] == 3
 
 
 def test_mp3_stream_info_cbr_and_vbr():
@@ -1598,12 +1606,6 @@ def test_mkv_laced_corrupt_blocks_raise():
 
 
 def test_decode_image_dispatches_bmp():
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("Pillow present: decode_image uses it, not the stdlib path")
-    except ImportError:
-        pass
     pixels = bytes(range(12))
     img = multimodal.decode_image(_encode_bmp(2, 2, pixels))
     assert img["pixels"] == pixels
@@ -1630,33 +1632,24 @@ def test_png_features_mapinpandas(spark):
 
 
 def test_decode_image_contract():
-    """decode_image: PNG decodes via the stdlib path even without PIL;
-    other formats raise with guidance pointing at the pluggable
-    mapInPandas batch function."""
+    """decode_image: the one raster dispatcher, the in-repo codecs
+    only, every format under the {"width","height","channels",
+    "pixels"} contract; an unknown signature is a ValueError."""
     png = _encode_png(2, 2, bytes(12), channels=3)
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
     decoded = multimodal.decode_image(png)
-    if not has_pil:
-        assert decoded["width"] == 2
-        # JPEG bytes now route to the real baseline decoder, so fake
-        # marker soup is a corrupt-stream ValueError, not a
-        # missing-codec NotImplementedError...
-        with pytest.raises(ValueError):
-            multimodal.decode_image(b"\xff\xd8\xff\xe0 fake jpeg bytes")
-        # ...and a REAL baseline jpeg decodes to pixels.
-        from spotify_streaming_etl_pipeline_spark.llm.jpeg import encode_jpeg
+    assert decoded["width"] == 2
+    # JPEG bytes route to the real decoder, so fake marker soup is a
+    # corrupt-stream ValueError, not a missing-codec refusal...
+    with pytest.raises(ValueError):
+        multimodal.decode_image(b"\xff\xd8\xff\xe0 fake jpeg bytes")
+    # ...and a REAL baseline jpeg decodes to pixels.
+    from spotify_streaming_etl_pipeline_spark.llm.jpeg import encode_jpeg
 
-        img = [[77] * 8 for _ in range(8)]
-        out = multimodal.decode_image(encode_jpeg([img]))
-        assert out["width"] == 8 and set(out["pixels"]) == {77}
-        # genuinely unknown formats still point at the pluggable stage
-        with pytest.raises(NotImplementedError, match="mapInPandas"):
-            multimodal.decode_image(b"II*\x00 a tiff, say")
+    img = [[77] * 8 for _ in range(8)]
+    out = multimodal.decode_image(encode_jpeg([img]))
+    assert out["width"] == 8 and set(out["pixels"]) == {77}
+    with pytest.raises(ValueError, match="unrecognized raster signature"):
+        multimodal.decode_image(b"II*\x00 a tiff, say")
 
 
 # --- split / quota / chunking -----------------------------------------------

@@ -226,73 +226,6 @@ def test_ivf_pinned_centroids_beat_random_assignment(spark, sf_dir):
     assert hits >= 3  # approximate by design; majority recall expected
 
 
-def test_arrow_assignment_agrees_with_relational(spark, sf_dir):
-    """The Arrow-batched (matmul) IVF assignment must agree cell-for-
-    cell with the relational posexplode assignment on the pinned
-    centroid fixture, and the full arrow-path top-k must equal the
-    oracle-gated relational top-k row-for-row."""
-    from spotify_streaming_etl_pipeline_spark.llm.ivf_fixture import (
-        IVF_CENTROIDS,
-    )
-    from spotify_streaming_etl_pipeline_spark.llm.similarity import (
-        _ivf_from_centroid_table,
-        assign_cells_arrow,
-        ivf_topk,
-        ivf_topk_arrow,
-    )
-    from spotify_streaming_etl_pipeline_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    # cell-for-cell assignment parity (relational path re-derived the
-    # same way _ivf_from_centroid_table computes it)
-    cents = frame(
-        spark,
-        [
-            (cell, dim, float(c))
-            for cell, row in enumerate(IVF_CENTROIDS)
-            for dim, c in enumerate(row)
-        ],
-        "cell int, dim int, c double",
-    )
-    from pyspark.sql import Window
-
-    dims = similarity._exploded(emb)
-    d2 = (
-        dims.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "cell")
-        .agg(
-            F.round(
-                F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))), 4
-            ).alias("d2")
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "cell")
-    relational = {
-        r["vec_id"]: r["cell"]
-        for r in d2.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    arrow = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells_arrow(emb, IVF_CENTROIDS).collect()
-    }
-    assert arrow == relational
-
-    # end-to-end: same rows, same ranks
-    qids = [0, 1, 2, 3, 4]
-    rel = sorted(
-        map(tuple, ivf_topk(emb, qids, k=5, n_probe=2,
-                            centroids=IVF_CENTROIDS).collect())
-    )
-    arr = sorted(
-        map(tuple, ivf_topk_arrow(emb, qids, IVF_CENTROIDS, k=5,
-                                  n_probe=2).collect())
-    )
-    assert arr == rel
-
-
 def test_salted_join_rejects_small_side_preserving_joins(spark):
     """Review finding r6: a 'full'/'right' join over the replicated
     small side would emit its unmatched rows once PER SALT — reject

@@ -122,15 +122,11 @@ def test_corrupt_blobs_raise_cleanly():
 
 
 def test_decode_image_routes_webp():
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("Pillow present; routing goes through it")
-    except ImportError:
-        pass
     px = [0xFF000000 | (i << 8) for i in range(6)]
     out = multimodal.decode_image(encode_webp_lossless(px, 3, 2))
-    assert out["pixels"] == px
+    # opaque ARGB unpacks to RGB channel values, as every raster does
+    assert (out["width"], out["height"], out["channels"]) == (3, 2, 3)
+    assert out["pixels"] == [c for i in range(6) for c in (0, i, 0)]
 
 
 def test_webp_features_dead_letters_and_refusals(spark):
@@ -159,7 +155,7 @@ def test_webp_features_dead_letters_and_refusals(spark):
 
 
 def test_webp_rides_the_resize_route():
-    """_decode_raster dispatches RIFF/WEBP, so resize_image normalizes
+    """decode_image dispatches RIFF/WEBP, so resize_image normalizes
     WebP like every other raster format (RGB for opaque, RGBA when the
     alpha channel is real)."""
     px = [0xFF102030, 0xFF405060, 0xFF708090, 0xFFA0B0C0]
